@@ -16,9 +16,15 @@ import org.apache.spark.storage.StorageLevel
   * Scores are COLUMNS of one uid-aligned frame (every coordinate scores
   * every row, uid unique, missing entities as 0 — the semantics of the
   * reference's uid-keyed outer-join score algebra, which this fuses
-  * into column arithmetic: no per-pass shuffle joins). The frame is
-  * eagerly checkpointed and its predecessor released each pass (X13) so
-  * neither the cached data NOR the logical plan grows across iterations.
+  * into column arithmetic: no per-pass shuffle joins). Score columns
+  * are DERIVED on read — re-scored over the input from the current
+  * models whenever a residual is built: a fixed coordinate by a
+  * broadcast-model projection, a random coordinate by its reId-keyed
+  * model attach (an explicit broadcast join when its models fit under
+  * the session's autoBroadcastJoinThreshold, a shuffle join otherwise).
+  * Only the model-sized per-entity frames are checkpointed (X13), so
+  * neither the cached data NOR the logical plan grows across iterations,
+  * and no pass stores anything data-sized.
   */
 object CoordinateDescent {
 
@@ -94,6 +100,7 @@ object CoordinateDescent {
       * of N−1, and the sum is the same left-associated order over the
       * same values the old chain produced, so scores are bit-identical. */
     def score(data: DataFrame): DataFrame = {
+      requireNoReserved(data, "_gms_")
       val parts = coordinates.values.toSeq.zipWithIndex
         .map { case (c, i) => (c, s"_gms_$i") }
       val scored = parts.foldLeft(data) { case (df, (c, out)) =>
@@ -101,6 +108,14 @@ object CoordinateDescent {
       scored.select(col("uid"),
         parts.map(p => col(p._2)).reduce(_ + _).as("score"))
     }
+  }
+
+  /** `score` and `train` add working columns under a reserved prefix;
+    * an input column with that prefix would be silently overwritten. */
+  private def requireNoReserved(data: DataFrame, prefix: String): Unit = {
+    val clash = data.columns.filter(_.startsWith(prefix))
+    require(clash.isEmpty, s"input column(s) ${clash.mkString(", ")} use " +
+      s"the reserved prefix $prefix")
   }
 
   /** Score one trained coordinate INTO a column of `df` (all other
@@ -119,7 +134,10 @@ object CoordinateDescent {
   }
 
   /** `data` columns: uid (long), label, weight, offset, one VectorUDT
-    * column per feature shard, one string column per random-effect id.
+    * column per feature shard, one string column per random-effect id;
+    * none may start with the reserved `_score_`. An uncached `data` is
+    * persisted for the call and released on return; a caller-cached one
+    * is read from the caller's cache and left cached.
     *
     * `initial` seeds the trained-coordinate map (incremental/partial
     * retraining, GameEstimator.scala:777-798): random-effect coordinates
@@ -135,7 +153,17 @@ object CoordinateDescent {
     require(lockedCoordinates.forall(id =>
       initial.exists(_.coordinates.contains(id))),
       "locked coordinates must exist in the initial model")
-    val cached = data.persist(StorageLevel.MEMORY_AND_DISK)
+    val unknownLocked = lockedCoordinates -- coords.map(_.id)
+    require(unknownLocked.isEmpty, s"locked coordinate(s) " +
+      s"${unknownLocked.mkString(", ")} not among the coordinates " +
+      coords.map(_.id).mkString(", "))
+    requireNoReserved(data, "_score_")
+    // persist only an uncached input, and release only what was
+    // persisted here: on a caller-cached frame persist() returns the
+    // CALLER's cache entry, which unpersist() would drop
+    val owned = data.storageLevel == StorageLevel.NONE
+    val cached =
+      if (owned) data.persist(StorageLevel.MEMORY_AND_DISK) else data
 
     // Row-count-keyed execution profile for the descent loop
     // ([[graft.util.ExecProfile.withDerivedShuffle]]) — the same scale
@@ -172,18 +200,17 @@ object CoordinateDescent {
     // full-outer subtract for the residual, left-outer offset attach,
     // full-outer add for the new sum — degenerates to column arithmetic
     // on that single frame: residual offset = offset + Σ_{c≠i} score_c
-    // is a PROJECTION, not three joins. The old shape shuffled the full
-    // feature frame once per pass (the offset attach) plus two narrow
-    // uid score frames (subtract + add); this shape shuffles nothing
-    // the algorithm doesn't require — the only joins left are each
-    // random coordinate's reId-keyed model attach. Floating-point sums
-    // now associate in first-scored column order instead of the old
-    // incremental add/subtract chain; both are deterministic, and every
-    // consumer gate rounds far above the ulp-level difference.
+    // is a PROJECTION, not three joins. No score column is stored: each
+    // residual re-derives the other coordinates' scores over the input
+    // from their current models, so nothing data-sized is written per
+    // pass and the plan stays one round deep. The only joins left are
+    // each random coordinate's reId-keyed model attach — a broadcast
+    // whenever its models fit under the session's broadcast threshold.
     val scoreColOf: Map[String, String] =
       coords.map(c => c.id -> s"_score_${c.id}").toMap
-    var frame: DataFrame = cached
     var scoredIds: Seq[String] = Seq.empty
+    // the form each scored coordinate's column is derived from, by id
+    var scorers: Map[String, TrainedCoordinate] = Map.empty
     var trained: Map[String, TrainedCoordinate] =
       initial.map(_.coordinates).getOrElse(Map.empty)
     // frames owned by the CALLER (released data would be unrecoverable —
@@ -198,8 +225,13 @@ object CoordinateDescent {
     // string AQE renders per job grows exponentially with rounds and
     // eventually OOMs the driver, and the optimizer re-walks the whole
     // history each pass. Checkpointing cuts the lineage to a LogicalRDD:
-    // plans stay round-sized no matter how many iterations run.
+    // plans stay round-sized no matter how many iterations run. Only
+    // model-sized frames are checkpointed: the per-entity models, and a
+    // locked coordinate's caller-supplied models.
     def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    def checkpointed(df: DataFrame): Boolean =
+      df.queryExecution.logical
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
     def release(df: DataFrame, keep: DataFrame*): Unit =
       if (!keep.exists(_ eq df)) df.queryExecution.logical match {
         // a checkpointed frame's blocks belong to its backing RDD, not
@@ -209,39 +241,67 @@ object CoordinateDescent {
         case _ => df.unpersist(false)
       }
 
-    // Advance the frame: score `c` into its column, checkpoint (one
-    // job per pass — the lineage truncation materialize() exists for),
-    // release the superseded frame. After the first checkpoint the
-    // frame carries every column `cached` had, so the initial cache can
-    // be dropped immediately instead of living through the whole loop.
+    // An upper bound on the bytes a random score join attaches: per
+    // entity, the UnsafeRow of (reId, coef, intercept) — at most 64 bytes
+    // of header, fixed slots and padding, the id's bytes, and 9 bytes per
+    // coefficient (value plus null bits) — summed over the checkpointed
+    // models in one model-sized job.
+    val broadcastLimit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    def attachBytes(models: DataFrame): Long =
+      models.agg(coalesce(sum(octet_length(col("reId")) +
+        size(col("coef")) * 9 + 64), lit(0L))).head.getLong(0)
+
+    // Record `c` as `id`'s scorer: its column is derived on read by every
+    // later residual. A random coordinate's models are attached under an
+    // explicit broadcast() when they fit the session's
+    // autoBroadcastJoinThreshold, and by a shuffle join otherwise.
     def rescore(id: String, c: TrainedCoordinate): Unit = {
-      val prev = frame
-      frame = materialize(scoreInPlace(c, frame, scoreColOf(id)))
       if (!scoredIds.contains(id)) scoredIds :+= id
-      if (prev ne cached) release(prev) else cached.unpersist(false)
+      scorers += id -> (c match {
+        case TrainedRandom(spec, models) if broadcastLimit >= 0 &&
+            attachBytes(models) <= broadcastLimit =>
+          TrainedRandom(spec, broadcast(models))
+        case _ => c
+      })
     }
 
     // L16 partial retrain (reference CoordinateDescent.scala:280-300):
     // locked coordinates keep their initial model; their scores are fixed
-    // residual contributions computed once, never re-trained.
-    lockedCoordinates.foreach { id => rescore(id, trained(id)) }
+    // residual contributions, never re-trained. A locked model frame that
+    // is not a checkpoint (a file scan, say) is checkpointed once rather
+    // than re-read by every residual; that copy is released on return.
+    var copies: Seq[DataFrame] = Seq.empty
+    lockedCoordinates.foreach { id =>
+      rescore(id, trained(id) match {
+        case TrainedRandom(spec, m) if !checkpointed(m) =>
+          val copy = materialize(m)
+          copies :+= copy
+          TrainedRandom(spec, copy)
+        case c => c
+      })
+    }
     val retrained = coords.filterNot(c => lockedCoordinates.contains(c.id))
 
     for (iter <- 0 until nIterations; spec <- retrained) {
       // residual offset = base offset + scores of all OTHER coordinates
-      // (X15: subtract own — here simply "don't add own"): a projection
-      // over the frame, summed in first-scored column order
+      // (X15: subtract own — here simply "don't add own"): each derived
+      // into its column over the input, summed in first-scored column
+      // order; the fit sees only the input columns
       val others = scoredIds.filterNot(_ == spec.id)
-        .map(id => col(scoreColOf(id)))
-      val withResidual = others.reduceOption(_ + _) match {
-        case None => frame
-        case Some(r) => frame.withColumn("offset", col("offset") + r)
+      val withResidual = others.map(id => col(scoreColOf(id)))
+        .reduceOption(_ + _) match {
+        case None => cached
+        case Some(r) =>
+          others.foldLeft(cached)((df, id) =>
+            scoreInPlace(scorers(id), df, scoreColOf(id)))
+            .withColumn("offset", col("offset") + r)
+            .drop(others.map(scoreColOf): _*)
       }
 
       val coordinate: TrainedCoordinate = spec match {
         case f: FixedSpec =>
-          // L8 runWithSampling: down-sample the fit's rows only — the
-          // rescore below still runs over the full frame
+          // L8 runWithSampling: down-sample the fit's rows only — later
+          // residuals still score every row
           val trainRows =
             if (f.downSamplingRate > 0 && f.downSamplingRate < 1)
               f.cfg.loss match {
@@ -262,8 +322,8 @@ object CoordinateDescent {
         case r: RandomSpec =>
           // active/passive split: cap per-entity training rows (weight-
           // rescaled reservoir) and drop under-populated entities. Rows
-          // excluded here are "passive": they are still scored below —
-          // the rescore runs over the full frame.
+          // excluded here are "passive": later residuals still score
+          // them.
           val capped =
             if (r.activeCap > 0)
               graft.operators.GroupedSampling
@@ -307,8 +367,9 @@ object CoordinateDescent {
       val replaced = trained.get(spec.id)
       trained += spec.id -> coordinate
 
-      // rescore own column over the BASE frame (base offset untouched —
-      // each pass's residual is recomputed fresh from it) and checkpoint
+      // later residuals derive this coordinate's score from the new
+      // model (base offset untouched — each pass's residual is recomputed
+      // fresh from the input)
       rescore(spec.id, coordinate)
       // the replaced models may belong to the caller's `initial` or
       // still back a live coordinate — release only what nothing reads
@@ -317,10 +378,8 @@ object CoordinateDescent {
       replaced.collect { case TrainedRandom(_, old) =>
         release(old, live: _*) }
     }
-    // the frame is a training intermediate — data-sized, so drop it
-    // before returning (scoring a GameModel recomputes from the
-    // model-sized coordinate frames, which stay live)
-    if (frame ne cached) release(frame) else cached.unpersist(false)
+    copies.foreach(release(_))
+    if (owned) cached.unpersist(false)
     GameModel(trained)
     }
   }

@@ -52,12 +52,11 @@ case class GlmConfig(loss: PointwiseLoss = LogisticLoss,
   */
 class DistributedGlmObjective(data: Dataset[LabeledPoint], featureDim: Int,
                               cfg: GlmConfig) extends Serializable {
-  @transient private val cached: RDD[LabeledPoint] = {
-    val r = data.rdd
-    if (r.getStorageLevel == StorageLevel.NONE)
-      r.persist(StorageLevel.MEMORY_AND_DISK)
-    r
-  }
+  @transient private val cached: RDD[LabeledPoint] = data.rdd
+  /** Whether the cache is this objective's own: a caller-persisted RDD
+    * is read as it is and left cached by [[unpersist]]. */
+  private val owned = cached.getStorageLevel == StorageLevel.NONE
+  if (owned) cached.persist(StorageLevel.MEMORY_AND_DISK)
   /** Per-iteration view of the cache: every optimizer iteration is one
     * aggregate ROUND over this RDD, so a near-empty partition charges
     * its task-launch overhead once per round — TRON at maxIter=100 paid
@@ -246,7 +245,8 @@ class DistributedGlmObjective(data: Dataset[LabeledPoint], featureDim: Int,
       depth = cfg.treeAggregateDepth)
   }
 
-  def unpersist(): Unit = cached.unpersist(false)
+  /** Release the cache if this objective persisted it. */
+  def unpersist(): Unit = if (owned) cached.unpersist(false)
 }
 
 /** The same objective over in-memory samples — the per-entity (random

@@ -91,11 +91,14 @@ object GroupedSampling {
     // lexicographic order; the row hash disambiguates duplicate uids
     // deterministically from content (stable across runs/partitionings,
     // unlike a row_number among ties)
+    // (every payload name is backtick-quoted: unquoted, a column named
+    // `a.b` would be parsed as field b of a column a)
     val hashCols =
-      if (distinguishCols.nonEmpty) (uidCols ++ distinguishCols).distinct
-      else df.columns.toSeq
+      if (distinguishCols.nonEmpty)
+        (uidCols ++ distinguishCols).distinct.map(col)
+      else df.columns.toSeq.map(c => col("`" + c.replace("`", "``") + "`"))
     val key = concat(priority(uidCols.map(col)),
-      lpad(hex(xxhash64(hashCols.map(col): _*)), 16, "0"))
+      lpad(hex(xxhash64(hashCols: _*)), 16, "0"))
     // Two regimes for the per-group cap-th-key threshold:
     //   cap ≤ 4096 — one bounded-heap aggregate (the fast path: one
     //     shuffle, map-side combine, ~32 KB per group buffer at worst).

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.ml.CoordinateDescent._
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** GAME coordinate-descent recovery on synthetic additive data:
   * y = w·x (fixed) + perUserIntercept (random) + noise. The descent must
@@ -284,6 +285,128 @@ class GameSpec extends SparkSpec {
       lockedFixed.intercept == origFixed.intercept)
     // the unlocked coordinate did retrain
     assert(relocked.coordinates("perUser") ne first.coordinates("perUser"))
+  }
+
+  private def fixtureSpecs = Seq(
+    FixedSpec("global", "fixedFeatures", 2,
+      GlmConfig(SquaredLoss, l2 = 1e-6, maxIter = 50, tol = 1e-9)),
+    RandomSpec("perUser", "userId", "emptyFeatures", 0,
+      GlmConfig(SquaredLoss, l2 = 1e-2, maxIter = 20, tol = 1e-9)))
+
+  test("locked coordinates must be among the trained coordinates") {
+    val data = gameData(200, seed = 10)
+    val first = CoordinateDescent.train(data, fixtureSpecs, nIterations = 1)
+    val e = intercept[IllegalArgumentException] {
+      CoordinateDescent.train(data, fixtureSpecs.take(1), nIterations = 1,
+        initial = Some(first), lockedCoordinates = Set("perUser"))
+    }
+    assert(e.getMessage.contains(
+      "locked coordinate(s) perUser not among the coordinates global"),
+      e.getMessage)
+  }
+
+  test("a locked model frame that is not a checkpoint is copied once") {
+    val data = gameData(300, seed = 15)
+    val first = CoordinateDescent.train(data, fixtureSpecs, nIterations = 1)
+    val perUser = first.coordinates("perUser").asInstanceOf[TrainedRandom]
+    // the same models as a local relation instead of a checkpoint
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(perUser.models.collect(): _*),
+      perUser.models.schema)
+    def relock(models: org.apache.spark.sql.DataFrame) =
+      CoordinateDescent.train(data, fixtureSpecs, nIterations = 2,
+        initial = Some(GameModel(first.coordinates +
+          ("perUser" -> perUser.copy(models = models)))),
+        lockedCoordinates = Set("perUser"))
+    def fixed(m: GameModel) =
+      m.coordinates("global").asInstanceOf[TrainedFixed].model.coef.toSeq
+    val viaCheckpoint = relock(perUser.models)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val viaLocal = relock(local)
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+      "the checkpointed copy of the locked models was not released")
+    assert(viaLocal.coordinates("perUser").asInstanceOf[TrainedRandom]
+      .models eq local)
+    assert(fixed(viaLocal) == fixed(viaCheckpoint))
+  }
+
+  test("reserved score columns in the input fail fast") {
+    val data = gameData(200, seed = 11)
+    val e = intercept[IllegalArgumentException] {
+      CoordinateDescent.train(data.withColumn("_score_global", lit(0.0)),
+        fixtureSpecs, nIterations = 1)
+    }
+    assert(e.getMessage.contains("_score_global") &&
+      e.getMessage.contains("reserved prefix _score_"), e.getMessage)
+    val model = CoordinateDescent.train(data, fixtureSpecs, nIterations = 1)
+    val e2 = intercept[IllegalArgumentException] {
+      model.score(data.withColumn("_gms_0", lit(1.0)))
+    }
+    assert(e2.getMessage.contains("_gms_0") &&
+      e2.getMessage.contains("reserved prefix _gms_"), e2.getMessage)
+  }
+
+  test("train keeps a caller's cache and leaves no cache of its own") {
+    val cachedInput = gameData(400, seed = 12).cache()
+    cachedInput.count()
+    CoordinateDescent.train(cachedInput, fixtureSpecs, nIterations = 2)
+    assert(cachedInput.storageLevel != StorageLevel.NONE,
+      "train() dropped the caller's cache")
+    cachedInput.unpersist(true)
+
+    val uncached = gameData(400, seed = 12)
+    CoordinateDescent.train(uncached, fixtureSpecs, nIterations = 2)
+    assert(uncached.storageLevel == StorageLevel.NONE,
+      "train() left its input cached")
+  }
+
+  test("an extra input column with a dotted name passes through train") {
+    val data = gameData(300, seed = 14)
+    def fixed(m: GameModel) =
+      m.coordinates("global").asInstanceOf[TrainedFixed].model.coef.toSeq
+    val plain = CoordinateDescent.train(data, fixtureSpecs, nIterations = 2)
+    val dotted = CoordinateDescent.train(data.withColumn("a.b", lit(1)),
+      fixtureSpecs, nIterations = 2)
+    assert(fixed(dotted) == fixed(plain))
+  }
+
+  test("broadcast and shuffle-joined random scores train the same model") {
+    // default threshold: the per-user models are attached to each
+    // residual by a broadcast join; threshold -1: by a shuffle join
+    val data = gameData(2000, seed = 13)
+    def fit() = {
+      val m = CoordinateDescent.train(data, fixtureSpecs, nIterations = 3)
+      val g = m.coordinates("global").asInstanceOf[TrainedFixed].model
+      val users = m.coordinates("perUser").asInstanceOf[TrainedRandom]
+        .models.as[RandomEffect.ReModel].collect()
+        .map(r => r.reId -> r.intercept).toMap
+      val scores = m.score(data).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      (g.coef.toSeq :+ g.intercept, users, scores)
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val broadcastFit = fit()
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val shuffleFit = try fit() finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(spark.conf.getOption(key) == saved)
+    // relative, floored at 1: a score that nets out near 0 from O(1)
+    // terms keeps the terms' absolute rounding (summation order differs
+    // with the partitioning of the shuffle-joined residual)
+    def close(a: Double, b: Double, what: String): Unit =
+      assert(math.abs(a - b) <=
+        1e-12 * math.max(1.0, math.max(math.abs(a), math.abs(b))),
+        s"$what: broadcast=$a shuffle=$b")
+    broadcastFit._1.zip(shuffleFit._1).foreach { case (a, b) =>
+      close(a, b, "fixed") }
+    assert(broadcastFit._2.keySet == shuffleFit._2.keySet)
+    broadcastFit._2.foreach { case (u, a) => close(a, shuffleFit._2(u), u) }
+    assert(broadcastFit._3.keySet == shuffleFit._3.keySet)
+    broadcastFit._3.foreach { case (uid, a) =>
+      close(a, shuffleFit._3(uid), s"$uid") }
   }
 
   test("active cap and lower bound flow through coordinate descent") {

@@ -192,4 +192,21 @@ class GlmSpec extends SparkSpec {
     }
     assert(path.size == 3)
   }
+
+  test("the distributed objective releases only the cache it persisted") {
+    import org.apache.spark.storage.StorageLevel
+    val cfg = GlmConfig(SquaredLoss)
+    val callerCached = synthetic(200, Array(1.0, -1.0), 0.5, false).toDS()
+    callerCached.rdd.persist(StorageLevel.MEMORY_ONLY)
+    val shared = new DistributedGlmObjective(callerCached, 2, cfg)
+    shared.unpersist()
+    assert(callerCached.rdd.getStorageLevel == StorageLevel.MEMORY_ONLY)
+    callerCached.rdd.unpersist(false)
+
+    val uncached = synthetic(200, Array(1.0, -1.0), 0.5, false).toDS()
+    val own = new DistributedGlmObjective(uncached, 2, cfg)
+    assert(uncached.rdd.getStorageLevel == StorageLevel.MEMORY_AND_DISK)
+    own.unpersist()
+    assert(uncached.rdd.getStorageLevel == StorageLevel.NONE)
+  }
 }
