@@ -3,6 +3,7 @@ package graft
 import graft.functions.{TextFunctions => TF, VectorOps => V}
 import graft.operators._
 import graft.util.Exact._
+import graft.util.{ExecProfile, TempDirs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,17 +31,6 @@ object SparkEntry {
   private def revenueDec: Column =
     dec(col("l_extendedprice"), 12, 4) * dec(lit(1) - col("l_discount"), 12, 4)
 
-  /** Run a FIXTURE-SCALE lifecycle gate with AQE off and a narrow
-    * shuffle width, restoring the session settings after. These gates
-    * measure persisted-index state machines on few-row planted
-    * corpora, where wall time is pure Spark scheduling floor: AQE
-    * turns every exchange of every probe/health/compact plan into its
-    * own stage-job (q254 ran 295 jobs on a 4-row fixture — 60-90 ms
-    * of scheduler latency each), buying nothing because there is no
-    * data to re-plan around. Semantics are unchanged (AQE is an
-    * execution strategy), so the gate's rows stay hash-identical; the
-    * production-scale probes keep AQE — this wraps only the gates
-    * whose data is constant-size by construction. */
   /** Run independent per-index actions of a lifecycle gate
     * CONCURRENTLY (one thread per action, bounded by the caller's
     * list): each action drives its own index dir under its own writer
@@ -57,14 +47,20 @@ object SparkEntry {
       Future.sequence(fs.map(f => Future(f()))), 10.minutes): Unit
   }
 
-  private def fixtureTuned[A](s: SparkSession)(body: => A): A = {
-    val aqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    val parts = s.conf.get("spark.sql.shuffle.partitions", "200")
-    val wsc = s.conf.get("spark.sql.codegen.wholeStage", "true")
-    val cgf = s.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    val abt = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+  /** Session confs of a FIXTURE-SCALE lifecycle gate: AQE off and a
+    * narrow shuffle width. These gates measure persisted-index state
+    * machines on few-row planted corpora, where wall time is pure Spark
+    * scheduling floor: AQE turns every exchange of every
+    * probe/health/compact plan into its own stage-job (q254 ran 295
+    * jobs on a 4-row fixture — 60-90 ms of scheduler latency each),
+    * buying nothing because there is no data to re-plan around.
+    * Semantics are unchanged (AQE is an execution strategy), so the
+    * gate's rows stay hash-identical; the production-scale probes keep
+    * AQE — only the gates whose data is constant-size by construction
+    * run under these confs. */
+  private val FixtureConfs = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "4",
     // constructed-fixture gates run dozens of DISTINCT lifecycle plans
     // over ≤ ~20-row planted states: janino-compiling kilobytes of
     // whole-stage Java per plan costs far more than interpreting the
@@ -72,8 +68,8 @@ object SparkEntry {
     // codegen vs 5.2 s interpreted). Scale-honest because these gates'
     // inputs are constant-size BY CONSTRUCTION (decades flat) — the
     // data-bearing queries keep codegen on.
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
     // every BroadcastExchange materializes through its OWN job — at
     // fixture scale a single lifecycle action's plan carries dozens of
     // auto-broadcast tiny sides, so the gate's cost is ~one scheduler
@@ -81,16 +77,27 @@ object SparkEntry {
     // batch). 4-partition shuffle joins fold the same tiny joins into
     // the action's one job. Explicit broadcast() hints (load-bearing
     // at scale) are unaffected; join STRATEGY never changes rows.
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body
-    finally {
-      s.conf.set("spark.sql.adaptive.enabled", aqe)
-      s.conf.set("spark.sql.shuffle.partitions", parts)
-      s.conf.set("spark.sql.codegen.wholeStage", wsc)
-      s.conf.set("spark.sql.codegen.factoryMode", cgf)
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
-    }
-  }
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  private def fixtureTuned[A](s: SparkSession)(body: => A): A =
+    ExecProfile.withConfs(s, FixtureConfs)(body)
+
+  /** Shuffle width of the streaming gates' `start()`: a stateful
+    * query's state-store count is frozen from shuffle.partitions at
+    * start, their key sets are small (q92: 150 users) and per-batch
+    * overhead scales with store count (each micro-batch opens/commits
+    * every store) — so they size it to the key cardinality scale. */
+  private val StateStoreConfs = Map("spark.sql.shuffle.partitions" -> "8")
+
+  /** The q29 query/corpus split of the embeddings table: vectors 0-4
+    * are the queries (`qid`, `qv`), the rest the corpus (`id`, `v`).
+    * Takes the loaded table, so a caller that also reads its labels
+    * shares one load (a second load costs q159 one more Spark job). */
+  private def knnSplit(emb: DataFrame): (DataFrame, DataFrame) =
+    (emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+     emb.filter(col("vec_id") >= 5)
+      .select(col("vec_id").as("id"), col("embedding").as("v")))
 
   // ------------------------------------------------------- relational (§2.3/2.4)
 
@@ -550,11 +557,7 @@ object SparkEntry {
 
   /** Brute-force exact cosine top-k (ANN baseline). */
   def q29_knn_brute(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
     Similarity.bruteForce(queries, corpus, 3)
       .select(col("qid"), col("rank"), col("id"), col("cosine"))
   }
@@ -1373,18 +1376,10 @@ object SparkEntry {
       gapMs = 30 * 60 * 1000L, watermark = "1 hour")
     val sink = "q92_sessions_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    // the state-store partition count is frozen from shuffle.partitions
-    // at query start; 150 user keys do not need 32 state stores, and
-    // per-batch overhead scales with store count (each micro-batch
-    // opens/commits every store) — size it to the key cardinality scale
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSaved = s.conf.get(spKey)
-    val q =
-      try {
-        s.conf.set(spKey, "8")
-        sessions.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-      } finally s.conf.set(spKey, spSaved)
+    val q = ExecProfile.withConfs(s, StateStoreConfs) {
+      sessions.writeStream.outputMode("append")
+        .format("memory").queryName(sink).start()
+    }
     try {
       // two mid-stream barriers: enough for the watermark to advance
       // across micro-batches (incremental flushing is exercised), few
@@ -1432,14 +1427,10 @@ object SparkEntry {
       watermark = "1 hour")
     val sink = "q133_dedup_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val spKey = "spark.sql.shuffle.partitions"
-    val spSaved = s.conf.get(spKey)
-    val q =
-      try {
-        s.conf.set(spKey, "8")
-        deduped.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-      } finally s.conf.set(spKey, spSaved)
+    val q = ExecProfile.withConfs(s, StateStoreConfs) {
+      deduped.writeStream.outputMode("append")
+        .format("memory").queryName(sink).start()
+    }
     try {
       val chunk = math.max(1, (docs.length + 3) / 4)
       docs.grouped(chunk).foreach { c =>
@@ -1461,18 +1452,17 @@ object SparkEntry {
     * so the hash compare is batch-equivalent regardless of batch
     * slicing. */
   def q209_streaming_file(s: SparkSession, d: String): DataFrame = {
-    val stage = graft.util.TempDirs.fresh("q209_stage_")
     // the staging dir must not leak on ANY failure (the write itself,
     // readStream setup, or start()), not just a mid-stream one — so the
     // cleanup wraps everything from the first write onward
-    try {
+    TempDirs.using("q209_stage_") { case Seq(stage) =>
       val ev = T.events(s, d)
         .select(col("ts"), col("event_type"), col("value"))
-      ev.repartition(8).write.parquet(stage.getAbsolutePath)
+      ev.repartition(8).write.parquet(stage)
       val stream = s.readStream
         .schema(org.apache.spark.sql.types.StructType(ev.schema.fields))
         .option("maxFilesPerTrigger", "2")
-        .parquet(stage.getAbsolutePath)
+        .parquet(stage)
       val agg = stream
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
@@ -1480,16 +1470,10 @@ object SparkEntry {
           sumExact(col("value"), 18, 6).cast("double").as("sum_value"))
       val sink = "q209_file_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
-      // same state-store sizing rationale as q92: freeze a key-scale
-      // partition count for the stateful agg
-      val spKey = "spark.sql.shuffle.partitions"
-      val spSaved = s.conf.get(spKey)
-      val q =
-        try {
-          s.conf.set(spKey, "8")
-          agg.writeStream.outputMode("complete")
-            .format("memory").queryName(sink).start()
-        } finally s.conf.set(spKey, spSaved)
+      val q = ExecProfile.withConfs(s, StateStoreConfs) {
+        agg.writeStream.outputMode("complete")
+          .format("memory").queryName(sink).start()
+      }
       try q.processAllAvailable()
       finally q.stop()
       val out = s.table(sink).select(
@@ -1503,7 +1487,7 @@ object SparkEntry {
       s.catalog.dropTempView(sink)
       s.createDataFrame(
         java.util.Arrays.asList(rows: _*), out.schema)
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Int8 embedding quantization manifest: per-vector symmetric scale +
@@ -1632,9 +1616,7 @@ object SparkEntry {
     val emb = T.embeddings(s, d)
     val base = emb.filter(col("vec_id") % 10 < 8)
     val batch = emb.filter(col("vec_id") % 10 >= 8)
-    val stage = graft.util.TempDirs.fresh("q237_sem_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q237_sem_") { case Seq(root) =>
       val (labels, centroids) = operators.Clustering.kmeansWithCentroids(
         base, "vec_id", "embedding", k = 16, iterations = 2)
       operators.Clustering.semDedupStateSave(s, root, labels, "vec_id",
@@ -1643,7 +1625,7 @@ object SparkEntry {
       operators.Clustering.semDedupIncrementalPersisted(s, root, base,
         batch, "vec_id", "embedding", tau = 0.3)
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Incremental SemDeDup at the SCALE clustering
@@ -1745,11 +1727,7 @@ object SparkEntry {
     * set (corpus ids ≡ qid mod 5) excluded before the bounded-heap
     * top-k — one broadcast anti join inside the single corpus scan. */
   def q122_hard_negatives(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
     val positives = corpus.select((col("id") % 5).as("qid"), col("id"))
     Similarity.hardNegatives(queries, corpus, positives, 3)
       .select(col("qid"), col("rank"), col("id"), col("cosine"))
@@ -2449,11 +2427,7 @@ object SparkEntry {
     * data-adaptive scale path next to q41's LSH; k-means assignment is
     * run-deterministic but not engine-mirrorable → rows-only check). */
   def q43_knn_ivf(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
     Similarity.ivf(queries, corpus, 3, nList = 8, nProbe = 2)
   }
 
@@ -2464,11 +2438,7 @@ object SparkEntry {
     * oracle. The approximation quality of the real nProbe < nList path
     * (q43) is gated by SamplingSpec's recall floor. */
   def q43o_knn_ivf_full(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
     // probe-all makes the result invariant to clustering quality, so a
     // couple of k-means sweeps suffice — the gate is the machinery
     Similarity.ivf(queries, corpus, 3, nList = 8, nProbe = 8,
@@ -2483,18 +2453,13 @@ object SparkEntry {
     * builds and probes the index. */
   private def annIndexGate(s: SparkSession, d: String, prefix: String)(
       run: (DataFrame, DataFrame, String) => DataFrame): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val dir = graft.util.TempDirs.fresh(prefix)
-    try {
-      val got = run(queries, corpus, dir.getAbsolutePath)
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
+    TempDirs.using(prefix) { case Seq(dir) =>
+      val got = run(queries, corpus, dir)
         .select(col("qid"), col("rank"), col("id"), col("cosine"))
       val rows = got.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), got.schema)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   /** IVF index PERSISTENCE gate ([[operators.Similarity.ivfBuild]] /
@@ -2614,21 +2579,16 @@ object SparkEntry {
     * fs-dependent fields (file counts, versions) are spec-gated in
     * SamplingSpec instead. */
   def q220_index_health(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val dir = graft.util.TempDirs.fresh("q220_health_")
-    try {
-      Similarity.ivfBuild(corpus, dir.getAbsolutePath, nList = 8,
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
+    TempDirs.using("q220_health_") { case Seq(dir) =>
+      Similarity.ivfBuild(corpus, dir, nList = 8,
         kmeansMaxIter = 2)
-      val got = Similarity.ivfIndexHealth(s, dir.getAbsolutePath, queries,
+      val got = Similarity.ivfIndexHealth(s, dir, queries,
         k = 3, nProbe = 8)
         .select(col("n_lists"), col("total_rows"), col("recall_at_k"))
       val rows = got.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), got.schema)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   /** [[q220_index_health]] for the COMPRESSED layout
@@ -2639,22 +2599,17 @@ object SparkEntry {
     * lossy codes only order candidates; exact refinement over every
     * candidate decides, with deterministic ties). */
   def q230_index_health_pq(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val dir = graft.util.TempDirs.fresh("q230_health_")
-    try {
-      Similarity.ivfPqBuild(corpus, dir.getAbsolutePath, nList = 8,
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
+    TempDirs.using("q230_health_") { case Seq(dir) =>
+      Similarity.ivfPqBuild(corpus, dir, nList = 8,
         m = 4, nCodes = 8, kmeansMaxIter = 2)
-      val got = Similarity.ivfPqIndexHealth(s, dir.getAbsolutePath,
+      val got = Similarity.ivfPqIndexHealth(s, dir,
         queries, corpus, k = 3, nProbe = 8,
         refineK = corpus.count().toInt)
         .select(col("n_lists"), col("total_rows"), col("recall_at_k"))
       val rows = got.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), got.schema)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   /** Maintenance plan→apply gate ([[operators.Similarity
@@ -2668,16 +2623,10 @@ object SparkEntry {
     * across files, and a compaction always coalesces each list back to
     * one file. */
   def q229_index_maintenance(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
     val mid = corpus.agg(
       percentile_approx(col("id"), lit(0.5), lit(10000))).head().getLong(0)
-    val dir = graft.util.TempDirs.fresh("q229_maint_")
-    try {
-      val root = dir.getAbsolutePath
+    TempDirs.using("q229_maint_") { case Seq(root) =>
       Similarity.ivfBuild(corpus.filter(col("id") <= mid), root,
         nList = 8, kmeansMaxIter = 2)
       Similarity.ivfAppend(s, root, corpus.filter(col("id") > mid))
@@ -2694,7 +2643,7 @@ object SparkEntry {
         before.getAs[String]("action"), after.getAs[String]("action")))
         .toDF("n_lists", "total_rows", "action_fragmented",
           "action_compacted")
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   /** Streaming index-INGEST gate ([[operators.Similarity.ivfIngest]]):
@@ -2709,20 +2658,19 @@ object SparkEntry {
         percentile_approx(col("id"), lit(0.5), lit(10000))).head().getLong(0)
       Similarity.ivfBuild(corpus.filter(col("id") <= mid), dir,
         nList = 8, kmeansMaxIter = 2)
-      val stage = graft.util.TempDirs.fresh("q221_stage_")
-      try {
+      TempDirs.using("q221_stage_") { case Seq(stage) =>
         // two staged files = two micro-batches: enough to exercise the
         // multi-batch append path without doubling the gate's job count
         val delta = corpus.filter(col("id") > mid)
-        val files = stage.getAbsolutePath + "/files"
+        val files = stage + "/files"
         delta.repartition(2).write.parquet(files)
         val stream = s.readStream.schema(delta.schema)
           .option("maxFilesPerTrigger", "1").parquet(files)
         val q = Similarity.ivfIngest(stream, dir,
-          stage.getAbsolutePath + "/ckpt")
+          stage + "/ckpt")
         try q.processAllAvailable()
         finally q.stop()
-      } finally graft.util.TempDirs.deleteRecursively(stage)
+      }
       Similarity.ivfQuery(s, dir, queries, k = 3, nProbe = 8)
     }
 
@@ -2741,18 +2689,17 @@ object SparkEntry {
       val mid = stats.getLong(0)
       Similarity.ivfPqBuild(corpus.filter(col("id") <= mid), dir,
         nList = 8, m = 4, nCodes = 8, kmeansMaxIter = 2)
-      val stage = graft.util.TempDirs.fresh("q227_stage_")
-      try {
+      TempDirs.using("q227_stage_") { case Seq(stage) =>
         val delta = corpus.filter(col("id") > mid)
-        val files = stage.getAbsolutePath + "/files"
+        val files = stage + "/files"
         delta.repartition(2).write.parquet(files)
         val stream = s.readStream.schema(delta.schema)
           .option("maxFilesPerTrigger", "1").parquet(files)
         val q = Similarity.ivfPqIngest(stream, dir,
-          stage.getAbsolutePath + "/ckpt")
+          stage + "/ckpt")
         try q.processAllAvailable()
         finally q.stop()
-      } finally graft.util.TempDirs.deleteRecursively(stage)
+      }
       Similarity.ivfPqQuery(s, dir, queries, corpus, k = 3, nProbe = 8,
         refineK = stats.getLong(1).toInt)
     }
@@ -2788,9 +2735,7 @@ object SparkEntry {
         lit(0.5) + lit(2.0) * col("x1") - col("x2") +
           u01(col("user"), 11) * 0.8 + u01(col("item"), 12) * 0.6 +
           u01(col("artist"), 13) * 0.4 + u01(col("id"), 99) * 0.05)
-    val stage = graft.util.TempDirs.fresh("q228_game_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q228_game_") { case Seq(root) =>
       // ONE corpus scan writes both splits (partitioned write) — two
       // filtered writes would read the events table twice, a real 2×
       // at the 100 TB input this models
@@ -2822,7 +2767,7 @@ object SparkEntry {
         rmse < 0.25))
         .toDF("n_train", "n_valid", "n_users", "n_items", "n_artists",
           "rmse_ok")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** q228's binary-classification twin (reference DriverTest.scala's
@@ -2855,9 +2800,7 @@ object SparkEntry {
           u01(col("user"), 11) * 1.2 + u01(col("item"), 12) * 0.9 +
           u01(col("artist"), 13) * 0.5 + u01(col("id"), 99) * 0.1 > 0)
           .cast("double"))
-    val stage = graft.util.TempDirs.fresh("q231_game_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q231_game_") { case Seq(root) =>
       data.withColumn("_split",
         when(pmod(col("id"), lit(5L)) === 0, lit("valid"))
           .otherwise(lit("train")))
@@ -2886,7 +2829,7 @@ object SparkEntry {
         auc > 0.93))
         .toDF("n_train", "n_valid", "n_users", "n_items", "n_artists",
           "auc_ok")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Incremental (prior-seeded) retraining through the CLI surface
@@ -2909,9 +2852,7 @@ object SparkEntry {
       col("vec_id").cast("long").as("uid"),
       col("label").cast("double").as("y"),
       element_at(col("embedding"), 4).cast("double").as("x"))
-    val stage = graft.util.TempDirs.fresh("q232_incr_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q232_incr_") { case Seq(root) =>
       pts.withColumn("_split",
         when(pmod(col("uid"), lit(2L)) === 0, lit("d1")).otherwise(lit("d2")))
         .write.partitionBy("_split").parquet(s"$root/data")
@@ -2933,7 +2874,7 @@ object SparkEntry {
       Seq((rnd6(g1.coef(0) + 1e-9), rnd6(g1.intercept + 1e-9),
         rnd6(g2.coef(0) + 1e-9), rnd6(g2.intercept + 1e-9)))
         .toDF("w1", "b1", "w2", "b2")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** GAME SCORING lifecycle e2e (reference GameScoringDriver.scala:
@@ -2976,9 +2917,7 @@ object SparkEntry {
         RandomSpec("perUser", "user", "emptyFeatures", 0, cfg), users),
       "perItem" -> TrainedRandom(
         RandomSpec("perItem", "item", "emptyFeatures", 0, cfg), items)))
-    val stage = graft.util.TempDirs.fresh("q233_score_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q233_score_") { case Seq(root) =>
       data.write.parquet(s"$root/data")
       graft.sources.ModelIO.saveGame(s, model, s"$root/model")
       val scores = graft.drivers.GameScoringDriver.run(s,
@@ -2994,7 +2933,7 @@ object SparkEntry {
       scores
         .select(col("uid"), round(col("score") + lit(1e-9), 6).as("score"))
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** FLEET-mode maintenance planning ([[operators.Similarity
@@ -3017,11 +2956,7 @@ object SparkEntry {
     * One plan call over the 3-row fleet; the oracle pins all three
     * actions. */
   def q234_fleet_maintenance_plan(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
     val mid = corpus.agg(
       percentile_approx(col("id"), lit(0.5), lit(10000))).head().getLong(0)
     // the decayed fixture: cluster directions u_c = e_c + 0.2·e_{c+1},
@@ -3041,10 +2976,8 @@ object SparkEntry {
     val decQueries = (0 until 4).map { c =>
       val a = new Array[Float](4); a(c) = 1.0f; (c.toLong, a)
     }.toDF("qid", "qv")
-    val dirs = Seq("q234_ok_", "q234_frag_", "q234_dec_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(okDir, fragDir, decDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q234_ok_", "q234_frag_", "q234_dec_") {
+      case Seq(okDir, fragDir, decDir) =>
       // three independent indexes: build them (and below, run their
       // eager recall probes) concurrently — the fleet-parallel shape,
       // identical results (q254's inParallel rationale)
@@ -3077,7 +3010,7 @@ object SparkEntry {
         recallFloor = 0.9, maxFilesPerListCeiling = 1)
         .select(col("idx"), col("action"))
       plan.localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** PERSISTED decontamination index lifecycle
@@ -3093,9 +3026,7 @@ object SparkEntry {
   def q235_decontam_index(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
     val bench = docs.filter(col("source") === "src0")
-    val stage = graft.util.TempDirs.fresh("q235_decontam_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q235_decontam_") { case Seq(root) =>
       Decontamination.decontamIndexBuild(
         bench.filter(pmod(col("doc_id"), lit(2L)) === 0), root,
         "text", n = 3)
@@ -3104,7 +3035,7 @@ object SparkEntry {
       Decontamination.decontamIndexReport(s, root,
         docs.filter(col("source") =!= "src0"), "doc_id", "text")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** PERSISTED MinHash-LSH near-dup index lifecycle
@@ -3121,9 +3052,7 @@ object SparkEntry {
     val docs = T.documents(s, d)
     val baseSrc = Seq("src0", "src1", "src2", "src3", "src4")
     val base = docs.filter(col("source").isInCollection(baseSrc))
-    val stage = graft.util.TempDirs.fresh("q236_minhash_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q236_minhash_") { case Seq(root) =>
       Dedup.minhashIndexBuild(
         base.filter(col("source").isInCollection(Seq("src0", "src1",
           "src2"))), root, "doc_id", "text")
@@ -3136,7 +3065,7 @@ object SparkEntry {
       Dedup.minhashIndexProbe(s, root,
         docs.filter(!col("source").isInCollection(baseSrc)), base,
         "doc_id", "text")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Health report of the persisted MinHash index
@@ -3155,9 +3084,7 @@ object SparkEntry {
     val docs = T.documents(s, d)
     val base = docs.filter(col("source").isInCollection(
       Seq("src0", "src1", "src2", "src3", "src4")))
-    val stage = graft.util.TempDirs.fresh("q238_mhhealth_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q238_mhhealth_") { case Seq(root) =>
       Dedup.minhashIndexBuild(
         base.filter(col("source").isInCollection(Seq("src0", "src1",
           "src2"))), root, "doc_id", "text")
@@ -3172,7 +3099,7 @@ object SparkEntry {
         .select("shingle_n", "sig_k", "n_bands", "total_rows",
           "n_buckets", "max_bucket", "hot_buckets")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** CROSS-FAMILY fleet maintenance plan
@@ -3221,10 +3148,8 @@ object SparkEntry {
       4L -> "the five boxing wizards jump quickly",
       5L -> "jackdaws love my big sphinx of quartz")
     val fragDocs = texts.toDF("id", "text").repartition(1)
-    val dirs = Seq("q239_ivf_", "q239_hot_", "q239_frag_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(ivfDir, hotDir, fragDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q239_ivf_", "q239_hot_", "q239_frag_") {
+      case Seq(ivfDir, hotDir, fragDir) =>
       Similarity.ivfBuild(okCorpus, ivfDir, nList = 4, kmeansMaxIter = 10)
       Dedup.minhashIndexBuild(hotDocs, hotDir, "id", "text")
       Dedup.minhashIndexBuild(fragDocs.filter(col("id") < 3), fragDir,
@@ -3246,7 +3171,7 @@ object SparkEntry {
         maxFragmentsCeiling = 2)
         .select(col("idx"), col("action"))
       plan.localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** PERSISTED SemDeDup state APPEND
@@ -3273,9 +3198,7 @@ object SparkEntry {
     val day1 = emb.filter(col("vec_id") % 10 === 8)
       .select(col("vec_id"), col("embedding"))
       .unionByName(planted)
-    val stage = graft.util.TempDirs.fresh("q240_semapp_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q240_semapp_") { case Seq(root) =>
       val (labels, centroids) = operators.Clustering.kmeansWithCentroids(
         base, "vec_id", "embedding", k = 16, iterations = 2)
       operators.Clustering.semDedupStateSave(s, root, labels, "vec_id",
@@ -3288,7 +3211,7 @@ object SparkEntry {
         .unionByName(day1)
       operators.Clustering.semDedupIncrementalPersisted(s, root,
         vecTable, day2, "vec_id", "embedding", tau = 0.3)
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** BAYESIAN hyperparameter tuning through the full GAME CLI surface
@@ -3312,9 +3235,7 @@ object SparkEntry {
       element_at(col("embedding"), 1).cast("double").as("x1"),
       element_at(col("embedding"), 2).cast("double").as("x2"),
       pmod(col("vec_id"), lit(13L)).as("grp"))
-    val stage = graft.util.TempDirs.fresh("q241_tune_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q241_tune_") { case Seq(root) =>
       pts.withColumn("_split",
         when(pmod(col("uid"), lit(5L)) === 0, lit("valid"))
           .otherwise(lit("train")))
@@ -3338,7 +3259,7 @@ object SparkEntry {
         results.forall(r => best.metric <= r.metric)))
         .toDF("n_trials", "lambdas_in_box", "selected_le_worst",
           "selected_le_all")
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** PERSISTED SimHash index ([[operators.Dedup.simhashIndexBuild]] /
@@ -3355,9 +3276,7 @@ object SparkEntry {
     val docs = T.documents(s, d)
     val baseSrc = Seq("src0", "src1", "src2", "src3", "src4")
     val base = docs.filter(col("source").isInCollection(baseSrc))
-    val stage = graft.util.TempDirs.fresh("q242_simhash_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q242_simhash_") { case Seq(root) =>
       Dedup.simhashIndexBuild(
         base.filter(col("source").isInCollection(Seq("src0", "src1",
           "src2"))), root, "doc_id", "text")
@@ -3368,7 +3287,7 @@ object SparkEntry {
         docs.filter(!col("source").isInCollection(baseSrc)),
         "doc_id", "text", maxHamming = 16)
         .withColumn("hamming", col("hamming").cast("long"))
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Health report of the persisted SimHash index
@@ -3383,9 +3302,7 @@ object SparkEntry {
     val docs = T.documents(s, d)
     val base = docs.filter(col("source").isInCollection(
       Seq("src0", "src1", "src2", "src3", "src4")))
-    val stage = graft.util.TempDirs.fresh("q243_shhealth_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q243_shhealth_") { case Seq(root) =>
       Dedup.simhashIndexBuild(
         base.filter(col("source").isInCollection(Seq("src0", "src1",
           "src2"))), root, "doc_id", "text")
@@ -3395,7 +3312,7 @@ object SparkEntry {
       Dedup.simhashIndexHealth(s, root, hotBucketCap = 25)
         .select("total_rows", "n_buckets", "max_bucket", "hot_buckets")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Centroid-DRIFT probe of a persisted IVF index
@@ -3420,9 +3337,7 @@ object SparkEntry {
     val healthy = corpus
     val drifted = (0 until 4).map(c => (100L + c, pt(4 + c)))
       .toDF("id", "v")
-    val stage = graft.util.TempDirs.fresh("q244_drift_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q244_drift_") { case Seq(root) =>
       Similarity.ivfBuild(corpus, root, nList = 4, kmeansMaxIter = 10)
       val fleet = Similarity.ivfDriftProbe(s, root, healthy)
         .withColumn("which", lit("healthy"))
@@ -3437,7 +3352,7 @@ object SparkEntry {
           round(col("drift_ratio"), 6).as("drift_ratio"),
           col("action"))
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Centroid+codebook DRIFT probe of a persisted IVF-PQ index
@@ -3458,9 +3373,7 @@ object SparkEntry {
     val corpus = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
     val drifted = (0 until 4).map(c => (100L + c, pt(4 + c)))
       .toDF("id", "v")
-    val stage = graft.util.TempDirs.fresh("q248_pqdrift_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q248_pqdrift_") { case Seq(root) =>
       Similarity.ivfPqBuild(corpus, root, nList = 4, m = 4, nCodes = 4,
         kmeansMaxIter = 10)
       val fleet = Similarity.ivfPqDriftProbe(s, root, corpus)
@@ -3476,7 +3389,7 @@ object SparkEntry {
           round(col("drift_ratio"), 6).as("drift_ratio"),
           col("action"))
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** DAILY-INGEST pipeline over PERSISTED state — the operational
@@ -3505,9 +3418,7 @@ object SparkEntry {
     val base = docs.filter(col("source").isInCollection(baseSrc))
     val batch = docs.filter(
       !col("source").isInCollection("src0" +: baseSrc))
-    val dirs = Seq("q249_mh_", "q249_dc_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(mhDir, dcDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q249_mh_", "q249_dc_") { case Seq(mhDir, dcDir) =>
       // two independent writer-lock domains — build concurrently
       // (q254's inParallel rationale)
       inParallel(
@@ -3536,7 +3447,7 @@ object SparkEntry {
             !coalesce(col("_near"), lit(false)) &&
             !col("is_contaminated")).as("accepted"))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** PERSISTED exact-hash index ([[operators.Dedup.exactIndexBuild]] /
@@ -3551,9 +3462,7 @@ object SparkEntry {
   def q250_exact_index(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
     val baseSrc = Seq("src1", "src2", "src3", "src4")
-    val stage = graft.util.TempDirs.fresh("q250_exact_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q250_exact_") { case Seq(root) =>
       Dedup.exactIndexBuild(
         docs.filter(col("source").isInCollection(Seq("src1", "src2"))),
         root, "doc_id", "text")
@@ -3564,7 +3473,7 @@ object SparkEntry {
         docs.filter(!col("source").isInCollection("src0" +: baseSrc)),
         "doc_id", "text")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** STREAMING admission against persisted curation state
@@ -3586,11 +3495,9 @@ object SparkEntry {
     val base = docs.filter(col("source").isInCollection(baseSrc))
     val batch = docs.filter(
       !col("source").isInCollection("src0" +: baseSrc))
-    val dirs = Seq("q251_ex_", "q251_mh_", "q251_dc_", "q251_stage_",
-      "q251_out_", "q251_ckpt_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, dcDir, stageDir, outDir, ckptDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.using("q251_ex_", "q251_mh_", "q251_dc_", "q251_stage_",
+        "q251_out_", "q251_ckpt_") {
+      case Seq(exDir, mhDir, dcDir, stageDir, outDir, ckptDir) =>
       // four independent destinations — build concurrently (q254's
       // inParallel rationale)
       inParallel(
@@ -3610,7 +3517,7 @@ object SparkEntry {
       try q.processAllAvailable()
       finally q.stop()
       s.read.parquet(outDir).localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** ADMISSION FUNNEL by source — the data-ops dashboard over the
@@ -3630,10 +3537,8 @@ object SparkEntry {
     val base = docs.filter(col("source").isInCollection(baseSrc))
     val batch = docs.filter(
       !col("source").isInCollection("src0" +: baseSrc))
-    val dirs = Seq("q252_ex_", "q252_mh_", "q252_dc_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, dcDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q252_ex_", "q252_mh_", "q252_dc_") {
+      case Seq(exDir, mhDir, dcDir) =>
       // three independent writer-lock domains — build concurrently
       // (q254's inParallel rationale)
       inParallel(
@@ -3653,7 +3558,7 @@ object SparkEntry {
           count(when(col("is_contaminated"), 1)).as("n_contaminated"),
           count(when(col("accepted"), 1)).as("n_accepted"))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** FLEET APPLY lifecycle ([[operators.Similarity
@@ -3682,10 +3587,8 @@ object SparkEntry {
     def vv(c: Double) = Seq(c, c + 0.001)
     val semVecs = Seq((0L, vv(1.0)), (1L, vv(1.0)), (2L, vv(1.0)),
       (3L, vv(-5.0))).toDF("id", "vec")
-    val dirs = Seq("q253_mh_", "q253_sh_", "q253_sem_", "q253_ex_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(mhDir, shDir, semDir, exDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q253_mh_", "q253_sh_", "q253_sem_", "q253_ex_") {
+      case Seq(mhDir, shDir, semDir, exDir) =>
       // four independent writer-lock domains — build concurrently
       // (q254's inParallel rationale; intra-family append order kept)
       inParallel(
@@ -3728,7 +3631,7 @@ object SparkEntry {
         .select(col("family"), col("action"), col("status"),
           col("action_after"))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** DELETE/retraction lifecycle across the persisted-index fleet
@@ -3766,10 +3669,8 @@ object SparkEntry {
     // after deleting 2 the nearest LIVE point is 1 (cos .6)
     val qv = { val a = new Array[Float](8); a(1) = 0.6f; a(2) = 0.8f; a }
     val queries = Seq((0L, qv)).toDF("qid", "qv")
-    val dirs = Seq("q254_ex_", "q254_mh_", "q254_sh_", "q254_ivf_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, ivfDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q254_ex_", "q254_mh_", "q254_sh_", "q254_ivf_") {
+      case Seq(exDir, mhDir, shDir, ivfDir) =>
       // the four families are independent writer-lock domains — their
       // builds (and below, deletes/compactions) run CONCURRENTLY, the
       // shape a fleet maintenance loop actually has; at fixture scale
@@ -3866,7 +3767,7 @@ object SparkEntry {
       (before ++ deleted ++ compacted)
         .toDF("family", "phase", "n_hits", "deleted_pending", "action")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** Cross-family admission ATOMICITY gate
@@ -3890,10 +3791,8 @@ object SparkEntry {
       .toDF("id", "text").repartition(1)
     val b2 = Seq(20L -> "how vexingly quick daft zebras jump")
       .toDF("id", "text").repartition(1)
-    val dirs = Seq("q255_ex_", "q255_mh_", "q255_sh_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q255_ex_", "q255_mh_", "q255_sh_") {
+      case Seq(exDir, mhDir, shDir) =>
       // three independent writer-lock domains — build concurrently
       // (q254's inParallel rationale)
       inParallel(
@@ -3940,7 +3839,7 @@ object SparkEntry {
         ("2_after_repair", nGap2, gap2, hits2))
         .toDF("phase", "n_gaps", "gaps", "simhash_probe_hits")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** PERSISTED admission-funnel history + SOURING-SOURCE detector
@@ -3980,10 +3879,8 @@ object SparkEntry {
         (16L, "s1", "window door wall floor roof ceiling"),
         (25L, "s2", nd("theta")),
         (26L, "s2", nd("iota"))))
-    val dirs = Seq("q256_ex_", "q256_mh_", "q256_dc_", "q256_hist_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, dcDir, histDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q256_ex_", "q256_mh_", "q256_dc_", "q256_hist_") {
+      case Seq(exDir, mhDir, dcDir, histDir) =>
       // three independent writer-lock domains — build concurrently
       // (q254's inParallel rationale)
       inParallel(
@@ -4007,7 +3904,7 @@ object SparkEntry {
       operators.CorpusPipeline.souringSources(s, histDir,
         window = 2, ratioCeiling = 2.0)
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** The daily-ingest loop CLOSED over persisted state (q249's
@@ -4031,10 +3928,8 @@ object SparkEntry {
       !col("source").isInCollection("src0" +: baseSrc))
     val day1 = batchAll.filter(col("doc_id") % 2 === 0)
     val day2 = batchAll.filter(col("doc_id") % 2 === 1)
-    val dirs = Seq("q257_ex_", "q257_mh_", "q257_dc_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, dcDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q257_ex_", "q257_mh_", "q257_dc_") {
+      case Seq(exDir, mhDir, dcDir) =>
       // three independent writer-lock domains — build concurrently
       // (q254's inParallel rationale)
       inParallel(
@@ -4060,7 +3955,7 @@ object SparkEntry {
         base.select(col("doc_id"), col("text")).unionByName(acc1),
         "doc_id", "text")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** CORPUS-REFRESH retraction applied fleet-wide
@@ -4096,11 +3991,9 @@ object SparkEntry {
     // neighbor is doc 2's
     val qv = { val a = new Array[Float](8); a(1) = 0.8f; a(2) = 0.6f; a }
     val queries = Seq((0L, qv)).toDF("qid", "qv")
-    val dirs = Seq("q258_ex_", "q258_mh_", "q258_sh_", "q258_ivf_",
-      "q258_dc_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, ivfDir, dcDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.using("q258_ex_", "q258_mh_", "q258_sh_", "q258_ivf_",
+        "q258_dc_") {
+      case Seq(exDir, mhDir, shDir, ivfDir, dcDir) =>
       // five independent writer-lock domains — build concurrently
       // (q254's inParallel rationale; the decontam index holds doc 1's
       // shingles too: the family the fleet delete must SKIP
@@ -4157,7 +4050,7 @@ object SparkEntry {
         .toDF("family", "status", "n_removed", "hits_before",
           "hits_after")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** Fleet-wide ERASURE-COMPLETION lifecycle across ALL SEVEN persisted
@@ -4205,11 +4098,9 @@ object SparkEntry {
     val vecs = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
     val dvecs = (0 until 4).map(c =>
       (c.toLong, pt(c).map(_.toDouble).toSeq)).toDF("id", "vec")
-    val dirs = Seq("q259_ex_", "q259_mh_", "q259_sh_", "q259_ivf_",
-      "q259_pq_", "q259_sem_", "q259_dc_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, ivfDir, pqDir, semDir, dcDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.using("q259_ex_", "q259_mh_", "q259_sh_", "q259_ivf_", "q259_pq_",
+        "q259_sem_", "q259_dc_") {
+      case Seq(exDir, mhDir, shDir, ivfDir, pqDir, semDir, dcDir) =>
       // seven independent writer-lock domains build concurrently (the
       // fleet-parallel shape; see q254)
       inParallel(
@@ -4260,7 +4151,7 @@ object SparkEntry {
         .toDF("family", "phase", "delete_status", "keys_live",
           "expected_residue", "deleted_pending", "complete")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** UNIFIED seven-family admission
@@ -4308,11 +4199,9 @@ object SparkEntry {
       (15L, "please answer this secret evaluation question regarding " +
         "ancient sphinxes", axis(7)))
       .toDF("id", "text", "vec").repartition(1)
-    val dirs = Seq("q260_ex_", "q260_mh_", "q260_sh_", "q260_sem_",
-      "q260_dc_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, semDir, dcDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.using("q260_ex_", "q260_mh_", "q260_sh_", "q260_sem_",
+        "q260_dc_") {
+      case Seq(exDir, mhDir, shDir, semDir, dcDir) =>
       // five independent writer-lock domains — build concurrently
       // (q254's inParallel rationale)
       inParallel(
@@ -4335,7 +4224,7 @@ object SparkEntry {
         semDedupDir = Some(semDir), baseVecs = Some(baseVecs),
         vecCol = "vec", tau = 0.95)
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** The ONE-CALL fleet maintenance loop
@@ -4370,11 +4259,9 @@ object SparkEntry {
     }
     val vecs = (0 until 4).map(c => (c.toLong, pt(c % 2)))
       .toDF("id", "vec")
-    val dirs = Seq("q261_ex_", "q261_sh_", "q261_sem_", "q261_dc_",
-      "q261_fn_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, shDir, semDir, dcDir, fnDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.using("q261_ex_", "q261_sh_", "q261_sem_", "q261_dc_",
+        "q261_fn_") {
+      case Seq(exDir, shDir, semDir, dcDir, fnDir) =>
       inParallel(
         () => Dedup.exactIndexBuild(docs, exDir, "id", "text"),
         () => {
@@ -4419,7 +4306,7 @@ object SparkEntry {
           report(r.getString(2)), r.getString(3))).toSeq.sortBy(_._1)
         .toDF("family", "action", "status", "action_after")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** STREAMING unified seven-family admission
@@ -4468,12 +4355,10 @@ object SparkEntry {
       (15L, "please answer this secret evaluation question regarding " +
         "ancient sphinxes", axis(7)))
       .toDF("id", "text", "vec").repartition(1)
-    val dirs = Seq("q262_ex_", "q262_mh_", "q262_sh_", "q262_sem_",
-      "q262_dc_", "q262_stage_", "q262_out1_", "q262_ck1_",
-      "q262_out2_", "q262_ck2_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir, semDir, dcDir, stageDir, out1, ck1,
-        out2, ck2) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q262_ex_", "q262_mh_", "q262_sh_", "q262_sem_", "q262_dc_",
+        "q262_stage_", "q262_out1_", "q262_ck1_", "q262_out2_", "q262_ck2_") {
+      case Seq(exDir, mhDir, shDir, semDir, dcDir, stageDir, out1, ck1, out2,
+          ck2) =>
       // six independent destinations (five writer-lock domains + the
       // staging dir) — build concurrently (q254's inParallel rationale;
       // q209/q251's file-source convention for the staged batch: a
@@ -4519,7 +4404,7 @@ object SparkEntry {
         .unionByName(
           s.read.parquet(out2).withColumn("cadence", lit(3L)))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** Fleet RUNBOOK lifecycle ([[operators.FleetRunbook]] +
@@ -4553,11 +4438,8 @@ object SparkEntry {
       .toDF("vid", "embedding")
     val fvecs = pts.zipWithIndex.map { case (p, i) =>
       (i.toLong, p.map(_.toFloat).toArray) }.toDF("id", "v")
-    val dirs = Seq("q263_sem_", "q263_pq_", "q263_store_", "q263_rb_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(semDir, pqDir, storeDir, rbDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.using("q263_sem_", "q263_pq_", "q263_store_", "q263_rb_") {
+      case Seq(semDir, pqDir, storeDir, rbDir) =>
       // four independent destinations — build concurrently (q254's
       // inParallel rationale). SemDeDup state frozen at k=1: every
       // vector in one cluster — the quantizer has "fallen behind" by
@@ -4611,7 +4493,7 @@ object SparkEntry {
           report(r.getString(2)), r.getString(3))).toSeq.sortBy(_._1)
         .toDF("family", "action", "status", "action_after")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** BUDGETED deep recall sweeps in the fleet loop
@@ -4654,10 +4536,8 @@ object SparkEntry {
       .toDF("id", "v")
     val queries = Seq((0L, ang(44.9))).toDF("qid", "qv")
     val hQueries = Seq((0L, ang(11.0))).toDF("qid", "qv")
-    val dirs = Seq("q264_a_", "q264_b_", "q264_log_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(aDir, bDir, logDir) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q264_a_", "q264_b_", "q264_log_") {
+      case Seq(aDir, bDir, logDir) =>
       // two independent writer-lock domains — build concurrently
       // (q254's inParallel rationale; A's append stays ordered after
       // its build inside the closure)
@@ -4695,7 +4575,7 @@ object SparkEntry {
       (s1 ++ applyRow ++ s2 ++ s3 ++ probeCounts)
         .toDF("step", "tag", "deep_probed", "outcome")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** The fully UNATTENDED fleet ops loop — the round's capstone
@@ -4745,12 +4625,9 @@ object SparkEntry {
     val texts = Seq(0L -> "alpha beta", 1L -> "gamma delta",
       2L -> "epsilon zeta", 3L -> "eta theta", 4L -> "iota kappa",
       5L -> "lambda mu")
-    val dirs = Seq("q265_ivf_", "q265_sem_", "q265_ex_", "q265_sa_",
-      "q265_sb_", "q265_rb_", "q265_log_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(ivfDir, semDir, exDir, storeA, storeB, rbDir, logDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.using("q265_ivf_", "q265_sem_", "q265_ex_", "q265_sa_", "q265_sb_",
+        "q265_rb_", "q265_log_") {
+      case Seq(ivfDir, semDir, exDir, storeA, storeB, rbDir, logDir) =>
       val dvecs = semPts.zipWithIndex.map { case (p, i) =>
         (i.toLong, p) }.toDF("vid", "embedding")
       // six independent destinations — build concurrently (q254's
@@ -4816,7 +4693,7 @@ object SparkEntry {
       (s1 ++ applied ++ s2 ++ probeCounts)
         .toDF("step", "tag", "deep_probed", "outcome")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   /** Fleet BACKUP/RESTORE lifecycle ([[operators.Similarity.fleetClone]]
@@ -4843,10 +4720,8 @@ object SparkEntry {
       .toDF("id", "text").repartition(1)
     val vecs = ((0 until 6).map(i => (i.toLong, ang(10.0 + i))) ++
       (0 until 6).map(i => (10L + i, ang(80.0 + i)))).toDF("id", "v")
-    val dirs = Seq("q266_src_", "q266_bak_", "q266_res_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(srcRoot, bakRoot, resRoot) = dirs.map(_.getAbsolutePath)
+    TempDirs.using("q266_src_", "q266_bak_", "q266_res_") {
+      case Seq(srcRoot, bakRoot, resRoot) =>
       val exDir = s"$srcRoot/ex"; val mhDir = s"$srcRoot/mh"
       val ivfDir = s"$srcRoot/ivf"
       // three independent writer-lock domains — build concurrently
@@ -4892,7 +4767,7 @@ object SparkEntry {
       (backup ++ verify ++ drift ++ restore)
         .toDF("step", "family", "outcome")
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
     }
 
   private def exDup2(s: SparkSession,
@@ -4914,9 +4789,7 @@ object SparkEntry {
     val emb = T.embeddings(s, d)
     val base = emb.filter(col("vec_id") % 10 < 8)
     val day1 = emb.filter(col("vec_id") % 10 === 8)
-    val stage = graft.util.TempDirs.fresh("q245_semhealth_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q245_semhealth_") { case Seq(root) =>
       val (labels, centroids) = operators.Clustering.kmeansWithCentroids(
         base, "vec_id", "embedding", k = 16, iterations = 2)
       operators.Clustering.semDedupStateSave(s, root, labels, "vec_id",
@@ -4929,7 +4802,7 @@ object SparkEntry {
         .select("n_clusters", "total_rows", "occupied_clusters",
           "max_cluster", "hot_clusters")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** Health report of a persisted decontamination index
@@ -4944,9 +4817,7 @@ object SparkEntry {
   def q246_decontam_health(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
     val bench = docs.filter(col("source") === "src0")
-    val stage = graft.util.TempDirs.fresh("q246_dchealth_")
-    try {
-      val root = stage.getAbsolutePath
+    TempDirs.using("q246_dchealth_") { case Seq(root) =>
       Decontamination.decontamIndexBuild(
         bench.filter(pmod(col("doc_id"), lit(2L)) === 0), root,
         "text", n = 3)
@@ -4955,7 +4826,7 @@ object SparkEntry {
       Decontamination.decontamIndexHealth(s, root)
         .select("shingle_n", "total_rows", "distinct_shingles")
         .localCheckpoint()
-    } finally graft.util.TempDirs.deleteRecursively(stage)
+    }
   }
 
   /** WHOLE-fleet maintenance plan: ONE
@@ -4995,11 +4866,9 @@ object SparkEntry {
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.99f, 0.01f)),
       (2L, Array(0.98f, 0.02f)), (3L, Array(0.0f, 1.0f)))
       .toDF("vec_id", "embedding")
-    val dirs = Seq("q247_ivf_", "q247_mh_", "q247_sh_", "q247_sem_",
-      "q247_dc_", "q247_ex_").map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(ivfDir, mhDir, shDir, semDir, dcDir, exDir) =
-        dirs.map(_.getAbsolutePath)
+    TempDirs.using("q247_ivf_", "q247_mh_", "q247_sh_", "q247_sem_", "q247_dc_",
+        "q247_ex_") {
+      case Seq(ivfDir, mhDir, shDir, semDir, dcDir, exDir) =>
       // seven independent writer-lock domains: build each family's
       // planted state concurrently (intra-family append order kept
       // inside its closure) — q254's inParallel rationale
@@ -5053,7 +4922,7 @@ object SparkEntry {
         driftRatioFloor = 0.5, hotClustersCeiling = 0L)
         .select(col("idx"), col("action"))
         .localCheckpoint()
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   /** BPE corpus-ENCODING gate ([[operators.Tokenizer.bpeEncode]]): the
@@ -5096,12 +4965,9 @@ object SparkEntry {
     * the tau flag — one broadcast, zero shuffles. The oracle is a plain
     * cross-join MAX with the q29 cosine arithmetic. */
   def q226_semantic_decontam(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    Similarity.benchmarkContamination(
-      emb.filter(col("vec_id") >= 5)
-        .select(col("vec_id").as("id"), col("embedding").as("v")),
-      "id", "v",
-      emb.filter(col("vec_id") < 5), "embedding", tau = 0.25)
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
+    Similarity.benchmarkContamination(corpus, "id", "v", queries, "qv",
+      tau = 0.25)
       .select(col("id"), col("max_benchmark_cosine"), col("contaminated"))
   }
 
@@ -5154,11 +5020,7 @@ object SparkEntry {
     * exact refine (production settings; recall-gated by SamplingSpec,
     * rows-only here — codes depend on the k-means fit). */
   def q68_knn_ivfpq(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
     Similarity.ivfPq(queries, corpus, 3, nList = 8, nProbe = 3,
       m = 16, nCodes = 16, refineK = 50)
   }
@@ -5168,11 +5030,7 @@ object SparkEntry {
     * matter what the quantizers learned, so encode/ADC/refine plumbing
     * faces q29's SQL oracle. */
   def q68o_knn_ivfpq_full(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
     // refine-ALL requires refineK ≥ |corpus| — count it rather than
     // assume a constant covers every scale factor the oracle replays at
     Similarity.ivfPq(queries, corpus, 3, nList = 8, nProbe = 8,
@@ -5183,11 +5041,7 @@ object SparkEntry {
 
   /** LSH-bucketed ANN (deterministic pseudo-random hyperplanes). */
   def q41_knn_lsh(s: SparkSession, d: String): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(T.embeddings(s, d))
     Similarity.lsh(queries, corpus, 3, nBits = 6, nProbe = 2)
   }
 
@@ -5290,10 +5144,7 @@ object SparkEntry {
     * ideal) and reciprocal rank of the first label ≥ 5 hit. */
   def q159_ndcg_mrr(s: SparkSession, d: String): DataFrame = {
     val emb = T.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val corpus = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
+    val (queries, corpus) = knnSplit(emb)
     val ranked = Similarity.bruteForce(queries, corpus, 10)
       .join(emb.select(col("vec_id").as("id"), col("label").as("rel")),
         "id")

@@ -39,10 +39,8 @@ object OpPlanDump {
       .toDF("id", "text")
     val delta = Seq((10L, "pack my box with five dozen liquor jugs too"))
       .toDF("id", "text")
-    val dirs = Seq("opplan_ex_", "opplan_mh_", "opplan_sh_")
-      .map(graft.util.TempDirs.fresh)
-    try {
-      val Seq(exDir, mhDir, shDir) = dirs.map(_.getAbsolutePath)
+    graft.util.TempDirs.using("opplan_ex_", "opplan_mh_", "opplan_sh_") {
+      case Seq(exDir, mhDir, shDir) =>
       Dedup.exactIndexBuild(docs, exDir, "id", "text")
       Dedup.minhashIndexBuild(docs, mhDir, "id", "text")
       Dedup.simhashIndexBuild(docs, shDir, "id", "text")
@@ -59,7 +57,7 @@ object OpPlanDump {
       dump("op_simhash_health", Dedup.simhashIndexHealth(spark, shDir))
       dump("op_fleet_erase_audit", Similarity.fleetEraseAudit(spark,
         Seq(exDir, mhDir, shDir), delta, "id", textCol = Some("text")))
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
 
     // GAME descent-pass residual shape (r17: scores-as-columns fusion).
     // The "before" shape is the old loop's exact composition, still

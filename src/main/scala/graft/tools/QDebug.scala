@@ -3,13 +3,20 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scratch harness for plan inspection and query timing experiments. */
+/** Plan inspection and per-call-site job timing for one query.
+  * Usage: runMain graft.tools.QDebug [query] [sfDir]; env QDEBUG_CONF
+  * adds session confs, QDEBUG_EXPLAIN prints the formatted plan. */
 object QDebug {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // QDEBUG_CONF="k1=v1;k2=v2" session confs, set before the session starts
+    val extraConf = sys.env.get("QDEBUG_CONF").toSeq
+      .flatMap(_.split(';').map(_.split('=')))
+      .collect { case Array(k, v) => k -> v }
     val spark = graft.util.SessionTuning(SparkSession.builder()).master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(extraConf.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = "/root/testdata/sf0.1"
@@ -72,18 +79,14 @@ object QDebug {
         }
     }
 
-    sys.env.get("QDEBUG_CONF").foreach { kvs =>
-      kvs.split(';').map(_.split('=')).foreach {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _           => ()
-      }
-    }
     val name = args.headOption.getOrElse("q52_game_events")
     val dir = if (args.length > 1) args(1) else d
     val q = graft.SparkEntry.queries(name)
     if (sys.env.contains("QDEBUG_EXPLAIN")) q(spark, dir).explain("formatted")
-    time(s"$name cold") { q(spark, dir).count() }
-    time(s"$name warm") { q(spark, dir).count() }
+    // time through toRdd, as Bench does: a bare count() lets Catalyst
+    // prune projection-only plans down to a row count
+    time(s"$name cold") { q(spark, dir).queryExecution.toRdd.count() }
+    time(s"$name warm") { q(spark, dir).queryExecution.toRdd.count() }
     spark.stop()
   }
 }

@@ -3,10 +3,11 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 import scala.util.Try
 
-/** Input-size-derived shuffle width for a bounded execution scope —
-  * the scale-adaptive pattern [[graft.ml.CoordinateDescent]] introduced
-  * for its descent loop, shared so the iterative graph family can key
-  * each round's shuffle width on its measured edge count the same way.
+/** Scoped session-conf mutation, and the input-size-derived shuffle
+  * width built on it — the scale-adaptive pattern
+  * [[graft.ml.CoordinateDescent]] introduced for its descent loop,
+  * shared so the iterative graph family can key each round's shuffle
+  * width on its measured edge count the same way.
   *
   * The adaptation is NOT a local-core-count tune: `derived =
   * min(sessionWidth, rows / rowsPerPartition + 1)`, so at production
@@ -21,7 +22,32 @@ import scala.util.Try
 object ExecProfile {
 
   private val SpKey = "spark.sql.shuffle.partitions"
-  private val AqeKey = "spark.sql.adaptive.enabled"
+
+  /** Run `body` with `confs` set on the session, then restore every key
+    * in `confs` exactly — on return or throw. The prior state is read
+    * from `conf.getAll`, which holds only the explicitly set keys: a key
+    * that was set gets its old value back, a key that was not set is
+    * unset again (so `getAll` after the scope equals `getAll` before).
+    * `getOption` could not tell the two apart — it answers a registered
+    * key's default for an unset key. Nested scopes restore in LIFO order.
+    *
+    * Session-global conf mutation: a scope must not open or close while
+    * other queries run on the same session. All in-repo callers open
+    * their scopes sequentially from one driver thread; work they overlap
+    * (e.g. `inParallel` actions) runs INSIDE one scope and opens none. */
+  def withConfs[T](spark: SparkSession, confs: Map[String, String])
+                  (body: => T): T = {
+    val before = spark.conf.getAll
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally confs.keys.foreach { k =>
+      before.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
+  }
 
   /** The width the scope would run at: `min(session, rows/rpp + 1)`,
     * or None when the session width is not a plain integer (e.g.
@@ -34,15 +60,15 @@ object ExecProfile {
       .map(sp => math.min(sp.toLong,
         rows / math.max(1L, rowsPerPartition) + 1L).toInt)
 
-  private val WscKey = "spark.sql.codegen.wholeStage"
-  private val CgfKey = "spark.sql.codegen.factoryMode"
+  /** Whole-stage codegen off, expressions interpreted. */
+  private val CodegenOff = Map(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   /** Run `body` with the derived shuffle width and AQE off when (and
     * only when) the derived width is below the session's; otherwise the
-    * body runs untouched. All confs are restored afterwards to the
-    * exact values the session observed before the scope (captured with
-    * `getOption`, never hardcoded defaults; a key `getOption` could not
-    * read is unset again).
+    * body runs untouched. The scope is a [[withConfs]] scope, so the
+    * session's confs afterwards are exactly those before.
     *
     * `codegenOff = true` additionally disables whole-stage codegen
     * inside an ACTIVE scope — for loops that materialize many DISTINCT
@@ -51,39 +77,20 @@ object ExecProfile {
     * rows (measured on the GAME descent loop: 25 materializations,
     * 9.3 s compiled vs 4.0 s interpreted at sf0.1). Same scale honesty
     * as the width: at production row counts the scope never activates
-    * and codegen stays on.
-    *
-    * Session-global conf mutation: the scope must not run concurrently
-    * with other queries on the same session — all in-repo callers drive
-    * their scope sequentially from one driver thread. Callers that
-    * overlap independent jobs do so OUTSIDE any derived-shuffle scope. */
+    * and codegen stays on. */
   def withDerivedShuffle[T](spark: SparkSession, rows: Long,
                             rowsPerPartition: Long = 25000L,
                             codegenOff: Boolean = false)
                            (body: => T): T = {
     val sessionParts = spark.conf.getOption(SpKey)
       .flatMap(v => Try(v.trim.toInt).toOption)
-    val derived = derivedWidth(spark, rows, rowsPerPartition)
-    val active = (sessionParts, derived) match {
-      case (Some(sp), Some(d)) => d < sp
-      case _ => false
-    }
-    if (!active) body
-    else {
-      val keys = Seq(SpKey, AqeKey) ++
-        (if (codegenOff) Seq(WscKey, CgfKey) else Nil)
-      val saved = keys.map(k => k -> spark.conf.getOption(k))
-      spark.conf.set(SpKey, derived.get.toString)
-      spark.conf.set(AqeKey, "false")
-      if (codegenOff) {
-        spark.conf.set(WscKey, "false")
-        spark.conf.set(CgfKey, "NO_CODEGEN")
-      }
-      try body
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    derivedWidth(spark, rows, rowsPerPartition)
+      .filter(d => sessionParts.exists(d < _)) match {
+      case None => body
+      case Some(d) =>
+        val narrow = Map(SpKey -> d.toString,
+          "spark.sql.adaptive.enabled" -> "false")
+        withConfs(spark, if (codegenOff) narrow ++ CodegenOff else narrow)(body)
     }
   }
 }

@@ -78,16 +78,11 @@ class CosineSimSpec extends SparkSpec {
     val sel = vecs.select(col("id"),
       VectorOps.cosine(col("a"), col("b")).as("c"))
     val gen = sel.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    try {
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      val interp = sel.collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(gen == interp)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
-      case None => spark.conf.unset("spark.sql.codegen.factoryMode")
+    val interp = graft.util.ExecProfile.withConfs(spark,
+        Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN")) {
+      sel.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     }
+    assert(gen == interp)
   }
 
   test("scoring projection stays inside whole-stage codegen (no UDF)") {

@@ -384,15 +384,9 @@ class GameSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       (g.coef.toSeq :+ g.intercept, users, scores)
     }
-    val key = "spark.sql.autoBroadcastJoinThreshold"
     val broadcastFit = fit()
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    val shuffleFit = try fit() finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    assert(spark.conf.getOption(key) == saved)
+    val shuffleFit = graft.util.ExecProfile.withConfs(spark,
+      Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))(fit())
     // relative, floored at 1: a score that nets out near 0 from O(1)
     // terms keeps the terms' absolute rounding (summation order differs
     // with the partitioning of the shuffle-joined residual)

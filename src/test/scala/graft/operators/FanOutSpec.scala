@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.Tables
+import graft.util.ExecProfile
 import org.apache.spark.sql.functions._
 
 /** Contract of the small-input scan fan-out (Tables.fanOut): it exists
@@ -18,16 +19,13 @@ class FanOutSpec extends SparkSpec {
     f.getAbsolutePath
   }
 
-  private def withSizing(minBytes: Long, perPart: Long)(body: => Unit): Unit = {
-    spark.conf.set("spark.graft.fanout", "true")
-    spark.conf.set("spark.graft.fanout.minBytes", minBytes.toString)
-    spark.conf.set("spark.graft.fanout.bytesPerPartition", perPart.toString)
-    try body
-    finally {
-      spark.conf.unset("spark.graft.fanout.minBytes")
-      spark.conf.unset("spark.graft.fanout.bytesPerPartition")
-    }
-  }
+  private def withFanOut(confs: (String, String)*)(body: => Unit): Unit =
+    ExecProfile.withConfs(spark,
+      Map("spark.graft.fanout" -> "true") ++ confs)(body)
+
+  private def withSizing(minBytes: Long, perPart: Long)(body: => Unit): Unit =
+    withFanOut("spark.graft.fanout.minBytes" -> minBytes.toString,
+      "spark.graft.fanout.bytesPerPartition" -> perPart.toString)(body)
 
   test("single-split scan above the size floor fans out to parallelism") {
     // 1 byte per partition → the byte-proportional target saturates at
@@ -48,12 +46,13 @@ class FanOutSpec extends SparkSpec {
     // the repartition must be skipped entirely — this pins the r8 fix
     // for the ~20 sub-second queries that paid a 32-way exchange for a
     // 2k-row input
-    spark.conf.set("spark.graft.fanout", "true")
-    val p = tmp("fanout_tiny")
-    spark.range(1000).select(col("id").as("k"), (col("id") * 2).as("v"))
-      .coalesce(1).write.parquet(p)
-    val df = Tables.fanOut(spark.read.parquet(p), "k")
-    assert(!graft.sources.Bucketing.hasShuffle(df))
+    withFanOut() {
+      val p = tmp("fanout_tiny")
+      spark.range(1000).select(col("id").as("k"), (col("id") * 2).as("v"))
+        .coalesce(1).write.parquet(p)
+      val df = Tables.fanOut(spark.read.parquet(p), "k")
+      assert(!graft.sources.Bucketing.hasShuffle(df))
+    }
   }
 
   test("mid-size scan gets a byte-proportional partition count") {
@@ -88,11 +87,10 @@ class FanOutSpec extends SparkSpec {
   test("spark.graft.fanout=false disables the repartition entirely") {
     val p = tmp("fanout3")
     spark.range(100).select(col("id").as("k")).coalesce(1).write.parquet(p)
-    spark.conf.set("spark.graft.fanout", "false")
-    try {
+    ExecProfile.withConfs(spark, Map("spark.graft.fanout" -> "false")) {
       val df = Tables.fanOut(spark.read.parquet(p), "k")
       assert(!graft.sources.Bucketing.hasShuffle(df))
-    } finally spark.conf.set("spark.graft.fanout", "true")
+    }
   }
 
   test("fan-out preserves row multiset") {

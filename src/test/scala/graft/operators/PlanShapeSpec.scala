@@ -11,7 +11,9 @@ class PlanShapeSpec extends SparkSpec {
 
   // 0-shuffle proofs assert what the operators do; the small-input scan
   // fan-out (Tables.fanOut) would add an environment-dependent exchange
-  spark.conf.set("spark.graft.fanout", "false")
+  override def withFixture(test: NoArgTest) =
+    graft.util.ExecProfile.withConfs(spark,
+      Map("spark.graft.fanout" -> "false"))(super.withFixture(test))
 
   test("zValue attachment is a pure projection (no shuffle)") {
     val df = (1 to 100).map(i => (i.toLong, (i * 7 % 50).toLong))

@@ -97,9 +97,10 @@ class ShuffleBudgetSpec extends SparkSpec {
       // budgets pin what the OPERATORS shuffle; the small-input fan-out
       // (Tables.fanOut) is an input-layout adaptation that would add one
       // environment-dependent exchange per scan — keep it out of the pin
-      spark.conf.set("spark.graft.fanout", "false")
-      val df = graft.SparkEntry.queries(name)(spark, sf("sf0.001"))
-      val n = countShuffles(df)
+      val n = graft.util.ExecProfile.withConfs(spark,
+          Map("spark.graft.fanout" -> "false")) {
+        countShuffles(graft.SparkEntry.queries(name)(spark, sf("sf0.001")))
+      }
       assert(n <= budget,
         s"$name shuffles $n times, budget $budget — plan drifted")
     }

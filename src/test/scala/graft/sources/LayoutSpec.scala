@@ -18,11 +18,10 @@ class LayoutSpec extends SparkSpec {
       .toDF("key", "rv")
     Bucketing.writeBucketed(left, "t_left", s"$dir/left", "key", 8)
     Bucketing.writeBucketed(right, "t_right", s"$dir/right", "key", 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force a sort-merge join so the test actually proves bucket
-      // co-location (a broadcast join has no shuffle to elide)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // force a sort-merge join so the test actually proves bucket
+    // co-location (a broadcast join has no shuffle to elide)
+    try graft.util.ExecProfile.withConfs(spark,
+        Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val joined = Bucketing.coLocatedJoin(spark, "t_left", "t_right", "key")
       assert(!Bucketing.hasShuffle(joined),
         "bucketed join should not shuffle")
@@ -32,7 +31,6 @@ class LayoutSpec extends SparkSpec {
       // sanity: the same join on unbucketed data DOES shuffle
       assert(Bucketing.hasShuffle(left.join(right, "key")))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS t_left")
       spark.sql("DROP TABLE IF EXISTS t_right")
     }

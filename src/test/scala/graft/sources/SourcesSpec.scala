@@ -107,16 +107,13 @@ class SourcesSpec extends SparkSpec {
     // the range-sorted index RDD keeps a multi-partition layout end to
     // end (the r3 bug was a global window that forced 1 partition at ANY
     // size; AQE coalescing tiny shuffles to 1 is correct and unrelated)
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val saved = spark.conf.get(coalesceKey, "true")
-    val m1 =
-      try {
-        spark.conf.set(coalesceKey, "false")
-        val m = FeatureVectorizer.buildIndexMap(df, Seq("bag"))
-        assert(m.rdd.getNumPartitions > 1,
-          s"index build collapsed to ${m.rdd.getNumPartitions} partition(s)")
-        m
-      } finally spark.conf.set(coalesceKey, saved)
+    val m1 = graft.util.ExecProfile.withConfs(spark,
+        Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
+      val m = FeatureVectorizer.buildIndexMap(df, Seq("bag"))
+      assert(m.rdd.getNumPartitions > 1,
+        s"index build collapsed to ${m.rdd.getNumPartitions} partition(s)")
+      m
+    }
     val got = m1.collect().map(r => r.getString(0) -> r.getInt(1))
     // indices are exactly the rank in sorted-key order, 0..n-1 dense
     val keys = got.map(_._1).toSeq
