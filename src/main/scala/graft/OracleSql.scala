@@ -1657,8 +1657,8 @@ object OracleSql {
     "q213_knn_ivfpq_index" -> exactKnnSql,
 
     // index-health report's deterministic fields: list count is the
-    // quantizer's k (8 by construction — Spark KMeans always returns k
-    // centers), total rows is the indexed corpus, and probe-all recall
+    // quantizer's k (8 by construction — the local Lloyd fit always
+    // returns k centers), total rows is the indexed corpus, and probe-all recall
     // is exactly 1.0 (deterministic ties on both sides)
     "q220_index_health" ->
       """SELECT CAST(8 AS INTEGER) AS n_lists,

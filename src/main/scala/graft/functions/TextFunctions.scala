@@ -53,17 +53,6 @@ object TextFunctions {
     coalesce(size(regexp_extract_all(text, lit(bpePiecePattern), lit(0))),
       lit(0))
 
-  /** Composite heuristic quality score in [0,1]: favors mid-length docs
-    * with a healthy stopword ratio and moderate token length. */
-  def qualityScore(text: Column, stop: Seq[String]): Column = {
-    val n = tokenCount(text).cast("double")
-    val lengthTerm = least(n / lit(100.0), lit(1.0))
-    val stopTerm = least(stopwordRatio(text, stop) * 4.0, lit(1.0))
-    val lenTok = meanTokenLen(text)
-    val tokTerm = when(lenTok.between(3.0, 10.0), 1.0).otherwise(0.5)
-    lengthTerm * 0.4 + stopTerm * 0.4 + tokTerm * 0.2
-  }
-
   /** Per-language stopword tables for the n-gram/stopword language-ID
     * heuristic (public-knowledge most-frequent words). */
   val langStopwords: Seq[(String, Seq[String])] = Seq(

@@ -23,8 +23,6 @@ object VectorOps {
 
   def normSq(a: Column): Column = dot(a, a)
 
-  def l2Norm(a: Column): Column = sqrt(normSq(a))
-
   /** Cosine similarity, computed in ONE compiled pass per pair.
     *
     * Numerically identical to `dot(a,b) / sqrt(normSq(a)*normSq(b))`
@@ -47,11 +45,6 @@ object VectorOps {
       GraftColumnShims.expression(asDouble(a)),
       GraftColumnShims.expression(asDouble(b))))
   }
-
-  /** Euclidean distance squared (cheaper than sqrt for ranking). */
-  def distSq(a: Column, b: Column): Column =
-    aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
 
   /** a + s*b (axpy). */
   def axpy(s: Column, a: Column, b: Column): Column =

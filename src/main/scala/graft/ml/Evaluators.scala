@@ -51,21 +51,6 @@ object Evaluators {
     df.agg(sum(w(weightCol) * l)).first().getDouble(0)
   }
 
-  def poissonLoss(df: DataFrame, score: String, label: String,
-                  weightCol: Option[String] = None): Double =
-    df.agg(sum(w(weightCol) * (exp(col(score)) - col(label) * col(score))))
-      .first().getDouble(0)
-
-  def smoothedHingeLoss(df: DataFrame, score: String, label: String,
-                        weightCol: Option[String] = None): Double = {
-    val t = when(col(label) > 0.5, lit(1.0)).otherwise(lit(-1.0))
-    val m = col(score) * t
-    val l = when(m >= 1.0, 0.0)
-      .when(m <= 0.0, lit(0.5) - m)
-      .otherwise(pow(lit(1.0) - m, 2) * 0.5)
-    df.agg(sum(w(weightCol) * l)).first().getDouble(0)
-  }
-
   // ------------------------------------------------ distributed rank math
   //
   // Global rank statistics (AUC/AUPR/peak-F1 over the WHOLE dataset) must
@@ -239,13 +224,6 @@ object Evaluators {
             (col("__p") * (col("__n") - col("__p"))))
           .as("auc"))
   }
-
-  /** MultiEvaluator (E9): mean per-group AUC over groups with both
-    * classes, after joining a group-id table on uid. */
-  def meanGroupedAuc(scored: DataFrame, groupIds: DataFrame, uid: String,
-                     group: String, score: String, label: String): Double =
-    groupedAuc(scored.join(groupIds, uid), group, score, label)
-      .agg(avg("auc")).first().getDouble(0)
 
   /** Precision@k per group then mean (E8). */
   def meanPrecisionAtK(df: DataFrame, group: String, score: String,

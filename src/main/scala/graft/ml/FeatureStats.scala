@@ -20,10 +20,6 @@ object FeatureStats {
     def sanitizedStd: Array[Double] = variance.map { v =>
       if (v.isNaN || v <= 0.0) 1.0 else math.sqrt(v)
     }
-    def meanAbs: Array[Double] =
-      normL1.zip(Array.fill(normL1.length)(count.toDouble)).map {
-        case (l1, n) => if (n == 0) 0.0 else l1 / n
-      }
   }
 
   def summarize(df: DataFrame, featuresCol: String,
@@ -43,17 +39,6 @@ object FeatureStats {
       row.getAs[Vector](3).toArray, row.getAs[Vector](4).toArray,
       row.getAs[Vector](5).toArray, row.getAs[Vector](6).toArray,
       row.getAs[Vector](7).toArray)
-  }
-
-  /** Stats as a (feature_idx, mean, variance, ...) DataFrame — the shape
-    * the reference writes as FeatureSummarizationResultAvro (S8-stats). */
-  def toDataFrame(spark: org.apache.spark.sql.SparkSession,
-                  s: Summary): DataFrame = {
-    import spark.implicits._
-    s.mean.indices.map(i => (i, s.mean(i), s.variance(i), s.numNonzeros(i),
-      s.max(i), s.min(i), s.normL1(i), s.normL2(i)))
-      .toDF("feature_idx", "mean", "variance", "num_nonzeros", "max",
-        "min", "norm_l1", "norm_l2")
   }
 
   /** Build a Normalization from a summary (NormalizationType mapping,

@@ -287,12 +287,4 @@ object Glm {
     }
     df.withColumn(scoreCol, scoreUdf(col(featuresCol)))
   }
-
-  /** Apply the inverse link to a margin+offset to get E[y]. */
-  def meanResponse(df: DataFrame, lossName: String, marginCol: String,
-                   outCol: String = "prediction"): DataFrame = {
-    val l = PointwiseLoss.fromName(lossName)
-    val meanUdf = udf { (z: Double) => l.mean(z) }
-    df.withColumn(outCol, meanUdf(col(marginCol)))
-  }
 }

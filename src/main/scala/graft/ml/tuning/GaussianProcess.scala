@@ -21,8 +21,6 @@ class GpModel(kernel: Kernel, x: DenseMatrix[Double], yMean: Double,
     val varPrior = kernel.cov(xm, xm)(0, 0)
     (mean, math.max(1e-12, varPrior - (v dot v)))
   }
-
-  def kernelUsed: Kernel = kernel
 }
 
 /** GP estimator: kernel hyperparameters (amplitude, noise, length scale)
@@ -75,9 +73,8 @@ class GpEnsemble(models: Seq[GpModel]) {
   }
 }
 
-/** Acquisition criteria (reference criteria/ExpectedImprovement.scala:32-71,
-  * criteria/ConfidenceBound.scala). All phrased for MINIMIZATION of the
-  * evaluation value. */
+/** Acquisition criterion (reference criteria/ExpectedImprovement.scala:
+  * 32-71), phrased for MINIMIZATION of the evaluation value. */
 object Acquisition {
   /** Expected improvement below the incumbent best. */
   def expectedImprovement(best: Double)(mean: Double, variance: Double)
@@ -89,9 +86,4 @@ object Acquisition {
       (best - mean) * GpMath.stdNormCdf(z) + sigma * GpMath.stdNormPdf(z)
     }
   }
-
-  /** Lower confidence bound (to MINIMIZE): μ − κσ. */
-  def lowerConfidenceBound(kappa: Double = 2.0)
-                          (mean: Double, variance: Double): Double =
-    -(mean - kappa * math.sqrt(variance)) // negated: callers maximize acq
 }

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 /** Deterministic embedding clustering.
   *
   * [[kmeans]] is fixed-iteration Lloyd's — the reproducible,
-  * oracle-checkable companion to the MLlib fits inside
-  * [[Similarity]]'s IVF indexes (MLlib's k-means|| init and stopping
-  * rule are seed- and engine-specific; this one is mirrorable term for
-  * term in SQL). [[semDedup]] composes it into SemDeDup-style semantic
+  * oracle-checkable companion to the driver-side Lloyd fits inside
+  * [[Similarity]]'s IVF indexes (those train on a seeded sample with
+  * unrounded double sums; this one is mirrorable term for term in
+  * SQL). [[semDedup]] composes it into SemDeDup-style semantic
   * near-duplicate detection (Abbas et al. 2023): cluster first, then
   * compare only within a cluster.
   */

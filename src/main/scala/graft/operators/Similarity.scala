@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{AggFunctions, VectorOps => V}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -95,56 +95,136 @@ object Similarity {
       .select(col("qid"), col("col.id").as("id"),
         (-col("col.nc")).as("cosine"), (col("pos") + 1).as("rank"))
 
-  /** Iteration-friendly view of a k-means fit input: every Lloyd round
-    * is one Spark job over the input, so a near-empty partition charges
-    * its task-launch overhead once per round — 20 iterations over a
-    * 2k-row corpus fanned to 32 partitions is 640 almost-empty tasks
-    * (r7 measured q43 at 2.67× its r6 time from exactly this). Same
-    * remedy as `DistributedGlmObjective`'s iteration view
-    * (ml/Objectives.scala:61-76): coalesce the FIT input to ≥25k rows
-    * per partition (assignment/probe passes stay on the fanned scan —
-    * they run once, not per iteration). The count() is one cheap job the
-    * fit's own first pass would pay anyway; at production row counts the
-    * clamp keeps the incoming partitioning, so this is a no-op at scale. */
-  private def fitView(df: DataFrame, rowsPerPart: Long = 25000L): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism.toLong
-    val n = df.count()
-    val target = math.min(par, n / rowsPerPart + 1).toInt
-    df.coalesce(target)
-  }
+  /** Training-sample cap of [[fitQuantizers]]. */
+  private val MaxTrain = 65536
 
-  /** Coarse k-means fit through MLlib's RDD API directly. Numerically
-    * IDENTICAL to `ml.clustering.KMeans.fit` — the ml wrapper delegates
-    * to exactly this implementation with the same defaults (k-means||
-    * init, 2 init steps, epsilon 1e-4, euclidean distance) — but
-    * WITHOUT the wrapper's training-summary instrumentation, which
-    * re-transforms the whole fit input and collects per-cluster sizes
-    * just to log them: one full extra pass over the corpus per build,
-    * at any scale, computing something nothing reads (guide §1.2). */
-  private def coarseKMeansFit(fit: DataFrame, k: Int, seed: Long,
-                              maxIter: Int)
-  : org.apache.spark.mllib.clustering.KMeansModel = {
-    val rdd = fit.select(col("fv")).rdd.map(r =>
-      org.apache.spark.mllib.linalg.Vectors.fromML(
-        r.getAs[org.apache.spark.ml.linalg.Vector](0)))
-    // the ml wrapper persists its instances RDD across the fit's
-    // iterations when the input is uncached (handlePersistence) — the
-    // direct path keeps that behavior
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try new org.apache.spark.mllib.clustering.KMeans().setK(k)
-      .setSeed(seed).setMaxIterations(maxIter).run(rdd)
-    finally rdd.unpersist(false)
-  }
-
-  /** List assignment against a [[coarseKMeansFit]] model — the same
-    * `predict` kernel `ml.KMeansModel.transform`'s prediction UDF
-    * applies, so assignments are bit-identical to the wrapper's. */
-  private def assignList(
-      model: org.apache.spark.mllib.clustering.KMeansModel)
-  : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (v: org.apache.spark.ml.linalg.Vector) =>
-      model.predict(org.apache.spark.mllib.linalg.Vectors.fromML(v))
+  /** The IVF family's one quantizer trainer: `nList` coarse centers
+    * and, for PQ, `m` sub-codebooks of `nCodes` centers each, all fit by
+    * [[localLloyd]] on ONE seeded driver-side sample. Quantizers train on
+    * a sample, not the corpus (Jégou, Douze and Schmid, "Product
+    * Quantization for Nearest Neighbor Search", TPAMI 2011): below
+    * `MaxTrain` rows the sample is the whole corpus (or its
+    * `trainFraction` Bernoulli sample); above it, a Bernoulli sample at
+    * min(trainFraction, MaxTrain / n) — a uniform slice, not the first
+    * rows. `seed` seeds that sample and the k-means++ start. Spark
+    * cost: one count and one collect, whatever `kmeansMaxIter`. Driver
+    * cost: O(sample × nList × dim × (iterations + 2 + ln nList)), cheap
+    * at the nList ≤ 16 every caller uses; a distributed fit for nList in
+    * the thousands is out of scope. `op` names the caller in the
+    * empty-corpus error. Returns (coarse centers, codebooks — empty
+    * without `pq` = (m, nCodes)). */
+  private def fitQuantizers(op: String, corpus: DataFrame, nList: Int,
+                            seed: Long, maxIter: Int,
+                            trainFraction: Double = 1.0,
+                            pq: Option[(Int, Int)] = None)
+  : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val n = corpus.count()
+    val frac = math.min(trainFraction, MaxTrain.toDouble / math.max(n, 1L))
+    val sample =
+      (if (frac >= 1.0) corpus
+       else corpus.sample(withReplacement = false, frac, seed))
+        .select(col("v").cast("array<double>"))
+        .collect().take(MaxTrain).map(_.getSeq[Double](0).toArray)
+    require(sample.nonEmpty, s"$op: no vectors to fit nList=$nList " +
+      "coarse centers on (empty corpus, or a trainFraction sample that " +
+      "drew no rows)")
+    val codebooks = pq.fold(Array.empty[Array[Array[Double]]]) {
+      case (m, nCodes) =>
+        val dim = sample(0).length
+        require(m > 0 && dim % m == 0, s"dim $dim not divisible by m=$m")
+        val subLen = dim / m
+        Array.tabulate(m) { j =>
+          localLloyd(sample.map(v =>
+            java.util.Arrays.copyOfRange(v, j * subLen, (j + 1) * subLen)),
+            nCodes, maxIter, seed)
+        }
     }
+    (localLloyd(sample, nList, maxIter, seed), codebooks)
+  }
+
+  /** Lloyd's k-means on a non-empty local sample — the IVF family's one
+    * k-means (coarse centers and PQ codebooks, via [[fitQuantizers]]).
+    * Initialization is seeded greedy k-means++ (Arthur and
+    * Vassilvitskii, SODA 2007): each next center is the best, by total
+    * squared distance, of 2 + ⌊ln k⌋ candidates drawn with probability
+    * ∝ D², so the centers spread over the sample whatever its row order
+    * (a first-k-rows start can leave a whole mode unseeded, and Lloyd
+    * never recovers from that). Empty clusters keep their previous
+    * center. Always returns exactly k centers: past the sample's
+    * distinct points the rest are copies, never nearest (lowest index
+    * wins ties). */
+  private def localLloyd(pts: Array[Array[Double]], k: Int, iters: Int,
+                         seed: Long): Array[Array[Double]] = {
+    val n = pts.length
+    val d = pts(0).length
+    def dist2(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var t = 0
+      while (t < d) { val x = a(t) - b(t); s += x * x; t += 1 }
+      s
+    }
+    val rnd = new java.util.SplittableRandom(seed)
+    val centers = new Array[Array[Double]](k)
+    centers(0) = pts(rnd.nextInt(n)).clone()
+    // D² of every point to its nearest chosen center
+    var near = pts.map(dist2(_, centers(0)))
+    var distinct = 1
+    var j = 1
+    while (j < k) {
+      val total = near.sum
+      if (total == 0.0) centers(j) = centers(j % distinct).clone()
+      else {
+        val prev = near
+        var bestPot = Double.MaxValue
+        for (_ <- 0 until 2 + math.log(k).toInt) {
+          // D² draw; a point already at a center (D² = 0) is never drawn
+          var r = rnd.nextDouble() * total
+          var i = 0
+          while (i < n - 1 && (prev(i) == 0.0 || r >= prev(i))) {
+            r -= prev(i); i += 1
+          }
+          while (prev(i) == 0.0) i -= 1
+          val cand = pts(i)
+          val nd = Array.tabulate(n)(p =>
+            math.min(prev(p), dist2(pts(p), cand)))
+          if (nd.sum < bestPot) {
+            bestPot = nd.sum; centers(j) = cand.clone(); near = nd
+          }
+        }
+        distinct += 1
+      }
+      j += 1
+    }
+    var it = 0
+    while (it < iters) {
+      val sums = Array.fill(k)(new Array[Double](d))
+      val counts = new Array[Long](k)
+      var p = 0
+      while (p < n) {
+        val v = pts(p)
+        var best = 0; var bestD = Double.MaxValue
+        var c = 0
+        while (c < k) {
+          val dist = dist2(centers(c), v)
+          if (dist < bestD) { bestD = dist; best = c }
+          c += 1
+        }
+        var t = 0
+        while (t < d) { sums(best)(t) += v(t); t += 1 }
+        counts(best) += 1
+        p += 1
+      }
+      var c = 0
+      while (c < k) {
+        if (counts(c) > 0) {
+          var t = 0
+          while (t < d) { centers(c)(t) = sums(c)(t) / counts(c); t += 1 }
+        }
+        c += 1
+      }
+      it += 1
+    }
+    centers
+  }
 
   /** Exact top-k cosine neighbors of each query vector.
     * queries: (qid, qv), corpus: (id, v). Queries must be broadcastable. */
@@ -172,24 +252,21 @@ object Similarity {
       Seq("qid", "id"), "left_anti"), k)
   }
 
-  /** IVF-Flat ANN: a k-means coarse quantizer (distributed MLlib fit)
-    * assigns every corpus vector to its nearest of `nList` centroids;
-    * queries probe the `nProbe` nearest inverted lists and score only
-    * those lists' members. The classic IVF trade-off: centroids adapt to
-    * the data distribution (vs. data-oblivious LSH hyperplanes), at the
-    * cost of a training pass. Corpus side = one k-means fit + one
-    * shuffle on list id; centroids (nList · dim doubles) broadcast. */
+  /** IVF-Flat ANN: a k-means coarse quantizer ([[fitQuantizers]]'s
+    * local fit on a bounded sample) assigns every corpus vector to its
+    * nearest of `nList` centroids; queries probe the `nProbe` nearest
+    * inverted lists and score only those lists' members. The classic IVF
+    * trade-off: centroids adapt to the data distribution (vs.
+    * data-oblivious LSH hyperplanes), at the cost of a training pass.
+    * Corpus side = one sample collect + one shuffle on list id;
+    * centroids (nList · dim doubles) broadcast. */
   def ivf(queries: DataFrame, corpus: DataFrame, k: Int,
           nList: Int = 16, nProbe: Int = 2, seed: Long = 7L,
           kmeansMaxIter: Int = 20): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val av = corpus.select(col("id"), col("v"),
-      array_to_vector(col("v").cast("array<double>")).as("fv"))
-    val model = coarseKMeansFit(fitView(av), nList, seed, kmeansMaxIter)
-    val bucketed = av.select(col("id"), col("v"),
-      assignList(model)(col("fv")).as("list"))
-    val centers = corpus.sparkSession.sparkContext
-      .broadcast(model.clusterCenters.map(_.toArray))
+    val centers = corpus.sparkSession.sparkContext.broadcast(
+      fitQuantizers("ivf", corpus, nList, seed, kmeansMaxIter)._1)
+    val bucketed = corpus.select(col("id"), col("v"),
+      listOf(centers, col("v")).as("list"))
     val probeLists = udf { (qv: Seq[Double]) =>
       probeIdx(centers.value, qv, nProbe)
     }
@@ -253,7 +330,9 @@ object Similarity {
   }
 
   /** Index of the nearest centroid by squared L2 (lowest index wins
-    * ties) — the assignment kernel of the append paths. */
+    * ties) — the one list-assignment kernel: build, append and drift
+    * paths all assign through [[listOf]] / [[listAndCodes]], so a vector
+    * gets the same list whether it arrives at build time or by append. */
   private def nearestIdx(cents: Array[Array[Double]],
                          v: Seq[Double]): Int = {
     var best = 0
@@ -280,6 +359,38 @@ object Similarity {
       while (j < c.length) { val t = c(j) - v(j); d += t * t; j += 1 }
       (d, i)
     }.sortBy(_._1).take(nProbe).map(_._2).toSeq
+
+  private type Centers = org.apache.spark.broadcast.Broadcast[
+    Array[Array[Double]]]
+
+  /** [[nearestIdx]] over broadcast centers as a column: the list of `v`. */
+  private def listOf(cents: Centers, v: Column): Column =
+    udf { (x: Seq[Double]) => nearestIdx(cents.value, x) }
+      .apply(v.cast("array<double>"))
+
+  /** [[listOf]] plus [[pqEncode]] in one pass: struct column `e` of
+    * (list, codes, norm) — the encoding of the PQ build, append and
+    * in-memory paths.
+    * Float→double widening is exact, so encoding the cast column with the
+    * shared double kernels is bit-identical to a float-input loop. */
+  private def listAndCodes(cents: Centers,
+      cb: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
+      v: Column): Column =
+    udf { (x: Seq[Double]) =>
+      val (codes, nrm) = pqEncode(cb.value, cb.value(0)(0).length, x)
+      (nearestIdx(cents.value, x), codes, nrm)
+    }.apply(v.cast("array<double>")).as("e")
+
+  /** The coarse quantizer table `centroids.parquet`: (list, center). */
+  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+                             cents: Array[Array[Double]], dir: String)
+  : Unit = {
+    import spark.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("list", "center")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$dir/centroids.parquet")
+  }
 
   /** Asymmetric-distance cosine estimate: Σⱼ dot(qⱼ, codebook_j[code_j])
     * over the stored norm — the PQ scoring kernel of both the in-memory
@@ -354,19 +465,12 @@ object Similarity {
 
   def ivfBuild(corpus: DataFrame, dir: String, nList: Int = 16,
                seed: Long = 7L, kmeansMaxIter: Int = 20): Unit = {
-    import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
-    val av = corpus.select(col("id"), col("v"),
-      array_to_vector(col("v").cast("array<double>")).as("fv"))
-    val model = coarseKMeansFit(fitView(av), nList, seed, kmeansMaxIter)
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-      .toDF("list", "center")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/centroids.parquet")
-    av.select(assignList(model)(col("fv")).as("list"), col("id"),
-        col("v"))
+    val cents = fitQuantizers("ivfBuild", corpus, nList, seed,
+      kmeansMaxIter)._1
+    writeCentroids(spark, cents, dir)
+    corpus.select(listOf(spark.sparkContext.broadcast(cents), col("v"))
+        .as("list"), col("id"), col("v"))
       .repartition(col("list"))
       .write.mode("overwrite").partitionBy("list")
       .parquet(s"$dir/postings.parquet")
@@ -398,14 +502,13 @@ object Similarity {
       val postingsPath = snap.path("postings")
       val bc = spark.sparkContext.broadcast(
         loadCentroids(spark, snap.path("centroids")))
-      val assign = udf { (v: Seq[Double]) => nearestIdx(bc.value, v) }
       // coerce the batch to the EXISTING index's column types: an
       // append that silently mixes (say) float and double data files
       // under one directory corrupts every later probe's scan
       val existing = spark.read.parquet(postingsPath).schema
       requireIdWidens(batch.schema("id").dataType, existing("id").dataType)
       batch
-        .select(assign(col("v").cast("array<double>")).as("list"),
+        .select(listOf(bc, col("v")).as("list"),
           col("id").cast(existing("id").dataType),
           col("v").cast(existing("v").dataType))
         .repartition(col("list"))
@@ -496,53 +599,26 @@ object Similarity {
     *   - `centroids.parquet`: (list, center) — the coarse quantizer;
     *   - `codebooks.parquet`: (j, c, center) — m·nCodes sub-centroids;
     *   - `codes.parquet`: (id, codes, norm) PARTITIONED BY list.
-    * Training mirrors [[ivfPq]]: distributed coarse fit on a
-    * row-sized-partition view, sub-codebooks via local Lloyd on a
-    * bounded sample (codebook quality needs thousands of examples, not
-    * the corpus). */
+    * Training is [[ivfPq]]'s: coarse centroids and sub-codebooks from
+    * one [[fitQuantizers]] sample. */
   def ivfPqBuild(corpus: DataFrame, dir: String, nList: Int = 16,
                  m: Int = 4, nCodes: Int = 16, trainFraction: Double = 1.0,
                  seed: Long = 7L, kmeansMaxIter: Int = 20): Unit = {
-    import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
     import spark.implicits._
-    val av = corpus.select(col("id"), col("v"),
-      array_to_vector(col("v").cast("array<double>")).as("fv"))
-    val coarse = coarseKMeansFit(fitView(av), nList, seed, kmeansMaxIter)
-    val dim = corpus.select(size(col("v")).as("d")).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val subLen = dim / m
-    val maxTrain = 65536
-    val sample: Array[Array[Double]] =
-      (if (trainFraction >= 1.0) av
-       else av.sample(withReplacement = false, trainFraction, seed))
-        .select(col("v").cast("array<double>")).limit(maxTrain)
-        .collect().map(_.getSeq[Double](0).toArray)
-    val codebooks: Array[Array[Array[Double]]] = (0 until m).map { j =>
-      localLloyd(sample.map(v =>
-        java.util.Arrays.copyOfRange(v, j * subLen, (j + 1) * subLen)),
-        nCodes, kmeansMaxIter)
-    }.toArray
-    coarse.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-      .toDF("list", "center")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/centroids.parquet")
+    val (cents, codebooks) = fitQuantizers("ivfPqBuild", corpus, nList,
+      seed, kmeansMaxIter, trainFraction, Some((m, nCodes)))
+    writeCentroids(spark, cents, dir)
     codebooks.zipWithIndex.flatMap { case (cb, j) =>
       cb.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
     }.toSeq.toDF("j", "c", "center")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/codebooks.parquet")
-    val bcCb = spark.sparkContext.broadcast(codebooks)
-    // float→double widening is exact, so encoding the cast column with
-    // the shared double kernel is bit-identical to a float-input loop
-    val encode = udf { (v: Seq[Double]) =>
-      pqEncode(bcCb.value, subLen, v)
-    }
-    av.select(assignList(coarse)(col("fv")).as("list"), col("id"),
-        encode(col("v").cast("array<double>")).as("e"))
-      .select(col("list"), col("id"), col("e._1").as("codes"),
-        col("e._2").as("norm"))
+    val sc = spark.sparkContext
+    corpus.select(col("id"), listAndCodes(sc.broadcast(cents),
+        sc.broadcast(codebooks), col("v")))
+      .select(col("e._1").as("list"), col("id"), col("e._2").as("codes"),
+        col("e._3").as("norm"))
       .repartition(col("list"))
       .write.mode("overwrite").partitionBy("list")
       .parquet(s"$dir/codes.parquet")
@@ -566,22 +642,17 @@ object Similarity {
     Manifest.withLock(spark, dir) {
       val snap = Manifest.snapshot(spark, dir)
       val codesPath = snap.path("codes")
-      val codebooks = loadCodebooks(spark, snap.path("codebooks"))
-      val subLen = codebooks(0)(0).length
       val bcC = spark.sparkContext.broadcast(
         loadCentroids(spark, snap.path("centroids")))
-      val bcCb = spark.sparkContext.broadcast(codebooks)
-      val assignAndEncode = udf { (v: Seq[Double]) =>
-        val (codes, nrm) = pqEncode(bcCb.value, subLen, v)
-        (nearestIdx(bcC.value, v), codes, nrm)
-      }
+      val bcCb = spark.sparkContext.broadcast(
+        loadCodebooks(spark, snap.path("codebooks")))
       // [[ivfAppend]]'s schema coercion: the appended files must carry
       // the EXISTING index's column types
       val existing = spark.read.parquet(codesPath).schema
       requireIdWidens(batch.schema("id").dataType, existing("id").dataType)
       batch
         .select(col("id").cast(existing("id").dataType),
-          assignAndEncode(col("v").cast("array<double>")).as("e"))
+          listAndCodes(bcC, bcCb, col("v")))
         .select(col("e._1").as("list"), col("id"), col("e._2").as("codes"),
           col("e._3").as("norm"))
         .repartition(col("list"))
@@ -961,9 +1032,8 @@ object Similarity {
         .as("base_mean_sim"))
     val bc = spark.sparkContext.broadcast(
       loadCentroids(spark, snap.path("centroids")))
-    val assign = udf { (v: Seq[Double]) => nearestIdx(bc.value, v) }
     val bat = batch
-      .select(assign(col("v").cast("array<double>")).as("list"), col("v"))
+      .select(listOf(bc, col("v")).as("list"), col("v"))
       .join(broadcast(cents), Seq("list"))
       .agg(avg(V.cosine(col("v").cast("array<double>"), col("center")))
         .as("batch_mean_sim"))
@@ -1018,9 +1088,8 @@ object Similarity {
         .as("base_mean_sim"))
     val bcC = spark.sparkContext.broadcast(
       loadCentroids(spark, snap.path("centroids")))
-    val assign = udf { (v: Seq[Double]) => nearestIdx(bcC.value, v) }
     val bat = batch
-      .select(assign(col("v").cast("array<double>")).as("list"), col("v"))
+      .select(listOf(bcC, col("v")).as("list"), col("v"))
       .join(broadcast(cents), Seq("list"))
       .agg(avg(V.cosine(col("v").cast("array<double>"), col("center")))
         .as("batch_mean_sim"))
@@ -2147,45 +2216,21 @@ object Similarity {
             nList: Int = 16, nProbe: Int = 2, m: Int = 4, nCodes: Int = 16,
             refineK: Int = 50, trainFraction: Double = 1.0,
             seed: Long = 7L, kmeansMaxIter: Int = 20): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
-    val av = corpus.select(col("id"), col("v"),
-      array_to_vector(col("v").cast("array<double>")).as("fv"))
-    // coarse quantizer: assigns every corpus vector to an inverted list
-    val coarse = coarseKMeansFit(fitView(av), nList, seed, kmeansMaxIter)
-    val dim = corpus.select(size(col("v")).as("d")).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val subLen = dim / m
-    // All m sub-codebooks train on ONE bounded driver-side sample (one
-    // collect job + local Lloyd per subspace) instead of m distributed
-    // k-means fits: codebook quality needs thousands of examples, not
-    // the corpus, so at any scale the training input is a capped sample
-    // — and m scheduler round-trips collapse into none.
-    val maxTrain = 65536
-    val sample: Array[Array[Double]] =
-      (if (trainFraction >= 1.0) av
-       else av.sample(withReplacement = false, trainFraction, seed))
-        .select(col("v").cast("array<double>")).limit(maxTrain)
-        .collect().map(_.getSeq[Double](0).toArray)
-    val codebooks: Array[Array[Array[Double]]] = (0 until m).map { j =>
-      localLloyd(sample.map(v =>
-        java.util.Arrays.copyOfRange(v, j * subLen, (j + 1) * subLen)),
-        nCodes, kmeansMaxIter)
-    }.toArray
+    // coarse quantizer (assigns every corpus vector to an inverted list)
+    // and all m sub-codebooks: one bounded driver-side sample, one
+    // collect job, local Lloyd per quantizer
+    val (cents, codebooks) = fitQuantizers("ivfPq", corpus, nList, seed,
+      kmeansMaxIter, trainFraction, Some((m, nCodes)))
+    val subLen = codebooks(0)(0).length
+    val centers = spark.sparkContext.broadcast(cents)
     val bcCb = spark.sparkContext.broadcast(codebooks)
-    // same shared kernels as the persisted paths (float→double widening
-    // is exact, so encoding the cast column is bit-identical)
-    val encode = udf { (v: Seq[Double]) =>
-      pqEncode(bcCb.value, subLen, v)
-    }
-    // the compressed corpus: list id + codes + norm, no vectors
-    val encoded = av
-      .select(col("id"), assignList(coarse)(col("fv")).as("list"),
-        encode(col("v").cast("array<double>")).as("e"))
-      .select(col("id"), col("list"), col("e._1").as("codes"),
-        col("e._2").as("norm"))
-    val centers = spark.sparkContext
-      .broadcast(coarse.clusterCenters.map(_.toArray))
+    // the compressed corpus: list id + codes + norm, no vectors — the
+    // same shared kernels as the persisted paths
+    val encoded = corpus.select(col("id"), listAndCodes(centers, bcCb,
+        col("v")))
+      .select(col("id"), col("e._1").as("list"), col("e._2").as("codes"),
+        col("e._3").as("norm"))
     val probeLists = udf { (qv: Seq[Double]) =>
       probeIdx(centers.value, qv, nProbe)
     }
@@ -2211,57 +2256,6 @@ object Similarity {
       .join(broadcast(queries), Seq("qid"))
       .select(col("qid"), col("id"),
         V.cosine(col("qv"), col("v")).as("cosine")), k)
-  }
-
-  /** Plain Lloyd iterations on a local sample — PQ codebook training.
-    * Deterministic: initial centers are the first k distinct points in
-    * sample order; empty clusters keep their previous center. */
-  private def localLloyd(pts: Array[Array[Double]], k: Int,
-                         iters: Int): Array[Array[Double]] = {
-    val init = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-    val seen = scala.collection.mutable.HashSet.empty[Seq[Double]]
-    var i = 0
-    while (i < pts.length && init.length < k) {
-      if (seen.add(pts(i).toSeq)) init += pts(i).clone()
-      i += 1
-    }
-    // degenerate corpus (< k distinct points): pad with copies — extra
-    // centers are simply never nearest-unique, which is harmless
-    while (init.length < k) init += init(init.length % math.max(1, seen.size))
-      .clone()
-    val centers = init.toArray
-    val d = pts.headOption.map(_.length).getOrElse(0)
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(k)(new Array[Double](d))
-      val counts = new Array[Long](k)
-      var p = 0
-      while (p < pts.length) {
-        val v = pts(p)
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var dist = 0.0; var t = 0
-          while (t < d) { val df = centers(c)(t) - v(t); dist += df * df; t += 1 }
-          if (dist < bestD) { bestD = dist; best = c }
-          c += 1
-        }
-        var t = 0
-        while (t < d) { sums(best)(t) += v(t); t += 1 }
-        counts(best) += 1
-        p += 1
-      }
-      var c = 0
-      while (c < k) {
-        if (counts(c) > 0) {
-          var t = 0
-          while (t < d) { centers(c)(t) = sums(c)(t) / counts(c); t += 1 }
-        }
-        c += 1
-      }
-      it += 1
-    }
-    centers
   }
 
   /** LSH-bucketed ANN: score only same-bucket (plus probed-bucket) pairs.

@@ -40,12 +40,6 @@ object Validators {
         ") as (rule, violations)")
   }
 
-  /** Sampled validation (VALIDATE_SAMPLE): deterministic hash sample, then
-    * the same one-pass check. */
-  def checkSample(df: DataFrame, uidCols: Seq[String], rate: Double,
-                  rules: Seq[Rule]): DataFrame =
-    check(DownSampling.uniform(df, uidCols, rate), rules)
-
   /** Throw if any rule is violated (VALIDATE_FULL semantics). */
   def enforce(df: DataFrame, rules: Seq[Rule]): Unit = {
     val bad = check(df, rules).filter(col("violations") > 0).collect()

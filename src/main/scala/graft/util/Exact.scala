@@ -29,10 +29,6 @@ object Exact {
   def sumExact(c: Column, precision: Int = 18, scale: Int = 4): Column =
     sum(dec(c, precision, scale)).cast("double")
 
-  /** Exact sum rounded to `r` decimals, emitted as double. */
-  def sumRound(c: Column, r: Int, precision: Int = 18, scale: Int = 4): Column =
-    round(sum(dec(c, precision, scale)), r).cast("double")
-
   /** Exact mean: decimal sum (deterministic) divided by count (IEEE division
     * of identical operands is deterministic across engines). */
   def avgExact(c: Column, precision: Int = 18, scale: Int = 6): Column =

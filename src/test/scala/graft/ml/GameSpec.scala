@@ -321,10 +321,14 @@ class GameSpec extends SparkSpec {
     def fixed(m: GameModel) =
       m.coordinates("global").asInstanceOf[TrainedFixed].model.coef.toSeq
     val viaCheckpoint = relock(perUser.models)
-    val persisted = spark.sparkContext.getPersistentRDDs.size
+    // ids, not a count: the persistent-RDD map holds its RDDs weakly, so
+    // a GC during the call can drop an unrelated earlier entry
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val viaLocal = relock(local)
-    assert(spark.sparkContext.getPersistentRDDs.size == persisted,
-      "the checkpointed copy of the locked models was not released")
+    val leftover = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+    assert(leftover.isEmpty,
+      s"the checkpointed copy of the locked models was not released: " +
+        s"RDDs $leftover persisted by the call remain")
     assert(viaLocal.coordinates("perUser").asInstanceOf[TrainedRandom]
       .models eq local)
     assert(fixed(viaLocal) == fixed(viaCheckpoint))

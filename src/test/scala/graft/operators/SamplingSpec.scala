@@ -356,6 +356,62 @@ class SamplingSpec extends SparkSpec {
     } finally graft.util.TempDirs.deleteRecursively(dir)
   }
 
+  test("IVF builds fit exactly nList lists even on fewer distinct " +
+    "vectors, and fail fast on an empty corpus") {
+    import spark.implicits._
+    // 3 distinct vectors, each twice, under nList = 8
+    val corpus = (0 until 6).map(i =>
+      (i.toLong, Array.tabulate(4)(j => if (j == i % 3) 1.0f else 0.0f)))
+      .toDF("id", "v")
+    graft.util.TempDirs.using("ivfpad", "ivfpqpad") { dirs =>
+      Similarity.ivfBuild(corpus, dirs(0), nList = 8, kmeansMaxIter = 5)
+      Similarity.ivfPqBuild(corpus, dirs(1), nList = 8, m = 2, nCodes = 4,
+        kmeansMaxIter = 5)
+      dirs.foreach { dir =>
+        assert(spark.read.parquet(s"$dir/centroids.parquet").count() == 8)
+        assert(Similarity.ivfIndexHealthLight(spark, dir).head()
+          .getAs[Int]("n_lists") == 8)
+      }
+      val empty = corpus.filter(lit(false))
+      val e1 = intercept[IllegalArgumentException] {
+        Similarity.ivfBuild(empty, dirs(0), nList = 8)
+      }
+      assert(e1.getMessage.contains("ivfBuild: no vectors to fit nList=8"),
+        e1.getMessage)
+      val e2 = intercept[IllegalArgumentException] {
+        Similarity.ivfPqBuild(empty, dirs(1), nList = 8, m = 2, nCodes = 4)
+      }
+      assert(e2.getMessage.contains("ivfPqBuild: no vectors to fit nList=8"),
+        e2.getMessage)
+    }
+  }
+
+  test("a vector lands in the same list whether built in or appended") {
+    val (_, corpus) = annFixture()
+    val again = corpus.select((col("id") + 1000000L).as("id"), col("v"))
+    def lists(table: String, dir: String): Map[Long, Int] =
+      spark.read.parquet(s"$dir/$table.parquet").select("id", "list")
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    graft.util.TempDirs.using("ivfsame", "ivfpqsame") { dirs =>
+      Similarity.ivfBuild(corpus, dirs(0), nList = 4, kmeansMaxIter = 5)
+      Similarity.ivfAppend(spark, dirs(0), again)
+      Similarity.ivfPqBuild(corpus, dirs(1), nList = 4, m = 4, nCodes = 8,
+        kmeansMaxIter = 5)
+      Similarity.ivfPqAppend(spark, dirs(1), again)
+      Seq("postings" -> dirs(0), "codes" -> dirs(1)).foreach {
+        case (table, dir) =>
+          val l = lists(table, dir)
+          val built = l.filter(_._1 < 1000000L)
+          assert(built.nonEmpty && built.values.toSet.size > 1, table)
+          built.foreach { case (id, list) =>
+            assert(l(id + 1000000L) == list,
+              s"$table: id $id built into list $list, appended into " +
+                s"${l(id + 1000000L)}")
+          }
+      }
+    }
+  }
+
   test("persisted IVF-PQ index: codes-only layout, probe-all equals brute force") {
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 5)
