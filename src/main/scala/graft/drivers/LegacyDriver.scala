@@ -73,9 +73,9 @@ object LegacyDriver {
       case None if cfg.bounds.isDefined ||
           a.str("solver", "auto") != "auto" =>
         // constrained path (LBFGSB) or an explicitly forced solver:
-        // per-lambda fits — the warm-started regularization path is
-        // unconstrained LBFGS/OWLQN by construction and would silently
-        // ignore both
+        // per-lambda fits — the warm-started regularization path picks
+        // LBFGS/OWLQN itself and would ignore a forced solver, and
+        // LBFGSB starts inside the box, not from the previous lambda
         lambdas.map(l =>
           l -> Glm.train(ds, featureDim, cfg.copy(l2 = l),
             a.str("solver", "auto"))).toMap

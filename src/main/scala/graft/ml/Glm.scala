@@ -52,7 +52,8 @@ object Glm {
   /** Train a single GLM on a distributed dataset (the fixed-effect /
     * legacy-Driver path: L1/L2/L6/L8 of the survey). Solver selection
     * follows the reference: OWLQN iff L1 > 0, else LBFGS; "tron" opts into
-    * trust-region Newton; "lbfgs"/"owlqn" force the iterative path.
+    * trust-region Newton; "lbfgs"/"owlqn" force the iterative path; box
+    * bounds take LBFGSB whatever the solver.
     * "auto" additionally takes the exact normal-equations solve when the
     * loss is squared ([[closedFormEligible]]) — one aggregate job instead
     * of one per iteration, which at 100 TB is the difference between 1 and
@@ -64,9 +65,24 @@ object Glm {
             warmStart: Option[Array[Double]] = None,
             tracker: Option[StatesTracker] = None): GlmModel = {
     val obj = new DistributedGlmObjective(data, featureDim, cfg)
+    try fit(obj, featureDim, cfg, solver,
+      warmStart.filter(_ => cfg.norm.isIdentity), tracker)._2
+    finally obj.unpersist()
+  }
+
+  /** The one solve-and-variance routine under [[train]], [[trainLocal]]
+    * and [[regularizationPath]]: solve in normalized space by the solver
+    * [[train]] describes, then attach the variances `cfg` asks for.
+    * `init` is a normalized-space seed. Returns the solution with its
+    * original-space model. */
+  private def fit(obj: GlmObjective, featureDim: Int, cfg: GlmConfig,
+                  solver: String, init: Option[Array[Double]],
+                  tracker: Option[StatesTracker])
+  : (Array[Double], GlmModel) = {
     val dim = cfg.coefDim(featureDim)
-    val init = warmStart.filter(_ => cfg.norm.isIdentity)
     def lbfgs() = Optimizers.lbfgs(obj.valueAndGradient, dim, featureDim,
+      cfg, init, tracker)
+    def owlqn() = Optimizers.owlqn(obj.valueAndGradient, dim, featureDim,
       cfg, init, tracker)
     def closedForm() = {
       val (aM, bV) = obj.normalEquations()
@@ -81,9 +97,7 @@ object Glm {
       case ("tron", _) =>
         Optimizers.tron(obj.valueAndGradient, obj.hessianVector, dim,
           featureDim, cfg, tracker = tracker)
-      case ("owlqn", _) =>
-        Optimizers.owlqn(obj.valueAndGradient, dim, featureDim, cfg, init,
-          tracker)
+      case ("owlqn", _) => owlqn()
       case ("lbfgs", _) => lbfgs()
       case ("normal", _) =>
         // the normal equations ARE the squared-loss moments: honoring a
@@ -94,9 +108,7 @@ object Glm {
             "identity normalization, and dim <= 1024")
         closedForm()
       case _ =>
-        if (cfg.l1 > 0)
-          Optimizers.owlqn(obj.valueAndGradient, dim, featureDim, cfg,
-            init, tracker)
+        if (cfg.l1 > 0) owlqn()
         // tracker callers want per-iteration states → stay iterative
         else if (closedFormEligible(cfg, dim) && tracker.isEmpty)
           // singular system (collinear features, l2 = 0) → LBFGS, which
@@ -105,9 +117,8 @@ object Glm {
           catch { case scala.util.control.NonFatal(_) => lbfgs() }
         else lbfgs()
     }
-    val variances = computeVariances(obj, w, featureDim, cfg)
-    obj.unpersist()
-    toOriginalSpace(w, featureDim, cfg).copy(variances = variances)
+    (w, toOriginalSpace(w, featureDim, cfg)
+      .copy(variances = computeVariances(obj, w, featureDim, cfg)))
   }
 
   /** Training with per-iteration state tracking (L1): returns the model
@@ -121,34 +132,23 @@ object Glm {
 
   /** Coefficient variances at the optimum, in ORIGINAL space
     * (DistributedOptimizationProblem.computeVariances:86-110):
-    * "simple" → 1/diag(H), "full" → diag(H⁻¹) by Cholesky, both with the
-    * regularizer's constant diagonal included. Variance transforms back
-    * by factor² (w_orig = w_norm·f ⇒ Var_orig = f²·Var_norm). */
-  private[ml] def computeVariances(obj: DistributedGlmObjective,
-                                   w: Array[Double], featureDim: Int,
-                                   cfg: GlmConfig)
+    * "simple" → 1/diag(H) (h ≤ 1e-12 → 1e12), "full" → diag(H⁻¹) by
+    * Cholesky, both with the regularizer's constant diagonal included.
+    * Variance transforms back by factor² (w_orig = w_norm·f ⇒
+    * Var_orig = f²·Var_norm). */
+  private def computeVariances(obj: GlmObjective, w: Array[Double],
+                               featureDim: Int, cfg: GlmConfig)
   : Option[Array[Double]] = {
     val dim = cfg.coefDim(featureDim)
     val regDiag = Optimizers.QuadReg.from(cfg, dim, featureDim).diagonal
-    def toOriginal(v: Array[Double]): Array[Double] = {
-      cfg.norm.factors.foreach { f =>
-        var i = 0
-        while (i < f.length) { v(i) *= f(i) * f(i); i += 1 }
-      }
-      v
-    }
     cfg.varianceComputation.toLowerCase match {
       case "simple" =>
         // hessianDiagonal is already factor²-scaled (normalized space)
         val hd = obj.hessianDiagonal(w)
-        val v = new Array[Double](dim)
-        var i = 0
-        while (i < dim) {
+        Some(GlmMath.scaleByFactorSquared(Array.tabulate(dim) { i =>
           val h = hd(i) + regDiag(i)
-          v(i) = if (h > 1e-12) 1.0 / h else 1e12
-          i += 1
-        }
-        Some(toOriginal(v))
+          if (h > 1e-12) 1.0 / h else 1e12
+        }, cfg.norm))
       case "full" =>
         import breeze.linalg.{cholesky, DenseMatrix}
         val flat = obj.hessianMatrix(w)
@@ -180,7 +180,7 @@ object Glm {
           v(i) = z(i)
           i += 1
         }
-        Some(toOriginal(v))
+        Some(GlmMath.scaleByFactorSquared(v, cfg.norm))
       case _ => None
     }
   }
@@ -213,66 +213,34 @@ object Glm {
   def trainLocal(data: Array[LabeledPoint], featureDim: Int,
                  cfg: GlmConfig,
                  warmStart: Option[Array[Double]] = None): GlmModel = {
-    val obj = new LocalGlmObjective(data, featureDim, cfg)
-    val dim = cfg.coefDim(featureDim)
-    val init = if (cfg.norm.isIdentity) warmStart else None
-    def lbfgs() =
-      Optimizers.lbfgs(obj.valueAndGradient, dim, featureDim, cfg, init)
-    val w =
-      if (cfg.l1 > 0) Optimizers.owlqn(obj.valueAndGradient, dim,
-        featureDim, cfg, init)
-      else if (closedFormEligible(cfg, dim))
-        // per-entity squared loss (e.g. random-effect intercepts) solves
-        // exactly in one loop over the group; singular → LBFGS fallback
-        try {
-          val (aM, bV) = obj.normalEquations()
-          Optimizers.normalSolve(aM, bV, dim,
-            Optimizers.QuadReg.from(cfg, dim, featureDim))
-        } catch { case scala.util.control.NonFatal(_) => lbfgs() }
-      else lbfgs()
-    val variances = cfg.varianceComputation.toLowerCase match {
-      case "simple" | "full" => // full ≡ simple for tiny local problems
-        val regDiag = Optimizers.QuadReg.from(cfg, dim, featureDim).diagonal
-        val hd = obj.hessianDiagonal(w)
-        val v = Array.tabulate(dim) { i =>
-          val h = hd(i) + regDiag(i)
-          if (h > 1e-12) 1.0 / h else 1e12
-        }
-        cfg.norm.factors.foreach { f =>
-          var i = 0
-          while (i < f.length) { v(i) *= f(i) * f(i); i += 1 }
-        }
-        Some(v)
-      case _ => None
-    }
-    toOriginalSpace(w, featureDim, cfg).copy(variances = variances)
+    // a per-entity "full" variance is the diagonal one, which the SQL
+    // intercept twin in RandomEffect mirrors
+    val localCfg =
+      if (cfg.varianceComputation.equalsIgnoreCase("full"))
+        cfg.copy(varianceComputation = "simple")
+      else cfg
+    fit(new LocalGlmObjective(data, featureDim, localCfg), featureDim,
+      localCfg, "auto", warmStart.filter(_ => cfg.norm.isIdentity), None)._2
   }
 
   /** Warm-started regularization path (ModelTraining.scala:100-228):
-    * lambdas trained in DESCENDING order, each solution seeding the next.
-    * Returns lambda → model. */
+    * lambdas trained in DESCENDING order, each solution seeding the next,
+    * so every lambda stays iterative (OWLQN iff l1 > 0, else LBFGS;
+    * LBFGSB under bounds) and never takes the closed form. Returns
+    * lambda → model. */
   def regularizationPath(data: Dataset[LabeledPoint], featureDim: Int,
                          base: GlmConfig, lambdas: Seq[Double])
   : Map[Double, GlmModel] = {
-    val dim = base.coefDim(featureDim)
     val obj = new DistributedGlmObjective(data, featureDim, base)
-    var warm = new Array[Double](dim)
-    val out = lambdas.sorted(Ordering[Double].reverse).map { lambda =>
-      // route through the shared optimizer layer so the path honors the
-      // full config (l1 → OWLQN, Gaussian priors via QuadReg) instead of
-      // a hand-rolled ridge-only loop that would drift from train()
+    var warm = new Array[Double](base.coefDim(featureDim))
+    try lambdas.sorted(Ordering[Double].reverse).map { lambda =>
       val cfg = base.copy(l2 = lambda)
-      warm =
-        if (cfg.l1 > 0)
-          Optimizers.owlqn(obj.valueAndGradient, dim, featureDim, cfg,
-            Some(warm.clone()))
-        else
-          Optimizers.lbfgs(obj.valueAndGradient, dim, featureDim, cfg,
-            Some(warm.clone()))
-      lambda -> toOriginalSpace(warm, featureDim, cfg)
+      val (w, m) = fit(obj, featureDim, cfg,
+        if (cfg.l1 > 0) "owlqn" else "lbfgs", Some(warm), None)
+      warm = w
+      lambda -> m
     }.toMap
-    obj.unpersist()
-    out
+    finally obj.unpersist()
   }
 
   /** Score a DataFrame with a broadcast model (J1: the fixed-effect

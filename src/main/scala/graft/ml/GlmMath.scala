@@ -2,9 +2,10 @@ package graft.ml
 
 import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector}
 
-/** Shared per-sample GLM math, used by BOTH the distributed aggregators
-  * (fixed effects) and the per-entity local solver (random effects) so the
-  * two paths cannot drift.
+/** Per-sample GLM math: margins, sparse dot/axpy and the gradient
+  * finish. The kernels in Objectives.scala (`GlmKernel`) are built from
+  * it, and each kernel is written once for both the fixed-effect
+  * `treeAggregate` and the per-entity loop, so the two cannot drift.
   *
   * Normalization is folded in via the reference's effective-coefficients
   * trick (photon-lib/.../function/glm/ValueAndGradientAggregator.scala:
@@ -48,6 +49,17 @@ object GlmMath {
       var i = 0
       while (i < f.length) { ew(i) = w(i) * f(i); i += 1 }
       ew
+  }
+
+  /** v_j *= factor_j² over the feature slots, in place (identity: v as
+    * it is) — a diagonal curvature or variance changing space. */
+  def scaleByFactorSquared(v: Array[Double],
+                           norm: Normalization): Array[Double] = {
+    norm.factors.foreach { f =>
+      var i = 0
+      while (i < f.length) { v(i) *= f(i) * f(i); i += 1 }
+    }
+    v
   }
 
   /** Margin shift from normalization: -(ew·shift); 0 for identity. */

@@ -111,28 +111,13 @@ object Optimizers {
     }
   }
 
-  private def normOf(v: BDV[Double]): Double = breeze.linalg.norm(v)
-
   /** LBFGS (optionally + L2/prior), warm-startable. `tracker` records
     * one state per accepted iteration (L1 state tracking). */
   def lbfgs(oracle: Oracle, dim: Int, featureDim: Int, cfg: GlmConfig,
             init: Option[Array[Double]] = None,
-            tracker: Option[StatesTracker] = None): Array[Double] = {
-    val opt = new BreezeLBFGS[BDV[Double]](maxIter = cfg.maxIter, m = 10,
-      tolerance = cfg.tol)
-    val w0 = init.filter(_.length == dim).map(a => BDV(a.clone()))
-      .getOrElse(BDV.zeros[Double](dim))
-    val fn = diffFn(oracle, QuadReg.from(cfg, dim, featureDim))
-    tracker match {
-      case None => opt.minimize(fn, w0).data
-      case Some(t) =>
-        var result = w0
-        opt.iterations(fn, w0).foreach { s =>
-          result = s.x; t.record(s.value, normOf(s.grad))
-        }
-        result.data
-    }
-  }
+            tracker: Option[StatesTracker] = None): Array[Double] =
+    minimize(new BreezeLBFGS[BDV[Double]](maxIter = cfg.maxIter, m = 10,
+      tolerance = cfg.tol), oracle, dim, featureDim, cfg, init, tracker)
 
   /** OWLQN for L1 (+ optional L2/prior); L1 never applies to the
     * intercept. */
@@ -140,8 +125,17 @@ object Optimizers {
             init: Option[Array[Double]] = None,
             tracker: Option[StatesTracker] = None): Array[Double] = {
     val l1Fn = (i: Int) => if (i < featureDim) cfg.l1 else 0.0
-    val opt = new BreezeOWLQN[Int, BDV[Double]](cfg.maxIter, 10, l1Fn,
-      cfg.tol)
+    minimize(new BreezeOWLQN[Int, BDV[Double]](cfg.maxIter, 10, l1Fn,
+      cfg.tol), oracle, dim, featureDim, cfg, init, tracker)
+  }
+
+  /** The body LBFGS and OWLQN share (OWLQN is breeze's LBFGS with an L1
+    * step): start from `init` when its length fits, else zeros, and record
+    * each iterate's state into `tracker`. */
+  private def minimize(opt: BreezeLBFGS[BDV[Double]], oracle: Oracle,
+                       dim: Int, featureDim: Int, cfg: GlmConfig,
+                       init: Option[Array[Double]],
+                       tracker: Option[StatesTracker]): Array[Double] = {
     val w0 = init.filter(_.length == dim).map(a => BDV(a.clone()))
       .getOrElse(BDV.zeros[Double](dim))
     val fn = diffFn(oracle, QuadReg.from(cfg, dim, featureDim))
@@ -150,7 +144,7 @@ object Optimizers {
       case Some(t) =>
         var result = w0
         opt.iterations(fn, w0).foreach { s =>
-          result = s.x; t.record(s.value, normOf(s.grad))
+          result = s.x; t.record(s.value, breeze.linalg.norm(s.grad))
         }
         result.data
     }

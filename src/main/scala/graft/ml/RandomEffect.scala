@@ -45,6 +45,11 @@ object RandomEffect {
             priors: Option[Dataset[ReModel]] = None,
             pearsonK: Int = 0, subspace: Boolean = true): Dataset[ReModel] = {
     implicit val enc = Encoders.product[ReModel]
+    // per-entity solves run in projected coordinates (subspace, Pearson
+    // selection) that a full-space box would not follow
+    require(cfg.bounds.isEmpty, "RandomEffect.train: a random-effect " +
+      "coordinate config cannot set GlmConfig.bounds; box constraints " +
+      "apply to fixed-effect coordinates only")
     if (closedFormInterceptEligible(featureDim, cfg, pearsonK))
       return trainInterceptClosedForm(data, cfg, priors)
     val grouped = data.groupByKey(_.reId)(Encoders.STRING)
@@ -158,7 +163,7 @@ object RandomEffect {
   private def closedFormInterceptEligible(featureDim: Int, cfg: GlmConfig,
                                           pearsonK: Int): Boolean =
     featureDim == 0 && cfg.fitIntercept && cfg.loss == SquaredLoss &&
-      cfg.l1 == 0 && cfg.bounds.isEmpty && cfg.norm.isIdentity &&
+      cfg.l1 == 0 && cfg.norm.isIdentity &&
       cfg.prior.isEmpty && pearsonK == 0
 
   /** SQL twin of the general path for the intercept-only closed form.

@@ -460,11 +460,11 @@ class GameSpec extends SparkSpec {
   }
 
   test("intercept closed form equals the iterative path, weights and all") {
-    // featureDim=0 + squared loss takes the SQL closed form; adding wide
-    // box bounds fails eligibility and forces the general groupByKey path
-    // through the SAME config semantics (±1e9 bounds never bind), so the
-    // two paths must agree to solver precision — weighted, offset,
-    // variance and prior-with-variance cases included
+    // featureDim=0 + squared loss takes the SQL closed form; an empty
+    // normalization (no feature to scale, so the same math) fails both
+    // closed forms' identity check and forces the general groupByKey path
+    // onto LBFGS, so the two paths must agree to solver precision —
+    // weighted, offset, variance and prior-with-variance cases included
     val rnd = new scala.util.Random(61)
     val data = (0 until 600).map { i =>
       RandomEffect.ReSample(s"e${i % 7}", rnd.nextGaussian() * 2 + i % 3,
@@ -473,8 +473,8 @@ class GameSpec extends SparkSpec {
     }.toDS()
     val cfg = GlmConfig(SquaredLoss, l2 = 1e-3, maxIter = 200, tol = 1e-12,
       varianceComputation = "simple")
-    val forceGeneral = cfg.copy(bounds =
-      Some((Array(-1e9), Array(1e9))))
+    val forceGeneral = cfg.copy(norm =
+      Normalization(Some(Array.empty[Double]), None))
     def toMap(ds: org.apache.spark.sql.Dataset[RandomEffect.ReModel]) =
       ds.collect().map(m => m.reId -> m).toMap
     val fast = toMap(RandomEffect.train(data, 0, cfg))
@@ -494,6 +494,17 @@ class GameSpec extends SparkSpec {
       assert(math.abs(m.intercept - slow2(e).intercept) < 1e-6,
         s"$e prior: closed=${m.intercept} iterative=${slow2(e).intercept}")
     }
+  }
+
+  test("bounds on a random-effect coordinate fail fast") {
+    val data = Seq(RandomEffect.ReSample("e", 1.0, Vectors.dense(1.0), 0.0,
+      1.0)).toDS()
+    val e = intercept[IllegalArgumentException] {
+      RandomEffect.train(data, 1, GlmConfig(SquaredLoss,
+        bounds = Some((Array(-1.0, -1.0), Array(1.0, 1.0)))))
+    }
+    assert(e.getMessage.contains("random-effect coordinate config") &&
+      e.getMessage.contains("GlmConfig.bounds"), e.getMessage)
   }
 
   test("random-effect priors survive for entities with no new data") {

@@ -193,6 +193,82 @@ class GlmSpec extends SparkSpec {
     assert(path.size == 3)
   }
 
+  test("local and distributed objectives run the same kernels") {
+    // 50k rows: the distributed iteration view keeps >= 25k rows per
+    // partition, so 3 input partitions stay 3 (and 1 stays 1)
+    val data = synthetic(50000, Array(0.8, -1.2, 0.5), 0.3, logistic = true)
+      .zipWithIndex.map { case (p, i) =>
+        val x = p.features
+        p.copy(features = Vectors.dense(x(0) * 10 + 3, x(1) * 0.01 - 2,
+          x(2)), offset = 0.05 * x(2), weight = 0.5 + i % 3)
+      }
+    val f = Array(0.1, 100.0, 1.0)
+    val sh = Array(3.0, -2.0, 0.0)
+    val cfg = GlmConfig(LogisticLoss, l2 = 0.1,
+      norm = Normalization(Some(f), Some(sh)),
+      prior = Some(GaussianPrior(Array(0.5, -1.0, 0.2, 0.1),
+        Array(0.5, 2.0, 1.0, 0.0))))
+    val w = Array(0.3, -0.2, 0.1, 0.05)
+    val v = Array(1.0, 0.5, -0.25, 2.0)
+    def aggregates(o: GlmObjective): Seq[Array[Double]] = {
+      val (l, g, ws) = o.valueAndGradient(w)
+      val (a, b) = o.normalEquations()
+      Seq(Array(l, ws), g, o.hessianDiagonal(w), a, b)
+    }
+    def close(got: Array[Double], want: Array[Double], rel: Double): Unit = {
+      val scale = want.map(math.abs).max
+      got.zip(want).foreach { case (x, y) =>
+        assert(math.abs(x - y) <= rel * scale, s"$x vs $y")
+      }
+    }
+    val local = new LocalGlmObjective(data.toArray, 3, cfg)
+    val want = aggregates(local)
+    Seq(1, 3).foreach { parts =>
+      val dist = new DistributedGlmObjective(spark.createDataset(
+        spark.sparkContext.parallelize(data, parts)), 3, cfg)
+      aggregates(dist).zip(want).foreach { case (got, exp) =>
+        if (parts == 1) assert(got.toSeq == exp.toSeq)
+        else close(got, exp, 1e-12)
+      }
+      dist.unpersist()
+    }
+
+    // hessianMatrix sums raw x~ x~T; hessianVector works in normalized
+    // space, so the matrix maps through the normalization's Jacobian J
+    // (raw margin coefficients = J * normalized ones): H_n v = J^T H J v.
+    // Under identity normalization J = I and H_n v = H v. The shifts make
+    // J^T H J cancel (x1 sits near its shift), hence the looser bound.
+    Seq(cfg -> 1e-9, cfg.copy(norm = Normalization.identity) -> 1e-12)
+      .foreach { case (c, rel) =>
+      val o = new LocalGlmObjective(data.toArray, 3, c)
+      val fs = c.norm.factors.getOrElse(Array.fill(3)(1.0))
+      val ss = c.norm.shifts.getOrElse(Array.fill(3)(0.0))
+      val h = o.hessianMatrix(w)
+      val u = Array.tabulate(4)(j => if (j < 3) fs(j) * v(j)
+        else v(3) - (0 until 3).map(k => fs(k) * ss(k) * v(k)).sum)
+      val hu = Array.tabulate(4)(i =>
+        (0 until 4).map(j => h(i * 4 + j) * u(j)).sum)
+      val viaMatrix = Array.tabulate(4)(j =>
+        if (j < 3) fs(j) * hu(j) - fs(j) * ss(j) * hu(3) else hu(3))
+      close(o.hessianVector(w, v), viaMatrix, rel)
+    }
+
+    // under squared loss d2z = 1, so the Hessian is the normal equations' A
+    val sq = new LocalGlmObjective(data.toArray, 3,
+      cfg.copy(loss = SquaredLoss))
+    assert(sq.hessianMatrix(w).toSeq == sq.normalEquations()._1.toSeq)
+
+    // one solve-and-variance routine: on one partition the fixed-effect
+    // and the per-entity fit take the same iterates
+    val varCfg = cfg.copy(varianceComputation = "simple")
+    val fixed = Glm.train(spark.createDataset(
+      spark.sparkContext.parallelize(data, 1)), 3, varCfg)
+    val entity = Glm.trainLocal(data.toArray, 3, varCfg)
+    assert(fixed.coef.toSeq == entity.coef.toSeq)
+    assert(fixed.intercept == entity.intercept)
+    assert(fixed.variances.get.toSeq == entity.variances.get.toSeq)
+  }
+
   test("the distributed objective releases only the cache it persisted") {
     import org.apache.spark.storage.StorageLevel
     val cfg = GlmConfig(SquaredLoss)

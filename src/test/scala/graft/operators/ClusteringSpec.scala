@@ -139,9 +139,7 @@ class ClusteringSpec extends SparkSpec {
     val day2 = Seq(
       300L -> Seq(-5.0, 4.0001, -3.0, 0.5),
       301L -> v(0.0, 0.00005)).toDF("id", "vec")
-    val dir = java.nio.file.Files.createTempDirectory("semapp").toFile
-    val root = dir.getAbsolutePath
-    try {
+    graft.util.TempDirs.using("semapp") { case Seq(root) =>
       val (labels, centroids) = Clustering.kmeansWithCentroids(
         base, "id", "vec", k = 2, iterations = 2)
       Clustering.semDedupStateSave(spark, root, labels, "id", centroids)
@@ -166,7 +164,7 @@ class ClusteringSpec extends SparkSpec {
         }
         assert(e.getMessage.contains("another writer"))
       }
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("semDedupStateHealth reports cluster skew and fragments; " +
@@ -180,9 +178,7 @@ class ClusteringSpec extends SparkSpec {
     val day1 = Seq(200L -> v(0.0, 0.0002)).toDF("id", "vec")
     val day2 = Seq(300L -> v(0.0, 0.00005)).toDF("id", "vec")
     val probeBatch = Seq(400L -> v(0.0, 0.00007)).toDF("id", "vec")
-    val dir = java.nio.file.Files.createTempDirectory("semhealth").toFile
-    val root = dir.getAbsolutePath
-    try {
+    graft.util.TempDirs.using("semhealth") { case Seq(root) =>
       val (labels, centroids) = Clustering.kmeansWithCentroids(
         base, "id", "vec", k = 2, iterations = 2)
       Clustering.semDedupStateSave(spark, root, labels, "id", centroids)
@@ -230,7 +226,7 @@ class ClusteringSpec extends SparkSpec {
         }
         assert(e.getMessage.contains("another writer"))
       }
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("semDedupIncrementalAuto (two-level) matches the single-level " +

@@ -130,9 +130,7 @@ class CorpusOpsSpec extends SparkSpec {
       (2L, "with five dozen liquor jugs"),
       (3L, "completely unrelated words here galore"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("decontamidx").toFile
-    val root = dir.getAbsolutePath
-    try {
+    graft.util.TempDirs.using("decontamidx") { case Seq(root) =>
       Decontamination.decontamIndexBuild(
         bench.filter(col("doc_id") === 100L), root, "text", n = 3)
       Decontamination.decontamIndexAppend(spark, root,
@@ -186,7 +184,7 @@ class CorpusOpsSpec extends SparkSpec {
         maxFragmentsCeiling = 1000, driftRatioFloor = 0.5,
         hotClustersCeiling = 0L)
         .head().getAs[String]("action") == "none")
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("topTfIdfTerms ranks by (tf desc, df asc, term asc)") {
@@ -291,9 +289,7 @@ class CorpusOpsSpec extends SparkSpec {
       (10L, txt + " lambda"),
       (11L, "cold warm hot mild cool damp dry wet calm windy"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mhidx").toFile
-    val root = dir.getAbsolutePath
-    try {
+    graft.util.TempDirs.using("mhidx") { case Seq(root) =>
       Dedup.minhashIndexBuild(base.filter(col("doc_id") === 1L), root,
         "doc_id", "text")
       Dedup.minhashIndexAppend(spark, root,
@@ -335,7 +331,7 @@ class CorpusOpsSpec extends SparkSpec {
           .toDF("doc_id", "text"), "doc_id", "text")
       assert(liveRows() == rowsBefore + 2) // 2 bands per doc
       assert(probe() == direct)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("minhash probe fails loudly when the base text table does not " +
@@ -346,20 +342,19 @@ class CorpusOpsSpec extends SparkSpec {
       (2L, "one two three four five six seven eight nine ten"))
       .toDF("doc_id", "text")
     val delta = Seq((10L, txt + " lambda")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mhmiss").toFile
-    try {
-      Dedup.minhashIndexBuild(docs, dir.getAbsolutePath, "doc_id", "text")
+    graft.util.TempDirs.using("mhmiss") { case Seq(dir) =>
+      Dedup.minhashIndexBuild(docs, dir, "doc_id", "text")
       // doc 1 is a candidate for delta 10, but the supplied text table
       // only covers doc 2 — silent under-reporting is not an option
       val e = intercept[Exception] {
-        Dedup.minhashIndexProbe(spark, dir.getAbsolutePath, delta,
+        Dedup.minhashIndexProbe(spark, dir, delta,
           docs.filter(col("doc_id") === 2L), "doc_id", "text")
       }
       def chain(t: Throwable): Seq[String] =
         if (t == null) Nil else t.getMessage +: chain(t.getCause)
       assert(chain(e).exists(m =>
         m != null && m.contains("minhashIndexProbe")), chain(e))
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("hot-bucket recovery loop: health flips hot_buckets 0 -> >0, the " +
@@ -378,10 +373,8 @@ class CorpusOpsSpec extends SparkSpec {
     // another copy of the boilerplate class — identical signature, so
     // the band match is structural, not hash-luck
     val delta = Seq((100L, boiler)).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mhhot").toFile
-    val root = dir.getAbsolutePath
     val cap = 4
-    try {
+    graft.util.TempDirs.using("mhhot") { case Seq(root) =>
       Dedup.minhashIndexBuild(clean, root, "doc_id", "text")
       def health() = Dedup.minhashIndexHealth(spark, root,
         hotBucketCap = cap)
@@ -412,7 +405,7 @@ class CorpusOpsSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         Dedup.minhashMaintenanceApply(spark, root, "dedup_prepass")
       }
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("persisted exact-hash index: probe is append- and duplicate-" +
@@ -422,9 +415,7 @@ class CorpusOpsSpec extends SparkSpec {
     val base = Seq((1L, txt), (2L, "one two three")).toDF("doc_id", "text")
     val delta = Seq((10L, txt), (11L, "brand new words"),
       (12L, "one two three")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("exidx").toFile
-    val root = dir.getAbsolutePath
-    try {
+    graft.util.TempDirs.using("exidx") { case Seq(root) =>
       Dedup.exactIndexBuild(base.filter(col("doc_id") === 1L), root,
         "doc_id", "text")
       Dedup.exactIndexAppend(spark, root,
@@ -459,7 +450,7 @@ class CorpusOpsSpec extends SparkSpec {
         }
         assert(e.getMessage.contains("another writer"))
       }
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("streaming admission converges to the one-shot batch verdicts " +
@@ -478,10 +469,9 @@ class CorpusOpsSpec extends SparkSpec {
       (13L, "tiny"),                      // under the token floor
       (14L, "completely fresh clean document with many words"))
       .toDF("doc_id", "text")
-    val dirs = Seq("adm_ex_", "adm_mh_", "adm_dc_", "adm_st_")
-      .map(p => java.nio.file.Files.createTempDirectory(p).toFile)
-    try {
-      val Seq(exDir, mhDir, dcDir, stDir) = dirs.map(_.getAbsolutePath)
+    graft.util.TempDirs.using("adm_ex_", "adm_mh_", "adm_dc_",
+        "adm_st_") { dirs =>
+      val Seq(exDir, mhDir, dcDir, stDir) = dirs
       Dedup.exactIndexBuild(base, exDir, "doc_id", "text")
       Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text")
       Decontamination.decontamIndexBuild(bench, dcDir, "text", n = 3)
@@ -505,7 +495,7 @@ class CorpusOpsSpec extends SparkSpec {
       try q.processAllAvailable()
       finally q.stop()
       assert(rows(spark.read.parquet(s"$stDir/out")) == oneShot)
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   test("probe hot-bucket guard caps the DELTA side too (fused " +
@@ -521,15 +511,13 @@ class CorpusOpsSpec extends SparkSpec {
     // exact copy in an un-hot bucket and must still match
     val delta = ((100L to 105L).map(i => (i, boiler)) :+ (200L, clean))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mhdhot").toFile
-    val root = dir.getAbsolutePath
-    try {
+    graft.util.TempDirs.using("mhdhot") { case Seq(root) =>
       Dedup.minhashIndexBuild(base, root, "doc_id", "text")
       val mh = Dedup.minhashIndexProbe(spark, root, delta, base,
         "doc_id", "text", threshold = 0.5, maxBucketSize = 4)
         .select("delta_id", "base_id").as[(Long, Long)].collect().toSet
       assert(mh == Set((200L, 2L)), mh.toString)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("persisted simhash index: probe equals the direct run with no " +
@@ -545,9 +533,7 @@ class CorpusOpsSpec extends SparkSpec {
       (10L, txt), // identical -> Hamming 0 against docs 1 and 2
       (11L, "cold warm hot mild cool damp dry wet calm windy"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("shidx").toFile
-    val root = dir.getAbsolutePath
-    try {
+    graft.util.TempDirs.using("shidx") { case Seq(root) =>
       Dedup.simhashIndexBuild(base.filter(col("doc_id") === 1L), root,
         "doc_id", "text")
       Dedup.simhashIndexAppend(spark, root,
@@ -591,7 +577,7 @@ class CorpusOpsSpec extends SparkSpec {
           .toDF("doc_id", "text"), "doc_id", "text")
       assert(liveRows() == rowsBefore + 1)
       assert(probe() == direct)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("simhash index health: boilerplate flips hot_buckets and the " +
@@ -604,10 +590,8 @@ class CorpusOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val boilerplate = (20L until 28L).map(i => (i, boiler))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("shhot").toFile
-    val root = dir.getAbsolutePath
     val cap = 4
-    try {
+    graft.util.TempDirs.using("shhot") { case Seq(root) =>
       Dedup.simhashIndexBuild(clean, root, "doc_id", "text")
       def health() = Dedup.simhashIndexHealth(spark, root,
         hotBucketCap = cap)
@@ -646,7 +630,7 @@ class CorpusOpsSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         Dedup.simhashMaintenanceApply(spark, root, "dedup_prepass")
       }
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 
   test("passage rewrite keeps first occurrence globally and within doc") {
@@ -682,10 +666,8 @@ class CorpusOpsSpec extends SparkSpec {
     val batch = Seq(
       (10L, "how vexingly quick daft zebras jump today"))
       .toDF("doc_id", "text").repartition(1)
-    val dirs = Seq("mhreplay", "shreplay")
-      .map(p => java.nio.file.Files.createTempDirectory(p).toFile)
-    try {
-      val Seq(mhDir, shDir) = dirs.map(_.getAbsolutePath)
+    graft.util.TempDirs.using("mhreplay", "shreplay") { dirs =>
+      val Seq(mhDir, shDir) = dirs
       Dedup.minhashIndexBuild(docs, mhDir, "doc_id", "text")
       Dedup.simhashIndexBuild(docs, shDir, "doc_id", "text")
       // an at-least-once retry: the SAME committed batch appends twice
@@ -718,7 +700,7 @@ class CorpusOpsSpec extends SparkSpec {
         batch, "doc_id", "text", maxHamming = 0)
         .select("delta_id", "base_id").as[(Long, Long)].collect().toSet
       assert(pairs == Set((10L, 10L)))
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   test("fleetIngestReconcile detects a crash between a multi-family " +
@@ -730,10 +712,8 @@ class CorpusOpsSpec extends SparkSpec {
       .toDF("doc_id", "text").repartition(1)
     val b2 = Seq((20L, "how vexingly quick daft zebras jump"))
       .toDF("doc_id", "text").repartition(1)
-    val dirs = Seq("rec_ex_", "rec_mh_")
-      .map(p => java.nio.file.Files.createTempDirectory(p).toFile)
-    try {
-      val Seq(exDir, mhDir) = dirs.map(_.getAbsolutePath)
+    graft.util.TempDirs.using("rec_ex_", "rec_mh_") { dirs =>
+      val Seq(exDir, mhDir) = dirs
       Dedup.exactIndexBuild(base, exDir, "doc_id", "text")
       Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text")
       val fams = Map("exact" -> exDir, "minhash" -> mhDir)
@@ -793,7 +773,7 @@ class CorpusOpsSpec extends SparkSpec {
         .head().getAs[Long]("ingest_batches") == 2L)
       assert(Dedup.minhashIndexHealth(spark, mhDir)
         .head().getAs[Long]("ingest_batches") == 2L)
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   test("crash between an append's data files and its log row: the " +
@@ -804,10 +784,8 @@ class CorpusOpsSpec extends SparkSpec {
       .toDF("doc_id", "text").repartition(1)
     val b1 = Seq((10L, "pack my box with five dozen liquor jugs"))
       .toDF("doc_id", "text").repartition(1)
-    val dirs = Seq("cw_ex_", "cw_mh_")
-      .map(p => java.nio.file.Files.createTempDirectory(p).toFile)
-    try {
-      val Seq(exDir, mhDir) = dirs.map(_.getAbsolutePath)
+    graft.util.TempDirs.using("cw_ex_", "cw_mh_") { dirs =>
+      val Seq(exDir, mhDir) = dirs
       Dedup.exactIndexBuild(base, exDir, "doc_id", "text")
       Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text")
       // exact lands b1 fully; the minhash append "crashes" AFTER its
@@ -844,15 +822,13 @@ class CorpusOpsSpec extends SparkSpec {
         base.unionByName(b1), "doc_id", "text", threshold = 0.5)
         .select("delta_id", "base_id").as[(Long, Long)].collect().toSeq
       assert(probed == Seq((30L, 10L)))
-    } finally dirs.foreach(graft.util.TempDirs.deleteRecursively)
+    }
   }
 
   test("souringSources: trailing window is bounded and self-relative, " +
     "minRate suppresses noise flags") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("funhist").toFile
-    val root = dir.getAbsolutePath
-    try {
+    graft.util.TempDirs.using("funhist") { case Seq(root) =>
       // four days of one source: steady 10% near-dup, then a 40% jump
       val d4 = "2024-01-04"
       Seq(("2024-01-01", 1L), ("2024-01-02", 1L), ("2024-01-03", 1L),
@@ -885,6 +861,6 @@ class CorpusOpsSpec extends SparkSpec {
       assertThrows[Exception] {
         CorpusPipeline.souringSources(spark, root, window = 3).collect()
       }
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 }
