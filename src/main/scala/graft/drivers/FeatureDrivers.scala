@@ -25,10 +25,7 @@ object FeatureIndexingDriver {
   }
 
   def run(spark: SparkSession, a: Args): DataFrame = {
-    val input = GameTrainingDriver.readInputs(spark, a,
-      a.list("input-dirs") match {
-        case Nil => Seq(a.str("input-dir")); case ds => ds
-      })
+    val input = GameTrainingDriver.readInputs(spark, a)
     val selected = a.opt("selected-features-dir")
       .map(d => spark.read.parquet(d))
     val indexMap = FeatureVectorizer.buildIndexMap(input,
@@ -51,10 +48,7 @@ object NameAndTermFeatureBagsDriver {
 
   /** One distinct (name, term) parquet per bag under output-dir/<bag>. */
   def run(spark: SparkSession, a: Args): Map[String, DataFrame] = {
-    val input = GameTrainingDriver.readInputs(spark, a,
-      a.list("input-dirs") match {
-        case Nil => Seq(a.str("input-dir")); case ds => ds
-      })
+    val input = GameTrainingDriver.readInputs(spark, a)
     a.list("bag-cols").map { bag =>
       val features = input.select(explode(col(bag)).as("f"))
         .select(col("f.name").as("name"), col("f.term").as("term"))

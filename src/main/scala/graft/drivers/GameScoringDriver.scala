@@ -22,10 +22,7 @@ object GameScoringDriver {
 
   def run(spark: SparkSession, a: Args): DataFrame = {
     import spark.implicits._
-    val input = GameTrainingDriver.readInputs(spark, a,
-      a.list("input-dirs") match {
-        case Nil => Seq(a.str("input-dir")); case ds => ds
-      })
+    val input = GameTrainingDriver.readInputs(spark, a)
     val prepared = GameTrainingDriver.prepare(input, a)
     val model = ModelIO.loadGame(spark, a.str("model-dir"))
     val scores = model.score(prepared)

@@ -39,10 +39,7 @@ object GameTrainingDriver {
   }
 
   def run(spark: SparkSession, a: Args): (GameModel, Seq[Evaluated]) = {
-    val train = readInputs(spark, a, a.list("input-dirs") match {
-      case Nil => Seq(a.str("input-dir"))
-      case ds => ds
-    })
+    val train = readInputs(spark, a)
     val prepared = prepare(train, a)
     validate(prepared, a)
 
@@ -193,6 +190,14 @@ object GameTrainingDriver {
     results.map(r => (r.lambda, r.metric, r.lambda == best.lambda))
       .toDF("lambda", "metric", "selected").coalesce(1)
   }
+
+  /** [[readInputs]] over `input-dirs`, or the single `input-dir` when
+    * that list is absent. */
+  private[drivers] def readInputs(spark: SparkSession, a: Args): DataFrame =
+    readInputs(spark, a, a.list("input-dirs") match {
+      case Nil => Seq(a.str("input-dir"))
+      case ds => ds
+    })
 
   private[drivers] def readInputs(spark: SparkSession, a: Args,
                                   dirs: Seq[String]): DataFrame = {

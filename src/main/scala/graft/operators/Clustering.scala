@@ -429,15 +429,11 @@ object Clustering {
                           batchId: Option[String] = None): Unit = {
     val assign = assignTo(spark, loadStateCentroids(spark, dir),
       roundTo = 9)
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.append(spark, dir, batchId) { snap =>
       batch.select(col(idCol).as("id"),
         assign(col(vecCol).cast("array<double>")).as("cluster"))
         .write.mode("append").parquet(snap.path("labels"))
-      // append-supersedes-delete (see [[Tombstones.pruneOnAppend]])
-      Tombstones.pruneOnAppend(spark, dir, snap,
-        batch.select(col(idCol).as("id")))
-      batchId.foreach(IngestLog.record(spark, snap, _))
+      batch.select(col(idCol).as("id"))
     }
   }
 
@@ -448,13 +444,9 @@ object Clustering {
     * dropped by the next [[semDedupStateCompact]]. */
   def semDedupStateDelete(spark: org.apache.spark.sql.SparkSession,
                           dir: String, ids: DataFrame,
-                          idCol: String = "id"): Unit = {
-    val snap = Manifest.snapshot(spark, dir)
-    val idType = spark.read.parquet(snap.path("labels"))
-      .schema("id").dataType
-    Tombstones.append(spark, dir,
-      ids.select(col(idCol).cast(idType).as("id")))
-  }
+                          idCol: String = "id"): Unit =
+    Tombstones.retractIds(spark, Manifest.snapshot(spark, dir), "labels",
+      ids, idCol)
 
   /** Operational health report of a persisted SemDeDup state — the
     * fleet-table row for this family (q220's shape): label-table size
@@ -471,26 +463,19 @@ object Clustering {
                           dir: String,
                           hotClusterCap: Long = 100000L): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val labelsPath = snap.path("labels")
-    val tableP = new org.apache.hadoop.fs.Path(labelsPath)
-    val nFragments = tableP
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(tableP).count(_.getPath.getName.endsWith(".parquet"))
-      .toLong
     val k = spark.read.parquet(snap.path("centroids")).count()
-    val sizes = spark.read.parquet(labelsPath).groupBy("cluster")
+    val sizes = spark.read.parquet(snap.path("labels")).groupBy("cluster")
       .agg(count(lit(1)).as("_n"))
     // one collected plan, no per-reading driver jobs, pending/ingest
     // fused into a single aggregate side (see
     // [[Dedup.exactIndexHealth]])
-    OpsStats.attach(spark, snap)(sizes.agg(
+    OpsStats.attach(spark, snap)(Lifecycle.healthRow(spark, snap, "labels",
+      sizes)(
       lit(k).as("n_clusters"),
       sum(col("_n")).as("total_rows"),
       count(lit(1)).as("occupied_clusters"),
       max(col("_n")).as("max_cluster"),
-      count(when(col("_n") > hotClusterCap, 1)).as("hot_clusters"),
-      lit(dir).as("dir"), lit(snap.version).as("version"),
-      lit(nFragments).as("n_fragments")))
+      count(when(col("_n") > hotClusterCap, 1)).as("hot_clusters")))
   }
 
   /** Fold the label table's accumulated append fragments into one
@@ -501,27 +486,13 @@ object Clustering {
     * read→rewrite→flip span like every compactor in this package. */
   def semDedupStateCompact(spark: org.apache.spark.sql.SparkSession,
                            dir: String): Unit =
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
-      val tmp = s"$dir/_compact.tmp.labels"
-      // fold pending Tombstones (retracted ids dropped, tombstone
-      // table emptied in the same flip). Replayed/repaired appends
-      // land identical (id, cluster) rows under the frozen centroids —
-      // fold them by FULL-ROW distinct gated on replay evidence, or
-      // duplicate label rows skew every SemDeDup increment (see
-      // [[Similarity.ivfCompact]]: divergent same-id rows survive
-      // loudly; the no-replay path is a straight rewrite)
-      val raw = Tombstones.live(spark, snap,
-          spark.read.parquet(snap.path("labels")))
-      (if (IngestLog.hasReplayEvidence(spark, snap)) raw.distinct()
-       else raw)
-        .repartitionByRange(col("cluster"))
-        .sortWithinPartitions("cluster")
-        .write.mode("overwrite").parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("labels" -> tmp) ++
-        Tombstones.foldedForPublish(spark, dir, snap),
-        drops = Tombstones.dropIfFolded(spark, snap))
-    }
+    // Replayed/repaired appends land identical (id, cluster) rows
+    // under the frozen centroids — fold them by FULL-ROW distinct gated
+    // on replay evidence, or duplicate label rows skew every SemDeDup
+    // increment (see [[Similarity.ivfCompact]]: divergent same-id rows
+    // survive loudly; the no-replay path is a straight rewrite)
+    Lifecycle.compactFlat(spark, dir, "labels", Seq("cluster"),
+      Lifecycle.Dedupe.OnReplay, Lifecycle.Parts.Auto)
 
   /** Reader-safe REBUILD of a persisted SemDeDup state from the
     * embedding store — [[Similarity.ivfCompact]]`(rebuild = true)` for
@@ -540,8 +511,7 @@ object Clustering {
                            dir: String, vecs: DataFrame,
                            idCol: String = "id", vecCol: String = "vec",
                            k: Int, iterations: Int = 10): Unit =
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.rewrite(spark, dir) { snap =>
       // the embedding store may still carry retracted ids — a rebuild
       // that re-labeled them would silently resurrect deleted rows
       val live = Tombstones.live(spark, snap,
@@ -551,18 +521,13 @@ object Clustering {
       import spark.implicits._
       val tmpL = s"$dir/_rebuild.tmp.labels"
       val tmpC = s"$dir/_rebuild.tmp.centroids"
-      labels.select(col("id"), col("cluster"))
-        .repartitionByRange(col("cluster"))
-        .sortWithinPartitions("cluster")
-        .write.mode("overwrite").parquet(tmpL)
+      Lifecycle.writeClustered(labels.select(col("id"), col("cluster")),
+        Seq("cluster"), None, tmpL)
       cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cluster", "center")
         .coalesce(1).write.mode("overwrite").parquet(tmpC)
       releasePairs(labels)
-      Manifest.publishUnderLock(spark, dir,
-        Seq("labels" -> tmpL, "centroids" -> tmpC) ++
-          Tombstones.foldedForPublish(spark, dir, snap),
-        drops = Tombstones.dropIfFolded(spark, snap))
+      Seq("labels" -> tmpL, "centroids" -> tmpC)
     }
 
   /** The LIVE ids of a persisted SemDeDup label state (pending

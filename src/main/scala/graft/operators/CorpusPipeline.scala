@@ -301,11 +301,7 @@ object CorpusPipeline {
       // .hasReplayEvidence]] — the crash being repaired left data
       // WITHOUT a log row, so the re-append alone logs it only once)
       def run(f: => Unit): (String, String) =
-        try { f; IngestLog.recordReplay(spark, dir, bid); ("executed", "") }
-        catch { case e: Exception =>
-          ("failed", Option(e.getMessage).getOrElse(e.getClass.getName)
-            .take(200))
-        }
+        Similarity.attempt { f; IngestLog.recordReplay(spark, dir, bid) }
       val (status, detail) =
         if (action != "re_append")
           ("skipped", s"unknown action '$action'")
@@ -370,15 +366,9 @@ object CorpusPipeline {
     * read→rewrite→flip span like every compactor here. */
   def admissionFunnelCompact(spark: org.apache.spark.sql.SparkSession,
                              dir: String): Unit =
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
-      val tmp = s"$dir/_compact.tmp.funnel"
-      spark.read.parquet(snap.path("funnel"))
-        .repartitionByRange(1, col("day"), col("source"))
-        .sortWithinPartitions("day", "source")
-        .write.mode("overwrite").parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("funnel" -> tmp))
-    }
+    // never distinct: the history keeps every appended row
+    Lifecycle.compactFlat(spark, dir, "funnel", Seq("day", "source"),
+      Lifecycle.Dedupe.Never, Lifecycle.Parts.Fixed(1))
 
   /** Health row of the persisted funnel history — the fleet-table
     * surface for this table's fragment debt (every persisted table
@@ -389,18 +379,11 @@ object CorpusPipeline {
   def admissionFunnelHealth(spark: org.apache.spark.sql.SparkSession,
                             dir: String): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val funnelPath = snap.path("funnel")
-    val tableP = new org.apache.hadoop.fs.Path(funnelPath)
-    val nFragments = tableP
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(tableP).count(_.getPath.getName.endsWith(".parquet"))
-      .toLong
-    spark.read.parquet(funnelPath).agg(
+    Lifecycle.healthRow(spark, snap, "funnel",
+      spark.read.parquet(snap.path("funnel")))(
       count(lit(1)).as("total_rows"),
       count_distinct(col("day")).as("n_days"),
-      count_distinct(col("source")).as("n_sources"),
-      lit(dir).as("dir"), lit(snap.version).as("version"),
-      lit(nFragments).as("n_fragments"))
+      count_distinct(col("source")).as("n_sources"))
   }
 
   /** SOURING-SOURCE detector over the persisted funnel history: for

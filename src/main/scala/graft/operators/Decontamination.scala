@@ -68,24 +68,10 @@ object Decontamination {
 
   private def metaPath(dir: String) = s"$dir/_decontam_meta"
 
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, n: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(metaPath(dir))
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, true)
-    out.write(s"n=$n".getBytes("UTF-8"))
-    out.close()
-  }
-
   /** The shingle width the index at `dir` was built with. */
   def decontamIndexN(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(metaPath(dir))
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      .stripPrefix("n=").trim.toInt
-    finally in.close()
-  }
+                     dir: String): Int =
+    Manifest.readParams(spark, metaPath(dir))("n").trim.toInt
 
   /** Build the persisted index: the benchmark's distinct `n`-gram
     * shingles as one parquet table (single file — the set is
@@ -108,7 +94,10 @@ object Decontamination {
       .distinct()
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/shingles.parquet")
-    writeMeta(benchmark.sparkSession, dir, n)
+    // one unterminated `n=<width>` line, byte-identical to the files
+    // existing indexes carry
+    Manifest.writeParams(benchmark.sparkSession, metaPath(dir),
+      Seq("n" -> n), eol = "")
     Manifest.reset(benchmark.sparkSession, dir)
   }
 
@@ -128,8 +117,7 @@ object Decontamination {
                           dir: String, benchmarkDelta: DataFrame,
                           textCol: String): Unit = {
     val n = decontamIndexN(spark, dir)
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.rewrite(spark, dir) { snap =>
       val existing = spark.read.parquet(snap.path("shingles"))
       val tmp = s"$dir/_append.tmp.shingles"
       benchmarkDelta
@@ -139,7 +127,7 @@ object Decontamination {
         .unionByName(existing)
         .coalesce(1)
         .write.mode("overwrite").parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("shingles" -> tmp))
+      Seq("shingles" -> tmp)
     }
   }
 
@@ -163,14 +151,14 @@ object Decontamination {
                            dir: String, remainingSuites: DataFrame,
                            textCol: String): Unit = {
     val n = decontamIndexN(spark, dir)
-    Manifest.withLock(spark, dir) {
+    Lifecycle.rewrite(spark, dir) { _ =>
       val tmp = s"$dir/_rebuild.tmp.shingles"
       remainingSuites
         .select(explode(TF.distinctShingles(col(textCol), n)).as("g"))
         .distinct()
         .coalesce(1)
         .write.mode("overwrite").parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("shingles" -> tmp))
+      Seq("shingles" -> tmp)
     }
   }
 
@@ -190,18 +178,11 @@ object Decontamination {
                           dir: String): DataFrame = {
     val n = decontamIndexN(spark, dir)
     val snap = Manifest.snapshot(spark, dir)
-    val shinglesPath = snap.path("shingles")
-    val tableP = new org.apache.hadoop.fs.Path(shinglesPath)
-    val nFragments = tableP
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(tableP).count(_.getPath.getName.endsWith(".parquet"))
-      .toLong
-    spark.read.parquet(shinglesPath).agg(
+    Lifecycle.healthRow(spark, snap, "shingles",
+      spark.read.parquet(snap.path("shingles")))(
       lit(n).as("shingle_n"),
       count(lit(1)).as("total_rows"),
-      count_distinct(col("g")).as("distinct_shingles"),
-      lit(dir).as("dir"), lit(snap.version).as("version"),
-      lit(nFragments).as("n_fragments"))
+      count_distinct(col("g")).as("distinct_shingles"))
   }
 
   /** [[report]] against the persisted index: the shingle width comes

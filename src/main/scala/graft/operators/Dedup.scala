@@ -73,16 +73,10 @@ object Dedup {
                        dir: String, batch: DataFrame, idCol: String,
                        textCol: String,
                        batchId: Option[String] = None): Unit =
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.append(spark, dir, batchId) { snap =>
       batch.select(md5(col(textCol)).as("h")).distinct()
         .write.mode("append").parquet(snap.path("hashes"))
-      // append-supersedes-delete: a re-admitted text's pending
-      // tombstone is pruned in the same locked span, so the fold
-      // cannot silently drop the row just written
-      Tombstones.pruneOnAppend(spark, dir, snap,
-        batch.select(md5(col(textCol)).as("h")))
-      batchId.foreach(IngestLog.record(spark, snap, _))
+      batch.select(md5(col(textCol)).as("h"))
     }
 
   /** Probe a delta batch against the persisted hash set: one content
@@ -119,27 +113,6 @@ object Dedup {
     Tombstones.append(spark, dir,
       docs.select(md5(col(textCol)).as("h")))
 
-  /** Deterministic partition count for a flat-table compaction
-    * rewrite: live table bytes / `bytesPerPart`, min 1. Pinned
-    * explicitly because an argless `repartitionByRange` leaves the
-    * output file count to AQE's shuffle coalescing — the q253 re-plan
-    * gate (and any `n_fragments` ceiling) must see a file count that
-    * is a function of DATA SIZE, not of the session's shuffle
-    * settings. 256 MB/partition keeps post-compaction files in the
-    * large-scan sweet spot at any corpus size. */
-  private def compactPartitions(spark: org.apache.spark.sql.SparkSession,
-                                path: String,
-                                bytesPerPart: Long = 256L << 20): Int = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes =
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum
-    math.max(1L, (bytes + bytesPerPart - 1) / bytesPerPart).toInt
-  }
-
   /** Fold append fragments into one distinct, range-clustered file set
     * behind a [[Manifest]] flip — the dedupe point for cross-append
     * duplicate hashes AND the fold point for pending [[Tombstones]]
@@ -147,19 +120,8 @@ object Dedup {
     * tombstone table flips in the same publish). */
   def exactIndexCompact(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Unit =
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
-      val tmp = s"$dir/_compact.tmp.hashes"
-      Tombstones.live(spark, snap,
-          spark.read.parquet(snap.path("hashes"))).distinct()
-        .repartitionByRange(
-          compactPartitions(spark, snap.path("hashes")), col("h"))
-        .sortWithinPartitions("h")
-        .write.mode("overwrite").parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("hashes" -> tmp) ++
-        Tombstones.foldedForPublish(spark, dir, snap),
-        drops = Tombstones.dropIfFolded(spark, snap))
-    }
+    Lifecycle.compactFlat(spark, dir, "hashes", Seq("h"),
+      Lifecycle.Dedupe.Always, Lifecycle.Parts.BySize)
 
   /** Health row of the persisted hash set — fleet-table shape:
     * `total_rows` vs `distinct_hashes` measures cross-append duplicate
@@ -168,12 +130,6 @@ object Dedup {
   def exactIndexHealth(spark: org.apache.spark.sql.SparkSession,
                        dir: String): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val hashesPath = snap.path("hashes")
-    val tableP = new org.apache.hadoop.fs.Path(hashesPath)
-    val nFragments = tableP
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(tableP).count(_.getPath.getName.endsWith(".parquet"))
-      .toLong
     // pending/ingest ride the SAME collected plan — one fused aggregate
     // ([[OpsStats.attach]]) instead of driver-side count jobs (or two
     // separate crossJoin sides) per reading: a fleet health union over
@@ -181,12 +137,10 @@ object Dedup {
     // count matters because rows from several families union into the
     // fleet table, where a LOWER count than the siblings' is the
     // crash-divergence smell fleetIngestReconcile pins down.
-    OpsStats.attach(spark, snap)(
-      spark.read.parquet(hashesPath).agg(
-        count(lit(1)).as("total_rows"),
-        count_distinct(col("h")).as("distinct_hashes"),
-        lit(dir).as("dir"), lit(snap.version).as("version"),
-        lit(nFragments).as("n_fragments")))
+    OpsStats.attach(spark, snap)(Lifecycle.healthRow(spark, snap, "hashes",
+      spark.read.parquet(snap.path("hashes")))(
+      count(lit(1)).as("total_rows"),
+      count_distinct(col("h")).as("distinct_hashes")))
   }
 
   /** Hot-bucket guard for LSH bucket self-joins: drop buckets with more
@@ -346,14 +300,8 @@ object Dedup {
   /** (shingleN, sigK, bands) the index at `dir` was built with. */
   def minhashIndexParams(spark: org.apache.spark.sql.SparkSession,
                          dir: String): (Int, Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(minhashMetaPath(dir))
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    val m =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.contains('=')).map { l =>
-          val Array(k, v) = l.split("=", 2); k -> v.trim.toInt
-        }.toMap
-      finally in.close()
+    val m = Manifest.readParams(spark, minhashMetaPath(dir))
+      .map { case (k, v) => k -> v.trim.toInt }
     (m("shingleN"), m("sigK"), m("bands"))
   }
 
@@ -383,12 +331,8 @@ object Dedup {
     val spark = docs.sparkSession
     bandRows(docs, idCol, textCol, shingleN, sigK, bands)
       .write.mode("overwrite").parquet(s"$dir/bands.parquet")
-    val p = new org.apache.hadoop.fs.Path(minhashMetaPath(dir))
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, true)
-    out.write(s"shingleN=$shingleN\nsigK=$sigK\nbands=$bands\n"
-      .getBytes("UTF-8"))
-    out.close()
+    Manifest.writeParams(spark, minhashMetaPath(dir),
+      Seq("shingleN" -> shingleN, "sigK" -> sigK, "bands" -> bands))
     Manifest.reset(spark, dir)
   }
 
@@ -405,14 +349,10 @@ object Dedup {
                          textCol: String,
                          batchId: Option[String] = None): Unit = {
     val (shingleN, sigK, bands) = minhashIndexParams(spark, dir)
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.append(spark, dir, batchId) { snap =>
       bandRows(batch, idCol, textCol, shingleN, sigK, bands)
         .write.mode("append").parquet(snap.path("bands"))
-      // append-supersedes-delete (see [[Tombstones.pruneOnAppend]])
-      Tombstones.pruneOnAppend(spark, dir, snap,
-        batch.select(col(idCol).as("id")))
-      batchId.foreach(IngestLog.record(spark, snap, _))
+      batch.select(col(idCol).as("id"))
     }
   }
 
@@ -424,13 +364,9 @@ object Dedup {
     * anti-join cannot silently type-mismatch. */
   def minhashIndexDelete(spark: org.apache.spark.sql.SparkSession,
                          dir: String, ids: DataFrame,
-                         idCol: String = "id"): Unit = {
-    val snap = Manifest.snapshot(spark, dir)
-    val idType = spark.read.parquet(snap.path("bands"))
-      .schema("id").dataType
-    Tombstones.append(spark, dir,
-      ids.select(col(idCol).cast(idType).as("id")))
-  }
+                         idCol: String = "id"): Unit =
+    Tombstones.retractIds(spark, Manifest.snapshot(spark, dir), "bands",
+      ids, idCol)
 
   /** Compact the banded table's accumulated append fragments into one
     * coherent file set — [[Similarity.ivfCompact]] for the text-dedup
@@ -445,27 +381,15 @@ object Dedup {
     * the same flip). */
   def minhashIndexCompact(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Unit =
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
-      val tmp = s"$dir/_compact.tmp.bands"
-      // distinct(): the dedupe point for replayed-ingest rows — a
-      // foreachBatch micro-batch that committed its append and crashed
-      // before its checkpoint is replayed, landing identical
-      // (id, band, bucket) rows; probes survive that (candidate-pair
-      // dedup) but the duplicates inflate total_rows/max_bucket and
-      // scan cost forever unless compaction folds them (the
-      // exactIndexCompact contract, mirrored here)
-      Tombstones.live(spark, snap,
-          spark.read.parquet(snap.path("bands"))).distinct()
-        .repartitionByRange(
-          compactPartitions(spark, snap.path("bands")),
-          col("band"), col("bucket"))
-        .sortWithinPartitions("band", "bucket")
-        .write.mode("overwrite").parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("bands" -> tmp) ++
-        Tombstones.foldedForPublish(spark, dir, snap),
-        drops = Tombstones.dropIfFolded(spark, snap))
-    }
+    // always distinct: the dedupe point for replayed-ingest rows — a
+    // foreachBatch micro-batch that committed its append and crashed
+    // before its checkpoint is replayed, landing identical
+    // (id, band, bucket) rows; probes survive that (candidate-pair
+    // dedup) but the duplicates inflate total_rows/max_bucket and
+    // scan cost forever unless compaction folds them (the
+    // exactIndexCompact contract, mirrored here)
+    Lifecycle.compactFlat(spark, dir, "bands", Seq("band", "bucket"),
+      Lifecycle.Dedupe.Always, Lifecycle.Parts.BySize)
 
   /** Operational health report of a persisted [[minhashIndexBuild]]
     * index — the q-220-shaped dashboard row for the text-dedup side:
@@ -481,35 +405,27 @@ object Dedup {
                          hotBucketCap: Int = 10000): DataFrame = {
     val (shingleN, sigK, bands) = minhashIndexParams(spark, dir)
     val snap = Manifest.snapshot(spark, dir)
-    val bandsPath = snap.path("bands")
-    // append-fragment count: one FS listing of the live banded table —
-    // each [[minhashIndexAppend]] adds a file set, and past the
-    // planner's ceiling the scan-cost cliff says [[minhashIndexCompact]]
-    // is due (the IVF family's max_files_per_list signal, flat layout)
-    val tableP = new org.apache.hadoop.fs.Path(bandsPath)
-    val nFragments = tableP
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(tableP).count(_.getPath.getName.endsWith(".parquet"))
-      .toLong
     // _nd = distinct ids per bucket: a replayed ingest batch lands
     // IDENTICAL (id, band, bucket) rows, so Σ _nd is the table's
     // distinct-row count and the total_rows − distinct_rows gap is the
     // replay-duplicate debt compaction will fold (the
     // exactIndexHealth total-vs-distinct reading for this family)
-    val sizes = spark.read.parquet(bandsPath).groupBy("band", "bucket")
+    val sizes = spark.read.parquet(snap.path("bands"))
+      .groupBy("band", "bucket")
       .agg(count(lit(1)).as("_n"), count_distinct(col("id")).as("_nd"))
     // one collected plan, no per-reading driver jobs, pending/ingest
-    // fused into a single aggregate side (see exactIndexHealth)
-    OpsStats.attach(spark, snap)(sizes.agg(
+    // fused into a single aggregate side (see exactIndexHealth);
+    // n_fragments past the planner's ceiling says [[minhashIndexCompact]]
+    // is due (the IVF family's max_files_per_list signal, flat layout)
+    OpsStats.attach(spark, snap)(Lifecycle.healthRow(spark, snap, "bands",
+      sizes)(
       lit(shingleN).as("shingle_n"), lit(sigK).as("sig_k"),
       lit(bands).as("n_bands"),
       sum(col("_n")).as("total_rows"),
       sum(col("_nd")).as("distinct_rows"),
       count(lit(1)).as("n_buckets"),
       max(col("_n")).as("max_bucket"),
-      count(when(col("_n") > hotBucketCap, 1)).as("hot_buckets"),
-      lit(dir).as("dir"), lit(snap.version).as("version"),
-      lit(nFragments).as("n_fragments")))
+      count(when(col("_n") > hotBucketCap, 1)).as("hot_buckets")))
   }
 
   /** Probe a delta batch against the persisted index:
@@ -628,27 +544,39 @@ object Dedup {
       case "none" => ()
       case "compact" => minhashIndexCompact(spark, dir)
       case "dedup_prepass" =>
-        val c = corpus.getOrElse(throw new IllegalArgumentException(
-          "minhashMaintenanceApply: a dedup_prepass rebuild needs the " +
-            "corpus text table — the banded index cannot reconstruct " +
-            "text"))
         val (shingleN, sigK, bands) = minhashIndexParams(spark, dir)
-        Manifest.withLock(spark, dir) {
-          val keepers = c.join(
-            exact(c, idCol, textCol).select(col("keeper_id").as(idCol)),
-            Seq(idCol), "left_semi")
-          val tmp = s"$dir/_rebuild.tmp"
-          minhashIndexBuild(keepers, tmp, idCol, textCol, shingleN,
-            sigK, bands)
-          Manifest.publishUnderLock(spark, dir,
-            Seq("bands" -> s"$tmp/bands.parquet"))
-          val tmpP = new org.apache.hadoop.fs.Path(tmp)
-          tmpP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(tmpP, true)
-        }
+        prepassRebuild(spark, dir, "minhashMaintenanceApply", "banded",
+          "bands", corpus, idCol, textCol)(
+          bandRows(_, idCol, textCol, shingleN, sigK, bands))
       case other => throw new IllegalArgumentException(
         s"minhashMaintenanceApply: unknown action '$other'")
     }
+
+  /** The `dedup_prepass` answer to a hot-bucket reading, shared by the
+    * MinHash and SimHash families: exact-dedup the corpus text to its
+    * min-id keepers and rebuild `table` from them (`rows` — the
+    * family's encoder) behind one manifest flip under the full-span
+    * writer lock. Pending tombstones are NOT folded: the caller's
+    * corpus may still carry retracted ids, so they stay pending and
+    * keep hiding them until a compaction. `what` names the index in
+    * the no-corpus error. */
+  private def prepassRebuild(spark: org.apache.spark.sql.SparkSession,
+                             dir: String, op: String, what: String,
+                             table: String, corpus: Option[DataFrame],
+                             idCol: String, textCol: String)
+                            (rows: DataFrame => DataFrame): Unit = {
+    val c = corpus.getOrElse(throw new IllegalArgumentException(
+      s"$op: a dedup_prepass rebuild needs the corpus text table — the " +
+        s"$what index cannot reconstruct text"))
+    Lifecycle.rewrite(spark, dir, fold = false) { _ =>
+      val keepers = c.join(
+        exact(c, idCol, textCol).select(col("keeper_id").as(idCol)),
+        Seq(idCol), "left_semi")
+      val tmp = s"$dir/_rebuild.tmp.$table"
+      rows(keepers).write.mode("overwrite").parquet(tmp)
+      Seq(table -> tmp)
+    }
+  }
 
   /** SimHash near-dup pairs: 64-bit signature, bucket by 16-bit prefix
     * bands (docs within `maxHamming` share ≥1 of 4 bands by pigeonhole),
@@ -726,15 +654,11 @@ object Dedup {
                          dir: String, batch: DataFrame, idCol: String,
                          textCol: String,
                          batchId: Option[String] = None): Unit =
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.append(spark, dir, batchId) { snap =>
       batch.select(col(idCol).as("id"),
         TF.simhash64(col(textCol)).as("sig"))
         .write.mode("append").parquet(snap.path("sigs"))
-      // append-supersedes-delete (see [[Tombstones.pruneOnAppend]])
-      Tombstones.pruneOnAppend(spark, dir, snap,
-        batch.select(col(idCol).as("id")))
-      batchId.foreach(IngestLog.record(spark, snap, _))
+      batch.select(col(idCol).as("id"))
     }
 
   /** Retract documents from the persisted SimHash index
@@ -743,13 +667,9 @@ object Dedup {
     * [[simhashIndexCompact]]. */
   def simhashIndexDelete(spark: org.apache.spark.sql.SparkSession,
                          dir: String, ids: DataFrame,
-                         idCol: String = "id"): Unit = {
-    val snap = Manifest.snapshot(spark, dir)
-    val idType = spark.read.parquet(snap.path("sigs"))
-      .schema("id").dataType
-    Tombstones.append(spark, dir,
-      ids.select(col(idCol).cast(idType).as("id")))
-  }
+                         idCol: String = "id"): Unit =
+    Tombstones.retractIds(spark, Manifest.snapshot(spark, dir), "sigs",
+      ids, idCol)
 
   /** Fold the signature table's append fragments into one coherent
     * file set behind a [[Manifest]] flip. The rewrite range-clusters on
@@ -761,23 +681,11 @@ object Dedup {
     * (retracted ids dropped, tombstone table emptied in the flip). */
   def simhashIndexCompact(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Unit =
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
-      val tmp = s"$dir/_compact.tmp.sigs"
-      // distinct(): folds replayed-ingest duplicates (identical
-      // (id, sig) rows from an at-least-once micro-batch retry) — see
-      // minhashIndexCompact; partition count pinned by data size so
-      // the post-compaction fragment count is AQE-independent
-      Tombstones.live(spark, snap,
-          spark.read.parquet(snap.path("sigs"))).distinct()
-        .repartitionByRange(
-          compactPartitions(spark, snap.path("sigs")), col("sig"))
-        .sortWithinPartitions("sig")
-        .write.mode("overwrite").parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("sigs" -> tmp) ++
-        Tombstones.foldedForPublish(spark, dir, snap),
-        drops = Tombstones.dropIfFolded(spark, snap))
-    }
+    // always distinct: folds replayed-ingest duplicates (identical
+    // (id, sig) rows from an at-least-once micro-batch retry) — see
+    // minhashIndexCompact
+    Lifecycle.compactFlat(spark, dir, "sigs", Seq("sig"),
+      Lifecycle.Dedupe.Always, Lifecycle.Parts.BySize)
 
   /** (id, band, bucket, sig) rows for a signature table — the banding
     * used by probe and health. The signature rides along (8 bytes) so
@@ -802,13 +710,7 @@ object Dedup {
                          dir: String,
                          hotBucketCap: Int = 10000): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val sigsPath = snap.path("sigs")
-    val tableP = new org.apache.hadoop.fs.Path(sigsPath)
-    val nFragments = tableP
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(tableP).count(_.getPath.getName.endsWith(".parquet"))
-      .toLong
-    val sigs = spark.read.parquet(sigsPath)
+    val sigs = spark.read.parquet(snap.path("sigs"))
     // distinct (id, sig) vs total rows: the replay-duplicate debt a
     // retried ingest micro-batch leaves behind (see
     // minhashIndexHealth) — one extra bounded aggregate over the
@@ -825,11 +727,9 @@ object Dedup {
       max(col("_n")).as("max_bucket"),
       count(when(col("_n") > hotBucketCap, 1)).as("hot_buckets"))
       .crossJoin(rowStats)
-      .select(col("total_band_rows"), col("total_rows"),
-        col("distinct_rows"), col("n_buckets"), col("max_bucket"),
-        col("hot_buckets"),
-        lit(dir).as("dir"), lit(snap.version).as("version"),
-        lit(nFragments).as("n_fragments")))
+      .select(Seq("total_band_rows", "total_rows", "distinct_rows",
+        "n_buckets", "max_bucket", "hot_buckets").map(col) ++
+        Lifecycle.healthTail(spark, snap, "sigs"): _*))
   }
 
   /** Probe a delta batch against the persisted index: [[simhash]] with
@@ -908,20 +808,9 @@ object Dedup {
       case "none" => ()
       case "compact" => simhashIndexCompact(spark, dir)
       case "dedup_prepass" =>
-        val c = corpus.getOrElse(throw new IllegalArgumentException(
-          "simhashMaintenanceApply: a dedup_prepass rebuild needs the " +
-            "corpus text table — the signature index cannot " +
-            "reconstruct text"))
-        Manifest.withLock(spark, dir) {
-          val keepers = c.join(
-            exact(c, idCol, textCol).select(col("keeper_id").as(idCol)),
-            Seq(idCol), "left_semi")
-          val tmp = s"$dir/_rebuild.tmp.sigs"
-          keepers.select(col(idCol).as("id"),
-            TF.simhash64(col(textCol)).as("sig"))
-            .write.mode("overwrite").parquet(tmp)
-          Manifest.publishUnderLock(spark, dir, Seq("sigs" -> tmp))
-        }
+        prepassRebuild(spark, dir, "simhashMaintenanceApply", "signature",
+          "sigs", corpus, idCol, textCol)(
+          _.select(col(idCol).as("id"), TF.simhash64(col(textCol)).as("sig")))
       case other => throw new IllegalArgumentException(
         s"simhashMaintenanceApply: unknown action '$other'")
     }
@@ -940,14 +829,8 @@ object Dedup {
   def minhashIngest(stream: DataFrame, dir: String, checkpoint: String,
                     idCol: String = "id", textCol: String = "text")
     : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          minhashIndexAppend(batch.sparkSession, dir, batch, idCol,
-            textCol)
-      }
-      .start()
+    Lifecycle.ingest(stream, checkpoint)(b =>
+      minhashIndexAppend(b.sparkSession, dir, b, idCol, textCol))
 
   /** [[minhashIngest]] for the SimHash family: each micro-batch appends
     * its 16-byte signatures via [[simhashIndexAppend]]. A retried batch
@@ -956,14 +839,8 @@ object Dedup {
   def simhashIngest(stream: DataFrame, dir: String, checkpoint: String,
                     idCol: String = "id", textCol: String = "text")
     : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          simhashIndexAppend(batch.sparkSession, dir, batch, idCol,
-            textCol)
-      }
-      .start()
+    Lifecycle.ingest(stream, checkpoint)(b =>
+      simhashIndexAppend(b.sparkSession, dir, b, idCol, textCol))
 
   /** n-gram Jaccard near-dup pairs within an explicit blocking key (e.g.
     * source), computed by prefix-filtered set-similarity join — never the

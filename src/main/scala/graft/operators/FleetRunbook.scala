@@ -43,7 +43,7 @@ object FleetRunbook {
     * and optionally target_cluster_size. */
   def save(spark: org.apache.spark.sql.SparkSession, dir: String,
            entries: DataFrame): Unit =
-    Manifest.withLock(spark, dir) {
+    Lifecycle.rewrite(spark, dir) { _ =>
       val tmp = s"$dir/_save.tmp.runbook"
       val withK =
         if (entries.columns.contains("target_cluster_size")) entries
@@ -55,7 +55,7 @@ object FleetRunbook {
           col("payload_col").cast("string"),
           col("target_cluster_size").cast("long"))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("runbook" -> tmp))
+      Seq("runbook" -> tmp)
     }
 
   /** The persisted runbook rows (empty frame when none saved yet). */
@@ -63,10 +63,7 @@ object FleetRunbook {
            dir: String): DataFrame = {
     import spark.implicits._
     val p = Manifest.snapshot(spark, dir).path("runbook")
-    if (new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(p)))
-      spark.read.parquet(p)
+    if (Manifest.exists(spark, p)) spark.read.parquet(p)
     else Seq.empty[(String, String, String, String, Option[Long])]
       .toDF("dir", "side_input_path", "id_col", "payload_col",
         "target_cluster_size")

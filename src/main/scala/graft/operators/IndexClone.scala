@@ -50,8 +50,6 @@ object IndexClone {
                  parallelism: Int = 64): DataFrame = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
-    def fsOf(p: String) = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(hconf)
     val snap = version match {
       case Some(v) => Manifest.snapshotAt(spark, srcDir, v)
       case None => Manifest.snapshot(spark, srcDir)
@@ -60,20 +58,14 @@ object IndexClone {
     // pre-manifest table still at its unversioned `<name>.parquet`
     // default (a fresh-built index that never published has an empty
     // map — its tables are all defaults)
-    val srcFs = fsOf(srcDir)
-    val defaults = {
-      val p = new org.apache.hadoop.fs.Path(srcDir)
-      if (!srcFs.exists(p)) Seq.empty[String]
-      else srcFs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-    }
+    val srcFs = Manifest.fs(spark, srcDir)
+    val defaults = defaultsAt(spark, srcDir).map(_.stripSuffix(".parquet"))
     val tables = (snap.map.keys.toSeq ++ defaults).distinct.sorted
-      .filter(t => srcFs.exists(
-        new org.apache.hadoop.fs.Path(snap.path(t))))
+      .filter(t => Manifest.exists(spark, snap.path(t)))
     require(tables.nonEmpty,
       s"cloneIndex: no tables to clone at $srcDir " +
         s"(version ${snap.version})")
-    val dstFs = fsOf(dstDir)
+    val dstFs = Manifest.fs(spark, dstDir)
     require(Manifest.snapshot(spark, dstDir).map.isEmpty &&
       defaultsAt(spark, dstDir).isEmpty,
       s"cloneIndex: target $dstDir is not virgin — a clone is a new " +
@@ -144,10 +136,10 @@ object IndexClone {
 
   private def defaultsAt(spark: org.apache.spark.sql.SparkSession,
                          dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.map(_.getPath.getName)
+    if (!Manifest.exists(spark, dir)) Seq.empty
+    else Manifest.fs(spark, dir)
+      .listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
+      .map(_.getPath.getName)
       .filter(_.endsWith(".parquet"))
   }
 }

@@ -1,14 +1,22 @@
 package graft.operators
 
   /** Versioned-directory manifest for a persisted index — the shared
-    * operational substrate of EVERY index family this package persists:
-    * IVF/IVF-PQ ([[Similarity]]), the MinHash-LSH near-dup index
-    * ([[Dedup]]), the decontamination shingle index
-    * ([[Decontamination]]), and the SemDeDup label state
-    * ([[Clustering]]). One contract, one enforcement point: any writer
+    * operational substrate of EVERY index family this package persists
+    * (eight): the exact-hash, MinHash-LSH and SimHash dedup indexes
+    * ([[Dedup]]), the SemDeDup label state ([[Clustering]]), the
+    * decontamination shingle index ([[Decontamination]]), the admission
+    * funnel history ([[CorpusPipeline]]), and IVF / IVF-PQ
+    * ([[Similarity]]). One contract, one enforcement point: any writer
     * of any family takes [[withLock]], any versioned rewrite goes
     * through [[publish]]/[[publishUnderLock]], and any reader resolves
-    * tables through one [[snapshot]].
+    * tables through one [[snapshot]]. The writer protocol on top of it
+    * is written once, in [[Lifecycle]]: the locked append
+    * (data → tombstone prune → ingest log), the id-keyed retraction
+    * ([[Tombstones.retractIds]]), the locked rewrite whose publish
+    * folds pending tombstones, the flat-table compaction, the health
+    * rows' fragment count, and the `foreachBatch` streaming ingest. A
+    * family keeps only what is its own: row encoder, health aggregate
+    * and probe, sort keys, distinct policy and partition count.
     *
     * The compactor NEVER touches a live table directory. A rewrite
     * lands under a fresh
@@ -43,10 +51,14 @@ package graft.operators
   private[operators] object Manifest {
     private val Name = """_manifest\.v(\d+)""".r
 
-    private def fs(spark: org.apache.spark.sql.SparkSession,
-                   dir: String): org.apache.hadoop.fs.FileSystem =
-      new org.apache.hadoop.fs.Path(dir)
+    private[operators] def fs(spark: org.apache.spark.sql.SparkSession,
+                              path: String): org.apache.hadoop.fs.FileSystem =
+      new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    private[operators] def exists(spark: org.apache.spark.sql.SparkSession,
+                                  path: String): Boolean =
+      fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
     /** All manifest versions present under `dir`, ascending. */
     private def versions(f: org.apache.hadoop.fs.FileSystem,
@@ -58,9 +70,11 @@ package graft.operators
       }.sorted
     }
 
-    private def readMap(f: org.apache.hadoop.fs.FileSystem, dir: String,
-                        v: Int): Map[String, String] = {
-      val in = f.open(new org.apache.hadoop.fs.Path(s"$dir/_manifest.v$v"))
+    /** A `key=value`-lines file as a map — the format of every
+      * manifest and of the families' pinned-parameter files. */
+    private def readParamsAt(f: org.apache.hadoop.fs.FileSystem,
+                             path: String): Map[String, String] = {
+      val in = f.open(new org.apache.hadoop.fs.Path(path))
       try {
         scala.io.Source.fromInputStream(in, "UTF-8").getLines()
           .filter(_.contains('=')).map { line =>
@@ -68,6 +82,31 @@ package graft.operators
             k -> value
           }.toMap
       } finally in.close()
+    }
+
+    private def readMap(f: org.apache.hadoop.fs.FileSystem, dir: String,
+                        v: Int): Map[String, String] =
+      readParamsAt(f, s"$dir/_manifest.v$v")
+
+    private[operators] def readParams(
+        spark: org.apache.spark.sql.SparkSession,
+        path: String): Map[String, String] =
+      readParamsAt(fs(spark, path), path)
+
+    private def formatParams(params: Seq[(String, Any)],
+                             eol: String): Array[Byte] =
+      params.map { case (k, v) => s"$k=$v" }.mkString("", "\n", eol)
+        .getBytes("UTF-8")
+
+    /** Write `params` in [[readParams]]'s format, in the given order;
+      * `eol` ends the last line (an existing file's bytes are kept). */
+    private[operators] def writeParams(
+        spark: org.apache.spark.sql.SparkSession, path: String,
+        params: Seq[(String, Any)], eol: String = "\n"): Unit = {
+      val out = fs(spark, path).create(new org.apache.hadoop.fs.Path(path),
+        true)
+      try out.write(formatParams(params, eol))
+      finally out.close()
     }
 
     /** One consistent view of the index's table mapping: version + map.
@@ -231,8 +270,7 @@ package graft.operators
       val tmpMf = new org.apache.hadoop.fs.Path(
         s"$dir/_manifest.v$next.inprogress")
       val out = f.create(tmpMf, true)
-      try out.write(newMap.toSeq.sorted.map { case (k, v) => s"$k=$v" }
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
+      try out.write(formatParams(newMap.toSeq.sorted, "\n"))
       finally out.close()
       require(f.rename(tmpMf,
         new org.apache.hadoop.fs.Path(s"$dir/_manifest.v$next")),
@@ -332,14 +370,7 @@ package graft.operators
     * the tombstones first (compact), exactly as in any log-structured
     * store whose deletes are key-level. */
   private[operators] object Tombstones {
-    private def fs(spark: org.apache.spark.sql.SparkSession,
-                   path: String): org.apache.hadoop.fs.FileSystem =
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    private def exists(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Boolean =
-      fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
+    import Manifest.{exists, fs}
 
     /** A compaction that folded every pending tombstone republishes the
       * table EMPTY (the manifest mapping only grows, so it cannot be
@@ -363,11 +394,16 @@ package graft.operators
         new org.apache.hadoop.fs.Path(s"$path/$EmptyMarker"), true)
         .close()
 
-    /** Locked append of (already key-shaped, distinct-ed) retraction
-      * rows to the index's tombstone table. */
+    /** Locked append of key-shaped retraction rows to the index's
+      * tombstone table (distinct-ed here). An EMPTY retraction touches
+      * nothing — no lock, no marker removal, no part file: an empty
+      * append would leave a readable 0-row table that every probe
+      * anti-joins until the next compaction (a [[SnapshotDiff]] with
+      * no removed rows feeds exactly that to every fleet index). The
+      * emptiness check costs one job per call. */
     def append(spark: org.apache.spark.sql.SparkSession, dir: String,
                keys: org.apache.spark.sql.DataFrame): Unit =
-      Manifest.withLock(spark, dir) {
+      if (!keys.isEmpty) Manifest.withLock(spark, dir) {
         val snap = Manifest.snapshot(spark, dir)
         val p = snap.path("tombstones")
         // marker first: keys-then-marker could crash into a state where
@@ -377,6 +413,19 @@ package graft.operators
             new org.apache.hadoop.fs.Path(s"$p/$EmptyMarker"), false)
         keys.distinct().write.mode("append").parquet(p)
       }
+
+    /** The id-keyed retraction (every family but the content-keyed exact
+      * hashes and the shingle-keyed decontam set): `ids`' `idCol` cast
+      * to the stored `id` type of `table` — so the probes' anti-join
+      * cannot silently type-mismatch — and [[append]]ed. */
+    def retractIds(spark: org.apache.spark.sql.SparkSession,
+                   snap: Manifest.Snapshot, table: String,
+                   ids: org.apache.spark.sql.DataFrame,
+                   idCol: String): Unit = {
+      val idType = spark.read.parquet(snap.path(table)).schema("id").dataType
+      append(spark, snap.dir, ids.select(
+        org.apache.spark.sql.functions.col(idCol).cast(idType).as("id")))
+    }
 
     /** The pending tombstone table under one snapshot, if any. A table
       * carrying the folded-[[EmptyMarker]] counts as absent — the
@@ -527,9 +576,7 @@ package graft.operators
              dir: String): org.apache.spark.sql.DataFrame = {
       import spark.implicits._
       val p = Manifest.snapshot(spark, dir).path("ingest_log")
-      if (new org.apache.hadoop.fs.Path(p)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(p)))
+      if (Manifest.exists(spark, p))
         spark.read.parquet(p).select("batch_id").distinct()
       else Seq.empty[String].toDF("batch_id")
     }
@@ -559,9 +606,7 @@ package graft.operators
                           snap: Manifest.Snapshot): Boolean = {
       import org.apache.spark.sql.functions.{col, count, lit}
       val p = snap.path("ingest_log")
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(hp) &&
+      Manifest.exists(spark, p) &&
         spark.read.parquet(p).groupBy("batch_id")
           .agg(count(lit(1)).as("_n")).where(col("_n") > 1)
           .limit(1).count() > 0
@@ -607,10 +652,8 @@ package graft.operators
           to_json(struct(t.columns.map(col): _*)).as("_v"))
       }
       val logPath = snap.path("ingest_log")
-      val logP = new org.apache.hadoop.fs.Path(logPath)
       val log =
-        if (logP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(logP))
+        if (Manifest.exists(spark, logPath))
           Some(spark.read.parquet(logPath)
             .select(lit(2).as("_t"),
               col("batch_id").cast("string").as("_v")))
@@ -650,4 +693,169 @@ package graft.operators
           val r = a.head()
           (r.getLong(0), r.getLong(1))
       }
+  }
+
+  /** The persisted-index writer protocol, written once for every family
+    * over [[Manifest]], [[Tombstones]] and [[IngestLog]]. Each step keeps
+    * the safety property it exists for: the lock is held across
+    * read → rewrite → flip, an append writes its data before pruning
+    * tombstones and prunes before logging its batch, and every table a
+    * rewrite replaces flips in ONE publish together with the folded
+    * tombstone table. */
+  private[operators] object Lifecycle {
+    import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+    import org.apache.spark.sql.functions.{col, lit}
+
+    /** The locked append tail: `write` drops the batch's rows into the
+      * tables of the snapshot taken INSIDE the lock and returns the
+      * batch's tombstone-shaped keys; then append-supersedes-delete
+      * ([[Tombstones.pruneOnAppend]]), then the batch id
+      * ([[IngestLog.record]]) — data first, so a crash can only leave a
+      * batch unlogged (flagged by the reconcile), never hide loss. */
+    def append(spark: SparkSession, dir: String, batchId: Option[String])
+              (write: Manifest.Snapshot => DataFrame): Unit =
+      Manifest.withLock(spark, dir) {
+        val snap = Manifest.snapshot(spark, dir)
+        val keys = write(snap)
+        Tombstones.pruneOnAppend(spark, dir, snap, keys)
+        batchId.foreach(IngestLog.record(spark, snap, _))
+      }
+
+    /** A locked read → rewrite → flip: `write` reads one snapshot taken
+      * inside the lock, writes replacement tables to temp dirs and
+      * returns the (table → temp dir) entries, which flip in ONE
+      * publish. With `fold` the publish also carries the emptied
+      * tombstone table ([[Tombstones.foldedForPublish]]) or drops an
+      * already folded-empty one ([[Tombstones.dropIfFolded]]) — for
+      * rewrites whose input excludes the pending tombstones. `scratch`
+      * (a sibling temp index a rebuild wrote through its build path) is
+      * removed after the flip, still under the lock. */
+    def rewrite(spark: SparkSession, dir: String, fold: Boolean = true,
+                scratch: Option[String] = None)
+               (write: Manifest.Snapshot => Seq[(String, String)]): Unit =
+      Manifest.withLock(spark, dir) {
+        val snap = Manifest.snapshot(spark, dir)
+        val updates = write(snap)
+        if (fold) Manifest.publishUnderLock(spark, dir,
+          updates ++ Tombstones.foldedForPublish(spark, dir, snap),
+          drops = Tombstones.dropIfFolded(spark, snap))
+        else Manifest.publishUnderLock(spark, dir, updates)
+        scratch.foreach(p => Manifest.fs(spark, p)
+          .delete(new org.apache.hadoop.fs.Path(p), true))
+      }
+
+    /** Full-row distinct only when the ingest log carries replay
+      * evidence ([[IngestLog.hasReplayEvidence]]): replayed appends fold,
+      * and the common no-replay rewrite stays straight. */
+    def replayFolded(spark: SparkSession, snap: Manifest.Snapshot,
+                     rows: DataFrame): DataFrame =
+      if (IngestLog.hasReplayEvidence(spark, snap)) rows.distinct()
+      else rows
+
+    /** A family's compaction distinct policy. */
+    sealed trait Dedupe
+    object Dedupe {
+      case object Always extends Dedupe
+      case object OnReplay extends Dedupe
+      case object Never extends Dedupe
+    }
+
+    /** A flat compaction's output partition count. */
+    sealed trait Parts
+    object Parts {
+      /** Live table bytes / 256 MB, min 1 — a function of DATA SIZE, not
+        * of the session's shuffle settings (an argless range leaves the
+        * file count to AQE's coalescing), so `n_fragments` ceilings and
+        * re-plan gates see a stable count at any corpus size. */
+      case object BySize extends Parts
+      /** Argless range: AQE's coalescing picks the count. */
+      case object Auto extends Parts
+      final case class Fixed(n: Int) extends Parts
+    }
+
+    /** The `.parquet` files of one table directory (recursively for a
+      * list-partitioned layout). */
+    def parquetFiles(spark: SparkSession, path: String,
+                     recursive: Boolean = false)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val f = Manifest.fs(spark, path)
+      val all =
+        if (!recursive) f.listStatus(p).toSeq
+        else {
+          val it = f.listFiles(p, true)
+          Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+        }
+      all.filter(_.getPath.getName.endsWith(".parquet"))
+    }
+
+    /** Append-fragment count of one table directory — the health rows'
+      * `n_fragments`. */
+    def fragments(spark: SparkSession, path: String): Long =
+      parquetFiles(spark, path).size.toLong
+
+    /** The columns every flat health row ends with: dir, version and
+      * the live `table`'s `n_fragments`. */
+    def healthTail(spark: SparkSession, snap: Manifest.Snapshot,
+                   table: String): Seq[Column] =
+      Seq(lit(snap.dir).as("dir"), lit(snap.version).as("version"),
+        lit(fragments(spark, snap.path(table))).as("n_fragments"))
+
+    /** `rows` aggregated to one flat health row: the family's `aggs`,
+      * then [[healthTail]]. */
+    def healthRow(spark: SparkSession, snap: Manifest.Snapshot,
+                  table: String, rows: DataFrame)(aggs: Column*): DataFrame =
+      rows.agg(aggs.head, aggs.tail ++ healthTail(spark, snap, table): _*)
+
+    /** A range-clustered rewrite of `rows` to `path`: `n` range
+      * partitions on `keys` (argless when None), sorted within each. */
+    def writeClustered(rows: DataFrame, keys: Seq[String], n: Option[Int],
+                       path: String): Unit = {
+      val k = keys.map(col)
+      n.fold(rows.repartitionByRange(k: _*))(rows.repartitionByRange(_, k: _*))
+        .sortWithinPartitions(k: _*)
+        .write.mode("overwrite").parquet(path)
+    }
+
+    /** The flat-table compaction: the live rows of `table` (pending
+      * tombstones anti-joined out), distinct-ed by the family's policy,
+      * range-clustered on its sort `keys` into its partition count, and
+      * flipped with the folded tombstone table in one publish. */
+    def compactFlat(spark: SparkSession, dir: String, table: String,
+                    keys: Seq[String], dedupe: Dedupe, parts: Parts): Unit =
+      rewrite(spark, dir) { snap =>
+        val path = snap.path(table)
+        val live = Tombstones.live(spark, snap, spark.read.parquet(path))
+        val rows = dedupe match {
+          case Dedupe.Always => live.distinct()
+          case Dedupe.OnReplay => replayFolded(spark, snap, live)
+          case Dedupe.Never => live
+        }
+        val n = parts match {
+          case Parts.BySize =>
+            val bytesPerPart = 256L << 20
+            val bytes = parquetFiles(spark, path).map(_.getLen).sum
+            Some(math.max(1L, (bytes + bytesPerPart - 1) / bytesPerPart)
+              .toInt)
+          case Parts.Auto => None
+          case Parts.Fixed(k) => Some(k)
+        }
+        val tmp = s"$dir/_compact.tmp.$table"
+        writeClustered(rows, keys, n, tmp)
+        Seq(table -> tmp)
+      }
+
+    /** The streaming face of [[append]]: each non-empty micro-batch runs
+      * `append` (at-least-once — a retried batch appends again and the
+      * family's compaction is its dedupe point; a batch colliding with
+      * another writer fails and the restarted query replays it). */
+    def ingest(stream: DataFrame, checkpoint: String)
+              (append: DataFrame => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+      stream.writeStream
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          if (!batch.isEmpty) append(batch)
+        }
+        .start()
   }

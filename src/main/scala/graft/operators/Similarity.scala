@@ -497,8 +497,7 @@ object Similarity {
     // append racing a compaction would otherwise land its files in the
     // superseded physical directory after the compactor's read — rows
     // silently lost at the manifest flip (and GC'd with the old dir)
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.append(spark, dir, batchId) { snap =>
       val postingsPath = snap.path("postings")
       val bc = spark.sparkContext.broadcast(
         loadCentroids(spark, snap.path("centroids")))
@@ -514,10 +513,7 @@ object Similarity {
         .repartition(col("list"))
         .write.mode("append").partitionBy("list")
         .parquet(postingsPath)
-      // append-supersedes-delete (see [[Tombstones.pruneOnAppend]])
-      Tombstones.pruneOnAppend(spark, dir, snap,
-        batch.select(col("id").cast(existing("id").dataType).as("id")))
-      batchId.foreach(IngestLog.record(spark, snap, _))
+      batch.select(col("id").cast(existing("id").dataType).as("id"))
     }
 
   /** Probe a persisted [[ivfBuild]] index: centroids load as one
@@ -576,16 +572,8 @@ object Similarity {
   def ivfDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
                 ids: DataFrame, idCol: String = "id"): Unit = {
     val snap = Manifest.snapshot(spark, dir)
-    val table =
-      if (new org.apache.hadoop.fs.Path(snap.path("codes"))
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(snap.path("codes"))))
-        "codes"
-      else "postings"
-    val idType = spark.read.parquet(snap.path(table))
-      .schema("id").dataType
-    Tombstones.append(spark, dir,
-      ids.select(col(idCol).cast(idType).as("id")))
+    Tombstones.retractIds(spark, snap, sniffFamily(spark, snap)._2, ids,
+      idCol)
   }
 
   /** Build and PERSIST an IVF-PQ index — [[ivfBuild]]'s layout with the
@@ -639,8 +627,7 @@ object Similarity {
                   batch: DataFrame,
                   batchId: Option[String] = None): Unit =
     // [[ivfAppend]]'s writer lock, same rationale
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.append(spark, dir, batchId) { snap =>
       val codesPath = snap.path("codes")
       val bcC = spark.sparkContext.broadcast(
         loadCentroids(spark, snap.path("centroids")))
@@ -658,10 +645,7 @@ object Similarity {
         .repartition(col("list"))
         .write.mode("append").partitionBy("list")
         .parquet(codesPath)
-      // append-supersedes-delete (see [[Tombstones.pruneOnAppend]])
-      Tombstones.pruneOnAppend(spark, dir, snap,
-        batch.select(col("id").cast(existing("id").dataType).as("id")))
-      batchId.foreach(IngestLog.record(spark, snap, _))
+      batch.select(col("id").cast(existing("id").dataType).as("id"))
     }
 
   /** Probe a persisted [[ivfPqBuild]] index. Centroids and codebooks
@@ -744,8 +728,8 @@ object Similarity {
   // lock across the whole read→rewrite→flip span (not just the flip):
   // an append landing between our postings read and the manifest flip
   // would be dropped with the superseded directory
-  Manifest.withLock(spark, dir) {
-    val snap = Manifest.snapshot(spark, dir)
+  Lifecycle.rewrite(spark, dir,
+    scratch = if (rebuild) Some(s"$dir/_rebuild.tmp") else None) { snap =>
     // pending Tombstones fold here, whichever mode: retracted rows are
     // physically dropped from the rewrite and the emptied tombstone
     // table flips in the same publish. The FULL-ROW distinct is the
@@ -760,13 +744,10 @@ object Similarity {
     // still fold, while two rows sharing an id but carrying DIFFERENT
     // vectors (an upstream id collision) both survive LOUDLY instead
     // of one being dropped nondeterministically. Gated on the ingest
-    // log's replay evidence ([[IngestLog.hasReplayEvidence]]): the
-    // common no-replay compaction stays a straight rewrite
-    val raw = Tombstones.live(spark, snap,
-      spark.read.parquet(snap.path("postings")))
-    val postings =
-      if (IngestLog.hasReplayEvidence(spark, snap)) raw.distinct()
-      else raw
+    // log's replay evidence: the common no-replay compaction stays a
+    // straight rewrite
+    val postings = Lifecycle.replayFolded(spark, snap,
+      Tombstones.live(spark, snap, spark.read.parquet(snap.path("postings"))))
     if (rebuild) {
       // full refit through the build path itself (one code path =
       // layouts cannot diverge) into a sibling temp index, then ONE
@@ -777,30 +758,14 @@ object Similarity {
       val tmp = s"$dir/_rebuild.tmp"
       ivfBuild(postings.select(col("id"), col("v")), tmp, nList,
         seed, kmeansMaxIter)
-      Manifest.publishUnderLock(spark, dir, Seq(
-        "centroids" -> s"$tmp/centroids.parquet",
-        "postings" -> s"$tmp/postings.parquet") ++
-        Tombstones.foldedForPublish(spark, dir, snap),
-        drops = Tombstones.dropIfFolded(spark, snap))
-      val tmpP = new org.apache.hadoop.fs.Path(tmp)
-      tmpP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(tmpP, true)
+      Seq("centroids" -> s"$tmp/centroids.parquet",
+        "postings" -> s"$tmp/postings.parquet")
     } else {
-      // keep assignments; just coalesce each list's file spray.
-      // maxRecordsPerFile bounds the HOT-list case twice over: salted
-      // repartitioning caps the rewrite TASK at ~target rows (see
-      // [[saltedByList]]) and the write option caps the FILE size
+      // keep assignments; just coalesce each list's file spray
       val tmp = s"$dir/_compact.tmp.postings"
-      val w = saltedByList(
-        postings.select(col("list"), col("id"), col("v")),
-        maxRecordsPerFile)
-        .write.mode("overwrite").partitionBy("list")
-      (if (maxRecordsPerFile > 0L)
-         w.option("maxRecordsPerFile", maxRecordsPerFile)
-       else w).parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("postings" -> tmp) ++
-        Tombstones.foldedForPublish(spark, dir, snap),
-        drops = Tombstones.dropIfFolded(spark, snap))
+      writeByList(postings.select(col("list"), col("id"), col("v")),
+        maxRecordsPerFile, tmp)
+      Seq("postings" -> tmp)
     }
   }
 
@@ -811,27 +776,17 @@ object Similarity {
   def ivfPqCompact(spark: org.apache.spark.sql.SparkSession,
                    dir: String, maxRecordsPerFile: Long = 0L): Unit =
     // [[ivfCompact]]'s full-span writer lock, same rationale
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.rewrite(spark, dir) { snap =>
       val tmp = s"$dir/_compact.tmp.codes"
       // replayed/repaired appends land identical (list, id, codes,
       // norm) rows — fold them by FULL-ROW distinct, gated on replay
       // evidence (see [[ivfCompact]]: divergent same-id rows survive
       // loudly; the no-replay path is a straight rewrite)
-      val raw = Tombstones.live(spark, snap,
-        spark.read.parquet(snap.path("codes")))
-        .select(col("list"), col("id"), col("codes"), col("norm"))
-      val src =
-        if (IngestLog.hasReplayEvidence(spark, snap)) raw.distinct()
-        else raw
-      val w = saltedByList(src, maxRecordsPerFile)
-        .write.mode("overwrite").partitionBy("list")
-      (if (maxRecordsPerFile > 0L)
-         w.option("maxRecordsPerFile", maxRecordsPerFile)
-       else w).parquet(tmp)
-      Manifest.publishUnderLock(spark, dir, Seq("codes" -> tmp) ++
-        Tombstones.foldedForPublish(spark, dir, snap),
-        drops = Tombstones.dropIfFolded(spark, snap))
+      writeByList(Lifecycle.replayFolded(spark, snap,
+        Tombstones.live(spark, snap, spark.read.parquet(snap.path("codes")))
+          .select(col("list"), col("id"), col("codes"), col("norm"))),
+        maxRecordsPerFile, tmp)
+      Seq("codes" -> tmp)
     }
 
   /** Reader-safe refit of a persisted [[ivfPqBuild]] index from the
@@ -846,8 +801,8 @@ object Similarity {
                    corpus: DataFrame, trainFraction: Double = 1.0,
                    seed: Long = 7L, kmeansMaxIter: Int = 20): Unit =
     // [[ivfCompact]]'s full-span writer lock, same rationale
-    Manifest.withLock(spark, dir) {
-      val snap = Manifest.snapshot(spark, dir)
+    Lifecycle.rewrite(spark, dir, scratch = Some(s"$dir/_rebuild.tmp")) {
+      snap =>
       val nList = spark.read.parquet(snap.path("centroids")).count().toInt
       val cb = loadCodebooks(spark, snap.path("codebooks"))
       val tmp = s"$dir/_rebuild.tmp"
@@ -856,15 +811,9 @@ object Similarity {
       // resurrect deleted vectors
       ivfPqBuild(Tombstones.live(spark, snap, corpus), tmp, nList,
         cb.length, cb(0).length, trainFraction, seed, kmeansMaxIter)
-      Manifest.publishUnderLock(spark, dir, Seq(
-        "centroids" -> s"$tmp/centroids.parquet",
+      Seq("centroids" -> s"$tmp/centroids.parquet",
         "codebooks" -> s"$tmp/codebooks.parquet",
-        "codes" -> s"$tmp/codes.parquet") ++
-        Tombstones.foldedForPublish(spark, dir, snap),
-        drops = Tombstones.dropIfFolded(spark, snap))
-      val tmpP = new org.apache.hadoop.fs.Path(tmp)
-      tmpP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(tmpP, true)
+        "codes" -> s"$tmp/codes.parquet")
     }
 
   /** Compaction repartitioning: one shuffle partition per list by
@@ -874,7 +823,7 @@ object Similarity {
     * SIZE but not task time). The per-list slice counts are one bounded
     * aggregate (nList rows) collected to a broadcast-class map. */
   private def saltedByList(src: DataFrame,
-                           maxRecordsPerFile: Long): DataFrame = {
+                           maxRecordsPerFile: Long): DataFrame =
     if (maxRecordsPerFile <= 0L) src.repartition(col("list"))
     else {
       val spark = src.sparkSession
@@ -888,6 +837,17 @@ object Similarity {
       src.repartition(col("list"),
         pmod(xxhash64(col("id")), slicesOf(col("list"))))
     }
+
+  /** A list-layout compaction write: [[saltedByList]], partitioned by
+    * list, with `maxRecordsPerFile` (when set) also capping each FILE —
+    * the hot-list bound twice over (task size and file size). */
+  private def writeByList(src: DataFrame, maxRecordsPerFile: Long,
+                          path: String): Unit = {
+    val w = saltedByList(src, maxRecordsPerFile)
+      .write.mode("overwrite").partitionBy("list")
+    (if (maxRecordsPerFile > 0L)
+       w.option("maxRecordsPerFile", maxRecordsPerFile)
+     else w).parquet(path)
   }
 
   /** Mean recall@k of the PRODUCTION probe (persisted index, partial
@@ -946,6 +906,38 @@ object Similarity {
     recallOf(exact, got)
   }
 
+  /** Deterministic bounded-IO scan of a stored table: when the table
+    * holds more than `maxFiles` parquet files, read only a
+    * deterministic `maxFiles`-file subset (ranked by a hash of each
+    * file's path — append order and listing order do not matter) with
+    * partition-column discovery preserved via `basePath`. This is what
+    * keeps a "cheap" monitoring probe cheap at corpus scale: a row-mod
+    * sample still READS every file before filtering; a file subset
+    * bounds the IO itself. Returns the frame plus (filesRead,
+    * filesTotal) so callers can report the touched fraction. */
+  private[operators] def sampledTableScan(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      maxFiles: Int): (DataFrame, Long, Long) = {
+    val files = Lifecycle.parquetFiles(spark, path, recursive = true)
+      .map(_.getPath.toString)
+    if (maxFiles <= 0 || files.length <= maxFiles)
+      (spark.read.parquet(path), files.length.toLong, files.length.toLong)
+    else {
+      // rank by a hash of the path RELATIVE to the table root so the
+      // selection is stable under directory moves and version flips
+      def rank(f: String): (Int, String) = {
+        // listed paths come back fully qualified (file:/..., hdfs://…)
+        // while `path` may be bare — strip up through the root if found
+        val i = f.indexOf(path)
+        val rel = if (i >= 0) f.substring(i + path.length) else f
+        (scala.util.hashing.MurmurHash3.stringHash(rel, 42), rel)
+      }
+      val picked = files.sortBy(rank).take(maxFiles)
+      (spark.read.option("basePath", path).parquet(picked: _*),
+        maxFiles.toLong, files.length.toLong)
+    }
+  }
+
   /** Centroid-DRIFT probe of a persisted [[ivfBuild]] index: the early-
     * warning signal [[ivfRecallProbe]] confirms. An IVF index's quality
     * rests on its coarse centroids modeling the data distribution; as
@@ -977,45 +969,6 @@ object Similarity {
     * costs a few dozen GB, not a full postings pass — the whole point
     * of a cheap leading indicator. One output row; rows from many
     * indexes union into the fleet table. */
-  /** Deterministic bounded-IO scan of a stored table: when the table
-    * holds more than `maxFiles` parquet files, read only a
-    * deterministic `maxFiles`-file subset (ranked by a hash of each
-    * file's path — append order and listing order do not matter) with
-    * partition-column discovery preserved via `basePath`. This is what
-    * keeps a "cheap" monitoring probe cheap at corpus scale: a row-mod
-    * sample still READS every file before filtering; a file subset
-    * bounds the IO itself. Returns the frame plus (filesRead,
-    * filesTotal) so callers can report the touched fraction. */
-  private[operators] def sampledTableScan(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFiles: Int): (DataFrame, Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.endsWith(".parquet"))
-        files += s.getPath.toString
-    }
-    if (maxFiles <= 0 || files.length <= maxFiles)
-      (spark.read.parquet(path), files.length.toLong, files.length.toLong)
-    else {
-      // rank by a hash of the path RELATIVE to the table root so the
-      // selection is stable under directory moves and version flips
-      def rank(f: String): (Int, String) = {
-        // listed paths come back fully qualified (file:/..., hdfs://…)
-        // while `path` may be bare — strip up through the root if found
-        val i = f.indexOf(path)
-        val rel = if (i >= 0) f.substring(i + path.length) else f
-        (scala.util.hashing.MurmurHash3.stringHash(rel, 42), rel)
-      }
-      val picked = files.sortBy(rank).take(maxFiles)
-      (spark.read.option("basePath", path).parquet(picked.toSeq: _*),
-        maxFiles.toLong, files.length.toLong)
-    }
-  }
-
   def ivfDriftProbe(spark: org.apache.spark.sql.SparkSession,
                     dir: String, batch: DataFrame,
                     baseSampleMod: Long = 1L,
@@ -1166,13 +1119,8 @@ object Similarity {
   def ivfIngest(stream: DataFrame, dir: String,
                 checkpoint: String): org.apache.spark.sql.streaming
                   .StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          ivfAppend(batch.sparkSession, dir, batch)
-      }
-      .start()
+    Lifecycle.ingest(stream, checkpoint)(b =>
+      ivfAppend(b.sparkSession, dir, b))
 
   /** [[ivfIngest]] for the compressed [[ivfPqBuild]] layout: each
     * micro-batch PQ-encodes against the existing quantizers and appends
@@ -1182,13 +1130,8 @@ object Similarity {
   def ivfPqIngest(stream: DataFrame, dir: String,
                   checkpoint: String): org.apache.spark.sql.streaming
                     .StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          ivfPqAppend(batch.sparkSession, dir, batch)
-      }
-      .start()
+    Lifecycle.ingest(stream, checkpoint)(b =>
+      ivfPqAppend(b.sparkSession, dir, b))
 
   /** The probe-budget tuner run after a build or rebuild: the smallest
     * nProbe among 1, 2, 4, … (capped at the index's nList) whose sampled
@@ -1351,10 +1294,8 @@ object Similarity {
                             corpus: Option[DataFrame] = None,
                             maxRecordsPerFile: Long = 0L, seed: Long = 7L,
                             kmeansMaxIter: Int = 20): Unit = {
-    val snap = Manifest.snapshot(spark, dir)
-    val codesP = new org.apache.hadoop.fs.Path(snap.path("codes"))
-    val isPq = codesP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(codesP)
+    val isPq = sniffFamily(spark, Manifest.snapshot(spark, dir))._1 ==
+      "ivf_pq"
     action match {
       case "none" => ()
       case "compact" =>
@@ -1373,49 +1314,15 @@ object Similarity {
     }
   }
 
-  /** Execute EVERY action of a fleet plan ([[indexMaintenancePlan]]'s
-    * output over any mix of families) in one call — the last step of
-    * the fleet loop: health union → plan → THIS. Each row's family is
-    * sniffed from its manifest snapshot's on-disk tables (postings →
-    * IVF, codes → IVF-PQ, bands → MinHash, sigs → SimHash, labels →
-    * SemDeDup state, shingles → decontam) and the action dispatches to
-    * that family's apply operator. Actions that need an input only the
-    * operator can supply take it from `corpora` keyed by index dir —
-    * text tables (canonical `id`/`text` columns) for the text-family
-    * `dedup_prepass`, the embedding store (`id`/`v`) for a PQ rebuild.
-    *
-    * Per-row failure isolation: a row whose action cannot run unattended
-    * (a PQ rebuild with no embedding store, a SemDeDup `rebuild` with
-    * no k policy, a text-family `dedup_prepass` with no corpus) is
-    * REPORTED, not thrown: fleet maintenance over a thousand indexes
-    * must not abort on the one row that needs an operator. With
-    * `runbookDir`, the persisted [[FleetRunbook]] answers for every
-    * dir `corpora` omits — vectors/text from its side-input path, a
-    * SemDeDup k from its `target_cluster_size` policy — so the
-    * unattended loop executes those rows instead of skipping them
-    * (q263). Returns the report: one row per plan row,
-    * (dir, family, action, status, detail) with status `executed` /
-    * `skipped` / `failed`. Driver-side loop over a bounded plan (the
-    * fleet table is one row per index by construction); each executed
-    * action is itself a distributed job under that index's writer
-    * lock — which is why `parallelism > 1` is safe and what a
-    * thousand-index fleet wants: the units touch disjoint lock
-    * domains, so N compactions overlap their scheduling floors. Rows
-    * naming the SAME dir run sequentially inside one unit (they share
-    * a lock domain — racing them would fabricate `failed` rows), and
-    * report order is preserved either way; `timeout` bounds the
-    * parallel wait per [[fleetMap]] (overruns report `failed`, never
-    * discard the fleet's report). */
   /** Sniff which index family lives at a manifest snapshot from its
     * on-disk tables — the shared dispatch key of every fleet verb
     * ([[fleetHealth]], [[fleetMaintenanceApply]], [[fleetDelete]],
-    * [[fleetEraseAudit]]). Returns (family, key table). */
+    * [[fleetEraseAudit]]) and the one codes-vs-postings layout sniff
+    * ([[ivfDelete]], [[indexMaintenanceApply]],
+    * [[ivfIndexHealthLight]]). Returns (family, key table). */
   private def sniffFamily(spark: org.apache.spark.sql.SparkSession,
                           snap: Manifest.Snapshot): (String, String) = {
-    def has(table: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(snap.path(table))
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
+    def has(table: String): Boolean = Manifest.exists(spark, snap.path(table))
     if (has("codes")) ("ivf_pq", "codes")
     else if (has("postings")) ("ivf", "postings")
     else if (has("bands")) ("minhash", "bands")
@@ -1558,9 +1465,7 @@ object Similarity {
     def lastSweep(spark: org.apache.spark.sql.SparkSession,
                   logDir: String): Map[String, Long] = {
       val p = Manifest.snapshot(spark, logDir).path("probe_log")
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(hp))
+      if (Manifest.exists(spark, p))
         spark.read.parquet(p).groupBy("dir")
           .agg(max(col("sweep")).as("sweep"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1585,9 +1490,7 @@ object Similarity {
                       logDir: String): DataFrame = {
     import spark.implicits._
     val p = Manifest.snapshot(spark, logDir).path("probe_log")
-    val hp = new org.apache.hadoop.fs.Path(p)
-    if (hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(hp)) spark.read.parquet(p)
+    if (Manifest.exists(spark, p)) spark.read.parquet(p)
     else Seq.empty[(String, Long)].toDF("dir", "sweep")
   }
 
@@ -1633,6 +1536,79 @@ object Similarity {
       } finally pool.shutdown()
     }
 
+  /** A fleet row's action as (status, detail): `executed`, or `failed`
+    * with the error's message — one row's failure never aborts the
+    * fleet. */
+  private[operators] def attempt(f: => Unit): (String, String) =
+    try { f; ("executed", "") }
+    catch { case e: Exception =>
+      ("failed", Option(e.getMessage).getOrElse(e.getClass.getName)
+        .take(200))
+    }
+
+  /** The per-dir fleet runner behind [[fleetMaintenanceApply]] and
+    * [[fleetDelete]]: `one(dir, a)` answers (family, status, detail)
+    * for each row. Rows naming the SAME dir run sequentially inside one
+    * [[fleetMap]] unit — two actions for one index must never race its
+    * exclusive writer lock across threads (the loser would report a
+    * spurious `failed` where sequential execution succeeds) — so units
+    * stay disjoint lock domains. A unit still running at `timeout`
+    * reports `failed` rows. Rows come back in input order as
+    * (dir, a, family, status, detail). */
+  private def fleetRun[A](rows: Seq[(String, A)], parallelism: Int,
+                          timeout: scala.concurrent.duration.Duration)
+                         (one: (String, A) => (String, String, String))
+    : Seq[(String, A, String, String, String)] = {
+    val byDir = rows.zipWithIndex.groupBy(_._1._1)
+    val units = rows.map(_._1).distinct.map(byDir)
+    fleetMap(units, parallelism, timeout) { unit =>
+      unit.map { case ((dir, a), i) =>
+        val (family, status, detail) = one(dir, a)
+        (i, (dir, a, family, status, detail))
+      }
+    } { unit =>
+      unit.map { case ((dir, a), i) =>
+        (i, (dir, a, "unknown", "failed",
+          s"timed out after $timeout — the unit may still be running " +
+            "in the background; its index stays writer-locked until " +
+            "it finishes"))
+      }
+    }.flatten.sortBy(_._1).map(_._2)
+  }
+
+  /** Execute EVERY action of a fleet plan ([[indexMaintenancePlan]]'s
+    * output over any mix of families) in one call — the last step of
+    * the fleet loop: health union → plan → THIS. Each row's family is
+    * sniffed from its manifest snapshot's on-disk tables (postings →
+    * IVF, codes → IVF-PQ, bands → MinHash, sigs → SimHash, labels →
+    * SemDeDup state, shingles → decontam) and the action dispatches to
+    * that family's apply operator. Actions that need an input only the
+    * operator can supply take it from `corpora` keyed by index dir —
+    * text tables (canonical `id`/`text` columns) for the text-family
+    * `dedup_prepass`, the embedding store (`id`/`v`) for a PQ rebuild.
+    *
+    * Per-row failure isolation: a row whose action cannot run unattended
+    * (a PQ rebuild with no embedding store, a SemDeDup `rebuild` with
+    * no k policy, a text-family `dedup_prepass` with no corpus) is
+    * REPORTED, not thrown: fleet maintenance over a thousand indexes
+    * must not abort on the one row that needs an operator. With
+    * `runbookDir`, the persisted [[FleetRunbook]] answers for every
+    * dir `corpora` omits — vectors/text from its side-input path, a
+    * SemDeDup k from its `target_cluster_size` policy — so the
+    * unattended loop executes those rows instead of skipping them
+    * (q263). Returns the report: one row per plan row,
+    * (dir, family, action, status, detail) with status `executed` /
+    * `skipped` / `failed`. Driver-side loop over a bounded plan (the
+    * fleet table is one row per index by construction); each executed
+    * action is itself a distributed job under that index's writer
+    * lock — which is why `parallelism > 1` is safe and what a
+    * thousand-index fleet wants: the units touch disjoint lock
+    * domains, so N compactions overlap their scheduling floors. Rows
+    * naming the SAME dir run sequentially inside one unit (they share
+    * a lock domain — racing them would fabricate `failed` rows), and
+    * report order is preserved either way; `timeout` bounds the
+    * parallel wait per [[fleetMap]] (overruns report `failed`, never
+    * discard the fleet's report). */
   def fleetMaintenanceApply(spark: org.apache.spark.sql.SparkSession,
                             plan: DataFrame,
                             corpora: Map[String, DataFrame] = Map.empty,
@@ -1656,15 +1632,8 @@ object Similarity {
       corpora.get(dir).orElse(runbook.get(dir).map(e =>
         FleetRunbook.loadSideInput(spark, e, idName, payloadName)))
     def applyOne(dir: String, action: String)
-      : (String, String, String, String, String) = {
-      val snap = Manifest.snapshot(spark, dir)
-      val (family, _) = sniffFamily(spark, snap)
-      def run(f: => Unit): (String, String) =
-        try { f; ("executed", "") }
-        catch { case e: Exception =>
-          ("failed", Option(e.getMessage).getOrElse(e.getClass.getName)
-            .take(200))
-        }
+      : (String, String, String) = {
+      val (family, _) = sniffFamily(spark, Manifest.snapshot(spark, dir))
       val (status, detail) = (family, action) match {
         case (_, "none") => ("skipped", "no action planned")
         case ("unknown", _) =>
@@ -1674,23 +1643,23 @@ object Similarity {
           if (family == "ivf_pq" && a == "rebuild" && corpus.isEmpty)
             ("skipped", "PQ rebuild needs the embedding store in " +
               "corpora or the runbook")
-          else run(indexMaintenanceApply(spark, dir, a, corpus))
+          else attempt(indexMaintenanceApply(spark, dir, a, corpus))
         case ("minhash", a) =>
           val corpus = sideInput(dir, "id", "text")
           if (a == "dedup_prepass" && corpus.isEmpty)
             ("skipped", "dedup_prepass needs the corpus text in " +
               "corpora or the runbook")
-          else run(Dedup.minhashMaintenanceApply(spark, dir, a, corpus))
+          else attempt(Dedup.minhashMaintenanceApply(spark, dir, a, corpus))
         case ("simhash", a) =>
           val corpus = sideInput(dir, "id", "text")
           if (a == "dedup_prepass" && corpus.isEmpty)
             ("skipped", "dedup_prepass needs the corpus text in " +
               "corpora or the runbook")
-          else run(Dedup.simhashMaintenanceApply(spark, dir, a, corpus))
+          else attempt(Dedup.simhashMaintenanceApply(spark, dir, a, corpus))
         case ("semdedup", "compact") =>
-          run(Clustering.semDedupStateCompact(spark, dir))
+          attempt(Clustering.semDedupStateCompact(spark, dir))
         case ("exact", "compact") =>
-          run(Dedup.exactIndexCompact(spark, dir))
+          attempt(Dedup.exactIndexCompact(spark, dir))
         case ("semdedup", "rebuild") =>
           // a re-cluster needs vectors AND a k — the runbook supplies
           // both (side input + target_cluster_size → k = ⌈n/target⌉);
@@ -1698,7 +1667,7 @@ object Similarity {
           // operator, exactly as before
           runbook.get(dir).flatMap(e =>
             e.targetClusterSize.map(t => (e, t))) match {
-            case Some((e, target)) => run {
+            case Some((e, target)) => attempt {
               val vecs = FleetRunbook.loadSideInput(spark, e, "id", "vec")
               val n = vecs.count()
               val k = math.max(1L, (n + target - 1) / target).toInt
@@ -1717,39 +1686,22 @@ object Similarity {
           // the index metadata
           sideInput(dir, "id", "text") match {
             case Some(remaining) =>
-              run(Decontamination.decontamIndexRebuild(spark, dir,
+              attempt(Decontamination.decontamIndexRebuild(spark, dir,
                 remaining, "text"))
             case None =>
               ("skipped", "decontam rebuild needs the remaining " +
                 "benchmark suites in corpora or the runbook")
           }
         case ("funnel", "compact") =>
-          run(CorpusPipeline.admissionFunnelCompact(spark, dir))
+          attempt(CorpusPipeline.admissionFunnelCompact(spark, dir))
         case (f, a) => ("skipped", s"no $a operator for family $f")
       }
-      (dir, family, action, status, detail)
+      (family, status, detail)
     }
-    // group SAME-dir plan rows into one sequential unit: two actions
-    // for one index must never race that index's exclusive writer lock
-    // across threads (parallelism would turn the loser into a spurious
-    // `failed` where sequential execution succeeds). Units stay
-    // disjoint lock domains; report order is restored by index.
-    val indexed = rows.zipWithIndex
-    val dirOrder = rows.map(_._1).distinct
-    val byDir = indexed.groupBy(_._1._1)
-    val units = dirOrder.map(byDir)
-    val report = fleetMap(units, parallelism, timeout) { unit =>
-      unit.map { case ((dir, action), i) => (i, applyOne(dir, action)) }
-    } { unit =>
-      unit.map { case ((dir, action), i) =>
-        (i, (dir, "unknown", action, "failed",
-          s"timed out after $timeout — the unit may still be running " +
-            "in the background; its index stays writer-locked until " +
-            "it finishes"))
-      }
-    }
-    report.flatten.sortBy(_._1).map(_._2)
-      .toDF("dir", "family", "action", "status", "detail")
+    fleetRun(rows, parallelism, timeout)(applyOne)
+      .map { case (dir, action, family, status, detail) =>
+        (dir, family, action, status, detail)
+      }.toDF("dir", "family", "action", "status", "detail")
   }
 
   /** Erase documents across the WHOLE persisted-index fleet in one
@@ -1803,26 +1755,19 @@ object Similarity {
     // resolution order as [[fleetMaintenanceApply]]
     val runbook: Map[String, FleetRunbook.Entry] =
       runbookDir.map(FleetRunbook.entries(spark, _)).getOrElse(Map.empty)
-    def deleteOne(dir: String): (String, String, String, String) = {
-      val snap = Manifest.snapshot(spark, dir)
-      val (family, _) = sniffFamily(spark, snap)
-      def run(f: => Unit): (String, String) =
-        try { f; ("executed", "") }
-        catch { case e: Exception =>
-          ("failed", Option(e.getMessage).getOrElse(e.getClass.getName)
-            .take(200))
-        }
+    def deleteOne(dir: String): (String, String, String) = {
+      val (family, _) = sniffFamily(spark, Manifest.snapshot(spark, dir))
       val (status, detail) = family match {
         case "ivf" | "ivf_pq" =>
-          run(ivfDelete(spark, dir, docs.select(col(idCol)), idCol))
+          attempt(ivfDelete(spark, dir, docs.select(col(idCol)), idCol))
         case "minhash" =>
-          run(Dedup.minhashIndexDelete(spark, dir,
+          attempt(Dedup.minhashIndexDelete(spark, dir,
             docs.select(col(idCol)), idCol))
         case "simhash" =>
-          run(Dedup.simhashIndexDelete(spark, dir,
+          attempt(Dedup.simhashIndexDelete(spark, dir,
             docs.select(col(idCol)), idCol))
         case "semdedup" =>
-          run(Clustering.semDedupStateDelete(spark, dir,
+          attempt(Clustering.semDedupStateDelete(spark, dir,
             docs.select(col(idCol)), idCol))
         case "exact" => textCol match {
           case Some(t) =>
@@ -1835,21 +1780,18 @@ object Similarity {
                 // doc sharing its text with a survivor is NOT
                 // tombstoned: the hash must keep flagging duplicates
                 // of the still-live copy.
-                run {
+                attempt {
                   val h = org.apache.spark.sql.functions.md5(col(t))
                   val unshared = docs.withColumn("_h", h)
                     .join(surv.select(h.as("_h")).distinct(),
                       Seq("_h"), "left_anti")
                     .drop("_h")
-                  // an all-shared batch tombstones nothing — do not
-                  // create an empty tombstone table (probes would pay
-                  // its anti-join for nothing until a compaction)
-                  if (!unshared.isEmpty)
-                    Dedup.exactIndexDelete(spark, dir, unshared,
-                      idCol, t)
+                  // an all-shared batch tombstones nothing (the empty
+                  // retraction writes no table — Tombstones.append)
+                  Dedup.exactIndexDelete(spark, dir, unshared, idCol, t)
                 }
               case None =>
-                run(Dedup.exactIndexDelete(spark, dir, docs, idCol, t))
+                attempt(Dedup.exactIndexDelete(spark, dir, docs, idCol, t))
             }
           case None =>
             ("skipped", "exact-hash index is content-keyed — supply " +
@@ -1859,7 +1801,7 @@ object Similarity {
           runbook.get(dir).map(e =>
             FleetRunbook.loadSideInput(spark, e, "id", "text"))) match {
           case Some(remaining) =>
-            run(Decontamination.decontamIndexRebuild(spark, dir,
+            attempt(Decontamination.decontamIndexRebuild(spark, dir,
               remaining, if (decontamRemaining.isDefined)
                 textCol.getOrElse("text") else "text"))
           case None =>
@@ -1873,27 +1815,13 @@ object Similarity {
         case _ =>
           ("skipped", "no recognizable index tables at dir")
       }
-      (dir, family, status, detail)
+      (family, status, detail)
     }
-    // same-dir entries execute sequentially within one unit (duplicate
-    // dirs must not race one writer lock across threads); report order
-    // restored by input index
-    val indexed = dirs.zipWithIndex
-    val dirOrder = dirs.distinct
-    val byDir = indexed.groupBy(_._1)
-    val units = dirOrder.map(byDir)
-    val report = fleetMap(units, parallelism, timeout) { unit =>
-      unit.map { case (dir, i) => (i, deleteOne(dir)) }
-    } { unit =>
-      unit.map { case (dir, i) =>
-        (i, (dir, "unknown", "failed",
-          s"timed out after $timeout — the unit may still be running " +
-            "in the background; its index stays writer-locked until " +
-            "it finishes"))
-      }
-    }
-    report.flatten.sortBy(_._1).map(_._2)
-      .toDF("dir", "family", "status", "detail")
+    fleetRun(dirs.map(_ -> (())), parallelism, timeout)((d, _) =>
+      deleteOne(d))
+      .map { case (dir, _, family, status, detail) =>
+        (dir, family, status, detail)
+      }.toDF("dir", "family", "status", "detail")
   }
 
   /** Fleet-wide point-in-time CLONE — [[IndexClone.cloneIndex]] over a
@@ -2122,12 +2050,8 @@ object Similarity {
   def ivfIndexHealthLight(spark: org.apache.spark.sql.SparkSession,
                           dir: String): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val codesP = new org.apache.hadoop.fs.Path(snap.path("codes"))
-    val table =
-      if (codesP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(codesP)) "codes"
-      else "postings"
-    indexHealth(spark, dir, table, snap, None, None, None, None)
+    indexHealth(spark, dir, sniffFamily(spark, snap)._2, snap, None, None,
+      None, None)
   }
 
   /** [[ivfIndexHealth]] for the compressed [[ivfPqBuild]] layout: the
@@ -2167,13 +2091,12 @@ object Similarity {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     // files per list: one FS listing of the partition directories
     val tableP = new org.apache.hadoop.fs.Path(snap.path(table))
-    val fs = tableP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val filesPerList = fs.listStatus(tableP).toSeq
+    val filesPerList = Manifest.fs(spark, snap.path(table))
+      .listStatus(tableP).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("list="))
       .map { s =>
         s.getPath.getName.stripPrefix("list=").toInt ->
-          fs.listStatus(s.getPath)
-            .count(_.getPath.getName.endsWith(".parquet"))
+          Lifecycle.fragments(spark, s.getPath.toString).toInt
       }.toMap
     val totalRows = rowsPerList.values.sum
     val meanRows = if (nLists == 0) 0.0 else totalRows.toDouble / nLists

@@ -21,17 +21,10 @@ object OpPlanDump {
     import spark.implicits._
     import graft.operators._
     new java.io.File(outDir).mkdirs()
+    def dumpAs(file: String, df: => DataFrame): Unit =
+      PlanDump.write("opplandump", outDir, file, df)
     def dump(name: String, df: => DataFrame): Unit =
-      try {
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-        println(s"[opplandump] wrote $outDir/${name}_$suffix.txt")
-      } catch {
-        case e: Throwable =>
-          println(s"[opplandump] $name FAILED: ${e.getMessage}")
-      }
+      dumpAs(s"${name}_$suffix", df)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs"),
@@ -76,17 +69,6 @@ object OpPlanDump {
       .toDF("uid", "label", "weight", "offset", "features", "userId")
     // both shapes dump in ONE run (the before shape survives in the
     // public ScoreAlgebra API), so they get their fixed names directly
-    def dumpAs(file: String, df: => DataFrame): Unit =
-      try {
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/$file.txt"), plan)
-        println(s"[opplandump] wrote $outDir/$file.txt")
-      } catch {
-        case e: Throwable =>
-          println(s"[opplandump] $file FAILED: ${e.getMessage}")
-      }
     val sA = training.select($"uid", ($"label" * 0.5).as("score"))
     val sB = training.select($"uid", ($"label" * 0.25).as("score"))
     dumpAs("op_game_residual_before",

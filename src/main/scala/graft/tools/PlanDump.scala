@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dump `.explain("formatted")` for a list of queries to files —
   * the before/after plan evidence the optimization rounds commit under
@@ -20,18 +20,24 @@ object PlanDump {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     names.split(",").foreach { name =>
-      try {
-        val df = graft.SparkEntry.queries(name)(spark, d)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-        println(s"[plandump] wrote $outDir/${name}_$suffix.txt")
-      } catch {
-        case e: Throwable =>
-          println(s"[plandump] $name FAILED: ${e.getMessage}")
-      }
+      write("plandump", outDir, s"${name}_$suffix",
+        graft.SparkEntry.queries(name)(spark, d))
     }
     spark.stop()
   }
+
+  /** Write `df`'s formatted plan to `<outDir>/<file>.txt` — the one
+    * plan-evidence writer ([[OpPlanDump]] too). A failure to build or
+    * plan `df` is reported on stdout under `[tag]` and skips the file. */
+  def write(tag: String, outDir: String, file: String,
+            df: => DataFrame): Unit =
+    try {
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$outDir/$file.txt"), plan)
+      println(s"[$tag] wrote $outDir/$file.txt")
+    } catch {
+      case e: Throwable => println(s"[$tag] $file FAILED: ${e.getMessage}")
+    }
 }

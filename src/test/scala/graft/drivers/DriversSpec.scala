@@ -1,6 +1,5 @@
 package graft.drivers
 
-import java.nio.file.Files
 import java.time.LocalDate
 
 import graft.SparkSpec
@@ -9,7 +8,16 @@ import org.apache.spark.sql.functions._
 class DriversSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val tmp = Files.createTempDirectory("graft-drivers").toString
+  // one temp dir for the whole suite (later tests score and extend the
+  // models earlier ones train), deleted when the suite finishes
+  private var tmp: String = _
+
+  override def run(testName: Option[String],
+                   args: org.scalatest.Args): org.scalatest.Status =
+    graft.util.TempDirs.using("graft-drivers") { case Seq(d) =>
+      tmp = d
+      super.run(testName, args)
+    }
 
   // one fixed per-user effect table shared by train and validation
   private lazy val userEffects = {

@@ -17,25 +17,26 @@ class FacadeSpec extends SparkSpec {
       "array<struct<name:string,term:string,value:double>>"))
 
   test("data reader facade merges shards and reuses index maps") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dr").toString
-    bagDf.write.mode("overwrite").parquet(s"$tmp/in")
-    val reader = new graft.sources.DataReader(spark, format = "parquet")
-    val (merged, maps) = reader.readMerged(Seq(s"$tmp/in"),
-      Map("shard" -> Seq("bag")))
-    assert(merged.columns.contains("shard") &&
-      !merged.columns.contains("bag"))
-    assert(maps("shard").count() == 2) // age + geo:us
-    // reuse: a second read with the training maps yields identical dims
-    val (again, maps2) = reader.readMerged(Seq(s"$tmp/in"),
-      Map("shard" -> Seq("bag")), indexMaps = maps)
-    assert(maps2("shard").collect().toSeq == maps("shard").collect().toSeq)
-    val dims = again.select("shard").collect()
-      .map(_.getAs[org.apache.spark.ml.linalg.Vector](0).size).toSet
-    assert(dims.size == 1)
-    // intercept option appends the constant feature to the vocabulary
-    val (_, maps3) = reader.readMerged(Seq(s"$tmp/in"),
-      Map("shard" -> Seq("bag")), addIntercept = true)
-    assert(maps3("shard").count() == maps("shard").count() + 1)
+    graft.util.TempDirs.using("graft-dr") { case Seq(tmp) =>
+      bagDf.write.mode("overwrite").parquet(s"$tmp/in")
+      val reader = new graft.sources.DataReader(spark, format = "parquet")
+      val (merged, maps) = reader.readMerged(Seq(s"$tmp/in"),
+        Map("shard" -> Seq("bag")))
+      assert(merged.columns.contains("shard") &&
+        !merged.columns.contains("bag"))
+      assert(maps("shard").count() == 2) // age + geo:us
+      // reuse: a second read with the training maps yields identical dims
+      val (again, maps2) = reader.readMerged(Seq(s"$tmp/in"),
+        Map("shard" -> Seq("bag")), indexMaps = maps)
+      assert(maps2("shard").collect().toSeq == maps("shard").collect().toSeq)
+      val dims = again.select("shard").collect()
+        .map(_.getAs[org.apache.spark.ml.linalg.Vector](0).size).toSet
+      assert(dims.size == 1)
+      // intercept option appends the constant feature to the vocabulary
+      val (_, maps3) = reader.readMerged(Seq(s"$tmp/in"),
+        Map("shard" -> Seq("bag")), addIntercept = true)
+      assert(maps3("shard").count() == maps("shard").count() + 1)
+    }
   }
 
   test("game converters project columns with metadataMap fallback") {

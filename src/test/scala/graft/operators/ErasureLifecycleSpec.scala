@@ -535,4 +535,120 @@ class ErasureLifecycleSpec extends SparkSpec {
       graft.util.TempDirs.deleteRecursively(slow)
     }
   }
+
+  test("an empty retraction writes no tombstone table: fleetDelete of " +
+    "an empty id frame leaves every index plan-free and a folded " +
+    "marker in place") {
+    def pt(dim: Int): Array[Float] = {
+      val a = new Array[Float](4); a(dim) = 1.0f; a
+    }
+    val docs = Seq(
+      0L -> "the quick brown fox jumps over the lazy dog",
+      1L -> "pack my box with five dozen liquor jugs").toDF("id", "text")
+    val vecs = (0 until 3).map(c => (c.toLong, pt(c))).toDF("id", "v")
+    graft.util.TempDirs.using("empty_mh_", "empty_sh_", "empty_ivf_") {
+      case dirs @ Seq(mh, sh, ivf) =>
+      Dedup.minhashIndexBuild(docs, mh, "id", "text")
+      Dedup.simhashIndexBuild(docs, sh, "id", "text")
+      Similarity.ivfBuild(vecs, ivf, nList = 2, kmeansMaxIter = 2)
+      // one folded delete: the MinHash tombstone table republishes
+      // empty, carrying the folded marker
+      Dedup.minhashIndexDelete(spark, mh, docs.filter(col("id") === 1L))
+      Dedup.minhashIndexCompact(spark, mh)
+      def marker = new java.io.File(
+        Manifest.snapshot(spark, mh).path("tombstones"), "_empty")
+      assert(marker.exists())
+      // a corpus refresh whose diff removed nothing
+      val report = Similarity.fleetDelete(spark, dirs,
+        docs.filter(lit(false)), "id")
+        .select("status").as[String].collect().toSeq
+      assert(report == Seq("executed", "executed", "executed"), report)
+      dirs.foreach { d =>
+        assert(Tombstones.readIfAny(spark, Manifest.snapshot(spark, d))
+          .isEmpty, s"$d: an empty retraction left a tombstone table")
+      }
+      assert(marker.exists(),
+        "an empty retraction must not clear the folded marker")
+    }
+  }
+
+  test("lifecycle contract, flat families: build → the same batch " +
+    "appended twice under one batch id → delete → compact leaves " +
+    "total_rows = distinct rows, no pending debt, and the deleted doc " +
+    "silent in the probe") {
+    val docs = Seq(
+      0L -> "the quick brown fox jumps over the lazy dog",
+      1L -> "pack my box with five dozen liquor jugs",
+      2L -> "how vexingly quick daft zebras jump").toDF("id", "text")
+    val base = docs.filter(col("id") < 2L)
+    val batch = docs.filter(col("id") === 2L)
+    val doomed = docs.filter(col("id") === 1L)
+    val probe = doomed.select((col("id") + 90L).as("id"), col("text"))
+    def pairsWith1(p: org.apache.spark.sql.DataFrame): Long = {
+      val n = p.filter(col("base_id") === 1L).count()
+      Clustering.releasePairs(p)
+      n
+    }
+    // SemDeDup is not a row here: ErasureLifecycleSpec "repair
+    // re-append is idempotent" pins its replay fold and SamplingSpec
+    // "semDedupStateDelete" its delete → compact fold
+    val families = Seq(
+      LifecycleCase("exact", "distinct_hashes", 2L,
+        Dedup.exactIndexBuild(base, _, "id", "text"),
+        Dedup.exactIndexAppend(spark, _, batch, "id", "text", Some("b1")),
+        Dedup.exactIndexDelete(spark, _, doomed, "id", "text"),
+        Dedup.exactIndexCompact(spark, _),
+        Dedup.exactIndexHealth(spark, _),
+        d => Dedup.exactIndexProbe(spark, d, probe, "id", "text")
+          .filter(col("is_dup")).count()),
+      LifecycleCase("minhash", "distinct_rows", 4L,
+        Dedup.minhashIndexBuild(base, _, "id", "text"),
+        Dedup.minhashIndexAppend(spark, _, batch, "id", "text",
+          Some("b1")),
+        Dedup.minhashIndexDelete(spark, _, doomed),
+        Dedup.minhashIndexCompact(spark, _),
+        Dedup.minhashIndexHealth(spark, _),
+        d => pairsWith1(
+          Dedup.minhashIndexProbe(spark, d, probe, docs, "id", "text"))),
+      LifecycleCase("simhash", "distinct_rows", 2L,
+        Dedup.simhashIndexBuild(base, _, "id", "text"),
+        Dedup.simhashIndexAppend(spark, _, batch, "id", "text",
+          Some("b1")),
+        Dedup.simhashIndexDelete(spark, _, doomed),
+        Dedup.simhashIndexCompact(spark, _),
+        Dedup.simhashIndexHealth(spark, _),
+        d => pairsWith1(Dedup.simhashIndexProbe(spark, d, probe, "id",
+          "text", maxHamming = 0))))
+    families.foreach { f =>
+      graft.util.TempDirs.using(s"lifecycle_${f.name}_") { case Seq(dir) =>
+        f.build(dir)
+        f.append(dir); f.append(dir)
+        assert(f.hits(dir) == 1L, s"${f.name}: the indexed doc must probe")
+        val replayed = f.health(dir).head()
+        assert(replayed.getAs[Long]("total_rows") >
+          replayed.getAs[Long](f.distinctCol),
+          s"${f.name}: the replayed append must leave duplicate rows")
+        f.delete(dir)
+        assert(f.hits(dir) == 0L, s"${f.name}: delete silences the probe")
+        f.compact(dir)
+        val h = f.health(dir).head()
+        assert(h.getAs[Long]("total_rows") == h.getAs[Long](f.distinctCol),
+          s"${f.name}: $h")
+        assert(h.getAs[Long]("total_rows") == f.liveRows, s"${f.name}: $h")
+        assert(h.getAs[Long]("deleted_pending") == 0L, s"${f.name}: $h")
+        assert(h.getAs[Long]("ingest_batches") == 1L, s"${f.name}: $h")
+        assert(f.hits(dir) == 0L, s"${f.name}: the fold keeps it silent")
+      }
+    }
+  }
 }
+
+/** One family row of the lifecycle-contract spec: its verbs over an
+  * index dir, the health column its `total_rows` must equal once
+  * compacted, and the live row count left after the fold. */
+private case class LifecycleCase(
+    name: String, distinctCol: String, liveRows: Long,
+    build: String => Unit, append: String => Unit,
+    delete: String => Unit, compact: String => Unit,
+    health: String => org.apache.spark.sql.DataFrame,
+    hits: String => Long)

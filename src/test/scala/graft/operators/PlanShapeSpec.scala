@@ -174,9 +174,7 @@ class PlanShapeSpec extends SparkSpec {
     }
     val corpus = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
     val queries = Seq((0L, pt(1))).toDF("qid", "qv")
-    val dir = java.nio.file.Files.createTempDirectory("tombplan").toFile
-    val root = dir.getAbsolutePath
-    try {
+    graft.util.TempDirs.using("tombplan") { case Seq(root) =>
       Similarity.ivfBuild(corpus, root, nList = 4, kmeansMaxIter = 2)
       // Tombstones.live is a NO-OP without a tombstone table — the
       // production probe of an index with no retraction debt must not
@@ -203,6 +201,6 @@ class PlanShapeSpec extends SparkSpec {
       Similarity.ivfDelete(spark, root, Seq(2L).toDF("id"))
       assert(countAntiJoins(
         Similarity.ivfQuery(spark, root, queries, k = 1, nProbe = 4)) == 1)
-    } finally graft.util.TempDirs.deleteRecursively(dir)
+    }
   }
 }

@@ -28,8 +28,14 @@ class SourcesSpec extends SparkSpec {
       .endRecord()
   }
 
-  private def writeAvro(n: Int): String = {
-    val dir = Files.createTempDirectory("avro").toFile
+  /** `body` over a fresh `n`-record avro file (deleted afterwards). */
+  private def withAvro[A](n: Int)(body: String => A): A =
+    graft.util.TempDirs.using("avro") { case Seq(d) =>
+      body(writeAvro(new java.io.File(d), n))
+    }
+
+  private def writeAvro(dir: java.io.File, n: Int): String = {
+    dir.mkdirs()
     val schema = trainingSchema
     val fSchema = schema.getField("features").schema().getElementType
     val writer = new DataFileWriter[GenericRecord](
@@ -57,41 +63,43 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("avro read infers the photon schema mapping and reads values") {
-    val path = writeAvro(20)
-    val df = AvroIO.read(spark, Seq(path))
-    val types = df.schema.fields.map(f => f.name -> f.dataType.sql).toMap
-    assert(types("uid") == "STRING")
-    assert(types("label") == "DOUBLE")
-    assert(types("weight") == "DOUBLE") // [null,double] union unwrapped
-    assert(types("metadataMap") == "MAP<STRING, STRING>")
-    assert(types("features").startsWith("ARRAY<STRUCT<"))
-    assert(df.count() == 20)
-    val r = df.filter(col("uid") === "u0").select("label", "weight").first()
-    assert(r.getDouble(0) == 1.0 && r.isNullAt(1))
-    val feats = df.filter(col("uid") === "u3")
-      .select(explode(col("features"))).collect()
-    assert(feats.length == 2)
+    withAvro(20) { path =>
+      val df = AvroIO.read(spark, Seq(path))
+      val types = df.schema.fields.map(f => f.name -> f.dataType.sql).toMap
+      assert(types("uid") == "STRING")
+      assert(types("label") == "DOUBLE")
+      assert(types("weight") == "DOUBLE") // [null,double] union unwrapped
+      assert(types("metadataMap") == "MAP<STRING, STRING>")
+      assert(types("features").startsWith("ARRAY<STRUCT<"))
+      assert(df.count() == 20)
+      val r = df.filter(col("uid") === "u0").select("label", "weight").first()
+      assert(r.getDouble(0) == 1.0 && r.isNullAt(1))
+      val feats = df.filter(col("uid") === "u3")
+        .select(explode(col("features"))).collect()
+      assert(feats.length == 2)
+    }
   }
 
   test("index map is deterministic and vectorization merges bags") {
-    val path = writeAvro(30)
-    val df = AvroIO.read(spark, Seq(path))
-    val (merged, maps) = FeatureVectorizer.readMerged(df,
-      Map("shard1" -> Seq("features")))
-    val idx = maps("shard1").collect().map(r => r.getString(0) -> r.getInt(1))
-    // sorted by key → deterministic dense indices
-    assert(idx.map(_._1).toSeq == idx.map(_._1).toSeq.sorted)
-    assert(idx.map(_._2).toSeq == idx.indices.toSeq)
-    // 1 "age" key + 3 geo terms
-    assert(idx.length == 4)
-    val v = merged.filter(col("uid") === "u4").select("shard1")
-      .first().getAs[Vector](0)
-    assert(v.size == 4)
-    // age=4.0 and geo g1=1.0 present
-    assert(v.toArray.count(_ != 0.0) == 2)
-    assert(v.toArray.sum == 5.0)
-    assert(merged.columns.contains("shard1") &&
-      !merged.columns.contains("features"))
+    withAvro(30) { path =>
+      val df = AvroIO.read(spark, Seq(path))
+      val (merged, maps) = FeatureVectorizer.readMerged(df,
+        Map("shard1" -> Seq("features")))
+      val idx = maps("shard1").collect().map(r => r.getString(0) -> r.getInt(1))
+      // sorted by key → deterministic dense indices
+      assert(idx.map(_._1).toSeq == idx.map(_._1).toSeq.sorted)
+      assert(idx.map(_._2).toSeq == idx.indices.toSeq)
+      // 1 "age" key + 3 geo terms
+      assert(idx.length == 4)
+      val v = merged.filter(col("uid") === "u4").select("shard1")
+        .first().getAs[Vector](0)
+      assert(v.size == 4)
+      // age=4.0 and geo g1=1.0 present
+      assert(v.toArray.count(_ != 0.0) == 2)
+      assert(v.toArray.sum == 5.0)
+      assert(merged.columns.contains("shard1") &&
+        !merged.columns.contains("features"))
+    }
   }
 
   test("buildIndexMap is distributed, repeatable, and rank-ordered") {
@@ -150,20 +158,21 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("join-based vectorization equals the broadcast path") {
-    val path = writeAvro(30)
-    val df = AvroIO.read(spark, Seq(path))
-    val indexMap = FeatureVectorizer.buildIndexMap(df, Seq("features"))
-    val broadcastVec = FeatureVectorizer.vectorize(df, Seq("features"),
-      indexMap, "vec")
-    // vocab limit 0 forces the distributed explode+join path
-    val joinVec = FeatureVectorizer.vectorize(df, Seq("features"),
-      indexMap, "vec", broadcastVocabLimit = 0)
-    val a = broadcastVec.select("uid", "vec").collect()
-      .map(r => r.getString(0) -> r.getAs[Vector](1)).toMap
-    val b = joinVec.select("uid", "vec").collect()
-      .map(r => r.getString(0) -> r.getAs[Vector](1)).toMap
-    assert(a.keySet == b.keySet)
-    a.foreach { case (k, v) => assert(v == b(k), s"mismatch at $k") }
+    withAvro(30) { path =>
+      val df = AvroIO.read(spark, Seq(path))
+      val indexMap = FeatureVectorizer.buildIndexMap(df, Seq("features"))
+      val broadcastVec = FeatureVectorizer.vectorize(df, Seq("features"),
+        indexMap, "vec")
+      // vocab limit 0 forces the distributed explode+join path
+      val joinVec = FeatureVectorizer.vectorize(df, Seq("features"),
+        indexMap, "vec", broadcastVocabLimit = 0)
+      val a = broadcastVec.select("uid", "vec").collect()
+        .map(r => r.getString(0) -> r.getAs[Vector](1)).toMap
+      val b = joinVec.select("uid", "vec").collect()
+        .map(r => r.getString(0) -> r.getAs[Vector](1)).toMap
+      assert(a.keySet == b.keySet)
+      a.foreach { case (k, v) => assert(v == b(k), s"mismatch at $k") }
+    }
   }
 
   test("vectorizeHashed: md5 buckets, collision accumulation, no vocab pass") {
@@ -211,75 +220,79 @@ class SourcesSpec extends SparkSpec {
 
   test("feature indexing and name-term bag drivers write vocab artifacts") {
     import graft.drivers.{Args, FeatureIndexingDriver, NameAndTermFeatureBagsDriver}
-    val path = writeAvro(25)
-    val raw = AvroIO.read(spark, Seq(path))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-feat").toString
-    raw.write.mode("overwrite").parquet(s"$tmp/input")
-    val idx = FeatureIndexingDriver.run(spark, Args.parse(Array(
-      "--input-dir", s"$tmp/input", "--bag-cols", "features",
-      "--output-dir", s"$tmp/index", "--num-partitions", "1")))
-    assert(idx.columns.toSeq == Seq("featureKey", "index"))
-    val persisted = spark.read.parquet(s"$tmp/index")
-    assert(persisted.count() == idx.count())
-    val bags = NameAndTermFeatureBagsDriver.run(spark, Args.parse(Array(
-      "--input-dir", s"$tmp/input", "--bag-cols", "features",
-      "--output-dir", s"$tmp/bags")))
-    val names = spark.read.parquet(s"$tmp/bags/features")
-    assert(names.columns.toSeq == Seq("name", "term"))
-    assert(names.count() == 4) // age + 3 geo terms
-    assert(bags("features").count() == 4)
+    graft.util.TempDirs.using("avro", "graft-feat") { case Seq(in, tmp) =>
+      val raw = AvroIO.read(spark, Seq(writeAvro(new java.io.File(in), 25)))
+      raw.write.mode("overwrite").parquet(s"$tmp/input")
+      val idx = FeatureIndexingDriver.run(spark, Args.parse(Array(
+        "--input-dir", s"$tmp/input", "--bag-cols", "features",
+        "--output-dir", s"$tmp/index", "--num-partitions", "1")))
+      assert(idx.columns.toSeq == Seq("featureKey", "index"))
+      val persisted = spark.read.parquet(s"$tmp/index")
+      assert(persisted.count() == idx.count())
+      val bags = NameAndTermFeatureBagsDriver.run(spark, Args.parse(Array(
+        "--input-dir", s"$tmp/input", "--bag-cols", "features",
+        "--output-dir", s"$tmp/bags")))
+      val names = spark.read.parquet(s"$tmp/bags/features")
+      assert(names.columns.toSeq == Seq("name", "term"))
+      assert(names.count() == 4) // age + 3 geo terms
+      assert(bags("features").count() == 4)
+    }
   }
 
   test("selected-features whitelist filters the index map, indices dense") {
     import spark.implicits._
-    val path = writeAvro(20)
-    val df = AvroIO.read(spark, Seq(path))
-    val whitelist = Seq(("age", ""), ("geo", "g1")).toDF("name", "term")
-    val idx = FeatureVectorizer.buildIndexMap(df, Seq("features"),
-      Some(whitelist)).collect().map(r => r.getString(0) -> r.getInt(1))
-    assert(idx.length == 2)
-    assert(idx.map(_._2).sorted.toSeq == Seq(0, 1)) // still dense
-    // vectorizing with the filtered map drops non-whitelisted features
-    val vec = FeatureVectorizer.vectorize(df, Seq("features"),
-      FeatureVectorizer.buildIndexMap(df, Seq("features"), Some(whitelist)),
-      "v")
-    assert(vec.select("v").head().getAs[Vector](0).size == 2)
+    withAvro(20) { path =>
+      val df = AvroIO.read(spark, Seq(path))
+      val whitelist = Seq(("age", ""), ("geo", "g1")).toDF("name", "term")
+      val idx = FeatureVectorizer.buildIndexMap(df, Seq("features"),
+        Some(whitelist)).collect().map(r => r.getString(0) -> r.getInt(1))
+      assert(idx.length == 2)
+      assert(idx.map(_._2).sorted.toSeq == Seq(0, 1)) // still dense
+      // vectorizing with the filtered map drops non-whitelisted features
+      val vec = FeatureVectorizer.vectorize(df, Seq("features"),
+        FeatureVectorizer.buildIndexMap(df, Seq("features"), Some(whitelist)),
+        "v")
+      assert(vec.select("v").head().getAs[Vector](0).size == 2)
+    }
   }
 
   test("devectorize inverts vectorize") {
-    val path = writeAvro(10)
-    val df = AvroIO.read(spark, Seq(path))
-    val (merged, maps) = FeatureVectorizer.readMerged(df,
-      Map("shard1" -> Seq("features")))
-    val back = FeatureVectorizer.devectorize(merged, "shard1",
-      maps("shard1"), "bag")
-    val bag = back.filter(col("uid") === "u4")
-      .select(explode(col("bag")).as("f"))
-      .select("f.name", "f.term", "f.value").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
-    assert(bag == Set(("age", "", 4.0), ("geo", "g1", 1.0)))
+    withAvro(10) { path =>
+      val df = AvroIO.read(spark, Seq(path))
+      val (merged, maps) = FeatureVectorizer.readMerged(df,
+        Map("shard1" -> Seq("features")))
+      val back = FeatureVectorizer.devectorize(merged, "shard1",
+        maps("shard1"), "bag")
+      val bag = back.filter(col("uid") === "u4")
+        .select(explode(col("bag")).as("f"))
+        .select("f.name", "f.term", "f.value").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+      assert(bag == Set(("age", "", 4.0), ("geo", "g1", 1.0)))
+    }
   }
 
   test("avro write round-trips through the avro reader (S9)") {
-    val path = writeAvro(25)
-    val df = AvroIO.read(spark, Seq(path)).repartition(3)
-    val dir = Files.createTempDirectory("avro-out").toString + "/examples"
-    AvroIO.writeTrainingExamples(df, dir)
-    // multiple container part files (one per non-empty partition)...
-    val parts = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".avro"))
-    assert(parts.length > 1, s"expected distributed write, got ${parts.length}")
-    // ...that the reader consumes back bit-for-bit
-    val back = AvroIO.read(spark, Seq(dir))
-    assert(back.count() == 25)
-    def key(r: org.apache.spark.sql.Row) = r.getAs[String]("uid")
-    val a = df.collect().map(r => key(r) -> r.toString).toMap
-    val b = back.collect().map(r => key(r) -> r.toString).toMap
-    assert(a == b)
-    // maxFiles caps the output file count
-    AvroIO.write(df, dir + "-one", maxFiles = 1)
-    assert(new java.io.File(dir + "-one").listFiles()
-      .count(_.getName.endsWith(".avro")) == 1)
+    graft.util.TempDirs.using("avro", "avro-out") { case Seq(in, out) =>
+      val df = AvroIO.read(spark, Seq(writeAvro(new java.io.File(in), 25)))
+        .repartition(3)
+      val dir = out + "/examples"
+      AvroIO.writeTrainingExamples(df, dir)
+      // multiple container part files (one per non-empty partition)...
+      val parts = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".avro"))
+      assert(parts.length > 1, s"expected distributed write, got ${parts.length}")
+      // ...that the reader consumes back bit-for-bit
+      val back = AvroIO.read(spark, Seq(dir))
+      assert(back.count() == 25)
+      def key(r: org.apache.spark.sql.Row) = r.getAs[String]("uid")
+      val a = df.collect().map(r => key(r) -> r.toString).toMap
+      val b = back.collect().map(r => key(r) -> r.toString).toMap
+      assert(a == b)
+      // maxFiles caps the output file count
+      AvroIO.write(df, dir + "-one", maxFiles = 1)
+      assert(new java.io.File(dir + "-one").listFiles()
+        .count(_.getName.endsWith(".avro")) == 1)
+    }
   }
 
   test("game model save/load round trip preserves scores") {
@@ -294,38 +307,42 @@ class SourcesSpec extends SparkSpec {
     val game = GameModel(Map("f" -> fixed,
       "r" -> TrainedRandom(RandomSpec("r", "rid", "feat", 1,
         GlmConfig(SquaredLoss)), res.toDF())))
-    val dir = Files.createTempDirectory("model").toString
-    ModelIO.saveGame(spark, game, dir)
-    val loaded = ModelIO.loadGame(spark, dir)
+    graft.util.TempDirs.using("model") { case Seq(dir) =>
+      ModelIO.saveGame(spark, game, dir)
+      val loaded = ModelIO.loadGame(spark, dir)
 
-    val lf = loaded.coordinates("f").asInstanceOf[TrainedFixed].model
-    assert(lf.coef.toSeq == Seq(1.5, -0.5) && lf.intercept == 0.25)
-    val lr = loaded.coordinates("r").asInstanceOf[TrainedRandom].models
-      .collect().map(r => r.getString(0) ->
-        (r.getSeq[Double](1), r.getDouble(2))).toMap
-    assert(lr("a")._1 == Seq(2.0) && lr("a")._2 == 0.1)
-    assert(lr("b")._1 == Seq(-1.0))
+      val lf = loaded.coordinates("f").asInstanceOf[TrainedFixed].model
+      assert(lf.coef.toSeq == Seq(1.5, -0.5) && lf.intercept == 0.25)
+      val lr = loaded.coordinates("r").asInstanceOf[TrainedRandom].models
+        .collect().map(r => r.getString(0) ->
+          (r.getSeq[Double](1), r.getDouble(2))).toMap
+      assert(lr("a")._1 == Seq(2.0) && lr("a")._2 == 0.1)
+      assert(lr("b")._1 == Seq(-1.0))
+    }
   }
 
   test("libsvm source reads via the built-in format (S4)") {
-    val dir = Files.createTempDirectory("libsvm").toFile
-    val f = new java.io.File(dir, "data.txt")
-    Files.writeString(f.toPath,
-      "1 1:0.5 3:1.5\n0 2:2.0\n1 1:1.0 2:1.0 3:1.0\n")
-    val df = spark.read.format("libsvm").option("numFeatures", "3")
-      .load(f.getPath)
-    assert(df.count() == 3)
-    assert(df.schema.fieldNames.toSet == Set("label", "features"))
-    // dedicated façade path lifts to the trainer's column contract
-    val lifted = new DataReader(spark).readLibsvm(f.getPath, numFeatures = 3)
-    assert(lifted.schema.fieldNames.toSeq ==
-      Seq("label", "features", "offset", "weight"))
-    val r = lifted.orderBy("label").collect()
-    assert(r.length == 3 && r.last.getDouble(0) == 1.0)
-    val m = graft.ml.Glm.train(
-      lifted.as[graft.ml.LabeledPoint](
-        org.apache.spark.sql.Encoders.product[graft.ml.LabeledPoint]), 3,
-      graft.ml.GlmConfig(graft.ml.LogisticLoss, l2 = 1.0, maxIter = 20))
-    assert(m.coef.length == 3)
+    graft.util.TempDirs.using("libsvm") { case Seq(d) =>
+      val dir = new java.io.File(d)
+      dir.mkdirs()
+      val f = new java.io.File(dir, "data.txt")
+      Files.writeString(f.toPath,
+        "1 1:0.5 3:1.5\n0 2:2.0\n1 1:1.0 2:1.0 3:1.0\n")
+      val df = spark.read.format("libsvm").option("numFeatures", "3")
+        .load(f.getPath)
+      assert(df.count() == 3)
+      assert(df.schema.fieldNames.toSet == Set("label", "features"))
+      // dedicated façade path lifts to the trainer's column contract
+      val lifted = new DataReader(spark).readLibsvm(f.getPath, numFeatures = 3)
+      assert(lifted.schema.fieldNames.toSeq ==
+        Seq("label", "features", "offset", "weight"))
+      val r = lifted.orderBy("label").collect()
+      assert(r.length == 3 && r.last.getDouble(0) == 1.0)
+      val m = graft.ml.Glm.train(
+        lifted.as[graft.ml.LabeledPoint](
+          org.apache.spark.sql.Encoders.product[graft.ml.LabeledPoint]), 3,
+        graft.ml.GlmConfig(graft.ml.LogisticLoss, l2 = 1.0, maxIter = 20))
+      assert(m.coef.length == 3)
+    }
   }
 }
