@@ -268,24 +268,6 @@ object Clustering {
       best
     }
 
-  /** SemDeDup-style semantic near-duplicate pairs: k-means first, then
-    * cosine only WITHIN a cluster — the clustering turns the O(n²)
-    * all-pairs comparison into Σ cluster², with the cluster count
-    * choosing the trade-off (the same role LSH bands play in
-    * [[Dedup.minhashPairs]], but data-adaptive). Emits
-    * `(cluster, id_a, id_b, cosine)` for pairs with cosine ≥ `tau`;
-    * downstream keeper selection is [[Dedup.resolveClusters]]'s job.
-    *
-    * A skewed cluster is quadratic in its size — `maxCluster` guards
-    * the pathological case (a cluster larger than the cap is dropped
-    * from pairing, the [[Dedup]] hot-bucket convention).
-    *
-    * RELEASE CONTRACT: the returned frame is an eagerly-materialized
-    * local checkpoint (that is what lets the corpus-sized iteration
-    * caches drop immediately), so ONE pinned RDD — the tau-bounded pair
-    * set itself — stays in the block manager until the caller is done
-    * with it. Call [[releasePairs]] then; repeated un-released calls
-    * accumulate one pinned pair set each. */
   /** [[semDedup]] with the cluster count derived from the data:
     * k = ceil(n / targetClusterSize), clustered by [[kmeansTwoLevel]].
     * A FIXED k is a scale trap — 10× the points with the same k means
@@ -304,6 +286,24 @@ object Clustering {
     semDedupPairs(df, assigned, idCol, vecCol, tau, maxCluster)
   }
 
+  /** SemDeDup-style semantic near-duplicate pairs: k-means first, then
+    * cosine only WITHIN a cluster — the clustering turns the O(n²)
+    * all-pairs comparison into Σ cluster², with the cluster count
+    * choosing the trade-off (the same role LSH bands play in
+    * [[Dedup.minhashPairs]], but data-adaptive). Emits
+    * `(cluster, id_a, id_b, cosine)` for pairs with cosine ≥ `tau`;
+    * downstream keeper selection is [[Dedup.resolveClusters]]'s job.
+    *
+    * A skewed cluster is quadratic in its size — `maxCluster` guards
+    * the pathological case (a cluster larger than the cap is dropped
+    * from pairing, the [[Dedup]] hot-bucket convention).
+    *
+    * RELEASE CONTRACT: the returned frame is an eagerly-materialized
+    * local checkpoint (that is what lets the corpus-sized iteration
+    * caches drop immediately), so ONE pinned RDD — the tau-bounded pair
+    * set itself — stays in the block manager until the caller is done
+    * with it. Call [[releasePairs]] then; repeated un-released calls
+    * accumulate one pinned pair set each. */
   def semDedup(df: DataFrame, idCol: String, vecCol: String, tau: Double,
                k: Int, iterations: Int,
                maxCluster: Long = 100000L): DataFrame =

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{AggFunctions, VectorOps => V}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -9,15 +9,25 @@ import org.apache.spark.sql.functions._
   * `bruteForce` is the exact baseline: broadcast the (small) query set and
   * scan the corpus once — a single map-side pass at any corpus size.
   *
-  * `lsh` is the scale path: both sides bucketed by deterministic
-  * sign-hyperplane LSH; only same-bucket pairs are scored. Probing
-  * `nProbe` neighboring buckets (bit flips) trades recall for cost.
+  * `lsh` buckets both sides by deterministic sign-hyperplane LSH; only
+  * same-bucket pairs are scored. Probing `nProbe` neighboring buckets
+  * (bit flips) trades recall for cost.
   *
-  * Both end in [[topK]] — a bounded-heap aggregate, not a per-query
-  * window sort: each map task keeps at most k candidates per query, so
-  * the shuffle carries ≤ k·#tasks rows per query regardless of corpus
-  * size (a window row_number would gather every scored candidate of a
-  * query into one task before discarding all but k).
+  * The inverted-list index is the scale path: a k-means coarse quantizer
+  * files every vector under its nearest of `nList` centroids, and a query
+  * scores only the members of its `nProbe` nearest lists. It exists in
+  * memory (`ivf`, `ivfPq`) and persisted (`ivfBuild` → append / query /
+  * delete / compact / refit / recall / drift / ingest / health), and each
+  * step is written once over its list payload ([[Lists]]): IVF-Flat
+  * stores the vector itself (`postings`, exact cosine), IVF-PQ a product
+  * code and a norm (`codes` plus `codebooks`, asymmetric-distance scoring
+  * and exact rescoring against the embedding store).
+  *
+  * Every path ends in [[topK]] — a bounded-heap aggregate, not a
+  * per-query window sort: each map task keeps at most k candidates per
+  * query, so the shuffle carries ≤ k·#tasks rows per query regardless of
+  * corpus size (a window row_number would gather every scored candidate
+  * of a query into one task before discarding all but k).
   */
 object Similarity {
 
@@ -95,6 +105,12 @@ object Similarity {
       .select(col("qid"), col("col.id").as("id"),
         (-col("col.nc")).as("cosine"), (col("pos") + 1).as("rank"))
 
+  /** [[topK]] of candidate pairs carrying (qid, qv, id, v) by exact
+    * cosine — the scorer of every exact and refined path. */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    topK(pairs.select(col("qid"), col("id"),
+      V.cosine(col("qv"), col("v")).as("cosine")), k)
+
   /** Training-sample cap of [[fitQuantizers]]. */
   private val MaxTrain = 65536
 
@@ -111,13 +127,12 @@ object Similarity {
     * cost: O(sample × nList × dim × (iterations + 2 + ln nList)), cheap
     * at the nList ≤ 16 every caller uses; a distributed fit for nList in
     * the thousands is out of scope. `op` names the caller in the
-    * empty-corpus error. Returns (coarse centers, codebooks — empty
-    * without `pq` = (m, nCodes)). */
+    * empty-corpus error. The codebooks are empty without
+    * `pq` = (m, nCodes). */
   private def fitQuantizers(op: String, corpus: DataFrame, nList: Int,
                             seed: Long, maxIter: Int,
                             trainFraction: Double = 1.0,
-                            pq: Option[(Int, Int)] = None)
-  : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+                            pq: Option[(Int, Int)] = None): Quantizers = {
     val n = corpus.count()
     val frac = math.min(trainFraction, MaxTrain.toDouble / math.max(n, 1L))
     val sample =
@@ -139,7 +154,7 @@ object Similarity {
             nCodes, maxIter, seed)
         }
     }
-    (localLloyd(sample, nList, maxIter, seed), codebooks)
+    Quantizers(localLloyd(sample, nList, maxIter, seed), codebooks)
   }
 
   /** Lloyd's k-means on a non-empty local sample — the IVF family's one
@@ -229,9 +244,7 @@ object Similarity {
   /** Exact top-k cosine neighbors of each query vector.
     * queries: (qid, qv), corpus: (id, v). Queries must be broadcastable. */
   def bruteForce(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
-    topK(corpus.join(broadcast(queries))
-      .select(col("qid"), col("id"),
-        V.cosine(col("qv"), col("v")).as("cosine")), k)
+    cosineTopK(corpus.join(broadcast(queries)), k)
 
   /** Hard-negative mining for contrastive training: exact top-k cosine
     * neighbors of each query EXCLUDING its known positives — the
@@ -252,48 +265,13 @@ object Similarity {
       Seq("qid", "id"), "left_anti"), k)
   }
 
-  /** IVF-Flat ANN: a k-means coarse quantizer ([[fitQuantizers]]'s
-    * local fit on a bounded sample) assigns every corpus vector to its
-    * nearest of `nList` centroids; queries probe the `nProbe` nearest
-    * inverted lists and score only those lists' members. The classic IVF
-    * trade-off: centroids adapt to the data distribution (vs.
-    * data-oblivious LSH hyperplanes), at the cost of a training pass.
-    * Corpus side = one sample collect + one shuffle on list id;
-    * centroids (nList · dim doubles) broadcast. */
-  def ivf(queries: DataFrame, corpus: DataFrame, k: Int,
-          nList: Int = 16, nProbe: Int = 2, seed: Long = 7L,
-          kmeansMaxIter: Int = 20): DataFrame = {
-    val centers = corpus.sparkSession.sparkContext.broadcast(
-      fitQuantizers("ivf", corpus, nList, seed, kmeansMaxIter)._1)
-    val bucketed = corpus.select(col("id"), col("v"),
-      listOf(centers, col("v")).as("list"))
-    val probeLists = udf { (qv: Seq[Double]) =>
-      probeIdx(centers.value, qv, nProbe)
-    }
-    val q = queries.select(col("qid"), col("qv"),
-      explode(probeLists(col("qv").cast("array<double>"))).as("list"))
-    topK(bucketed.join(broadcast(q), Seq("list"))
-      .select(col("qid"), col("id"),
-        V.cosine(col("qv"), col("v")).as("cosine")), k)
-  }
-
-  /** Build and PERSIST an IVF-Flat index — the production workflow at
-    * corpus scale: the k-means fit and list assignment run ONCE and the
-    * index is reused across query batches, never refit per query.
-    * Writes two tables under `dir`:
-    *   - `centroids.parquet`: (list, center) — nList rows, the coarse
-    *     quantizer;
-    *   - `postings.parquet`: (id, v) PARTITIONED BY list — each
-    *     inverted list is its own partition directory, so a probe that
-    *     touches `nProbe` lists READS only those directories (storage
-    *     partition pruning, the IVF promise made physical: at 100 TB
-    *     the unprobed lists never leave object storage).
-    * The postings write repartitions by list so each partition is one
-    * coherent file set, not a per-task fragment spray. */
-  // ---- persisted-index shared plumbing ---------------------------------
-  // one loader + one kernel each, shared by the build/append/query
-  // paths: a layout change edited in a single place cannot
-  // desynchronize append from probe
+  // ---- the inverted-list index: one body per step, two list payloads --
+  // IVF-PQ is the IVF inverted file with a product code stored as the
+  // list payload (Jégou, Douze and Schmid, TPAMI 2011). So every step
+  // of the persisted index (build, append, probe-and-score, compaction,
+  // refit, recall, the nProbe ladder, drift, ingest, health) is written
+  // ONCE below over a [[Lists]] value, and the public ivf*/ivfPq* verbs
+  // further down are one-expression forwards that pick the layout.
 
   /** Snapshot a BOUNDED (broadcast-class) frame: one collect + a local
     * relation over the rows. Used where one plan execution derives
@@ -301,8 +279,7 @@ object Similarity {
     * must agree with — recomputing a nondeterministic input in between
     * would desynchronize them. Unlike localCheckpoint this pins nothing
     * in the block manager after the caller drops the frame. */
-  private def materialize(spark: org.apache.spark.sql.SparkSession,
-                          df: DataFrame): DataFrame = {
+  private def materialize(spark: SparkSession, df: DataFrame): DataFrame = {
     val rows = df.collect()
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
@@ -311,14 +288,14 @@ object Similarity {
     * (nList · dim doubles). `path` is the manifest-resolved table
     * directory (one [[Manifest.snapshot]] per query keeps every table a
     * plan reads on the same index version). */
-  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
+  private def loadCentroids(spark: SparkSession,
                             path: String): Array[Array[Double]] =
     spark.read.parquet(path)
       .orderBy("list").collect().map(_.getSeq[Double](1).toArray)
 
   /** PQ codebooks of a persisted index as a (j)(c) grid — bounded
     * (m · nCodes · subLen doubles). */
-  private def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
+  private def loadCodebooks(spark: SparkSession,
                             path: String): Array[Array[Array[Double]]] = {
     val rows = spark.read.parquet(path)
       .orderBy("j", "c").collect()
@@ -327,6 +304,17 @@ object Similarity {
     Array.tabulate(m, nCodes) { (j, c) =>
       rows(j * nCodes + c).getSeq[Double](2).toArray
     }
+  }
+
+  /** The coarse quantizer table `centroids.parquet`: (list, center). */
+  private def writeCentroids(spark: SparkSession,
+                             cents: Array[Array[Double]], dir: String)
+  : Unit = {
+    import spark.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("list", "center")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$dir/centroids.parquet")
   }
 
   /** Index of the nearest centroid by squared L2 (lowest index wins
@@ -360,41 +348,35 @@ object Similarity {
       (d, i)
     }.sortBy(_._1).take(nProbe).map(_._2).toSeq
 
-  private type Centers = org.apache.spark.broadcast.Broadcast[
-    Array[Array[Double]]]
-
   /** [[nearestIdx]] over broadcast centers as a column: the list of `v`. */
-  private def listOf(cents: Centers, v: Column): Column =
-    udf { (x: Seq[Double]) => nearestIdx(cents.value, x) }
+  private def listOf(q: Bq, v: Column): Column =
+    udf { (x: Seq[Double]) => nearestIdx(q.value.centers, x) }
       .apply(v.cast("array<double>"))
 
   /** [[listOf]] plus [[pqEncode]] in one pass: struct column `e` of
-    * (list, codes, norm) — the encoding of the PQ build, append and
-    * in-memory paths.
+    * (list, codes, norm) — the PQ encoding.
     * Float→double widening is exact, so encoding the cast column with the
     * shared double kernels is bit-identical to a float-input loop. */
-  private def listAndCodes(cents: Centers,
-      cb: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
-      v: Column): Column =
+  private def listAndCodes(q: Bq, v: Column): Column =
     udf { (x: Seq[Double]) =>
-      val (codes, nrm) = pqEncode(cb.value, cb.value(0)(0).length, x)
-      (nearestIdx(cents.value, x), codes, nrm)
+      val cb = q.value.codebooks
+      val (codes, nrm) = pqEncode(cb, cb(0)(0).length, x)
+      (nearestIdx(q.value.centers, x), codes, nrm)
     }.apply(v.cast("array<double>")).as("e")
 
-  /** The coarse quantizer table `centroids.parquet`: (list, center). */
-  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
-                             cents: Array[Array[Double]], dir: String)
-  : Unit = {
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list", "center")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/centroids.parquet")
+  /** Each query exploded into its `nProbe` nearest lists:
+    * (qid, qv, list). */
+  private def probeLists(q: Bq, queries: DataFrame,
+                         nProbe: Int): DataFrame = {
+    val lists = udf { (qv: Seq[Double]) =>
+      probeIdx(q.value.centers, qv, nProbe)
+    }
+    queries.select(col("qid"), col("qv"),
+      explode(lists(col("qv").cast("array<double>"))).as("list"))
   }
 
   /** Asymmetric-distance cosine estimate: Σⱼ dot(qⱼ, codebook_j[code_j])
-    * over the stored norm — the PQ scoring kernel of both the in-memory
-    * and persisted query paths. */
+    * over the stored norm — the PQ candidate-scoring kernel. */
   private def adcScore(cb: Array[Array[Array[Double]]], subLen: Int,
                        qv: Seq[Double], codes: Seq[Int],
                        nrm: Double): Double = {
@@ -410,6 +392,30 @@ object Similarity {
     var i = 0
     while (i < qv.length) { qn += qv(i) * qv(i); i += 1 }
     if (nrm == 0.0 || qn == 0.0) 0.0 else s / (math.sqrt(qn) * nrm)
+  }
+
+  /** [[adcScore]] over broadcast codebooks: (qv, codes, norm) → score. */
+  private def adc(q: Bq) = {
+    val subLen = q.value.codebooks(0)(0).length
+    udf { (qv: Seq[Double], codes: Seq[Int], nrm: Double) =>
+      adcScore(q.value.codebooks, subLen, qv, codes, nrm)
+    }
+  }
+
+  /** A code row's reconstruction concat(codebook_j[code_j]) — the best
+    * vector the index can represent for it. */
+  private def recon(q: Bq) = {
+    val subLen = q.value.codebooks(0)(0).length
+    udf { (codes: Seq[Int]) =>
+      val out = new Array[Double](codes.length * subLen)
+      var j = 0
+      while (j < codes.length) {
+        System.arraycopy(q.value.codebooks(j)(codes(j)), 0, out,
+          j * subLen, subLen)
+        j += 1
+      }
+      out.toSeq
+    }
   }
 
   /** Appended ids must WIDEN into the index's id type: Spark's default
@@ -463,358 +469,417 @@ object Similarity {
     (codes, math.sqrt(nrm))
   }
 
-  def ivfBuild(corpus: DataFrame, dir: String, nList: Int = 16,
-               seed: Long = 7L, kmeansMaxIter: Int = 20): Unit = {
+  /** Trained quantizers: the coarse centers and, for PQ, the (j)(c)
+    * codebook grid (empty for Flat) — nList · dim plus
+    * m · nCodes · subLen doubles, broadcast-class by construction. */
+  private final case class Quantizers(
+      centers: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]] = Array.empty)
+
+  private type Bq = org.apache.spark.broadcast.Broadcast[Quantizers]
+
+  /** The list payload: everything IVF-Flat and IVF-PQ differ in. The
+    * step bodies never ask which layout they serve. */
+  private sealed abstract class Lists(val op: String, val table: String) {
+    /** The columns written after `list` and `id`. */
+    def payload: Seq[String]
+    /** The quantizer tables, in the order a refit flips them. */
+    def quantizerTables: Seq[String]
+    def saveQuantizers(spark: SparkSession, q: Quantizers, dir: String): Unit
+    def loadQuantizers(spark: SparkSession,
+                       snap: Manifest.Snapshot): Quantizers
+    /** The PQ (m, nCodes) a refit fits again, read from the index. */
+    def shapeAt(spark: SparkSession,
+                snap: Manifest.Snapshot): Option[(Int, Int)]
+    /** (id, v) rows → (list, id, payload…). */
+    def encode(q: Bq, rows: DataFrame): DataFrame
+    /** Probed candidates (list, id, payload…, qid, qv) → per-query
+      * top-k by exact cosine ([[topK]]'s shape). */
+    def score(q: Bq, cands: DataFrame, queries: DataFrame,
+              k: Int): DataFrame
+    /** The live (id, v) vectors: the exact side of recall and of the
+      * nProbe ladder. */
+    def vectors(spark: SparkSession, snap: Manifest.Snapshot): DataFrame
+    /** The (id, v) rows a refit trains on and encodes. */
+    def refitRows(spark: SparkSession, snap: Manifest.Snapshot): DataFrame =
+      vectors(spark, snap)
+    /** The vector a stored row stands for: drift's base side. */
+    def stored(q: Bq): Column
+    /** The knob that bounds recall even when every list is probed, with
+      * its value; None where probe-all is exact. */
+    def probeAllLimit: Option[(String, Int)]
+  }
+
+  /** IVF-Flat: `postings(list, id, v)`, the vector itself as payload. */
+  private case object Flat extends Lists("ivf", "postings") {
+    val payload = Seq("v")
+    val quantizerTables = Seq("centroids")
+    def saveQuantizers(spark: SparkSession, q: Quantizers,
+                       dir: String): Unit =
+      writeCentroids(spark, q.centers, dir)
+    def loadQuantizers(spark: SparkSession,
+                       snap: Manifest.Snapshot): Quantizers =
+      Quantizers(loadCentroids(spark, snap.path("centroids")))
+    def shapeAt(spark: SparkSession,
+                snap: Manifest.Snapshot): Option[(Int, Int)] = None
+    def encode(q: Bq, rows: DataFrame): DataFrame =
+      rows.select(listOf(q, col("v")).as("list"), col("id"), col("v"))
+    def score(q: Bq, cands: DataFrame, queries: DataFrame,
+              k: Int): DataFrame =
+      cosineTopK(cands, k)
+    def vectors(spark: SparkSession, snap: Manifest.Snapshot): DataFrame =
+      liveRows(spark, snap, table).select(col("id"), col("v"))
+    // replayed appends land identical rows: a refit folds them first
+    override def refitRows(spark: SparkSession,
+                           snap: Manifest.Snapshot): DataFrame =
+      Lifecycle.replayFolded(spark, snap, liveRows(spark, snap, table))
+        .select(col("id"), col("v"))
+    def stored(q: Bq): Column = col("v").cast("array<double>")
+    val probeAllLimit: Option[(String, Int)] = None
+  }
+
+  /** IVF-PQ: `codes(list, id, codes, norm)` plus `codebooks(j, c,
+    * center)` — m byte-scale codes and one norm per vector, ~100×
+    * smaller than the vectors. Codes cannot reconstruct a vector, so
+    * the exact rescoring, the exact side and a refit read the embedding
+    * `store` (id, v); steps that need none of them pass None. Scoring
+    * is asymmetric-distance over the codes ([[adcScore]]), a bounded
+    * heap of `refineK` candidates per query, then exact cosine over
+    * those ≤ |queries|·refineK ids joined back from the store. */
+  private final case class Pq(store: Option[DataFrame] = None,
+                              refineK: Int = 0)
+      extends Lists("ivfPq", "codes") {
+    private def embeddings: DataFrame = store.getOrElse(
+      throw new IllegalArgumentException("an IVF-PQ refit, rescoring or " +
+        "exact side needs the embedding store (corpus) — codes cannot " +
+        "reconstruct vectors"))
+    val payload = Seq("codes", "norm")
+    val quantizerTables = Seq("centroids", "codebooks")
+    def saveQuantizers(spark: SparkSession, q: Quantizers,
+                       dir: String): Unit = {
+      import spark.implicits._
+      writeCentroids(spark, q.centers, dir)
+      q.codebooks.zipWithIndex.flatMap { case (cb, j) =>
+        cb.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
+      }.toSeq.toDF("j", "c", "center")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/codebooks.parquet")
+    }
+    def loadQuantizers(spark: SparkSession,
+                       snap: Manifest.Snapshot): Quantizers =
+      Quantizers(loadCentroids(spark, snap.path("centroids")),
+        loadCodebooks(spark, snap.path("codebooks")))
+    def shapeAt(spark: SparkSession,
+                snap: Manifest.Snapshot): Option[(Int, Int)] = {
+      val cb = loadCodebooks(spark, snap.path("codebooks"))
+      Some((cb.length, cb(0).length))
+    }
+    def encode(q: Bq, rows: DataFrame): DataFrame =
+      rows.select(col("id"), listAndCodes(q, col("v")))
+        .select(col("e._1").as("list"), col("id"), col("e._2").as("codes"),
+          col("e._3").as("norm"))
+    def score(q: Bq, cands: DataFrame, queries: DataFrame,
+              k: Int): DataFrame = {
+      val approxTop = cands
+        .select(col("qid"), col("id"),
+          adc(q)(col("qv").cast("array<double>"), col("codes"), col("norm"))
+            .as("approx"))
+        .groupBy("qid")
+        .agg(AggFunctions.collectTopK(
+          struct((-col("approx")).as("na"), col("id")), refineK,
+          smallest = true).as("_top"))
+        .select(col("qid"), explode(col("_top")).as("c"))
+        .select(col("qid"), col("c.id").as("id"))
+      cosineTopK(approxTop.join(embeddings, Seq("id"))
+        .join(broadcast(queries), Seq("qid")), k)
+    }
+    def vectors(spark: SparkSession, snap: Manifest.Snapshot): DataFrame =
+      Tombstones.live(spark, snap, embeddings)
+    // the reconstruction folds both decay modes into one number: coarse
+    // drift (vectors far from their list) and codebook staleness
+    // (vectors the codebooks no longer represent)
+    def stored(q: Bq): Column = recon(q)(col("codes"))
+    // lossy candidate ordering at a finite refineK can keep a true
+    // neighbor out of the refine set however many lists are probed
+    def probeAllLimit = Some("refineK" -> refineK)
+  }
+
+  /** The list layout of the index at `snap` ([[sniffFamily]]'s answer);
+    * `store` is the PQ embedding store, when the caller has one. */
+  private def listsAt(spark: SparkSession, snap: Manifest.Snapshot,
+                      store: Option[DataFrame]): Lists =
+    if (sniffFamily(spark, snap)._1 == "ivf_pq") Pq(store) else Flat
+
+  /** The live rows of an index table: pending tombstones anti-joined
+    * out. */
+  private def liveRows(spark: SparkSession, snap: Manifest.Snapshot,
+                       table: String): DataFrame =
+    Tombstones.live(spark, snap, spark.read.parquet(snap.path(table)))
+
+  /** The in-memory probe: encode the whole corpus under freshly fit
+    * quantizers, join each list's members to the queries probing it,
+    * score. Corpus side = one encode pass + one shuffle on list id. */
+  private def probe(lists: Lists, queries: DataFrame, corpus: DataFrame,
+                    k: Int, nProbe: Int, quantizers: Quantizers)
+  : DataFrame = {
+    val q = corpus.sparkSession.sparkContext.broadcast(quantizers)
+    lists.score(q, lists.encode(q, corpus)
+      .join(broadcast(probeLists(q, queries, nProbe)), Seq("list")),
+      queries, k)
+  }
+
+  /** Build: the quantizer tables, then every vector encoded into the
+    * list table PARTITIONED BY list — each list its own directory, one
+    * coherent file set (repartitioned by list, not a per-task fragment
+    * spray), so a probe of `nProbe` lists reads only those directories. */
+  private def build(lists: Lists, corpus: DataFrame, dir: String,
+                    quantizers: Quantizers): Unit = {
     val spark = corpus.sparkSession
-    val cents = fitQuantizers("ivfBuild", corpus, nList, seed,
-      kmeansMaxIter)._1
-    writeCentroids(spark, cents, dir)
-    corpus.select(listOf(spark.sparkContext.broadcast(cents), col("v"))
-        .as("list"), col("id"), col("v"))
+    lists.saveQuantizers(spark, quantizers, dir)
+    lists.encode(spark.sparkContext.broadcast(quantizers), corpus)
       .repartition(col("list"))
       .write.mode("overwrite").partitionBy("list")
-      .parquet(s"$dir/postings.parquet")
+      .parquet(s"$dir/${lists.table}.parquet")
     // a fresh in-place build supersedes any prior compaction history:
     // clear stale manifests/versions so readers resolve the new tables
     Manifest.reset(spark, dir)
   }
 
-  /** Append a delta batch to a persisted [[ivfBuild]] index WITHOUT
-    * refitting: the batch assigns to the EXISTING coarse centroids
-    * (bounded broadcast) and its postings land as NEW files inside each
-    * list's partition directory (`mode("append")` + `partitionBy` only
-    * touches the lists the batch hits). This is the daily-growth
-    * workflow at corpus scale — a refit is a training job over the
-    * whole corpus, an append is one scan of the delta. The documented
-    * trade: coarse centroids drift as the distribution moves, so probe
-    * recall decays until a rebuild; probe-all correctness (the oracle
-    * gate) is unaffected because every vector lands in exactly one
-    * list whatever the assignment. */
-  def ivfAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
-                batch: DataFrame,
-                batchId: Option[String] = None): Unit =
-    // writer lock for the WHOLE drop, snapshot taken inside it: an
-    // append racing a compaction would otherwise land its files in the
-    // superseded physical directory after the compactor's read — rows
-    // silently lost at the manifest flip (and GC'd with the old dir)
+  /** Append without refit: the batch encodes under the index's EXISTING
+    * quantizers and lands as new files in the hit lists' directories.
+    * The writer lock spans the whole drop, snapshot taken inside it: an
+    * append racing a compaction would otherwise land its files in the
+    * superseded directory after the compactor's read — rows silently
+    * lost at the manifest flip. */
+  private def append(lists: Lists, spark: SparkSession, dir: String,
+                     batch: DataFrame, batchId: Option[String]): Unit =
     Lifecycle.append(spark, dir, batchId) { snap =>
-      val postingsPath = snap.path("postings")
-      val bc = spark.sparkContext.broadcast(
-        loadCentroids(spark, snap.path("centroids")))
+      val path = snap.path(lists.table)
+      val q = spark.sparkContext.broadcast(lists.loadQuantizers(spark, snap))
       // coerce the batch to the EXISTING index's column types: an
       // append that silently mixes (say) float and double data files
       // under one directory corrupts every later probe's scan
-      val existing = spark.read.parquet(postingsPath).schema
-      requireIdWidens(batch.schema("id").dataType, existing("id").dataType)
-      batch
-        .select(listOf(bc, col("v")).as("list"),
-          col("id").cast(existing("id").dataType),
-          col("v").cast(existing("v").dataType))
+      val existing = spark.read.parquet(path).schema
+      val idType = existing("id").dataType
+      requireIdWidens(batch.schema("id").dataType, idType)
+      lists.encode(q, batch)
+        .select(col("list") +: ("id" +: lists.payload).map(c =>
+          col(c).cast(existing(c).dataType)): _*)
         .repartition(col("list"))
         .write.mode("append").partitionBy("list")
-        .parquet(postingsPath)
-      batch.select(col("id").cast(existing("id").dataType).as("id"))
+        .parquet(path)
+      batch.select(col("id").cast(idType).as("id"))
     }
 
-  /** Probe a persisted [[ivfBuild]] index: centroids load as one
-    * bounded collect (nList · dim doubles — broadcast-class by
-    * construction), each query explodes into its `nProbe` nearest
-    * lists, and the postings scan carries a LITERAL `list IN (...)`
-    * partition filter — the union of probed lists, at most nList
-    * values, computed driver-side from the broadcast-class query
-    * batch — so unprobed list directories are pruned STATICALLY at
-    * planning time (never read from storage), rather than hoping the
-    * runtime join or DPP filters them. Same semantics as [[ivf]] with
-    * the fit amortized away. */
-  def ivfQuery(spark: org.apache.spark.sql.SparkSession, dir: String,
-               queries: DataFrame, k: Int, nProbe: Int = 2): DataFrame = {
+  /** The persisted probe: quantizers load as bounded collects, each
+    * query explodes into its `nProbe` nearest lists, and the list-table
+    * scan carries a LITERAL `list IN (...)` partition filter — the
+    * union of probed lists, computed driver-side from the
+    * broadcast-class query batch — so unprobed list directories are
+    * pruned STATICALLY at planning time (never read from storage),
+    * rather than hoping the runtime join or DPP filters them. */
+  private def query(lists: Lists, spark: SparkSession, dir: String,
+                    queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val bc = spark.sparkContext.broadcast(
-      loadCentroids(spark, snap.path("centroids")))
-    val probeLists = udf { (qv: Seq[Double]) =>
-      probeIdx(bc.value, qv, nProbe)
-    }
-    // MATERIALIZE the exploded query batch (broadcast-class:
-    // |queries|·nProbe rows) before deriving the partition filter: the
-    // filter is collected from one execution of this plan and the join
-    // below re-executes it — a nondeterministic `queries` (sample(),
-    // unordered limit) could otherwise probe lists the static filter
-    // already excluded, silently dropping candidates. Collect-and-
-    // recreate (the annIndexGate convention) rather than
-    // localCheckpoint: nothing stays pinned in the block manager across
-    // repeated probe calls
-    val q = materialize(spark,
-      queries.select(col("qid"), col("qv"),
-        explode(probeLists(col("qv").cast("array<double>"))).as("list")))
-    // distinct probed lists: ≤ nList ints — one tiny job over the
-    // query batch buys a static PartitionFilter on the postings scan
-    val probed = q.select(col("list")).distinct()
+    val q = spark.sparkContext.broadcast(lists.loadQuantizers(spark, snap))
+    // MATERIALIZE the exploded query batch (|queries|·nProbe rows)
+    // before deriving the partition filter: the filter is collected
+    // from one execution of this plan and the join below re-executes
+    // it — a nondeterministic `queries` (sample(), unordered limit)
+    // could otherwise probe lists the static filter already excluded
+    val probed = materialize(spark, probeLists(q, queries, nProbe))
+    val hit = probed.select(col("list")).distinct()
       .collect().map(_.getInt(0)).sorted
     // tombstone filter AFTER the static partition prune: retracted ids
     // vanish from results immediately, and the anti-join only sees the
     // probed lists' rows
-    val postings = Tombstones.live(spark, snap,
-      spark.read.parquet(snap.path("postings"))
-        .where(col("list").isin(probed.map(Int.box): _*)))
-    topK(postings.join(broadcast(q), Seq("list"))
-      .select(col("qid"), col("id"),
-        V.cosine(col("qv"), col("v")).as("cosine")), k)
+    val rows = Tombstones.live(spark, snap,
+      spark.read.parquet(snap.path(lists.table))
+        .where(col("list").isin(hit.map(Int.box): _*)))
+    lists.score(q, rows.join(broadcast(probed), Seq("list")), queries, k)
   }
 
-  /** Retract vectors from a persisted [[ivfBuild]] /  [[ivfPqBuild]]
-    * index ([[Tombstones]] — the erasure verb the
-    * build/append/probe/compact lifecycle otherwise lacks): the ids
-    * stop appearing in [[ivfQuery]]/[[ivfPqQuery]] results immediately
-    * (stored-side anti-join, applied after the partition prune) and
-    * their postings/codes rows are physically dropped by the next
-    * [[ivfCompact]]/[[ivfPqCompact]]/rebuild. Works for both layouts —
-    * the tombstone table is keyed by id alone. */
-  def ivfDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
-                ids: DataFrame, idCol: String = "id"): Unit = {
-    val snap = Manifest.snapshot(spark, dir)
-    Tombstones.retractIds(spark, snap, sniffFamily(spark, snap)._2, ids,
-      idCol)
-  }
-
-  /** Build and PERSIST an IVF-PQ index — [[ivfBuild]]'s layout with the
-    * postings product-quantized: what lands on disk is the COMPRESSED
-    * corpus (m byte-scale codes + one norm per vector, ~100× smaller
-    * than the embeddings), partitioned by inverted list. At 100 TB this
-    * is the index you actually ship: the ANN scan reads pruned
-    * directories of codes; the original vectors stay in the embedding
-    * store and are fetched by id only for the ≤ |queries|·refineK
-    * refine join. Writes under `dir`:
-    *   - `centroids.parquet`: (list, center) — the coarse quantizer;
-    *   - `codebooks.parquet`: (j, c, center) — m·nCodes sub-centroids;
-    *   - `codes.parquet`: (id, codes, norm) PARTITIONED BY list.
-    * Training is [[ivfPq]]'s: coarse centroids and sub-codebooks from
-    * one [[fitQuantizers]] sample. */
-  def ivfPqBuild(corpus: DataFrame, dir: String, nList: Int = 16,
-                 m: Int = 4, nCodes: Int = 16, trainFraction: Double = 1.0,
-                 seed: Long = 7L, kmeansMaxIter: Int = 20): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val (cents, codebooks) = fitQuantizers("ivfPqBuild", corpus, nList,
-      seed, kmeansMaxIter, trainFraction, Some((m, nCodes)))
-    writeCentroids(spark, cents, dir)
-    codebooks.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
-    }.toSeq.toDF("j", "c", "center")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/codebooks.parquet")
-    val sc = spark.sparkContext
-    corpus.select(col("id"), listAndCodes(sc.broadcast(cents),
-        sc.broadcast(codebooks), col("v")))
-      .select(col("e._1").as("list"), col("id"), col("e._2").as("codes"),
-        col("e._3").as("norm"))
-      .repartition(col("list"))
-      .write.mode("overwrite").partitionBy("list")
-      .parquet(s"$dir/codes.parquet")
-    // see ivfBuild: fresh in-place build invalidates compaction history
-    Manifest.reset(spark, dir)
-  }
-
-  /** Append a delta batch to a persisted [[ivfPqBuild]] index WITHOUT
-    * refitting ([[ivfAppend]]'s workflow for the compressed layout):
-    * the batch assigns to the EXISTING coarse centroids and encodes
-    * against the EXISTING codebooks (both bounded broadcasts), and its
-    * codes land as new files in the hit lists' partition directories.
-    * Same drift trade as [[ivfAppend]], plus quantization error grows
-    * if the new vectors leave the codebooks' trained region — probe-all
-    * + refine-all correctness is unaffected (codes only order
-    * candidates; the exact rescoring decides). */
-  def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  batch: DataFrame,
-                  batchId: Option[String] = None): Unit =
-    // [[ivfAppend]]'s writer lock, same rationale
-    Lifecycle.append(spark, dir, batchId) { snap =>
-      val codesPath = snap.path("codes")
-      val bcC = spark.sparkContext.broadcast(
-        loadCentroids(spark, snap.path("centroids")))
-      val bcCb = spark.sparkContext.broadcast(
-        loadCodebooks(spark, snap.path("codebooks")))
-      // [[ivfAppend]]'s schema coercion: the appended files must carry
-      // the EXISTING index's column types
-      val existing = spark.read.parquet(codesPath).schema
-      requireIdWidens(batch.schema("id").dataType, existing("id").dataType)
-      batch
-        .select(col("id").cast(existing("id").dataType),
-          listAndCodes(bcC, bcCb, col("v")))
-        .select(col("e._1").as("list"), col("id"), col("e._2").as("codes"),
-          col("e._3").as("norm"))
-        .repartition(col("list"))
-        .write.mode("append").partitionBy("list")
-        .parquet(codesPath)
-      batch.select(col("id").cast(existing("id").dataType).as("id"))
-    }
-
-  /** Probe a persisted [[ivfPqBuild]] index. Centroids and codebooks
-    * load as bounded collects (coarse nList·dim + m·nCodes·subLen
-    * doubles — broadcast-class by construction); the codes scan carries
-    * the [[ivfQuery]] literal `list IN (...)` partition filter so
-    * unprobed directories never leave storage; asymmetric-distance
-    * scoring runs over CODES (the ~100× smaller table), a bounded heap
-    * keeps refineK candidates per query, and only those ids fetch their
-    * original vectors from `corpus` for the exact rescoring. With
-    * nProbe = nList and refineK ≥ |corpus| the result equals brute
-    * force (the oracle gate); production settings are recall-gated. */
-  def ivfPqQuery(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 queries: DataFrame, corpus: DataFrame, k: Int,
-                 nProbe: Int = 2, refineK: Int = 50): DataFrame = {
-    val snap = Manifest.snapshot(spark, dir)
-    val codebooks = loadCodebooks(spark, snap.path("codebooks"))
-    val subLen = codebooks(0)(0).length
-    val bcC = spark.sparkContext.broadcast(
-      loadCentroids(spark, snap.path("centroids")))
-    val bcCb = spark.sparkContext.broadcast(codebooks)
-    val probeLists = udf { (qv: Seq[Double]) =>
-      probeIdx(bcC.value, qv, nProbe)
-    }
-    val adc = udf { (qv: Seq[Double], codes: Seq[Int], nrm: Double) =>
-      adcScore(bcCb.value, subLen, qv, codes, nrm)
-    }
-    // materialized before the filter collect for the same
-    // consistency-under-nondeterminism reason as [[ivfQuery]]
-    val q = materialize(spark, queries.select(col("qid"),
-      col("qv").cast("array<double>").as("qd"),
-      explode(probeLists(col("qv").cast("array<double>"))).as("list")))
-    val probed = q.select(col("list")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val codes = Tombstones.live(spark, snap,
-      spark.read.parquet(snap.path("codes"))
-        .where(col("list").isin(probed.map(Int.box): _*)))
-    val approxTop = codes.join(broadcast(q), Seq("list"))
-      .select(col("qid"), col("id"),
-        adc(col("qd"), col("codes"), col("norm")).as("approx"))
-      .groupBy("qid")
-      .agg(AggFunctions.collectTopK(
-        struct((-col("approx")).as("na"), col("id")), refineK,
-        smallest = true).as("_top"))
-      .select(col("qid"), explode(col("_top")).as("c"))
-      .select(col("qid"), col("c.id").as("id"))
-    topK(approxTop
-      .join(corpus, Seq("id"))
-      .join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col("id"),
-        V.cosine(col("qv"), col("v")).as("cosine")), k)
-  }
-
-  // ---- persisted-index lifecycle: compaction + recall monitoring ------
-  // every [[ivfAppend]]/[[ivfPqAppend]] writes NEW files into the hit
-  // lists' partition directories, so a daily-append index accumulates
-  // hundreds of small files per list (the classic small-file scan-cost
-  // cliff) while the un-refit centroids drift away from the data. These
-  // close the loop the append docstrings promise: a compactor that
-  // rewrites each list into sized files (optionally refitting — a
-  // rebuild), and a recall probe that MEASURES the drift so the rebuild
-  // is triggered by evidence, not a calendar. The versioned-directory
-  // [[Manifest]] (its own file — it is the shared substrate of every
-  // persisted index family in this package) keeps all of it reader-safe.
-
-  /** Compact a persisted [[ivfBuild]] index's postings: every list's
-    * accumulated append fragments are rewritten into ONE coherent file
-    * set per list (the same `repartition(list)` layout the build path
-    * writes), read once → write once → swap. With `rebuild = true` the
-    * whole index is refit from the stored postings — new coarse
-    * centroids (same nList, read from the centroid table) and fresh
-    * assignments — which is the answer to append-induced centroid
-    * drift; [[ivfRecallProbe]] tells you when that is worth a training
-    * pass. Probe-all semantics are invariant under both modes (every
-    * vector lands in exactly one list either way). */
-  def ivfCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 rebuild: Boolean = false, seed: Long = 7L,
-                 kmeansMaxIter: Int = 20,
-                 maxRecordsPerFile: Long = 0L): Unit =
-  // lock across the whole read→rewrite→flip span (not just the flip):
-  // an append landing between our postings read and the manifest flip
-  // would be dropped with the superseded directory
-  Lifecycle.rewrite(spark, dir,
-    scratch = if (rebuild) Some(s"$dir/_rebuild.tmp") else None) { snap =>
-    // pending Tombstones fold here, whichever mode: retracted rows are
-    // physically dropped from the rewrite and the emptied tombstone
-    // table flips in the same publish. The FULL-ROW distinct is the
-    // dedupe point for replayed/repaired appends (a crashed
-    // multi-family admission's `re_append` repair, or an at-least-once
-    // micro-batch retry, lands the SAME vectors again — identical
-    // (list, id, v) rows under the frozen centroids) — without it a
-    // duplicate id occupies multiple top-k slots forever, which is why
-    // [[CorpusPipeline.fleetIngestReconcile]]'s repair is only safe
-    // because every family's compaction folds duplicates. Full-row,
-    // not by-id: replayed rows are identical by construction, so they
-    // still fold, while two rows sharing an id but carrying DIFFERENT
-    // vectors (an upstream id collision) both survive LOUDLY instead
-    // of one being dropped nondeterministically. Gated on the ingest
-    // log's replay evidence: the common no-replay compaction stays a
-    // straight rewrite
-    val postings = Lifecycle.replayFolded(spark, snap,
-      Tombstones.live(spark, snap, spark.read.parquet(snap.path("postings"))))
-    if (rebuild) {
-      // full refit through the build path itself (one code path =
-      // layouts cannot diverge) into a sibling temp index, then ONE
-      // manifest flip for both tables — a concurrent reader never pairs
-      // new centroids with old list assignments
-      val nList = spark.read.parquet(snap.path("centroids"))
-        .count().toInt
-      val tmp = s"$dir/_rebuild.tmp"
-      ivfBuild(postings.select(col("id"), col("v")), tmp, nList,
-        seed, kmeansMaxIter)
-      Seq("centroids" -> s"$tmp/centroids.parquet",
-        "postings" -> s"$tmp/postings.parquet")
-    } else {
-      // keep assignments; just coalesce each list's file spray
-      val tmp = s"$dir/_compact.tmp.postings"
-      writeByList(postings.select(col("list"), col("id"), col("v")),
-        maxRecordsPerFile, tmp)
-      Seq("postings" -> tmp)
-    }
-  }
-
-  /** [[ivfCompact]] for the compressed [[ivfPqBuild]] layout: rewrite
-    * each list's accumulated code fragments into one file set per list.
-    * No in-place rebuild mode — the index stores codes, not vectors, so
-    * a refit needs the embedding store: that is [[ivfPqRebuild]]. */
-  def ivfPqCompact(spark: org.apache.spark.sql.SparkSession,
-                   dir: String, maxRecordsPerFile: Long = 0L): Unit =
-    // [[ivfCompact]]'s full-span writer lock, same rationale
+  /** Compaction: every list's accumulated append fragments rewritten
+    * into ONE file set per list, read once → write once → flip, under
+    * the writer lock across the whole span (an append landing between
+    * the read and the flip would be dropped with the superseded
+    * directory). Pending tombstones fold here: retracted rows are
+    * dropped and the emptied tombstone table flips in the same
+    * publish. The FULL-ROW distinct, gated on the ingest log's replay
+    * evidence, folds replayed/repaired appends (a crashed admission's
+    * `re_append` repair or an at-least-once micro-batch retry lands
+    * identical rows under the frozen quantizers) — which is why
+    * [[CorpusPipeline.fleetIngestReconcile]]'s repair is safe. Full-row,
+    * not by-id: two rows sharing an id but carrying DIFFERENT vectors
+    * (an upstream id collision) both survive LOUDLY instead of one
+    * being dropped nondeterministically. */
+  private def compact(lists: Lists, spark: SparkSession, dir: String,
+                      maxRecordsPerFile: Long): Unit =
     Lifecycle.rewrite(spark, dir) { snap =>
-      val tmp = s"$dir/_compact.tmp.codes"
-      // replayed/repaired appends land identical (list, id, codes,
-      // norm) rows — fold them by FULL-ROW distinct, gated on replay
-      // evidence (see [[ivfCompact]]: divergent same-id rows survive
-      // loudly; the no-replay path is a straight rewrite)
+      val tmp = s"$dir/_compact.tmp.${lists.table}"
       writeByList(Lifecycle.replayFolded(spark, snap,
-        Tombstones.live(spark, snap, spark.read.parquet(snap.path("codes")))
-          .select(col("list"), col("id"), col("codes"), col("norm"))),
+        liveRows(spark, snap, lists.table))
+        .select(("list" +: "id" +: lists.payload).map(col): _*),
         maxRecordsPerFile, tmp)
-      Seq("codes" -> tmp)
+      Seq(lists.table -> tmp)
     }
 
-  /** Reader-safe refit of a persisted [[ivfPqBuild]] index from the
-    * embedding store (`corpus` — the codes table cannot reconstruct
-    * vectors): [[ivfCompact]]'s rebuild mode for the compressed layout.
-    * Re-trains through `ivfPqBuild` itself into a sibling temp index
-    * (same nList/m/nCodes, read from the existing tables), then flips
-    * centroids, codebooks, and codes in ONE manifest publish — a
-    * concurrent reader sees the old index or the new one, never new
-    * centroids scoring old codes. */
-  def ivfPqRebuild(spark: org.apache.spark.sql.SparkSession, dir: String,
-                   corpus: DataFrame, trainFraction: Double = 1.0,
-                   seed: Long = 7L, kmeansMaxIter: Int = 20): Unit =
-    // [[ivfCompact]]'s full-span writer lock, same rationale
+  /** Refit: new quantizers (same nList and PQ shape, read from the
+    * index) trained and encoded through [[build]] itself into a sibling
+    * temp index, then ONE manifest flip for every table — a concurrent
+    * reader never pairs new centroids with old list assignments. The
+    * answer to append-induced drift; the rows exclude pending
+    * tombstones, so a refit cannot resurrect a deleted vector. */
+  private def refit(lists: Lists, spark: SparkSession, dir: String,
+                    seed: Long, kmeansMaxIter: Int,
+                    trainFraction: Double): Unit =
     Lifecycle.rewrite(spark, dir, scratch = Some(s"$dir/_rebuild.tmp")) {
       snap =>
+      val rows = lists.refitRows(spark, snap)
       val nList = spark.read.parquet(snap.path("centroids")).count().toInt
-      val cb = loadCodebooks(spark, snap.path("codebooks"))
       val tmp = s"$dir/_rebuild.tmp"
-      // fold pending Tombstones: the embedding store may still carry
-      // retracted ids — a rebuild that re-encoded them would silently
-      // resurrect deleted vectors
-      ivfPqBuild(Tombstones.live(spark, snap, corpus), tmp, nList,
-        cb.length, cb(0).length, trainFraction, seed, kmeansMaxIter)
-      Seq("centroids" -> s"$tmp/centroids.parquet",
-        "codebooks" -> s"$tmp/codebooks.parquet",
-        "codes" -> s"$tmp/codes.parquet")
+      build(lists, rows, tmp, fitQuantizers(s"${lists.op}Build", rows,
+        nList, seed, kmeansMaxIter, trainFraction,
+        lists.shapeAt(spark, snap)))
+      (lists.quantizerTables :+ lists.table).map(t =>
+        t -> s"$tmp/$t.parquet")
     }
+
+  /** Mean recall@k of the production probe against exact brute force
+    * over the live vectors — both sides see the same LIVE rows, so a
+    * tombstoned id is never counted as a miss. */
+  private def recall(lists: Lists, spark: SparkSession, dir: String,
+                     queries: DataFrame, k: Int, nProbe: Int): Double = {
+    val exact = bruteForce(queries,
+      lists.vectors(spark, Manifest.snapshot(spark, dir)), k)
+    recallOf(exact.select("qid", "id"),
+      query(lists, spark, dir, queries, k, nProbe).select("qid", "id"))
+  }
+
+  /** The nProbe ladder: the smallest of 1, 2, 4, … (capped at nList)
+    * whose recall meets `targetRecall`, with the exact side computed
+    * once over the live vectors. Where probe-all is exact the cap needs
+    * no measurement; otherwise the cap is measured too and a miss there
+    * is None (with a warning) — no budget is implied to meet a target
+    * it provably misses. */
+  private def suggestNProbe(lists: Lists, spark: SparkSession, dir: String,
+                            queries: DataFrame, k: Int,
+                            targetRecall: Double): Option[Int] = {
+    val snap = Manifest.snapshot(spark, dir)
+    val nList = spark.read.parquet(snap.path("centroids")).count().toInt
+    def pairs(df: DataFrame) = df.select("qid", "id").collect()
+      .map(r => (r.get(0), r.get(1))).toSet
+    val exact = pairs(bruteForce(queries, lists.vectors(spark, snap), k))
+    @annotation.tailrec def ladder(p: Int): Option[Int] =
+      (lists.probeAllLimit, p >= nList) match {
+        case (None, true) => Some(nList)
+        case (limit, atCap) =>
+          val recall = pairs(query(lists, spark, dir, queries, k, p))
+            .intersect(exact).size.toDouble / exact.size
+          if (recall >= targetRecall) Some(p)
+          else if (atCap) {
+            limit.foreach { case (knob, value) =>
+              org.slf4j.LoggerFactory.getLogger(Similarity.getClass).warn(
+                f"${lists.op}SuggestNProbe: target recall " +
+                  f"$targetRecall%.3f is unreachable at $knob=$value " +
+                  f"(probe-all measured $recall%.3f); raise $knob")
+            }
+            None
+          } else ladder(math.min(p * 2, nList))
+      }
+    if (exact.isEmpty) Some(1) else ladder(1)
+  }
+
+  /** The drift probe: mean cosine of (a bounded sample of) the stored
+    * rows to the centroid of the list each is filed under, against the
+    * incoming batch's mean cosine to its nearest centroid. */
+  private def drift(lists: Lists, spark: SparkSession, dir: String,
+                    batch: DataFrame, baseSampleMod: Long,
+                    maxBaseFiles: Int): DataFrame = {
+    val snap = Manifest.snapshot(spark, dir)
+    val cents = spark.read.parquet(snap.path("centroids"))
+      .select(col("list"), col("center"))
+    val q = spark.sparkContext.broadcast(lists.loadQuantizers(spark, snap))
+    def meanSim(rows: DataFrame, v: Column, name: String): DataFrame =
+      rows.join(broadcast(cents), Seq("list"))
+        .agg(avg(V.cosine(v, col("center"))).as(name))
+    val (stored, filesRead, filesTotal) =
+      sampledTableScan(spark, snap.path(lists.table), maxBaseFiles)
+    val base = meanSim(
+      stored.filter(pmod(xxhash64(col("id")), lit(baseSampleMod)) === 0),
+      lists.stored(q), "base_mean_sim")
+    val bat = meanSim(batch.select(listOf(q, col("v")).as("list"), col("v")),
+      col("v").cast("array<double>"), "batch_mean_sim")
+    base.crossJoin(bat).select(
+      lit(dir).as("dir"), lit(snap.version).as("version"),
+      col("base_mean_sim"), col("batch_mean_sim"),
+      (col("batch_mean_sim") / col("base_mean_sim")).as("drift_ratio"),
+      lit(filesRead).as("base_files_read"),
+      lit(filesTotal).as("base_files_total"))
+  }
+
+  /** Continuous ingest: each non-empty micro-batch is an [[append]]. */
+  private def ingest(lists: Lists, stream: DataFrame, dir: String,
+                     checkpoint: String)
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    Lifecycle.ingest(stream, checkpoint)(b =>
+      append(lists, b.sparkSession, dir, b, None))
+
+  /** The health row with a recall reading (and, when asked, the
+    * ladder's budget — NULL when unreachable, never a budget that
+    * misses the target). */
+  private def health(lists: Lists, spark: SparkSession, dir: String,
+                     queries: DataFrame, k: Int, nProbe: Int,
+                     suggestTargetRecall: Option[Double]): DataFrame =
+    indexHealth(spark, dir, lists.table, Manifest.snapshot(spark, dir),
+      Some(k), Some(nProbe),
+      Some(recall(lists, spark, dir, queries, k, nProbe)),
+      suggestTargetRecall.flatMap(t =>
+        suggestNProbe(lists, spark, dir, queries, k, t)))
+
+  private def indexHealth(spark: SparkSession,
+                          dir: String, table: String,
+                          snap: Manifest.Snapshot, k: Option[Int],
+                          nProbe: Option[Int],
+                          recall: Option[Double],
+                          suggested: Option[Int]): DataFrame = {
+    import spark.implicits._
+    // lists the INDEX has (from the quantizer, so an empty list still
+    // counts — k-means can leave clusters unpopulated)
+    val nLists = spark.read.parquet(snap.path("centroids")).count().toInt
+    // rows per list: one aggregate over the postings/codes scan —
+    // bounded output (nList rows)
+    val rowsPerList = spark.read.parquet(snap.path(table))
+      .groupBy("list").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    // files per list: one FS listing of the partition directories
+    val tableP = new org.apache.hadoop.fs.Path(snap.path(table))
+    val filesPerList = Manifest.fs(spark, snap.path(table))
+      .listStatus(tableP).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("list="))
+      .map { s =>
+        s.getPath.getName.stripPrefix("list=").toInt ->
+          Lifecycle.fragments(spark, s.getPath.toString).toInt
+      }.toMap
+    val totalRows = rowsPerList.values.sum
+    val meanRows = if (nLists == 0) 0.0 else totalRows.toDouble / nLists
+    // pending-tombstone and ingest-batch counts in ONE job (zero when
+    // neither table exists) instead of two driver count jobs per
+    // reading ([[OpsStats]])
+    val (pendingN, ingestN) = OpsStats.counts(spark, snap)
+    Seq((dir, snap.version, nLists, nLists - rowsPerList.size, totalRows,
+      filesPerList.values.sum.toLong,
+      if (filesPerList.isEmpty) 0 else filesPerList.values.max,
+      if (rowsPerList.isEmpty) 0L else rowsPerList.values.max,
+      meanRows,
+      if (meanRows == 0.0) 0.0 else rowsPerList.values.max / meanRows,
+      recall, k, nProbe, suggested,
+      pendingN, ingestN))
+      .toDF("dir", "version", "n_lists", "empty_lists", "total_rows",
+        "total_files", "max_files_per_list", "max_rows_per_list",
+        "mean_rows_per_list", "row_skew", "recall_at_k", "k", "n_probe",
+        "suggested_n_probe", "deleted_pending", "ingest_batches")
+  }
 
   /** Compaction repartitioning: one shuffle partition per list by
     * default; with a records-per-file target also SALT the hot lists so
@@ -850,29 +915,6 @@ object Similarity {
      else w).parquet(path)
   }
 
-  /** Mean recall@k of the PRODUCTION probe (persisted index, partial
-    * nProbe) against exact brute force over the index's own postings,
-    * on a bounded query sample — the drift monitor that decides when
-    * [[ivfCompact]]'s rebuild is due. Both sides are ≤ |queries|·k rows
-    * (bounded-heap top-k), so the comparison is driver-cheap at any
-    * corpus size; the cost is one postings scan for the brute-force
-    * side, which is why the probe runs on a SAMPLE of queries on a
-    * schedule, not per batch. Ties are deterministic on both sides
-    * (cosine desc, id asc), so the hit-set comparison is exact. */
-  def ivfRecallProbe(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, queries: DataFrame, k: Int,
-                     nProbe: Int): Double = {
-    val snap = Manifest.snapshot(spark, dir)
-    // the brute-force side must see the same LIVE rows as the probe —
-    // an un-filtered exact side would count tombstoned ids as misses
-    val corpus = Tombstones.live(spark, snap,
-      spark.read.parquet(snap.path("postings")))
-      .select(col("id"), col("v"))
-    val exact = bruteForce(queries, corpus, k).select("qid", "id")
-    val got = ivfQuery(spark, dir, queries, k, nProbe).select("qid", "id")
-    recallOf(exact, got)
-  }
-
   /** recall = |got ∩ exact| / |exact| in ONE action: the two counts
     * used to be separate `exact.count()` + `intersect().count()` jobs,
     * re-executing the brute-force subtree twice per probe. Both sides
@@ -893,19 +935,6 @@ object Similarity {
     else (if (r.isNullAt(1)) 0L else r.getLong(1)).toDouble / denom
   }
 
-  /** [[ivfRecallProbe]] for a persisted [[ivfPqBuild]] index: the
-    * brute-force side reads the original vectors from `corpus` (the
-    * codes table cannot reconstruct them), the probe side runs the
-    * production partial-probe + bounded-refine path. */
-  def ivfPqRecallProbe(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, queries: DataFrame, corpus: DataFrame,
-                       k: Int, nProbe: Int, refineK: Int): Double = {
-    val exact = bruteForce(queries, corpus, k).select("qid", "id")
-    val got = ivfPqQuery(spark, dir, queries, corpus, k, nProbe, refineK)
-      .select("qid", "id")
-    recallOf(exact, got)
-  }
-
   /** Deterministic bounded-IO scan of a stored table: when the table
     * holds more than `maxFiles` parquet files, read only a
     * deterministic `maxFiles`-file subset (ranked by a hash of each
@@ -916,7 +945,7 @@ object Similarity {
     * bounds the IO itself. Returns the frame plus (filesRead,
     * filesTotal) so callers can report the touched fraction. */
   private[operators] def sampledTableScan(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+      spark: SparkSession, path: String,
       maxFiles: Int): (DataFrame, Long, Long) = {
     val files = Lifecycle.parquetFiles(spark, path, recursive = true)
       .map(_.getPath.toString)
@@ -937,6 +966,190 @@ object Similarity {
         maxFiles.toLong, files.length.toLong)
     }
   }
+  // ---- the public IVF-Flat / IVF-PQ verbs: one-expression forwards ----
+
+  /** IVF-Flat ANN: a k-means coarse quantizer ([[fitQuantizers]]'s
+    * local fit on a bounded sample) assigns every corpus vector to its
+    * nearest of `nList` centroids; queries probe the `nProbe` nearest
+    * inverted lists and score only those lists' members. The classic IVF
+    * trade-off: centroids adapt to the data distribution (vs.
+    * data-oblivious LSH hyperplanes), at the cost of a training pass.
+    * Corpus side = one sample collect + one shuffle on list id;
+    * centroids (nList · dim doubles) broadcast. */
+  def ivf(queries: DataFrame, corpus: DataFrame, k: Int,
+          nList: Int = 16, nProbe: Int = 2, seed: Long = 7L,
+          kmeansMaxIter: Int = 20): DataFrame =
+    probe(Flat, queries, corpus, k, nProbe,
+      fitQuantizers("ivf", corpus, nList, seed, kmeansMaxIter))
+
+  /** IVF-PQ ANN: IVF coarse pruning + product-quantized candidate
+    * scoring + exact refinement ([[Pq]]). Codebooks are `m` independent
+    * k-means fits over subvector slices, trained with the coarse
+    * centers on one bounded sample ([[fitQuantizers]]). The top
+    * `refineK` candidates per query are re-scored EXACTLY by joining
+    * the original vectors back by id — a join whose left side is
+    * ≤ |queries|·refineK rows, independent of corpus size. With
+    * nProbe = nList and refineK ≥ |corpus| the result is exactly brute
+    * force (the driver's oracle gate for the plumbing); production
+    * settings are gated by the recall spec. */
+  def ivfPq(queries: DataFrame, corpus: DataFrame, k: Int,
+            nList: Int = 16, nProbe: Int = 2, m: Int = 4, nCodes: Int = 16,
+            refineK: Int = 50, trainFraction: Double = 1.0,
+            seed: Long = 7L, kmeansMaxIter: Int = 20): DataFrame =
+    probe(Pq(Some(corpus), refineK), queries, corpus, k, nProbe,
+      fitQuantizers("ivfPq", corpus, nList, seed, kmeansMaxIter,
+        trainFraction, Some((m, nCodes))))
+
+  /** Build and PERSIST an IVF-Flat index — the production workflow at
+    * corpus scale: the k-means fit and list assignment run ONCE and the
+    * index is reused across query batches, never refit per query.
+    * Writes two tables under `dir`:
+    *   - `centroids.parquet`: (list, center) — nList rows, the coarse
+    *     quantizer;
+    *   - `postings.parquet`: (id, v) PARTITIONED BY list — each
+    *     inverted list is its own partition directory, so a probe that
+    *     touches `nProbe` lists READS only those directories (storage
+    *     partition pruning, the IVF promise made physical: at 100 TB
+    *     the unprobed lists never leave object storage). */
+  def ivfBuild(corpus: DataFrame, dir: String, nList: Int = 16,
+               seed: Long = 7L, kmeansMaxIter: Int = 20): Unit =
+    build(Flat, corpus, dir,
+      fitQuantizers("ivfBuild", corpus, nList, seed, kmeansMaxIter))
+
+  /** Build and PERSIST an IVF-PQ index — [[ivfBuild]]'s layout with the
+    * postings product-quantized: what lands on disk is the COMPRESSED
+    * corpus, partitioned by inverted list. At 100 TB this is the index
+    * you actually ship: the ANN scan reads pruned directories of codes;
+    * the original vectors stay in the embedding store and are fetched
+    * by id only for the ≤ |queries|·refineK refine join. Writes under
+    * `dir`:
+    *   - `centroids.parquet`: (list, center) — the coarse quantizer;
+    *   - `codebooks.parquet`: (j, c, center) — m·nCodes sub-centroids;
+    *   - `codes.parquet`: (id, codes, norm) PARTITIONED BY list.
+    * Training is [[ivfPq]]'s. */
+  def ivfPqBuild(corpus: DataFrame, dir: String, nList: Int = 16,
+                 m: Int = 4, nCodes: Int = 16, trainFraction: Double = 1.0,
+                 seed: Long = 7L, kmeansMaxIter: Int = 20): Unit =
+    build(Pq(), corpus, dir, fitQuantizers("ivfPqBuild", corpus, nList,
+      seed, kmeansMaxIter, trainFraction, Some((m, nCodes))))
+
+  /** Append a delta batch to a persisted [[ivfBuild]] / [[ivfPqBuild]]
+    * index WITHOUT refitting: the batch assigns to the EXISTING coarse
+    * centroids (and, for PQ, encodes against the EXISTING codebooks —
+    * bounded broadcasts) and lands as NEW files inside each hit list's
+    * partition directory. This is the daily-growth workflow at corpus
+    * scale — a refit is a training job over the whole corpus, an
+    * append is one scan of the delta. The documented trade: centroids
+    * drift (and PQ quantization error grows) as the distribution moves,
+    * so probe recall decays until a rebuild; probe-all correctness (the
+    * oracle gate) is unaffected because every vector lands in exactly
+    * one list whatever the assignment, and PQ codes only order
+    * candidates — the exact rescoring decides. */
+  def ivfAppend(spark: SparkSession, dir: String, batch: DataFrame,
+                batchId: Option[String] = None): Unit =
+    append(Flat, spark, dir, batch, batchId)
+
+  /** [[ivfAppend]] for the compressed [[ivfPqBuild]] layout. */
+  def ivfPqAppend(spark: SparkSession, dir: String, batch: DataFrame,
+                  batchId: Option[String] = None): Unit =
+    append(Pq(), spark, dir, batch, batchId)
+
+  /** Probe a persisted [[ivfBuild]] index: [[ivf]]'s semantics with the
+    * fit amortized away, and a statically pruned postings scan. */
+  def ivfQuery(spark: SparkSession, dir: String,
+               queries: DataFrame, k: Int, nProbe: Int = 2): DataFrame =
+    query(Flat, spark, dir, queries, k, nProbe)
+
+  /** Probe a persisted [[ivfPqBuild]] index: the statically pruned codes
+    * scan, ADC scoring over CODES (the ~100× smaller table), a bounded
+    * heap of refineK candidates per query, and only those ids fetch
+    * their original vectors from `corpus` for the exact rescoring. With
+    * nProbe = nList and refineK ≥ |corpus| the result equals brute
+    * force (the oracle gate); production settings are recall-gated. */
+  def ivfPqQuery(spark: SparkSession, dir: String,
+                 queries: DataFrame, corpus: DataFrame, k: Int,
+                 nProbe: Int = 2, refineK: Int = 50): DataFrame =
+    query(Pq(Some(corpus), refineK), spark, dir, queries, k, nProbe)
+
+  /** Retract vectors from a persisted [[ivfBuild]] /  [[ivfPqBuild]]
+    * index ([[Tombstones]] — the erasure verb the
+    * build/append/probe/compact lifecycle otherwise lacks): the ids
+    * stop appearing in [[ivfQuery]]/[[ivfPqQuery]] results immediately
+    * (stored-side anti-join, applied after the partition prune) and
+    * their postings/codes rows are physically dropped by the next
+    * [[ivfCompact]]/[[ivfPqCompact]]/rebuild. Works for both layouts —
+    * the tombstone table is keyed by id alone. */
+  def ivfDelete(spark: SparkSession, dir: String,
+                ids: DataFrame, idCol: String = "id"): Unit = {
+    val snap = Manifest.snapshot(spark, dir)
+    Tombstones.retractIds(spark, snap, sniffFamily(spark, snap)._2, ids,
+      idCol)
+  }
+
+  // ---- persisted-index lifecycle: compaction + recall monitoring ------
+  // every append writes NEW files into the hit lists' partition
+  // directories, so a daily-append index accumulates hundreds of small
+  // files per list (the classic small-file scan-cost cliff) while the
+  // un-refit centroids drift away from the data. These close the loop
+  // the append docstrings promise: a compactor that rewrites each list
+  // into sized files, a refit (a rebuild), and probes that MEASURE the
+  // drift so the rebuild is triggered by evidence, not a calendar. The
+  // versioned-directory [[Manifest]] keeps all of it reader-safe.
+
+  /** Compact a persisted [[ivfBuild]] index's postings ([[compact]]):
+    * every list's append fragments become ONE coherent file set per
+    * list. With `rebuild = true` the whole index is refit from the
+    * stored postings instead ([[refit]]) — new coarse centroids (same
+    * nList) and fresh assignments, the answer to append-induced drift;
+    * [[ivfRecallProbe]] tells you when that is worth a training pass.
+    * Probe-all semantics are invariant under both modes. */
+  def ivfCompact(spark: SparkSession, dir: String,
+                 rebuild: Boolean = false, seed: Long = 7L,
+                 kmeansMaxIter: Int = 20,
+                 maxRecordsPerFile: Long = 0L): Unit =
+    if (rebuild) refit(Flat, spark, dir, seed, kmeansMaxIter, 1.0)
+    else compact(Flat, spark, dir, maxRecordsPerFile)
+
+  /** [[ivfCompact]] for the compressed [[ivfPqBuild]] layout. No
+    * in-place rebuild mode — the index stores codes, not vectors, so a
+    * refit needs the embedding store: that is [[ivfPqRebuild]]. */
+  def ivfPqCompact(spark: SparkSession, dir: String,
+                   maxRecordsPerFile: Long = 0L): Unit =
+    compact(Pq(), spark, dir, maxRecordsPerFile)
+
+  /** Reader-safe refit of a persisted [[ivfPqBuild]] index from the
+    * embedding store `corpus` ([[refit]]: same nList/m/nCodes, read from
+    * the existing tables; centroids, codebooks and codes flip in ONE
+    * manifest publish). Pending tombstones filter the store first — the
+    * store may still carry retracted ids, and re-encoding them would
+    * silently resurrect deleted vectors. */
+  def ivfPqRebuild(spark: SparkSession, dir: String,
+                   corpus: DataFrame, trainFraction: Double = 1.0,
+                   seed: Long = 7L, kmeansMaxIter: Int = 20): Unit =
+    refit(Pq(Some(corpus)), spark, dir, seed, kmeansMaxIter, trainFraction)
+
+  /** Mean recall@k of the PRODUCTION probe (persisted index, partial
+    * nProbe) against exact brute force over the index's own live
+    * postings, on a bounded query sample — the drift monitor that
+    * decides when [[ivfCompact]]'s rebuild is due. Both sides are
+    * ≤ |queries|·k rows (bounded-heap top-k), so the comparison is
+    * driver-cheap at any corpus size; the cost is one postings scan for
+    * the brute-force side, which is why the probe runs on a SAMPLE of
+    * queries on a schedule, not per batch. Ties are deterministic on
+    * both sides (cosine desc, id asc), so the hit-set comparison is
+    * exact. */
+  def ivfRecallProbe(spark: SparkSession, dir: String, queries: DataFrame,
+                     k: Int, nProbe: Int): Double =
+    recall(Flat, spark, dir, queries, k, nProbe)
+
+  /** [[ivfRecallProbe]] for a persisted [[ivfPqBuild]] index: the exact
+    * side reads the live original vectors from `corpus` (the codes
+    * table cannot reconstruct them), the probe side runs the production
+    * partial-probe + bounded-refine path. */
+  def ivfPqRecallProbe(spark: SparkSession, dir: String,
+                       queries: DataFrame, corpus: DataFrame,
+                       k: Int, nProbe: Int, refineK: Int): Double =
+    recall(Pq(Some(corpus), refineK), spark, dir, queries, k, nProbe)
 
   /** Centroid-DRIFT probe of a persisted [[ivfBuild]] index: the early-
     * warning signal [[ivfRecallProbe]] confirms. An IVF index's quality
@@ -969,89 +1182,134 @@ object Similarity {
     * costs a few dozen GB, not a full postings pass — the whole point
     * of a cheap leading indicator. One output row; rows from many
     * indexes union into the fleet table. */
-  def ivfDriftProbe(spark: org.apache.spark.sql.SparkSession,
-                    dir: String, batch: DataFrame,
+  def ivfDriftProbe(spark: SparkSession, dir: String, batch: DataFrame,
                     baseSampleMod: Long = 1L,
-                    maxBaseFiles: Int = 256): DataFrame = {
-    val snap = Manifest.snapshot(spark, dir)
-    val cents = spark.read.parquet(snap.path("centroids"))
-      .select(col("list"), col("center"))
-    val (postings, filesRead, filesTotal) =
-      sampledTableScan(spark, snap.path("postings"), maxBaseFiles)
-    val base = postings
-      .filter(pmod(xxhash64(col("id")), lit(baseSampleMod)) === 0)
-      .join(broadcast(cents), Seq("list"))
-      .agg(avg(V.cosine(col("v").cast("array<double>"), col("center")))
-        .as("base_mean_sim"))
-    val bc = spark.sparkContext.broadcast(
-      loadCentroids(spark, snap.path("centroids")))
-    val bat = batch
-      .select(listOf(bc, col("v")).as("list"), col("v"))
-      .join(broadcast(cents), Seq("list"))
-      .agg(avg(V.cosine(col("v").cast("array<double>"), col("center")))
-        .as("batch_mean_sim"))
-    base.crossJoin(bat).select(
-      lit(dir).as("dir"), lit(snap.version).as("version"),
-      col("base_mean_sim"), col("batch_mean_sim"),
-      (col("batch_mean_sim") / col("base_mean_sim")).as("drift_ratio"),
-      lit(filesRead).as("base_files_read"),
-      lit(filesTotal).as("base_files_total"))
-  }
+                    maxBaseFiles: Int = 256): DataFrame =
+    drift(Flat, spark, dir, batch, baseSampleMod, maxBaseFiles)
 
   /** [[ivfDriftProbe]] for the compressed [[ivfPqBuild]] layout. The
-    * codes table stores no vectors, so the base side scores the
-    * RECONSTRUCTION — each row decodes to concat(codebook_j[code_j]),
-    * the best x the index can represent — against the centroid of the
-    * list it is filed under. That folds BOTH decay modes into one
-    * number: coarse-centroid drift (vectors far from their list) and
-    * codebook staleness (vectors the codebooks can no longer represent
-    * — reconstruction error pulls the cosine down even when the coarse
-    * assignment is fine). The batch side scores the caller's REAL
-    * vectors against their nearest centroid, exactly as [[ivfAppend]]
-    * would assign them. Cost: bounded as for [[ivfDriftProbe]] — at
-    * most `maxBaseFiles` code files read (deterministic path-hash
-    * subset, fraction reported in the output row), decoded against the
-    * broadcast-class codebooks + centroids, plus one batch scan. */
-  def ivfPqDriftProbe(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, batch: DataFrame,
+    * codes table stores no vectors, so the base side scores each row's
+    * RECONSTRUCTION concat(codebook_j[code_j]) against the centroid of
+    * the list it is filed under. That folds BOTH decay modes into one
+    * number: coarse-centroid drift and codebook staleness
+    * (reconstruction error pulls the cosine down even when the coarse
+    * assignment is fine). Same bounded cost. */
+  def ivfPqDriftProbe(spark: SparkSession, dir: String, batch: DataFrame,
                       baseSampleMod: Long = 1L,
-                      maxBaseFiles: Int = 256): DataFrame = {
+                      maxBaseFiles: Int = 256): DataFrame =
+    drift(Pq(), spark, dir, batch, baseSampleMod, maxBaseFiles)
+
+  /** Continuous embedding ingest into a persisted [[ivfBuild]] index:
+    * each micro-batch appends WITHOUT refit via [[ivfAppend]], the
+    * Structured-Streaming face of the daily-growth workflow. The
+    * maintenance loop stays the batch one: [[ivfIndexHealth]] on a
+    * schedule, [[ivfCompact]] when fragmentation climbs,
+    * `rebuild = true` when [[ivfRecallProbe]] decays.
+    *
+    * Delivery is foreachBatch's at-least-once: a retried batch appends
+    * its vectors twice. Probe correctness degrades gracefully (a
+    * duplicate id can at worst displace one true neighbor from top-k);
+    * exact-once pipelines should dedupe by id at the next compaction or
+    * upstream. Single-writer: do not run concurrent with appends or
+    * compactions of the same index. */
+  def ivfIngest(stream: DataFrame, dir: String, checkpoint: String)
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    ingest(Flat, stream, dir, checkpoint)
+
+  /** [[ivfIngest]] for the compressed [[ivfPqBuild]] layout: each
+    * micro-batch PQ-encodes against the existing quantizers and appends
+    * via [[ivfPqAppend]]. Same at-least-once and single-writer contract;
+    * quantization drift on shifted data is the batch monitor's problem
+    * ([[ivfPqRecallProbe]] → [[ivfPqRebuild]]). */
+  def ivfPqIngest(stream: DataFrame, dir: String, checkpoint: String)
+  : org.apache.spark.sql.streaming.StreamingQuery =
+    ingest(Pq(), stream, dir, checkpoint)
+
+  /** The probe-budget tuner run after a build or rebuild: the smallest
+    * nProbe among 1, 2, 4, … (capped at the index's nList) whose sampled
+    * recall@k meets `targetRecall` — evidence-picked instead of
+    * hand-tuned, the operational complement of [[ivfRecallProbe]]
+    * (which monitors an ALREADY-chosen budget for drift). The exact side
+    * is computed ONCE over the live postings; each candidate budget
+    * costs one partial probe over its pruned lists. Doubling
+    * granularity is deliberate: at production nList (thousands) the
+    * budget/recall curve is flat enough that the next power of two is
+    * the right unit of spend. Returns the cap if even probing
+    * everything misses the target (only possible when `queries`'
+    * neighbors tie non-deterministically — probe-all itself is exact,
+    * so the cap is never measured). */
+  def ivfSuggestNProbe(spark: SparkSession, dir: String, queries: DataFrame,
+                       k: Int, targetRecall: Double): Int =
+    suggestNProbe(Flat, spark, dir, queries, k, targetRecall).get
+
+  /** [[ivfSuggestNProbe]] for the compressed [[ivfPqBuild]] layout —
+    * where the knob matters MORE: PQ's lossy candidate ordering sits
+    * below IVF recall at equal nProbe, so a budget tuned on an IVF
+    * twin overstates PQ recall. The exact side reads the live original
+    * vectors from `corpus`; each candidate budget runs the production
+    * partial-probe + bounded-refine path at the SAME `refineK` the
+    * pipeline will use. Probe-all is NOT exact here, so the ladder
+    * MEASURES recall at nList too and returns `None` (with a warning)
+    * when the target is unreachable at this refineK — the operator's
+    * knob at that point is refineK, not nProbe. */
+  def ivfPqSuggestNProbe(spark: SparkSession, dir: String,
+                         queries: DataFrame, corpus: DataFrame, k: Int,
+                         refineK: Int, targetRecall: Double): Option[Int] =
+    suggestNProbe(Pq(Some(corpus), refineK), spark, dir, queries, k,
+      targetRecall)
+
+  /** Operational health report of a persisted [[ivfBuild]] index — the
+    * dashboard row a daily-append pipeline watches: physical layout
+    * (lists, rows, files, skew) plus a sampled recall@k reading of the
+    * production probe. One output row per index, so reports from many
+    * indexes union into one fleet table:
+    *   (dir, version, n_lists, empty_lists, total_rows, total_files,
+    *    max_files_per_list, max_rows_per_list, mean_rows_per_list,
+    *    row_skew, recall_at_k, k, n_probe, suggested_n_probe,
+    *    deleted_pending, ingest_batches)
+    * `max_files_per_list` rising → [[ivfCompact]] is due (small-file
+    * scan cliff); `row_skew` (max/mean rows per list) rising → the
+    * centroids no longer balance the data; `recall_at_k` falling below
+    * the pipeline's floor → `ivfCompact(rebuild = true)` — and
+    * [[indexMaintenancePlan]] turns exactly those thresholds into an
+    * action column. With `suggestTargetRecall` set the report also runs
+    * [[ivfSuggestNProbe]] and carries the budget in
+    * `suggested_n_probe` (NULL when not requested — the tuner costs a
+    * geometric ladder of probes, so it's opt-in per schedule). Cost:
+    * one postings scan for the row counts, one FS listing, one
+    * [[ivfRecallProbe]] over the bounded query sample. */
+  def ivfIndexHealth(spark: SparkSession, dir: String, queries: DataFrame,
+                     k: Int, nProbe: Int,
+                     suggestTargetRecall: Option[Double] = None): DataFrame =
+    health(Flat, spark, dir, queries, k, nProbe, suggestTargetRecall)
+
+  /** [[ivfIndexHealth]] for the compressed [[ivfPqBuild]] layout: the
+    * layout stats come from the codes table; the recall sample needs the
+    * embedding store (`corpus`) for its exact side. With
+    * `suggestTargetRecall` set, the report also carries the
+    * [[ivfPqSuggestNProbe]] budget (at the report's own refineK; NULL
+    * when unreachable). */
+  def ivfPqIndexHealth(spark: SparkSession, dir: String,
+                       queries: DataFrame, corpus: DataFrame,
+                       k: Int, nProbe: Int, refineK: Int,
+                       suggestTargetRecall: Option[Double] = None)
+  : DataFrame =
+    health(Pq(Some(corpus), refineK), spark, dir, queries, k, nProbe,
+      suggestTargetRecall)
+
+  /** [[ivfIndexHealth]]/[[ivfPqIndexHealth]] WITHOUT the recall probe —
+    * layout, fragment, skew, tombstone-debt, and ingest-log readings
+    * only, with `recall_at_k`/`k`/`n_probe` NULL ("not measured", which
+    * [[indexMaintenancePlan]]'s null-safe recall rule simply skips).
+    * The recall probe costs a brute-force pass over the sampled
+    * queries; a schedule that gates on retraction debt or fragment
+    * count alone (the q254-class tombstone lifecycle, a
+    * compact-or-not cron) should not pay it on every reading. Works
+    * for both layouts. */
+  def ivfIndexHealthLight(spark: SparkSession, dir: String): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val cents = spark.read.parquet(snap.path("centroids"))
-      .select(col("list"), col("center"))
-    val cb = loadCodebooks(spark, snap.path("codebooks"))
-    val subLen = cb(0)(0).length
-    val bcCb = spark.sparkContext.broadcast(cb)
-    val recon = udf { (codes: Seq[Int]) =>
-      val out = new Array[Double](codes.length * subLen)
-      var j = 0
-      while (j < codes.length) {
-        System.arraycopy(bcCb.value(j)(codes(j)), 0, out, j * subLen,
-          subLen)
-        j += 1
-      }
-      out.toSeq
-    }
-    val (codes, filesRead, filesTotal) =
-      sampledTableScan(spark, snap.path("codes"), maxBaseFiles)
-    val base = codes
-      .filter(pmod(xxhash64(col("id")), lit(baseSampleMod)) === 0)
-      .join(broadcast(cents), Seq("list"))
-      .agg(avg(V.cosine(recon(col("codes")), col("center")))
-        .as("base_mean_sim"))
-    val bcC = spark.sparkContext.broadcast(
-      loadCentroids(spark, snap.path("centroids")))
-    val bat = batch
-      .select(listOf(bcC, col("v")).as("list"), col("v"))
-      .join(broadcast(cents), Seq("list"))
-      .agg(avg(V.cosine(col("v").cast("array<double>"), col("center")))
-        .as("batch_mean_sim"))
-    base.crossJoin(bat).select(
-      lit(dir).as("dir"), lit(snap.version).as("version"),
-      col("base_mean_sim"), col("batch_mean_sim"),
-      (col("batch_mean_sim") / col("base_mean_sim")).as("drift_ratio"),
-      lit(filesRead).as("base_files_read"),
-      lit(filesTotal).as("base_files_total"))
+    indexHealth(spark, dir, sniffFamily(spark, snap)._2, snap, None, None,
+      None, None)
   }
 
   /** Semantic DECONTAMINATION against an evaluation benchmark: annotate
@@ -1100,116 +1358,6 @@ object Similarity {
         maxCos(col(vecCol).cast("array<double>")))
       .withColumn("contaminated",
         col("max_benchmark_cosine") >= tau)
-  }
-
-  /** Continuous embedding ingest into a persisted [[ivfBuild]] index:
-    * each micro-batch appends WITHOUT refit via [[ivfAppend]] (assign to
-    * existing centroids — a bounded broadcast per batch — and write new
-    * files into the hit lists), the Structured-Streaming face of the
-    * daily-growth workflow. The maintenance loop stays the batch one:
-    * [[ivfIndexHealth]] on a schedule, [[ivfCompact]] when fragmentation
-    * climbs, `rebuild = true` when [[ivfRecallProbe]] decays.
-    *
-    * Delivery is foreachBatch's at-least-once: a retried batch appends
-    * its vectors twice. Probe correctness degrades gracefully (a
-    * duplicate id can at worst displace one true neighbor from top-k);
-    * exact-once pipelines should dedupe by id at the next compaction or
-    * upstream. Single-writer: do not run concurrent with appends or
-    * compactions of the same index. */
-  def ivfIngest(stream: DataFrame, dir: String,
-                checkpoint: String): org.apache.spark.sql.streaming
-                  .StreamingQuery =
-    Lifecycle.ingest(stream, checkpoint)(b =>
-      ivfAppend(b.sparkSession, dir, b))
-
-  /** [[ivfIngest]] for the compressed [[ivfPqBuild]] layout: each
-    * micro-batch PQ-encodes against the existing quantizers and appends
-    * via [[ivfPqAppend]]. Same at-least-once and single-writer contract;
-    * quantization drift on shifted data is the batch monitor's problem
-    * ([[ivfPqRecallProbe]] → [[ivfPqRebuild]]). */
-  def ivfPqIngest(stream: DataFrame, dir: String,
-                  checkpoint: String): org.apache.spark.sql.streaming
-                    .StreamingQuery =
-    Lifecycle.ingest(stream, checkpoint)(b =>
-      ivfPqAppend(b.sparkSession, dir, b))
-
-  /** The probe-budget tuner run after a build or rebuild: the smallest
-    * nProbe among 1, 2, 4, … (capped at the index's nList) whose sampled
-    * recall@k meets `targetRecall` — evidence-picked instead of
-    * hand-tuned, the operational complement of [[ivfRecallProbe]]
-    * (which monitors an ALREADY-chosen budget for drift). The exact side
-    * is computed ONCE (one postings scan); each candidate budget costs
-    * one partial probe over its pruned lists. Doubling granularity is
-    * deliberate: at production nList (thousands) the budget/recall curve
-    * is flat enough that the next power of two is the right unit of
-    * spend. Returns the cap if even probing everything misses the target
-    * (only possible when `queries`' neighbors tie non-deterministically —
-    * probe-all itself is exact). */
-  def ivfSuggestNProbe(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, queries: DataFrame, k: Int,
-                       targetRecall: Double): Int = {
-    val snap = Manifest.snapshot(spark, dir)
-    val nList = spark.read.parquet(snap.path("centroids")).count().toInt
-    val corpus = spark.read.parquet(snap.path("postings"))
-      .select(col("id"), col("v"))
-    val exact = bruteForce(queries, corpus, k).select("qid", "id")
-      .collect().map(r => (r.get(0), r.get(1))).toSet
-    if (exact.isEmpty) return 1
-    var p = 1
-    while (p < nList) {
-      val got = ivfQuery(spark, dir, queries, k, p).select("qid", "id")
-        .collect().map(r => (r.get(0), r.get(1))).toSet
-      if (got.intersect(exact).size.toDouble / exact.size >= targetRecall)
-        return p
-      p = math.min(p * 2, nList)
-    }
-    nList
-  }
-
-  /** [[ivfSuggestNProbe]] for the compressed [[ivfPqBuild]] layout —
-    * where the knob matters MORE: PQ's lossy candidate ordering sits
-    * below IVF recall at equal nProbe, so a budget tuned on an IVF
-    * twin overstates PQ recall. The exact side reads the original
-    * vectors from `corpus` (codes cannot reconstruct them) and is
-    * computed ONCE; each candidate budget runs the production
-    * partial-probe + bounded-refine path at the SAME `refineK` the
-    * pipeline will use — the suggestion is for the deployed
-    * (nProbe, refineK) pair, not an idealized probe.
-    *
-    * Unlike the plain-IVF tuner, probe-all is NOT exact here — PQ's
-    * lossy candidate ordering at a finite refineK can keep the true
-    * neighbor out of the refine set no matter how many lists are
-    * probed — so the ladder MEASURES recall at nList too and returns
-    * `None` (with a warning) when the target is unreachable at this
-    * refineK: no budget is implied to meet a target it provably
-    * misses; the operator's knob at that point is refineK, not
-    * nProbe. */
-  def ivfPqSuggestNProbe(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, queries: DataFrame,
-                         corpus: DataFrame, k: Int, refineK: Int,
-                         targetRecall: Double): Option[Int] = {
-    val snap = Manifest.snapshot(spark, dir)
-    val nList = spark.read.parquet(snap.path("centroids")).count().toInt
-    val exact = bruteForce(queries, corpus, k).select("qid", "id")
-      .collect().map(r => (r.get(0), r.get(1))).toSet
-    if (exact.isEmpty) return Some(1)
-    var p = 1
-    while (true) {
-      val got = ivfPqQuery(spark, dir, queries, corpus, k, p, refineK)
-        .select("qid", "id")
-        .collect().map(r => (r.get(0), r.get(1))).toSet
-      val recall = got.intersect(exact).size.toDouble / exact.size
-      if (recall >= targetRecall) return Some(p)
-      if (p >= nList) {
-        org.slf4j.LoggerFactory.getLogger(Similarity.getClass).warn(
-          f"ivfPqSuggestNProbe: target recall $targetRecall%.3f is " +
-            f"unreachable at refineK=$refineK (probe-all measured " +
-            f"$recall%.3f); raise refineK")
-        return None
-      }
-      p = math.min(p * 2, nList)
-    }
-    None // unreachable
   }
 
   /** The maintenance DECISION the health numbers exist for: map each
@@ -1284,31 +1432,22 @@ object Similarity {
     * the apply half of the health → plan → apply loop. The layout is
     * sniffed from the manifest snapshot (a codes table means IVF-PQ):
     * `compact` defragments ([[ivfCompact]] / [[ivfPqCompact]]),
-    * `rebuild` refits ([[ivfCompact]]`(rebuild = true)` for IVF;
-    * [[ivfPqRebuild]] for PQ, which REQUIRES the embedding store —
-    * codes cannot reconstruct vectors, so a PQ rebuild without `corpus`
-    * throws rather than silently downgrading to a compaction), `none`
-    * is a no-op. Single-writer contract as for every compaction. */
-  def indexMaintenanceApply(spark: org.apache.spark.sql.SparkSession,
+    * `rebuild` refits ([[ivfCompact]]`(rebuild = true)` /
+    * [[ivfPqRebuild]] — a PQ refit REQUIRES the embedding store
+    * `corpus`, since codes cannot reconstruct vectors, so a PQ rebuild
+    * without it throws rather than silently downgrading to a
+    * compaction), `none` is a no-op. Single-writer contract as for
+    * every compaction. */
+  def indexMaintenanceApply(spark: SparkSession,
                             dir: String, action: String,
                             corpus: Option[DataFrame] = None,
                             maxRecordsPerFile: Long = 0L, seed: Long = 7L,
                             kmeansMaxIter: Int = 20): Unit = {
-    val isPq = sniffFamily(spark, Manifest.snapshot(spark, dir))._1 ==
-      "ivf_pq"
+    val lists = listsAt(spark, Manifest.snapshot(spark, dir), corpus)
     action match {
       case "none" => ()
-      case "compact" =>
-        if (isPq) ivfPqCompact(spark, dir, maxRecordsPerFile)
-        else ivfCompact(spark, dir, rebuild = false, seed, kmeansMaxIter,
-          maxRecordsPerFile)
-      case "rebuild" =>
-        if (isPq) {
-          val c = corpus.getOrElse(throw new IllegalArgumentException(
-            "indexMaintenanceApply: a PQ rebuild needs the embedding " +
-              "store (corpus) — codes cannot reconstruct vectors"))
-          ivfPqRebuild(spark, dir, c, 1.0, seed, kmeansMaxIter)
-        } else ivfCompact(spark, dir, rebuild = true, seed, kmeansMaxIter)
+      case "compact" => compact(lists, spark, dir, maxRecordsPerFile)
+      case "rebuild" => refit(lists, spark, dir, seed, kmeansMaxIter, 1.0)
       case other => throw new IllegalArgumentException(
         s"indexMaintenanceApply: unknown action '$other'")
     }
@@ -1320,7 +1459,7 @@ object Similarity {
     * [[fleetEraseAudit]]) and the one codes-vs-postings layout sniff
     * ([[ivfDelete]], [[indexMaintenanceApply]],
     * [[ivfIndexHealthLight]]). Returns (family, key table). */
-  private def sniffFamily(spark: org.apache.spark.sql.SparkSession,
+  private def sniffFamily(spark: SparkSession,
                           snap: Manifest.Snapshot): (String, String) = {
     def has(table: String): Boolean = Manifest.exists(spark, snap.path(table))
     if (has("codes")) ("ivf_pq", "codes")
@@ -1354,7 +1493,7 @@ object Similarity {
     * sample = first `probeSampleN` store rows by id; PQ exact side =
     * the store), so the scheduled sweep needs zero per-dir maps
     * (q265). */
-  def fleetHealth(spark: org.apache.spark.sql.SparkSession,
+  def fleetHealth(spark: SparkSession,
                   dirs: Seq[String],
                   hotBucketCap: Int = 10000,
                   hotClusterCap: Long = 100000L,
@@ -1462,7 +1601,7 @@ object Similarity {
     * [[FleetRunbook]] — one append per sweep, broadcast-class
     * forever). */
   private[operators] object ProbeLog {
-    def lastSweep(spark: org.apache.spark.sql.SparkSession,
+    def lastSweep(spark: SparkSession,
                   logDir: String): Map[String, Long] = {
       val p = Manifest.snapshot(spark, logDir).path("probe_log")
       if (Manifest.exists(spark, p))
@@ -1472,7 +1611,7 @@ object Similarity {
       else Map.empty
     }
 
-    def record(spark: org.apache.spark.sql.SparkSession, logDir: String,
+    def record(spark: SparkSession, logDir: String,
                probed: Seq[String], sweep: Long): Unit =
       Manifest.withLock(spark, logDir) {
         import spark.implicits._
@@ -1486,7 +1625,7 @@ object Similarity {
     * cursor) as (dir, sweep) rows — the ops surface for "when was
     * this index last recall-probed" (empty frame when no sweep has
     * spent a probe yet). */
-  def probeLogHistory(spark: org.apache.spark.sql.SparkSession,
+  def probeLogHistory(spark: SparkSession,
                       logDir: String): DataFrame = {
     import spark.implicits._
     val p = Manifest.snapshot(spark, logDir).path("probe_log")
@@ -1609,7 +1748,7 @@ object Similarity {
     * report order is preserved either way; `timeout` bounds the
     * parallel wait per [[fleetMap]] (overruns report `failed`, never
     * discard the fleet's report). */
-  def fleetMaintenanceApply(spark: org.apache.spark.sql.SparkSession,
+  def fleetMaintenanceApply(spark: SparkSession,
                             plan: DataFrame,
                             corpora: Map[String, DataFrame] = Map.empty,
                             parallelism: Int = 1,
@@ -1738,7 +1877,7 @@ object Similarity {
     * deletes on that many driver threads (disjoint writer-lock
     * domains — see [[fleetMaintenanceApply]]), report order
     * preserved. */
-  def fleetDelete(spark: org.apache.spark.sql.SparkSession,
+  def fleetDelete(spark: SparkSession,
                   dirs: Seq[String], docs: DataFrame,
                   idCol: String = "id",
                   textCol: Option[String] = None,
@@ -1836,7 +1975,7 @@ object Similarity {
     * clones' own locks make the copies embarrassingly parallel.
     * Returns (src, dst, family, status, detail, tables, files, bytes,
     * src_version) — the dated evidence row a backup schedule files. */
-  def fleetClone(spark: org.apache.spark.sql.SparkSession,
+  def fleetClone(spark: SparkSession,
                  dirs: Seq[String], dstRoot: String,
                  parallelism: Int = 1,
                  copyParallelism: Int = 64,
@@ -1909,7 +2048,7 @@ object Similarity {
     * reading every live file is the point. Returns one LAZY
     * (dir, family, table, keys_live, expected_residue,
     * deleted_pending, version, complete) row per index. */
-  def fleetEraseAudit(spark: org.apache.spark.sql.SparkSession,
+  def fleetEraseAudit(spark: SparkSession,
                       dirs: Seq[String], docs: DataFrame,
                       idCol: String = "id",
                       textCol: Option[String] = None,
@@ -2009,178 +2148,6 @@ object Similarity {
     frames.reduce(_ unionByName _)
   }
 
-  /** Operational health report of a persisted [[ivfBuild]] index — the
-    * dashboard row a daily-append pipeline watches: physical layout
-    * (lists, rows, files, skew) plus a sampled recall@k reading of the
-    * production probe. One output row per index, so reports from many
-    * indexes union into one fleet table:
-    *   (dir, version, n_lists, total_rows, total_files,
-    *    max_files_per_list, max_rows_per_list, mean_rows_per_list,
-    *    row_skew, recall_at_k, k, n_probe, suggested_n_probe)
-    * `max_files_per_list` rising → [[ivfCompact]] is due (small-file
-    * scan cliff); `row_skew` (max/mean rows per list) rising → the
-    * centroids no longer balance the data; `recall_at_k` falling below
-    * the pipeline's floor → `ivfCompact(rebuild = true)` — and
-    * [[indexMaintenancePlan]] turns exactly those thresholds into an
-    * action column. With `suggestTargetRecall` set the report also runs
-    * [[ivfSuggestNProbe]] and carries the budget in
-    * `suggested_n_probe` (NULL when not requested — the tuner costs a
-    * geometric ladder of probes, so it's opt-in per schedule). Cost:
-    * one postings scan for the row counts, one FS listing, one
-    * [[ivfRecallProbe]] over the bounded query sample. */
-  def ivfIndexHealth(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, queries: DataFrame, k: Int,
-                     nProbe: Int,
-                     suggestTargetRecall: Option[Double] = None): DataFrame =
-    indexHealth(spark, dir, "postings",
-      Manifest.snapshot(spark, dir), Some(k), Some(nProbe),
-      Some(ivfRecallProbe(spark, dir, queries, k, nProbe)),
-      suggestTargetRecall.map(t =>
-        ivfSuggestNProbe(spark, dir, queries, k, t)))
-
-  /** [[ivfIndexHealth]]/[[ivfPqIndexHealth]] WITHOUT the recall probe —
-    * layout, fragment, skew, tombstone-debt, and ingest-log readings
-    * only, with `recall_at_k`/`k`/`n_probe` NULL ("not measured", which
-    * [[indexMaintenancePlan]]'s null-safe recall rule simply skips).
-    * The recall probe costs a brute-force pass over the sampled
-    * queries; a schedule that gates on retraction debt or fragment
-    * count alone (the q254-class tombstone lifecycle, a
-    * compact-or-not cron) should not pay it on every reading. Works
-    * for both layouts (codes table ⇒ IVF-PQ). */
-  def ivfIndexHealthLight(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): DataFrame = {
-    val snap = Manifest.snapshot(spark, dir)
-    indexHealth(spark, dir, sniffFamily(spark, snap)._2, snap, None, None,
-      None, None)
-  }
-
-  /** [[ivfIndexHealth]] for the compressed [[ivfPqBuild]] layout: the
-    * layout stats come from the codes table; the recall sample needs the
-    * embedding store (`corpus`) for its exact side. With
-    * `suggestTargetRecall` set, the report also carries the
-    * [[ivfPqSuggestNProbe]] budget (at the report's own refineK) — the
-    * knob an operator turns when the decay demo says recall is sliding. */
-  def ivfPqIndexHealth(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, queries: DataFrame, corpus: DataFrame,
-                       k: Int, nProbe: Int, refineK: Int,
-                       suggestTargetRecall: Option[Double] = None)
-    : DataFrame =
-    indexHealth(spark, dir, "codes",
-      Manifest.snapshot(spark, dir), Some(k), Some(nProbe),
-      Some(ivfPqRecallProbe(spark, dir, queries, corpus, k, nProbe,
-        refineK)),
-      // flatMap: an unreachable target surfaces as NULL (plus the
-      // tuner's warning log), never as a budget that misses the target
-      suggestTargetRecall.flatMap(t =>
-        ivfPqSuggestNProbe(spark, dir, queries, corpus, k, refineK, t)))
-
-  private def indexHealth(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, table: String,
-                          snap: Manifest.Snapshot, k: Option[Int],
-                          nProbe: Option[Int],
-                          recall: Option[Double],
-                          suggested: Option[Int]): DataFrame = {
-    import spark.implicits._
-    // lists the INDEX has (from the quantizer, so an empty list still
-    // counts — k-means can leave clusters unpopulated)
-    val nLists = spark.read.parquet(snap.path("centroids")).count().toInt
-    // rows per list: one aggregate over the postings/codes scan —
-    // bounded output (nList rows)
-    val rowsPerList = spark.read.parquet(snap.path(table))
-      .groupBy("list").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // files per list: one FS listing of the partition directories
-    val tableP = new org.apache.hadoop.fs.Path(snap.path(table))
-    val filesPerList = Manifest.fs(spark, snap.path(table))
-      .listStatus(tableP).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("list="))
-      .map { s =>
-        s.getPath.getName.stripPrefix("list=").toInt ->
-          Lifecycle.fragments(spark, s.getPath.toString).toInt
-      }.toMap
-    val totalRows = rowsPerList.values.sum
-    val meanRows = if (nLists == 0) 0.0 else totalRows.toDouble / nLists
-    // pending-tombstone and ingest-batch counts in ONE job (zero when
-    // neither table exists) instead of two driver count jobs per
-    // reading ([[OpsStats]])
-    val (pendingN, ingestN) = OpsStats.counts(spark, snap)
-    Seq((dir, snap.version, nLists, nLists - rowsPerList.size, totalRows,
-      filesPerList.values.sum.toLong,
-      if (filesPerList.isEmpty) 0 else filesPerList.values.max,
-      if (rowsPerList.isEmpty) 0L else rowsPerList.values.max,
-      meanRows,
-      if (meanRows == 0.0) 0.0 else rowsPerList.values.max / meanRows,
-      recall, k, nProbe, suggested,
-      pendingN, ingestN))
-      .toDF("dir", "version", "n_lists", "empty_lists", "total_rows",
-        "total_files", "max_files_per_list", "max_rows_per_list",
-        "mean_rows_per_list", "row_skew", "recall_at_k", "k", "n_probe",
-        "suggested_n_probe", "deleted_pending", "ingest_batches")
-  }
-
-  /** IVF-PQ ANN: IVF coarse pruning + product-quantized candidate
-    * scoring + exact refinement.
-    *
-    * Product quantization is the storage/IO story at 100 TB: the corpus
-    * vector (dim floats, ~3 KB at dim=768) is replaced by `m` codebook
-    * indices plus one norm (~m+4 bytes, a ~100× compression), so the
-    * candidate-scoring scan reads codes, not vectors. Codebooks are `m`
-    * independent k-means fits over subvector slices (trained on a
-    * deterministic sample — at full scale you never fit on the whole
-    * corpus), broadcast to executors. Scoring is asymmetric-distance:
-    * approx dot(q, x) = Σⱼ dot(qⱼ, codebook_j[code_j(x)]), divided by
-    * the stored ‖x‖ for cosine. The top `refineK` candidates per query
-    * are re-scored EXACTLY by joining the original vectors back by id —
-    * a join whose left side is ≤ |queries|·refineK rows, independent of
-    * corpus size. With nProbe = nList and refineK ≥ |corpus| the result
-    * is exactly brute force (the driver's oracle gate for the plumbing);
-    * production settings are gated by the recall spec. */
-  def ivfPq(queries: DataFrame, corpus: DataFrame, k: Int,
-            nList: Int = 16, nProbe: Int = 2, m: Int = 4, nCodes: Int = 16,
-            refineK: Int = 50, trainFraction: Double = 1.0,
-            seed: Long = 7L, kmeansMaxIter: Int = 20): DataFrame = {
-    val spark = corpus.sparkSession
-    // coarse quantizer (assigns every corpus vector to an inverted list)
-    // and all m sub-codebooks: one bounded driver-side sample, one
-    // collect job, local Lloyd per quantizer
-    val (cents, codebooks) = fitQuantizers("ivfPq", corpus, nList, seed,
-      kmeansMaxIter, trainFraction, Some((m, nCodes)))
-    val subLen = codebooks(0)(0).length
-    val centers = spark.sparkContext.broadcast(cents)
-    val bcCb = spark.sparkContext.broadcast(codebooks)
-    // the compressed corpus: list id + codes + norm, no vectors — the
-    // same shared kernels as the persisted paths
-    val encoded = corpus.select(col("id"), listAndCodes(centers, bcCb,
-        col("v")))
-      .select(col("id"), col("e._1").as("list"), col("e._2").as("codes"),
-        col("e._3").as("norm"))
-    val probeLists = udf { (qv: Seq[Double]) =>
-      probeIdx(centers.value, qv, nProbe)
-    }
-    val adc = udf { (qv: Seq[Double], codes: Seq[Int], nrm: Double) =>
-      adcScore(bcCb.value, subLen, qv, codes, nrm)
-    }
-    val q = queries.select(col("qid"),
-      col("qv").cast("array<double>").as("qd"),
-      explode(probeLists(col("qv").cast("array<double>"))).as("list"))
-    // approx scores over probed lists only, bounded-heap per query
-    val approxTop = encoded.join(broadcast(q), Seq("list"))
-      .select(col("qid"), col("id"),
-        adc(col("qd"), col("codes"), col("norm")).as("approx"))
-      .groupBy("qid")
-      .agg(AggFunctions.collectTopK(
-        struct((-col("approx")).as("na"), col("id")), refineK,
-        smallest = true).as("_top"))
-      .select(col("qid"), explode(col("_top")).as("c"))
-      .select(col("qid"), col("c.id").as("id"))
-    // exact refinement: original vectors joined back for ≤ |q|·refineK ids
-    topK(approxTop
-      .join(corpus, Seq("id"))
-      .join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col("id"),
-        V.cosine(col("qv"), col("v")).as("cosine")), k)
-  }
-
   /** LSH-bucketed ANN: score only same-bucket (plus probed-bucket) pairs.
     * At 100 TB the corpus side is one scan + one shuffle on bucket id. */
   def lsh(queries: DataFrame, corpus: DataFrame, k: Int,
@@ -2193,8 +2160,6 @@ object Similarity {
       .select(col("qid"), col("qv"), explode(array(
         (lit(0) +: (0 until nProbe).map(b => lit(1 << b))).map(f =>
           col("qb").bitwiseXOR(f)): _*)).as("bucket"))
-    topK(c.join(broadcast(q), Seq("bucket"))
-      .select(col("qid"), col("id"),
-        V.cosine(col("qv"), col("v")).as("cosine")), k)
+    cosineTopK(c.join(broadcast(q), Seq("bucket")), k)
   }
 }

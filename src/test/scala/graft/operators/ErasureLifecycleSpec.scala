@@ -589,11 +589,23 @@ class ErasureLifecycleSpec extends SparkSpec {
       Clustering.releasePairs(p)
       n
     }
+    // the vector families index one vector per doc
+    val vecs = Seq(
+      0L -> Seq(1.0, 0.0, 0.0, 0.5),
+      1L -> Seq(0.0, 1.0, 0.5, 0.0),
+      2L -> Seq(0.5, 0.0, 1.0, 0.0)).toDF("id", "v")
+    val baseV = vecs.filter(col("id") < 2L)
+    val batchV = vecs.filter(col("id") === 2L)
+    val doomedV = vecs.filter(col("id") === 1L)
+    val probeV = doomedV.select((col("id") + 90L).as("qid"),
+      col("v").as("qv"))
+    def hitsOf1(p: org.apache.spark.sql.DataFrame): Long =
+      p.filter(col("id") === 1L).count()
     // SemDeDup is not a row here: ErasureLifecycleSpec "repair
     // re-append is idempotent" pins its replay fold and SamplingSpec
     // "semDedupStateDelete" its delete → compact fold
     val families = Seq(
-      LifecycleCase("exact", "distinct_hashes", 2L,
+      LifecycleCase("exact", Some("distinct_hashes"), 2L,
         Dedup.exactIndexBuild(base, _, "id", "text"),
         Dedup.exactIndexAppend(spark, _, batch, "id", "text", Some("b1")),
         Dedup.exactIndexDelete(spark, _, doomed, "id", "text"),
@@ -601,7 +613,7 @@ class ErasureLifecycleSpec extends SparkSpec {
         Dedup.exactIndexHealth(spark, _),
         d => Dedup.exactIndexProbe(spark, d, probe, "id", "text")
           .filter(col("is_dup")).count()),
-      LifecycleCase("minhash", "distinct_rows", 4L,
+      LifecycleCase("minhash", Some("distinct_rows"), 4L,
         Dedup.minhashIndexBuild(base, _, "id", "text"),
         Dedup.minhashIndexAppend(spark, _, batch, "id", "text",
           Some("b1")),
@@ -610,7 +622,7 @@ class ErasureLifecycleSpec extends SparkSpec {
         Dedup.minhashIndexHealth(spark, _),
         d => pairsWith1(
           Dedup.minhashIndexProbe(spark, d, probe, docs, "id", "text"))),
-      LifecycleCase("simhash", "distinct_rows", 2L,
+      LifecycleCase("simhash", Some("distinct_rows"), 2L,
         Dedup.simhashIndexBuild(base, _, "id", "text"),
         Dedup.simhashIndexAppend(spark, _, batch, "id", "text",
           Some("b1")),
@@ -618,22 +630,42 @@ class ErasureLifecycleSpec extends SparkSpec {
         Dedup.simhashIndexCompact(spark, _),
         Dedup.simhashIndexHealth(spark, _),
         d => pairsWith1(Dedup.simhashIndexProbe(spark, d, probe, "id",
-          "text", maxHamming = 0))))
+          "text", maxHamming = 0))),
+      // the list health row counts rows, not distinct ones
+      LifecycleCase("ivf", None, 2L,
+        Similarity.ivfBuild(baseV, _, nList = 2, kmeansMaxIter = 2),
+        Similarity.ivfAppend(spark, _, batchV, Some("b1")),
+        Similarity.ivfDelete(spark, _, doomedV),
+        Similarity.ivfCompact(spark, _),
+        Similarity.ivfIndexHealthLight(spark, _),
+        d => hitsOf1(Similarity.ivfQuery(spark, d, probeV, k = 3,
+          nProbe = 2))),
+      LifecycleCase("ivf_pq", None, 2L,
+        Similarity.ivfPqBuild(baseV, _, nList = 2, m = 2, nCodes = 2,
+          kmeansMaxIter = 2),
+        Similarity.ivfPqAppend(spark, _, batchV, Some("b1")),
+        Similarity.ivfDelete(spark, _, doomedV),
+        Similarity.ivfPqCompact(spark, _),
+        Similarity.ivfIndexHealthLight(spark, _),
+        d => hitsOf1(Similarity.ivfPqQuery(spark, d, probeV, vecs, k = 3,
+          nProbe = 2, refineK = 10))))
     families.foreach { f =>
       graft.util.TempDirs.using(s"lifecycle_${f.name}_") { case Seq(dir) =>
         f.build(dir)
         f.append(dir); f.append(dir)
         assert(f.hits(dir) == 1L, s"${f.name}: the indexed doc must probe")
-        val replayed = f.health(dir).head()
-        assert(replayed.getAs[Long]("total_rows") >
-          replayed.getAs[Long](f.distinctCol),
-          s"${f.name}: the replayed append must leave duplicate rows")
+        f.distinctCol.foreach { c =>
+          val replayed = f.health(dir).head()
+          assert(replayed.getAs[Long]("total_rows") >
+            replayed.getAs[Long](c),
+            s"${f.name}: the replayed append must leave duplicate rows")
+        }
         f.delete(dir)
         assert(f.hits(dir) == 0L, s"${f.name}: delete silences the probe")
         f.compact(dir)
         val h = f.health(dir).head()
-        assert(h.getAs[Long]("total_rows") == h.getAs[Long](f.distinctCol),
-          s"${f.name}: $h")
+        f.distinctCol.foreach(c => assert(
+          h.getAs[Long]("total_rows") == h.getAs[Long](c), s"${f.name}: $h"))
         assert(h.getAs[Long]("total_rows") == f.liveRows, s"${f.name}: $h")
         assert(h.getAs[Long]("deleted_pending") == 0L, s"${f.name}: $h")
         assert(h.getAs[Long]("ingest_batches") == 1L, s"${f.name}: $h")
@@ -645,9 +677,10 @@ class ErasureLifecycleSpec extends SparkSpec {
 
 /** One family row of the lifecycle-contract spec: its verbs over an
   * index dir, the health column its `total_rows` must equal once
-  * compacted, and the live row count left after the fold. */
+  * compacted (None where the health row has no distinct count), and
+  * the live row count left after the fold. */
 private case class LifecycleCase(
-    name: String, distinctCol: String, liveRows: Long,
+    name: String, distinctCol: Option[String], liveRows: Long,
     build: String => Unit, append: String => Unit,
     delete: String => Unit, compact: String => Unit,
     health: String => org.apache.spark.sql.DataFrame,

@@ -1050,6 +1050,20 @@ class SamplingSpec extends SparkSpec {
       // a looser target can only shrink the suggested budget
       assert(Similarity.ivfSuggestNProbe(spark, root, queries,
         k = 3, targetRecall = 0.5) <= p)
+      // pending delete: an exact duplicate of corpus vector `x`, filed
+      // under the lower id 1 (so it wins the cosine tie), is appended
+      // and then retracted. Self-probing `x` at k = 1 finds `x` in its
+      // own nearest list, so one probe meets 1.0 — unless the exact
+      // side still counts the retracted duplicate, which no probe can
+      // return
+      val x = corpus.orderBy("id").limit(1)
+      Similarity.ivfAppend(spark, root, x.withColumn("id", lit(1L)))
+      Similarity.ivfDelete(spark, root, spark.range(1, 2).toDF("id"))
+      val self = x.select(col("id").as("qid"), col("v").as("qv"))
+      assert(Similarity.ivfRecallProbe(spark, root, self, k = 1,
+        nProbe = 1) == 1.0)
+      assert(Similarity.ivfSuggestNProbe(spark, root, self, k = 1,
+        targetRecall = 1.0) == 1)
     } finally graft.util.TempDirs.deleteRecursively(dir)
   }
 
@@ -1493,6 +1507,13 @@ class SamplingSpec extends SparkSpec {
       val r = Similarity.ivfPqRecallProbe(spark, dir.getAbsolutePath,
         queries, corpus, k = 3, nProbe = 2, refineK = 20)
       assert(r >= 0.0 && r < 1.0, s"recall=$r")
+      // pending delete: every query's exact nearest neighbor is
+      // retracted. The probe stops returning those ids at once, so the
+      // exact side must drop them too or probe-all reads below 1.0
+      val nearest = Similarity.bruteForce(queries, corpus, 1).select("id")
+      Similarity.ivfDelete(spark, dir.getAbsolutePath, nearest)
+      assert(Similarity.ivfPqRecallProbe(spark, dir.getAbsolutePath,
+        queries, corpus, k = 3, nProbe = 4, refineK = 100000) == 1.0)
     } finally graft.util.TempDirs.deleteRecursively(dir)
   }
 
