@@ -463,8 +463,8 @@ object Clustering {
                           dir: String,
                           hotClusterCap: Long = 100000L): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val k = spark.read.parquet(snap.path("centroids")).count()
-    val sizes = spark.read.parquet(snap.path("labels")).groupBy("cluster")
+    val k = Manifest.read(spark, snap.path("centroids")).count()
+    val sizes = Manifest.read(spark, snap.path("labels")).groupBy("cluster")
       .agg(count(lit(1)).as("_n"))
     // one collected plan, no per-reading driver jobs, pending/ingest
     // fused into a single aggregate side (see
@@ -540,15 +540,15 @@ object Clustering {
                            dir: String): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
     Tombstones.live(spark, snap,
-      spark.read.parquet(snap.path("labels"))).select("id")
+      Manifest.read(spark, snap.path("labels"))).select("id")
   }
 
   /** The frozen centroids of a persisted state, as one bounded collect
     * (k·d doubles — broadcast-class by construction). */
   private def loadStateCentroids(spark: org.apache.spark.sql.SparkSession,
                                  dir: String): Array[Array[Double]] =
-    spark.read.parquet(Manifest.snapshot(spark, dir).path("centroids"))
-      .orderBy("cluster").collect()
+    Manifest.read(spark, Manifest.snapshot(spark, dir).path("centroids"))
+      .collect().sortBy(_.getAs[Int]("cluster"))
       .map(_.getAs[Seq[Double]]("center").toArray)
 
   /** [[semDedupIncremental]] against the persisted state: frozen
@@ -580,7 +580,7 @@ object Clustering {
     // one snapshot resolves BOTH tables: a state append flipping
     // mid-probe cannot pair new labels with other-version centroids
     val snap = Manifest.snapshot(spark, dir)
-    val centroids = spark.read.parquet(snap.path("centroids"))
+    val centroids = Manifest.read(spark, snap.path("centroids"))
       .orderBy("cluster").collect()
       .map(_.getAs[Seq[Double]]("center").toArray)
     (snap, centroids)
@@ -609,7 +609,7 @@ object Clustering {
     // not the corpus
     val touched = batchSide.select("cluster").distinct()
     val baseSide = Tombstones.live(spark, snap,
-        spark.read.parquet(snap.path("labels")))
+        Manifest.read(spark, snap.path("labels")))
       .join(broadcast(touched), Seq("cluster"), "left_semi")
       .join(base.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("_v")), Seq("id"))

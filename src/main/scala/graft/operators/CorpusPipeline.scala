@@ -352,8 +352,7 @@ object CorpusPipeline {
   /** The persisted funnel history (one row per (day, source)). */
   def admissionFunnelHistory(spark: org.apache.spark.sql.SparkSession,
                              dir: String): DataFrame =
-    spark.read.parquet(
-      Manifest.snapshot(spark, dir).path("funnel"))
+    Manifest.read(spark, Manifest.snapshot(spark, dir).path("funnel"))
 
   /** Fold the funnel history's one-file-per-day append fragments into
     * one coherent file set behind a [[Manifest]] flip — the same
@@ -380,7 +379,7 @@ object CorpusPipeline {
                             dir: String): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
     Lifecycle.healthRow(spark, snap, "funnel",
-      spark.read.parquet(snap.path("funnel")))(
+      Manifest.read(spark, snap.path("funnel")))(
       count(lit(1)).as("total_rows"),
       count_distinct(col("day")).as("n_days"),
       count_distinct(col("source")).as("n_sources"))

@@ -118,7 +118,7 @@ object Decontamination {
                           textCol: String): Unit = {
     val n = decontamIndexN(spark, dir)
     Lifecycle.rewrite(spark, dir) { snap =>
-      val existing = spark.read.parquet(snap.path("shingles"))
+      val existing = Manifest.read(spark, snap.path("shingles"))
       val tmp = s"$dir/_append.tmp.shingles"
       benchmarkDelta
         .select(explode(TF.distinctShingles(col(textCol), n)).as("g"))
@@ -179,7 +179,7 @@ object Decontamination {
     val n = decontamIndexN(spark, dir)
     val snap = Manifest.snapshot(spark, dir)
     Lifecycle.healthRow(spark, snap, "shingles",
-      spark.read.parquet(snap.path("shingles")))(
+      Manifest.read(spark, snap.path("shingles")))(
       lit(n).as("shingle_n"),
       count(lit(1)).as("total_rows"),
       count_distinct(col("g")).as("distinct_shingles"))
@@ -194,7 +194,7 @@ object Decontamination {
                           dir: String, candidates: DataFrame,
                           idCol: String, textCol: String): DataFrame = {
     val n = decontamIndexN(spark, dir)
-    val benchSh = spark.read.parquet(
+    val benchSh = Manifest.read(spark,
       Manifest.snapshot(spark, dir).path("shingles"))
     val hits = candidates
       .select(col(idCol),

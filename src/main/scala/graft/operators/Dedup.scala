@@ -92,7 +92,7 @@ object Dedup {
                       textCol: String): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
     val stored = Tombstones.live(spark, snap,
-      spark.read.parquet(snap.path("hashes")))
+      Manifest.read(spark, snap.path("hashes")))
     val hashed = delta.select(col(idCol), md5(col(textCol)).as("h"))
     hashed.join(
         stored.select(col("h")).distinct().withColumn("_hit", lit(true)),
@@ -138,7 +138,7 @@ object Dedup {
     // fleet table, where a LOWER count than the siblings' is the
     // crash-divergence smell fleetIngestReconcile pins down.
     OpsStats.attach(spark, snap)(Lifecycle.healthRow(spark, snap, "hashes",
-      spark.read.parquet(snap.path("hashes")))(
+      Manifest.read(spark, snap.path("hashes")))(
       count(lit(1)).as("total_rows"),
       count_distinct(col("h")).as("distinct_hashes")))
   }
@@ -159,25 +159,42 @@ object Dedup {
         .filter(col("_bn") > cap).select(keys.map(col): _*),
       keys, "left_anti")
 
-  /** The [[dropHotBuckets]] guard for a PROBE's bucket equi-join,
-    * fused: candidate pairs only come from buckets present on BOTH
-    * sides, so dropping a bucket from either side removes all of its
-    * pairs — anti-joining the delta side alone against the union of
-    * both sides' over-cap bucket keys is pair-for-pair equivalent to
-    * guarding each side separately, for ONE aggregate + ONE anti-join
-    * instead of two of each (the serialized per-probe broadcast-job
-    * chain every admission probe pays per reading). Per-side counts
-    * stay separate (grouped on keys + side tag), so the cap semantics
-    * are unchanged. */
-  private def probeHotBucketKeys(base: DataFrame, delta: DataFrame,
-                                 keys: Seq[String], cap: Int): DataFrame =
-    base.select(keys.map(col): _*).withColumn("_s", lit(1))
-      .unionByName(
-        delta.select(keys.map(col): _*).withColumn("_s", lit(2)))
-      .groupBy((keys :+ "_s").map(col): _*)
-      .agg(count(lit(1)).as("_bn"))
-      .filter(col("_bn") > cap)
-      .select(keys.map(col): _*)
+  /** The [[dropHotBuckets]] guard and the bucket equi-join of an
+    * incremental probe, over ONE pass of the index side: `index` and
+    * `delta` carry the `keys` plus their own columns, the output is
+    * every (delta row, index row) pair sharing a bucket that is within
+    * `cap` on both sides. Only buckets the delta touches can yield a
+    * pair, so the index is first semi-joined to the delta's bucket keys
+    * (a map-side filter against the batch-sized key set) and counted
+    * only there — a per-bucket window over the delta's bucket occupancy,
+    * never an aggregate over the whole index. The pairs are exactly
+    * those of guarding each side over its whole table: a bucket's index
+    * count is the same whether or not the other buckets are counted,
+    * and a bucket absent from the delta yields no pair either way. The
+    * pairing is a shuffled hash join on the windows' own partitioning:
+    * both sides are bounded (by the batch, and by `cap` per bucket), so
+    * it costs a stage, not the broadcast job a size estimate could pick
+    * for it. */
+  private def probeBucketJoin(index: DataFrame, delta: DataFrame,
+                              keys: Seq[String], cap: Int): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+    def guarded(rows: DataFrame): DataFrame =
+      rows.withColumn("_bn", count(lit(1)).over(w))
+        .where(col("_bn") <= cap).drop("_bn")
+    guarded(delta).hint("shuffle_hash").join(guarded(
+      index.join(delta.select(keys.map(col): _*), keys, "left_semi")), keys)
+  }
+
+  /** (id, band, bucket) rows of minhash signatures `sig` — the banding
+    * shared by every MinHash path. */
+  private def sigBands(sigs: DataFrame, sigK: Int, bands: Int): DataFrame = {
+    val bandSize = sigK / bands
+    sigs.select(col("id"), explode(array((0 until bands).map(b =>
+      struct(lit(b).as("band"),
+        TF.lshBand(col("sig"), b * bandSize, bandSize).as("bucket"))
+    ): _*)).as("lb"))
+      .select(col("id"), col("lb.band"), col("lb.bucket"))
+  }
 
   /** MinHash-LSH near-dup candidate pairs: signature → bands → equi-join
     * within band buckets → verify with true shingle Jaccard. Only pairs
@@ -196,21 +213,14 @@ object Dedup {
       s"sigK=$sigK must be a positive multiple of bands=$bands " +
         "(bands > sigK would make every band empty and silently " +
         "return no pairs)")
-    val rows = bands
-    val bandSize = sigK / bands
     // shingles feed the two verify joins; signatures feed the band
     // explode — persist once (LRU-evictable) instead of re-shingling
     val withSig = docs.select(col(idCol).as("id"),
       TF.distinctShingles(col(textCol), shingleN).as("sh"),
       TF.minhashSignature(col(textCol), shingleN, sigK).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded0 = withSig.select(col("id"),
-      explode(array((0 until rows).map(b =>
-        struct(lit(b).as("band"),
-          TF.lshBand(col("sig"), b * bandSize, bandSize).as("bucket"))): _*))
-        .as("lb"))
-      .select(col("id"), col("lb.band"), col("lb.bucket"))
-    val banded = dropHotBuckets(banded0, Seq("band", "bucket"), maxBucketSize)
+    val banded = dropHotBuckets(sigBands(withSig, sigK, bands),
+      Seq("band", "bucket"), maxBucketSize)
     val cands = banded.select(col("band"), col("bucket"),
         col("id").as("id_a"))
       .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
@@ -236,11 +246,14 @@ object Dedup {
     * Scale shape: the base side's (band, bucket, id) index is exactly
     * what a production pipeline persists between batches; the candidate
     * join is delta-bands (batch-sized) against that index, so corpus-
-    * internal duplicates never re-pair and the join output is bounded
-    * by the delta's bucket occupancy. Both sides pass the hot-bucket
-    * guard before pairing (one degenerate boilerplate bucket would
-    * otherwise go |delta-bucket|·|base-bucket|); the shingle-verify
-    * joins touch candidate ids only. */
+    * internal duplicates never re-pair. The hot-bucket guard and the
+    * pairing read the base bands once, restricted to the buckets the
+    * delta touches ([[probeBucketJoin]]), so the join and the guard's
+    * counts are bounded by the delta's bucket occupancy (one degenerate
+    * boilerplate bucket would otherwise go |delta-bucket|·|base-bucket|);
+    * the shingle-verify joins touch candidate ids only. Signing the base
+    * corpus is still a full pass — the persisted index
+    * ([[minhashIndexProbe]]) is what removes it. */
   def incrementalMinhashLsh(delta: DataFrame, base: DataFrame,
                             idCol: String, textCol: String,
                             shingleN: Int = 3, sigK: Int = 4,
@@ -248,27 +261,18 @@ object Dedup {
                             maxBucketSize: Int = 10000): DataFrame = {
     require(bands >= 1 && sigK % bands == 0,
       s"sigK=$sigK must be a positive multiple of bands=$bands")
-    val bandSize = sigK / bands
     def prep(docs: DataFrame): DataFrame = docs
       .select(col(idCol).as("id"),
         TF.distinctShingles(col(textCol), shingleN).as("sh"),
         TF.minhashSignature(col(textCol), shingleN, sigK).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def banded(p: DataFrame): DataFrame = dropHotBuckets(
-      p.select(col("id"),
-        explode(array((0 until bands).map(b =>
-          struct(lit(b).as("band"),
-            TF.lshBand(col("sig"), b * bandSize, bandSize).as("bucket"))
-        ): _*)).as("lb"))
-        .select(col("id"), col("lb.band"), col("lb.bucket")),
-      Seq("band", "bucket"), maxBucketSize)
+    def banded(p: DataFrame, id: String): DataFrame =
+      sigBands(p, sigK, bands)
+        .select(col("band"), col("bucket"), col("id").as(id))
     val dP = prep(delta)
     val bP = prep(base)
-    val cands = banded(dP)
-      .select(col("band"), col("bucket"), col("id").as("delta_id"))
-      .join(banded(bP)
-        .select(col("band"), col("bucket"), col("id").as("base_id")),
-        Seq("band", "bucket"))
+    val cands = probeBucketJoin(banded(bP, "base_id"),
+        banded(dP, "delta_id"), Seq("band", "bucket"), maxBucketSize)
       .select("delta_id", "base_id")
       .distinct()
     cands
@@ -307,16 +311,10 @@ object Dedup {
 
   /** (id, band, bucket) banded-signature rows for `docs`. */
   private def bandRows(docs: DataFrame, idCol: String, textCol: String,
-                       shingleN: Int, sigK: Int, bands: Int): DataFrame = {
-    val bandSize = sigK / bands
-    docs.select(col(idCol).as("id"),
-      TF.minhashSignature(col(textCol), shingleN, sigK).as("sig"))
-      .select(col("id"), explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          TF.lshBand(col("sig"), b * bandSize, bandSize).as("bucket"))
-      ): _*)).as("lb"))
-      .select(col("id"), col("lb.band"), col("lb.bucket"))
-  }
+                       shingleN: Int, sigK: Int, bands: Int): DataFrame =
+    sigBands(docs.select(col(idCol).as("id"),
+      TF.minhashSignature(col(textCol), shingleN, sigK).as("sig")),
+      sigK, bands)
 
   /** Build the persisted index: the corpus's banded rows plus pinned
     * parameters. The one full-corpus signature scan a daily pipeline
@@ -410,7 +408,7 @@ object Dedup {
     // distinct-row count and the total_rows − distinct_rows gap is the
     // replay-duplicate debt compaction will fold (the
     // exactIndexHealth total-vs-distinct reading for this family)
-    val sizes = spark.read.parquet(snap.path("bands"))
+    val sizes = Manifest.read(spark, snap.path("bands"))
       .groupBy("band", "bucket")
       .agg(count(lit(1)).as("_n"), count_distinct(col("id")).as("_nd"))
     // one collected plan, no per-reading driver jobs, pending/ingest
@@ -440,15 +438,35 @@ object Dedup {
     * per-probe signature cache can be released before returning —
     * a long-lived daily-pipeline session never accumulates cached
     * partitions across probes. Release the result's pinned blocks with
-    * [[Clustering.releasePairs]] when done with it. */
+    * [[Clustering.releasePairs]] when done with it. Cost: one pass of
+    * the bands table, filtered map-side to the delta's buckets, and one
+    * of `base`, filtered map-side to the candidate ids; a batch small
+    * against the session's shuffle width runs as a handful of jobs
+    * ([[checkpointProbe]]). */
   def minhashIndexProbe(spark: org.apache.spark.sql.SparkSession,
                         dir: String, delta: DataFrame, base: DataFrame,
                         idCol: String, textCol: String,
                         threshold: Double = 0.5,
                         maxBucketSize: Int = 10000): DataFrame = {
+    val bands = minhashIndexParams(spark, dir)._3
     val (pairs, handles) = minhashProbeLazy(spark, dir, delta, base,
       idCol, textCol, threshold, maxBucketSize)
-    val out = pairs.localCheckpoint(true)
+    checkpointProbe(spark, pairs, handles, bands)
+  }
+
+  /** The eager end of [[minhashIndexProbe]] and [[simhashIndexProbe]]:
+    * count the persisted delta (`handles.head`, whose cache the plan
+    * reads anyway), checkpoint the pairs inside the derived-shuffle
+    * scope keyed on the delta's band rows
+    * ([[graft.util.ExecProfile.withDerivedShuffle]] — a no-op once the
+    * batch fills the session's shuffle width), then release the
+    * handles. */
+  private def checkpointProbe(spark: org.apache.spark.sql.SparkSession,
+                              pairs: DataFrame, handles: Seq[DataFrame],
+                              bandsPerRow: Int): DataFrame = {
+    val rows = handles.head.queryExecution.toRdd.count() * bandsPerRow
+    val out = graft.util.ExecProfile.withDerivedShuffle(spark, rows)(
+      pairs.localCheckpoint(true))
     handles.foreach(_.unpersist(false))
     out
   }
@@ -461,7 +479,10 @@ object Dedup {
     * downstream action (the admission kernel's verdict write), the
     * checkpoint bought nothing: skipping it lets the whole verdict
     * batch execute as ONE job instead of one eager job per probe
-    * family per micro-batch. */
+    * family per micro-batch. The guard and the candidate join read the
+    * index once, restricted to the delta's buckets
+    * ([[probeBucketJoin]]), so the probe's cost is bounded by the
+    * delta's bucket occupancy, not the index size. */
   private[operators] def minhashProbeLazy(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, delta: DataFrame, base: DataFrame,
@@ -470,37 +491,30 @@ object Dedup {
     val (shingleN, sigK, bands) = minhashIndexParams(spark, dir)
     val snap = Manifest.snapshot(spark, dir)
     val idx = Tombstones.live(spark, snap,
-      spark.read.parquet(snap.path("bands")))
+      Manifest.read(spark, snap.path("bands")))
     val dP = delta.select(col(idCol).as("id"),
       TF.distinctShingles(col(textCol), shingleN).as("sh"),
       TF.minhashSignature(col(textCol), shingleN, sigK).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandSize = sigK / bands
-    val dBands0 = dP.select(col("id"), explode(array((0 until bands)
-      .map(b => struct(lit(b).as("band"),
-        TF.lshBand(col("sig"), b * bandSize, bandSize).as("bucket"))
-      ): _*)).as("lb"))
-      .select(col("id"), col("lb.band"), col("lb.bucket"))
-    // both sides' hot-bucket guards from one aggregate, applied to the
-    // delta side alone — equivalent for the equi-join's output
-    // ([[probeHotBucketKeys]])
-    val dBands = dBands0.join(
-      probeHotBucketKeys(idx, dBands0, Seq("band", "bucket"),
-        maxBucketSize),
-      Seq("band", "bucket"), "left_anti")
-    val cands = dBands
-      .select(col("band"), col("bucket"), col("id").as("delta_id"))
-      .join(idx.select(col("band"), col("bucket"),
-        col("id").as("base_id")), Seq("band", "bucket"))
+    val cands = probeBucketJoin(
+        idx.select(col("band"), col("bucket"), col("id").as("base_id")),
+        sigBands(dP, sigK, bands).select(col("band"), col("bucket"),
+          col("id").as("delta_id")),
+        Seq("band", "bucket"), maxBucketSize)
       .select("delta_id", "base_id")
       .distinct()
     // fetch-then-shingle ONLY candidate base rows (join before the
     // shingle projection — the whole point of the persisted index is
-    // never re-shingling the base corpus); LEFT join so a candidate id
-    // the text table cannot resolve raises instead of vanishing
-    val candBase = cands.select(col("base_id")).distinct()
-      .join(base.select(col(idCol).as("base_id"),
-        col(textCol).as("_t")), Seq("base_id"), "left")
+    // never re-shingling the base corpus): the text table is filtered
+    // map-side against the broadcast candidate ids, then LEFT-joined
+    // under them, so a candidate id the text table cannot resolve
+    // raises instead of vanishing. The joins among batch-sized sides
+    // are shuffled hash joins (stages, not broadcast jobs).
+    val candIds = cands.select(col("base_id")).distinct()
+    val fetched = base.select(col(idCol).as("base_id"), col(textCol).as("_t"))
+      .join(broadcast(candIds), Seq("base_id"), "left_semi")
+    val candBase = candIds.join(fetched.hint("shuffle_hash"), Seq("base_id"),
+      "left")
       .select(col("base_id"),
         TF.distinctShingles(
           when(col("_t").isNull, raise_error(concat(
@@ -510,9 +524,9 @@ object Dedup {
               "a table covering every indexed batch")))).otherwise(
             col("_t")), shingleN).as("sh_b"))
     val out = cands
-      .join(dP.select(col("id").as("delta_id"), col("sh").as("sh_d")),
-        Seq("delta_id"))
-      .join(candBase, Seq("base_id"))
+      .join(dP.select(col("id").as("delta_id"), col("sh").as("sh_d"))
+        .hint("shuffle_hash"), Seq("delta_id"))
+      .join(candBase.hint("shuffle_hash"), Seq("base_id"))
       .select(col("delta_id"), col("base_id"),
         TF.jaccard(col("sh_d"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
@@ -710,7 +724,7 @@ object Dedup {
                          dir: String,
                          hotBucketCap: Int = 10000): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val sigs = spark.read.parquet(snap.path("sigs"))
+    val sigs = Manifest.read(spark, snap.path("sigs"))
     // distinct (id, sig) vs total rows: the replay-duplicate debt a
     // retried ingest micro-batch leaves behind (see
     // minhashIndexHealth) — one extra bounded aggregate over the
@@ -750,38 +764,29 @@ object Dedup {
                         maxBucketSize: Int = 10000): DataFrame = {
     val (pairs, handles) = simhashProbeLazy(spark, dir, delta, idCol,
       textCol, maxHamming, maxBucketSize)
-    val out = pairs.localCheckpoint(true)
-    handles.foreach(_.unpersist(false))
-    out
+    checkpointProbe(spark, pairs, handles, 4)
   }
 
   /** [[simhashIndexProbe]]'s LAZY core — the [[minhashProbeLazy]]
     * contract: (lazy pair frame, persisted handles to release after
-    * the plan is consumed). */
+    * the plan is consumed), one pass of the signature table restricted
+    * to the delta's buckets ([[probeBucketJoin]]). */
   private[operators] def simhashProbeLazy(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, delta: DataFrame, idCol: String, textCol: String,
       maxHamming: Int, maxBucketSize: Int): (DataFrame, Seq[DataFrame]) = {
     val snap = Manifest.snapshot(spark, dir)
     val baseBands = simhashBandRows(Tombstones.live(spark, snap,
-      spark.read.parquet(snap.path("sigs"))))
+      Manifest.read(spark, snap.path("sigs"))))
     val dSigs = delta.select(col(idCol).as("id"),
       TF.simhash64(col(textCol)).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dBands0 = simhashBandRows(dSigs)
-    // both sides' hot-bucket guards from one aggregate, applied to the
-    // delta side alone — equivalent for the equi-join's output
-    // ([[probeHotBucketKeys]])
-    val dBands = dBands0.join(
-      probeHotBucketKeys(baseBands, dBands0, Seq("band", "bucket"),
-        maxBucketSize),
-      Seq("band", "bucket"), "left_anti")
-    val out = dBands
-      .select(col("band"), col("bucket"), col("id").as("delta_id"),
-        col("sig").as("sig_d"))
-      .join(baseBands.select(col("band"), col("bucket"),
-        col("id").as("base_id"), col("sig").as("sig_b")),
-        Seq("band", "bucket"))
+    val out = probeBucketJoin(
+        baseBands.select(col("band"), col("bucket"),
+          col("id").as("base_id"), col("sig").as("sig_b")),
+        simhashBandRows(dSigs).select(col("band"), col("bucket"),
+          col("id").as("delta_id"), col("sig").as("sig_d")),
+        Seq("band", "bucket"), maxBucketSize)
       .select("delta_id", "base_id", "sig_d", "sig_b")
       .distinct()
       .select(col("delta_id"), col("base_id"),

@@ -118,6 +118,75 @@ package graft.operators
         s"$dir/${map.getOrElse(table, s"$table.parquet")}"
     }
 
+    /** The data file of a table directory that Spark's own schema
+      * inference reads: the first non-hidden file by qualified path.
+      * Walks directories in path order and stops at the first file, so
+      * a list-partitioned table costs one partition listing, not all. */
+    private def firstDataFile(f: org.apache.hadoop.fs.FileSystem,
+                              dir: org.apache.hadoop.fs.Path)
+      : Option[org.apache.hadoop.fs.FileStatus] =
+      f.listStatus(dir).toSeq
+        .filterNot(s => s.getPath.getName.startsWith("_") ||
+          s.getPath.getName.startsWith("."))
+        .sortBy(s => s.getPath.toString + (if (s.isDirectory) "/" else ""))
+        .iterator
+        .flatMap(s => if (s.isDirectory) firstDataFile(f, s.getPath)
+          else Some(s))
+        .nextOption()
+
+    /** A parquet footer: (the Spark schema its writer stored, if any;
+      * its row count). Read on the driver — no Spark job. */
+    private def footer(spark: org.apache.spark.sql.SparkSession,
+                       file: org.apache.hadoop.fs.FileStatus)
+      : (Option[org.apache.spark.sql.types.StructType], Long) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
+          spark.sparkContext.hadoopConfiguration))
+      try {
+        val meta = r.getFooter.getFileMetaData.getKeyValueMetaData
+        (Option(meta.get("org.apache.spark.sql.parquet.row.metadata"))
+          .map(org.apache.spark.sql.types.DataType.fromJson(_)
+            .asInstanceOf[org.apache.spark.sql.types.StructType]),
+          r.getRecordCount)
+      } finally r.close()
+    }
+
+    /** Rows in one parquet file, from its footer (no Spark job). */
+    private[operators] def rowCount(spark: org.apache.spark.sql.SparkSession,
+                                    file: org.apache.hadoop.fs.FileStatus)
+      : Long = footer(spark, file)._2
+
+    /** The schema a table's writer stored: the Spark schema in the
+      * footer of the file Spark's inference would read (the first data
+      * file by path), plus the int `list` column of a list-partitioned
+      * layout. None for a table with no data file, or one written
+      * without Spark's schema metadata. */
+    private[operators] def schemaOf(spark: org.apache.spark.sql.SparkSession,
+                                    path: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val f = fs(spark, path)
+      (if (f.exists(p)) firstDataFile(f, p) else None).flatMap { first =>
+        footer(spark, first)._1.map { s =>
+          if (first.getPath.getParent.getName.startsWith("list="))
+            s.add("list", org.apache.spark.sql.types.IntegerType)
+          else s
+        }
+      }
+    }
+
+    /** Read an index table with [[schemaOf]] declared: the same frame
+      * as `spark.read.parquet(path)`, without its schema-inference job.
+      * A table [[schemaOf]] cannot describe is read with inference (and
+      * a missing one fails as it does there). */
+    private[operators] def read(spark: org.apache.spark.sql.SparkSession,
+                                path: String)
+      : org.apache.spark.sql.DataFrame =
+      schemaOf(spark, path) match {
+        case Some(s) => spark.read.schema(s).parquet(path)
+        case None => spark.read.parquet(path)
+      }
+
     def snapshot(spark: org.apache.spark.sql.SparkSession,
                  dir: String): Snapshot = {
       val f = fs(spark, dir)
@@ -400,29 +469,46 @@ package graft.operators
       * append would leave a readable 0-row table that every probe
       * anti-joins until the next compaction (a [[SnapshotDiff]] with
       * no removed rows feeds exactly that to every fleet index). The
-      * emptiness check costs one job per call. */
+      * keys are written once, to a private temp directory outside the
+      * lock; its footers' row counts say whether anything was retracted
+      * (no separate emptiness job), and only then are its part files
+      * moved into the table under the lock. */
     def append(spark: org.apache.spark.sql.SparkSession, dir: String,
-               keys: org.apache.spark.sql.DataFrame): Unit =
-      if (!keys.isEmpty) Manifest.withLock(spark, dir) {
-        val snap = Manifest.snapshot(spark, dir)
-        val p = snap.path("tombstones")
-        // marker first: keys-then-marker could crash into a state where
-        // live retractions are invisibly masked as "folded"
-        if (marked(spark, p))
-          fs(spark, p).delete(
-            new org.apache.hadoop.fs.Path(s"$p/$EmptyMarker"), false)
-        keys.distinct().write.mode("append").parquet(p)
-      }
+               keys: org.apache.spark.sql.DataFrame): Unit = {
+      val f = fs(spark, dir)
+      val tmp = new org.apache.hadoop.fs.Path(
+        s"$dir/_tombstones.tmp.${java.util.UUID.randomUUID()}")
+      try {
+        keys.distinct().write.parquet(tmp.toString)
+        val parts = Lifecycle.parquetFiles(spark, tmp.toString)
+          .filter(Manifest.rowCount(spark, _) > 0)
+        if (parts.nonEmpty) Manifest.withLock(spark, dir) {
+          val p = Manifest.snapshot(spark, dir).path("tombstones")
+          // marker first: keys-then-marker could crash into a state where
+          // live retractions are invisibly masked as "folded"
+          if (marked(spark, p))
+            f.delete(new org.apache.hadoop.fs.Path(s"$p/$EmptyMarker"), false)
+          f.mkdirs(new org.apache.hadoop.fs.Path(p))
+          parts.foreach { s =>
+            require(f.rename(s.getPath,
+              new org.apache.hadoop.fs.Path(p, s.getPath.getName)),
+              s"tombstone move ${s.getPath} -> $p failed")
+          }
+        }
+      } finally f.delete(tmp, true)
+    }
 
     /** The id-keyed retraction (every family but the content-keyed exact
       * hashes and the shingle-keyed decontam set): `ids`' `idCol` cast
       * to the stored `id` type of `table` — so the probes' anti-join
-      * cannot silently type-mismatch — and [[append]]ed. */
+      * cannot silently type-mismatch — and [[append]]ed. The type comes
+      * from the table's footer ([[Manifest.read]]), not an inference
+      * job. */
     def retractIds(spark: org.apache.spark.sql.SparkSession,
                    snap: Manifest.Snapshot, table: String,
                    ids: org.apache.spark.sql.DataFrame,
                    idCol: String): Unit = {
-      val idType = spark.read.parquet(snap.path(table)).schema("id").dataType
+      val idType = Manifest.read(spark, snap.path(table)).schema("id").dataType
       append(spark, snap.dir, ids.select(
         org.apache.spark.sql.functions.col(idCol).cast(idType).as("id")))
     }
@@ -435,7 +521,7 @@ package graft.operators
       : Option[org.apache.spark.sql.DataFrame] = {
       val p = snap.path("tombstones")
       if (exists(spark, p) && !marked(spark, p))
-        Some(spark.read.parquet(p))
+        Some(Manifest.read(spark, p))
       else None
     }
 
@@ -577,7 +663,7 @@ package graft.operators
       import spark.implicits._
       val p = Manifest.snapshot(spark, dir).path("ingest_log")
       if (Manifest.exists(spark, p))
-        spark.read.parquet(p).select("batch_id").distinct()
+        Manifest.read(spark, p).select("batch_id").distinct()
       else Seq.empty[String].toDF("batch_id")
     }
 
@@ -607,7 +693,7 @@ package graft.operators
       import org.apache.spark.sql.functions.{col, count, lit}
       val p = snap.path("ingest_log")
       Manifest.exists(spark, p) &&
-        spark.read.parquet(p).groupBy("batch_id")
+        Manifest.read(spark, p).groupBy("batch_id")
           .agg(count(lit(1)).as("_n")).where(col("_n") > 1)
           .limit(1).count() > 0
     }
@@ -654,7 +740,7 @@ package graft.operators
       val logPath = snap.path("ingest_log")
       val log =
         if (Manifest.exists(spark, logPath))
-          Some(spark.read.parquet(logPath)
+          Some(Manifest.read(spark, logPath)
             .select(lit(2).as("_t"),
               col("batch_id").cast("string").as("_v")))
         else None
@@ -825,7 +911,7 @@ package graft.operators
                     keys: Seq[String], dedupe: Dedupe, parts: Parts): Unit =
       rewrite(spark, dir) { snap =>
         val path = snap.path(table)
-        val live = Tombstones.live(spark, snap, spark.read.parquet(path))
+        val live = Tombstones.live(spark, snap, Manifest.read(spark, path))
         val rows = dedupe match {
           case Dedupe.Always => live.distinct()
           case Dedupe.OnReplay => replayFolded(spark, snap, live)

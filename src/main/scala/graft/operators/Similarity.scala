@@ -106,7 +106,7 @@ object Similarity {
         (-col("col.nc")).as("cosine"), (col("pos") + 1).as("rank"))
 
   /** [[topK]] of candidate pairs carrying (qid, qv, id, v) by exact
-    * cosine — the scorer of every exact and refined path. */
+    * cosine — the scorer of the exact paths. */
   private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
     topK(pairs.select(col("qid"), col("id"),
       V.cosine(col("qv"), col("v")).as("cosine")), k)
@@ -273,36 +273,25 @@ object Similarity {
   // ONCE below over a [[Lists]] value, and the public ivf*/ivfPq* verbs
   // further down are one-expression forwards that pick the layout.
 
-  /** Snapshot a BOUNDED (broadcast-class) frame: one collect + a local
-    * relation over the rows. Used where one plan execution derives
-    * driver-side state (a partition filter) that a second execution
-    * must agree with — recomputing a nondeterministic input in between
-    * would desynchronize them. Unlike localCheckpoint this pins nothing
-    * in the block manager after the caller drops the frame. */
-  private def materialize(spark: SparkSession, df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
   /** Coarse centroids of a persisted index, in list order — bounded
-    * (nList · dim doubles). `path` is the manifest-resolved table
-    * directory (one [[Manifest.snapshot]] per query keeps every table a
-    * plan reads on the same index version). */
+    * (nList · dim doubles), so collected and sorted on the driver.
+    * `path` is the manifest-resolved table directory (one
+    * [[Manifest.snapshot]] per query keeps every table a plan reads on
+    * the same index version). */
   private def loadCentroids(spark: SparkSession,
                             path: String): Array[Array[Double]] =
-    spark.read.parquet(path)
-      .orderBy("list").collect().map(_.getSeq[Double](1).toArray)
+    Manifest.read(spark, path).collect().sortBy(_.getInt(0))
+      .map(_.getSeq[Double](1).toArray)
 
-  /** PQ codebooks of a persisted index as a (j)(c) grid — bounded
-    * (m · nCodes · subLen doubles). */
-  private def loadCodebooks(spark: SparkSession,
-                            path: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(path)
-      .orderBy("j", "c").collect()
-    val m = rows.map(_.getInt(0)).max + 1
-    val nCodes = rows.map(_.getInt(1)).max + 1
+  /** PQ codebook rows (j, c, center) as a (j)(c) grid — bounded
+    * (m · nCodes · subLen doubles), sorted on the driver. */
+  private def codebookGrid(
+      rows: Array[org.apache.spark.sql.Row]): Array[Array[Array[Double]]] = {
+    val sorted = rows.sortBy(r => (r.getInt(0), r.getInt(1)))
+    val m = sorted.map(_.getInt(0)).max + 1
+    val nCodes = sorted.map(_.getInt(1)).max + 1
     Array.tabulate(m, nCodes) { (j, c) =>
-      rows(j * nCodes + c).getSeq[Double](2).toArray
+      sorted(j * nCodes + c).getSeq[Double](2).toArray
     }
   }
 
@@ -339,7 +328,7 @@ object Similarity {
 
   /** The `nProbe` nearest centroid indices by squared L2, ascending
     * distance — the probe kernel of the query paths. */
-  private def probeIdx(cents: Array[Array[Double]], v: Seq[Double],
+  private def probeIdx(cents: Array[Array[Double]], v: Array[Double],
                        nProbe: Int): Seq[Int] =
     cents.zipWithIndex.map { case (c, i) =>
       var d = 0.0
@@ -364,42 +353,120 @@ object Similarity {
       (nearestIdx(q.value.centers, x), codes, nrm)
     }.apply(v.cast("array<double>")).as("e")
 
-  /** Each query exploded into its `nProbe` nearest lists:
-    * (qid, qv, list). */
-  private def probeLists(q: Bq, queries: DataFrame,
-                         nProbe: Int): DataFrame = {
-    val lists = udf { (qv: Seq[Double]) =>
-      probeIdx(q.value.centers, qv, nProbe)
+  /** A query batch collected ONCE on the driver, the side every
+    * probe step reads: each row's group (rows sharing a qid score as one
+    * qid, as they did when the batch rode a join), its vector as doubles
+    * (float→double widening is exact, so the scorers see the values the
+    * cast column held) and, per inverted list, the rows probing it. */
+  private final case class Batch(group: Array[Int],
+                                 members: Array[Array[Int]],
+                                 qvs: Array[Array[Double]],
+                                 byList: Map[Int, Array[Int]])
+
+  /** A collected [[Batch]], broadcast, plus the distinct qids its groups
+    * stand for. No side of the probe is a Spark relation, so none costs
+    * a stage job: the lists come from the collected rows, and the
+    * scorers read the vectors from the broadcast. */
+  private final case class Probes(qids: Array[Any],
+                                  qidType: org.apache.spark.sql.types.DataType,
+                                  batch: org.apache.spark.broadcast.Broadcast[Batch]) {
+    /** The probed lists: the static partition filter of a list scan. */
+    def hit: Seq[Int] = batch.value.byList.keys.toSeq.sorted
+
+    /** Each row (carrying `list`) once per query row probing its list,
+      * the query row as `_r`; rows of unprobed lists drop out. */
+    def expand(rows: DataFrame): DataFrame = {
+      val b = batch
+      rows.withColumn("_r", explode(udf { (list: Int) =>
+        b.value.byList.getOrElse(list, Array.emptyIntArray).toSeq
+      }.apply(col("list"))))
     }
-    queries.select(col("qid"), col("qv"),
-      explode(lists(col("qv").cast("array<double>"))).as("list"))
+
+    /** Each query row of group `g`, as `_r` (the refine side). */
+    def rowsOf(g: Column): Column = {
+      val b = batch
+      udf { (i: Int) => b.value.members(i).toSeq }.apply(g)
+    }
+
+    def groupOf(r: Column): Column = {
+      val b = batch
+      udf { (i: Int) => b.value.group(i) }.apply(r)
+    }
+
+    /** The query vector of row `r`, as array<double>. */
+    def qvOf(r: Column): Column = {
+      val b = batch
+      udf { (i: Int) => b.value.qvs(i) }.apply(r)
+    }
+
+    /** A [[topK]] frame keyed by group, re-keyed by the original qid. */
+    def withQid(top: DataFrame): DataFrame =
+      top.withColumn("qid", element_at(
+        array(qids.toSeq.map(lit): _*)
+          .cast(org.apache.spark.sql.types.ArrayType(qidType)),
+        col("qid") + 1))
   }
 
-  /** Asymmetric-distance cosine estimate: Σⱼ dot(qⱼ, codebook_j[code_j])
-    * over the stored norm — the PQ candidate-scoring kernel. */
-  private def adcScore(cb: Array[Array[Array[Double]]], subLen: Int,
-                       qv: Seq[Double], codes: Seq[Int],
-                       nrm: Double): Double = {
-    var s = 0.0
+  /** Collect `queries` (qid, qv) and probe each row's `nProbe` nearest
+    * lists ([[probeIdx]]). The batch is broadcast-class by the probe
+    * contract, and evaluated exactly once: a nondeterministic `queries`
+    * (sample(), unordered limit) cannot probe one set of lists and score
+    * another. A local `queries` collects without a job. */
+  private def probes(spark: SparkSession, queries: DataFrame,
+                     centers: Array[Array[Double]], nProbe: Int): Probes = {
+    val rows = queries.select(col("qid"), col("qv").cast("array<double>"))
+      .collect()
+    val qids = rows.map(_.get(0)).distinct
+    val groupOf = qids.zipWithIndex.toMap
+    val qvs = rows.map(_.getSeq[Double](1).toArray)
+    val byList = qvs.zipWithIndex
+      .flatMap { case (v, r) => probeIdx(centers, v, nProbe).map(_ -> r) }
+      .groupBy(_._1).map { case (l, rs) => l -> rs.map(_._2) }
+    val group = rows.map(r => groupOf(r.get(0)))
+    val members = group.indices.toArray.groupBy(group(_))
+    Probes(qids, queries.schema("qid").dataType, spark.sparkContext.broadcast(
+      Batch(group, qids.indices.map(members).toArray, qvs, byList)))
+  }
+
+  /** The asymmetric-distance lookup table of one query (Jégou, Douze and
+    * Schmid, TPAMI 2011): `lut(j·nCodes + c)` = ⟨q_j, codebook_j[c]⟩ for
+    * subvector j, then ‖q‖ last — built once per query, so scoring a
+    * code row costs m lookups instead of m · subLen multiplies. */
+  private[operators] def adcTable(cb: Array[Array[Array[Double]]],
+                                  qv: Array[Double]): Array[Double] = {
+    val nCodes = cb(0).length
+    val subLen = cb(0)(0).length
+    val lut = new Array[Double](cb.length * nCodes + 1)
     var j = 0
     while (j < cb.length) {
-      val cent = cb(j)(codes(j))
-      var t = 0
-      while (t < subLen) { s += cent(t) * qv(j * subLen + t); t += 1 }
+      var c = 0
+      while (c < nCodes) {
+        val cent = cb(j)(c)
+        var s = 0.0
+        var t = 0
+        while (t < subLen) { s += cent(t) * qv(j * subLen + t); t += 1 }
+        lut(j * nCodes + c) = s
+        c += 1
+      }
       j += 1
     }
     var qn = 0.0
     var i = 0
     while (i < qv.length) { qn += qv(i) * qv(i); i += 1 }
-    if (nrm == 0.0 || qn == 0.0) 0.0 else s / (math.sqrt(qn) * nrm)
+    lut(cb.length * nCodes) = math.sqrt(qn)
+    lut
   }
 
-  /** [[adcScore]] over broadcast codebooks: (qv, codes, norm) → score. */
-  private def adc(q: Bq) = {
-    val subLen = q.value.codebooks(0)(0).length
-    udf { (qv: Seq[Double], codes: Seq[Int], nrm: Double) =>
-      adcScore(q.value.codebooks, subLen, qv, codes, nrm)
-    }
+  /** Asymmetric-distance cosine estimate of one code row from its
+    * query's [[adcTable]]: Σⱼ lut(j, code_j) over ‖q‖ and the stored
+    * norm (0 when either is 0) — the PQ candidate-scoring kernel. */
+  private[operators] def adcScore(lut: Array[Double], nCodes: Int,
+                                  codes: Seq[Int], nrm: Double): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < codes.length) { s += lut(j * nCodes + codes(j)); j += 1 }
+    val qn = lut(lut.length - 1)
+    if (nrm == 0.0 || qn == 0.0) 0.0 else s / (qn * nrm)
   }
 
   /** A code row's reconstruction concat(codebook_j[code_j]) — the best
@@ -493,10 +560,10 @@ object Similarity {
                 snap: Manifest.Snapshot): Option[(Int, Int)]
     /** (id, v) rows → (list, id, payload…). */
     def encode(q: Bq, rows: DataFrame): DataFrame
-    /** Probed candidates (list, id, payload…, qid, qv) → per-query
-      * top-k by exact cosine ([[topK]]'s shape). */
-    def score(q: Bq, cands: DataFrame, queries: DataFrame,
-              k: Int): DataFrame
+    /** List rows (list, id, payload…) scored against the probe batch →
+      * per-query top-k by exact cosine ([[topK]]'s shape). Rows of lists
+      * no query probes score nothing. */
+    def score(q: Bq, rows: DataFrame, p: Probes, k: Int): DataFrame
     /** The live (id, v) vectors: the exact side of recall and of the
       * nProbe ladder. */
     def vectors(spark: SparkSession, snap: Manifest.Snapshot): DataFrame
@@ -524,9 +591,9 @@ object Similarity {
                 snap: Manifest.Snapshot): Option[(Int, Int)] = None
     def encode(q: Bq, rows: DataFrame): DataFrame =
       rows.select(listOf(q, col("v")).as("list"), col("id"), col("v"))
-    def score(q: Bq, cands: DataFrame, queries: DataFrame,
-              k: Int): DataFrame =
-      cosineTopK(cands, k)
+    def score(q: Bq, rows: DataFrame, p: Probes, k: Int): DataFrame =
+      p.withQid(topK(p.expand(rows).select(p.groupOf(col("_r")).as("qid"),
+        col("id"), V.cosine(p.qvOf(col("_r")), col("v")).as("cosine")), k))
     def vectors(spark: SparkSession, snap: Manifest.Snapshot): DataFrame =
       liveRows(spark, snap, table).select(col("id"), col("v"))
     // replayed appends land identical rows: a refit folds them first
@@ -543,9 +610,10 @@ object Similarity {
     * smaller than the vectors. Codes cannot reconstruct a vector, so
     * the exact rescoring, the exact side and a refit read the embedding
     * `store` (id, v); steps that need none of them pass None. Scoring
-    * is asymmetric-distance over the codes ([[adcScore]]), a bounded
-    * heap of `refineK` candidates per query, then exact cosine over
-    * those ≤ |queries|·refineK ids joined back from the store. */
+    * is asymmetric-distance over the codes (one [[adcTable]] per query,
+    * [[adcScore]] per code row), a bounded heap of `refineK` candidates
+    * per query, then exact cosine over those ≤ |queries|·refineK ids,
+    * broadcast against the streamed store. */
   private final case class Pq(store: Option[DataFrame] = None,
                               refineK: Int = 0)
       extends Lists("ivfPq", "codes") {
@@ -565,33 +633,48 @@ object Similarity {
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/codebooks.parquet")
     }
+    // both bounded tables in ONE collect, the centroids as j = -1
     def loadQuantizers(spark: SparkSession,
-                       snap: Manifest.Snapshot): Quantizers =
-      Quantizers(loadCentroids(spark, snap.path("centroids")),
-        loadCodebooks(spark, snap.path("codebooks")))
+                       snap: Manifest.Snapshot): Quantizers = {
+      val (cents, codes) = Manifest.read(spark, snap.path("centroids"))
+        .select(lit(-1).as("j"), col("list").as("c"), col("center"))
+        .unionByName(Manifest.read(spark, snap.path("codebooks")))
+        .collect().partition(_.getInt(0) < 0)
+      Quantizers(cents.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray),
+        codebookGrid(codes))
+    }
     def shapeAt(spark: SparkSession,
                 snap: Manifest.Snapshot): Option[(Int, Int)] = {
-      val cb = loadCodebooks(spark, snap.path("codebooks"))
+      val cb = codebookGrid(
+        Manifest.read(spark, snap.path("codebooks")).collect())
       Some((cb.length, cb(0).length))
     }
     def encode(q: Bq, rows: DataFrame): DataFrame =
       rows.select(col("id"), listAndCodes(q, col("v")))
         .select(col("e._1").as("list"), col("id"), col("e._2").as("codes"),
           col("e._3").as("norm"))
-    def score(q: Bq, cands: DataFrame, queries: DataFrame,
-              k: Int): DataFrame = {
-      val approxTop = cands
-        .select(col("qid"), col("id"),
-          adc(q)(col("qv").cast("array<double>"), col("codes"), col("norm"))
-            .as("approx"))
+    def score(q: Bq, rows: DataFrame, p: Probes, k: Int): DataFrame = {
+      val cb = q.value.codebooks
+      val nCodes = cb(0).length
+      val luts = rows.sparkSession.sparkContext.broadcast(
+        p.batch.value.qvs.map(adcTable(cb, _)))
+      val adc = udf { (r: Int, codes: Seq[Int], nrm: Double) =>
+        adcScore(luts.value(r), nCodes, codes, nrm)
+      }
+      val approxTop = p.expand(rows)
+        .select(p.groupOf(col("_r")).as("qid"), col("id"),
+          adc(col("_r"), col("codes"), col("norm")).as("approx"))
         .groupBy("qid")
         .agg(AggFunctions.collectTopK(
           struct((-col("approx")).as("na"), col("id")), refineK,
           smallest = true).as("_top"))
         .select(col("qid"), explode(col("_top")).as("c"))
         .select(col("qid"), col("c.id").as("id"))
-      cosineTopK(approxTop.join(embeddings, Seq("id"))
-        .join(broadcast(queries), Seq("qid")), k)
+      p.withQid(topK(embeddings.join(broadcast(approxTop), Seq("id"))
+        .select(col("qid"), col("id"), col("v"),
+          explode(p.rowsOf(col("qid"))).as("_r"))
+        .select(col("qid"), col("id"),
+          V.cosine(p.qvOf(col("_r")), col("v")).as("cosine")), k))
     }
     def vectors(spark: SparkSession, snap: Manifest.Snapshot): DataFrame =
       Tombstones.live(spark, snap, embeddings)
@@ -614,18 +697,18 @@ object Similarity {
     * out. */
   private def liveRows(spark: SparkSession, snap: Manifest.Snapshot,
                        table: String): DataFrame =
-    Tombstones.live(spark, snap, spark.read.parquet(snap.path(table)))
+    Tombstones.live(spark, snap, Manifest.read(spark, snap.path(table)))
 
   /** The in-memory probe: encode the whole corpus under freshly fit
-    * quantizers, join each list's members to the queries probing it,
-    * score. Corpus side = one encode pass + one shuffle on list id. */
+    * quantizers, pair each list's members with the queries probing it,
+    * score. Corpus side = one encode pass, no shuffle before scoring. */
   private def probe(lists: Lists, queries: DataFrame, corpus: DataFrame,
                     k: Int, nProbe: Int, quantizers: Quantizers)
   : DataFrame = {
-    val q = corpus.sparkSession.sparkContext.broadcast(quantizers)
-    lists.score(q, lists.encode(q, corpus)
-      .join(broadcast(probeLists(q, queries, nProbe)), Seq("list")),
-      queries, k)
+    val spark = corpus.sparkSession
+    val q = spark.sparkContext.broadcast(quantizers)
+    lists.score(q, lists.encode(q, corpus),
+      probes(spark, queries, quantizers.centers, nProbe), k)
   }
 
   /** Build: the quantizer tables, then every vector encoded into the
@@ -659,7 +742,7 @@ object Similarity {
       // coerce the batch to the EXISTING index's column types: an
       // append that silently mixes (say) float and double data files
       // under one directory corrupts every later probe's scan
-      val existing = spark.read.parquet(path).schema
+      val existing = Manifest.read(spark, path).schema
       val idType = existing("id").dataType
       requireIdWidens(batch.schema("id").dataType, idType)
       lists.encode(q, batch)
@@ -671,32 +754,27 @@ object Similarity {
       batch.select(col("id").cast(idType).as("id"))
     }
 
-  /** The persisted probe: quantizers load as bounded collects, each
-    * query explodes into its `nProbe` nearest lists, and the list-table
-    * scan carries a LITERAL `list IN (...)` partition filter — the
-    * union of probed lists, computed driver-side from the
-    * broadcast-class query batch — so unprobed list directories are
-    * pruned STATICALLY at planning time (never read from storage),
-    * rather than hoping the runtime join or DPP filters them. */
+  /** The persisted probe: quantizers load as bounded collects, the
+    * query batch is collected once ([[probes]]), and the list-table scan
+    * carries a LITERAL `list IN (...)` partition filter — the union of
+    * probed lists, computed on the driver from those rows — so unprobed
+    * list directories are pruned STATICALLY at planning time (never read
+    * from storage), rather than hoping the runtime join or DPP filters
+    * them. The scan is the only corpus-sized side: each row pairs with
+    * the queries probing its list through the broadcast batch, with no
+    * join and no stage job for the batch. */
   private def query(lists: Lists, spark: SparkSession, dir: String,
                     queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val q = spark.sparkContext.broadcast(lists.loadQuantizers(spark, snap))
-    // MATERIALIZE the exploded query batch (|queries|·nProbe rows)
-    // before deriving the partition filter: the filter is collected
-    // from one execution of this plan and the join below re-executes
-    // it — a nondeterministic `queries` (sample(), unordered limit)
-    // could otherwise probe lists the static filter already excluded
-    val probed = materialize(spark, probeLists(q, queries, nProbe))
-    val hit = probed.select(col("list")).distinct()
-      .collect().map(_.getInt(0)).sorted
+    val quantizers = lists.loadQuantizers(spark, snap)
+    val p = probes(spark, queries, quantizers.centers, nProbe)
     // tombstone filter AFTER the static partition prune: retracted ids
     // vanish from results immediately, and the anti-join only sees the
     // probed lists' rows
     val rows = Tombstones.live(spark, snap,
-      spark.read.parquet(snap.path(lists.table))
-        .where(col("list").isin(hit.map(Int.box): _*)))
-    lists.score(q, rows.join(broadcast(probed), Seq("list")), queries, k)
+      Manifest.read(spark, snap.path(lists.table))
+        .where(col("list").isin(p.hit.map(Int.box): _*)))
+    lists.score(spark.sparkContext.broadcast(quantizers), rows, p, k)
   }
 
   /** Compaction: every list's accumulated append fragments rewritten
@@ -736,7 +814,7 @@ object Similarity {
     Lifecycle.rewrite(spark, dir, scratch = Some(s"$dir/_rebuild.tmp")) {
       snap =>
       val rows = lists.refitRows(spark, snap)
-      val nList = spark.read.parquet(snap.path("centroids")).count().toInt
+      val nList = loadCentroids(spark, snap.path("centroids")).length
       val tmp = s"$dir/_rebuild.tmp"
       build(lists, rows, tmp, fitQuantizers(s"${lists.op}Build", rows,
         nList, seed, kmeansMaxIter, trainFraction,
@@ -766,7 +844,7 @@ object Similarity {
                             queries: DataFrame, k: Int,
                             targetRecall: Double): Option[Int] = {
     val snap = Manifest.snapshot(spark, dir)
-    val nList = spark.read.parquet(snap.path("centroids")).count().toInt
+    val nList = loadCentroids(spark, snap.path("centroids")).length
     def pairs(df: DataFrame) = df.select("qid", "id").collect()
       .map(r => (r.get(0), r.get(1))).toSet
     val exact = pairs(bruteForce(queries, lists.vectors(spark, snap), k))
@@ -797,7 +875,7 @@ object Similarity {
                     batch: DataFrame, baseSampleMod: Long,
                     maxBaseFiles: Int): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    val cents = spark.read.parquet(snap.path("centroids"))
+    val cents = Manifest.read(spark, snap.path("centroids"))
       .select(col("list"), col("center"))
     val q = spark.sparkContext.broadcast(lists.loadQuantizers(spark, snap))
     def meanSim(rows: DataFrame, v: Column, name: String): DataFrame =
@@ -846,10 +924,10 @@ object Similarity {
     import spark.implicits._
     // lists the INDEX has (from the quantizer, so an empty list still
     // counts — k-means can leave clusters unpopulated)
-    val nLists = spark.read.parquet(snap.path("centroids")).count().toInt
+    val nLists = loadCentroids(spark, snap.path("centroids")).length
     // rows per list: one aggregate over the postings/codes scan —
     // bounded output (nList rows)
-    val rowsPerList = spark.read.parquet(snap.path(table))
+    val rowsPerList = Manifest.read(spark, snap.path(table))
       .groupBy("list").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     // files per list: one FS listing of the partition directories
@@ -950,7 +1028,7 @@ object Similarity {
     val files = Lifecycle.parquetFiles(spark, path, recursive = true)
       .map(_.getPath.toString)
     if (maxFiles <= 0 || files.length <= maxFiles)
-      (spark.read.parquet(path), files.length.toLong, files.length.toLong)
+      (Manifest.read(spark, path), files.length.toLong, files.length.toLong)
     else {
       // rank by a hash of the path RELATIVE to the table root so the
       // selection is stable under directory moves and version flips
@@ -962,7 +1040,9 @@ object Similarity {
         (scala.util.hashing.MurmurHash3.stringHash(rel, 42), rel)
       }
       val picked = files.sortBy(rank).take(maxFiles)
-      (spark.read.option("basePath", path).parquet(picked: _*),
+      (Manifest.schemaOf(spark, path)
+        .fold(spark.read)(spark.read.schema(_))
+        .option("basePath", path).parquet(picked: _*),
         maxFiles.toLong, files.length.toLong)
     }
   }
@@ -1605,7 +1685,7 @@ object Similarity {
                   logDir: String): Map[String, Long] = {
       val p = Manifest.snapshot(spark, logDir).path("probe_log")
       if (Manifest.exists(spark, p))
-        spark.read.parquet(p).groupBy("dir")
+        Manifest.read(spark, p).groupBy("dir")
           .agg(max(col("sweep")).as("sweep"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       else Map.empty
@@ -1629,7 +1709,7 @@ object Similarity {
                       logDir: String): DataFrame = {
     import spark.implicits._
     val p = Manifest.snapshot(spark, logDir).path("probe_log")
-    if (Manifest.exists(spark, p)) spark.read.parquet(p)
+    if (Manifest.exists(spark, p)) Manifest.read(spark, p)
     else Seq.empty[(String, Long)].toDF("dir", "sweep")
   }
 
@@ -2074,7 +2154,7 @@ object Similarity {
       def tag(df: DataFrame, t: Int): DataFrame =
         df.select(lit(t).as("_t"), lit(null).cast("string").as("_v"))
       def semiRows(keys: DataFrame, on: String): DataFrame =
-        tag(spark.read.parquet(snap.path(table))
+        tag(Manifest.read(spark, snap.path(table))
           .join(keys, Seq(on), "left_semi"), 1)
       // Left(literal) or Right(tagged rows to count)
       val keysLive: Either[Long, DataFrame] = family match {
@@ -2094,7 +2174,7 @@ object Similarity {
           case None => Left(-1L)
         }
         case _ =>
-          val idType = spark.read.parquet(snap.path(table))
+          val idType = Manifest.read(spark, snap.path(table))
             .schema("id").dataType
           Right(semiRows(docs.select(col(idCol).cast(idType).as("id"))
             .distinct(), "id"))

@@ -566,6 +566,8 @@ class ErasureLifecycleSpec extends SparkSpec {
       dirs.foreach { d =>
         assert(Tombstones.readIfAny(spark, Manifest.snapshot(spark, d))
           .isEmpty, s"$d: an empty retraction left a tombstone table")
+        assert(!new java.io.File(d).list().exists(_.startsWith("_tomb")),
+          s"$d: a retraction left its temp directory")
       }
       assert(marker.exists(),
         "an empty retraction must not clear the folded marker")

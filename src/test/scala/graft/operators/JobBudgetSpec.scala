@@ -1,0 +1,108 @@
+package graft.operators
+
+import graft.SparkSpec
+import graft.util.JobCount
+import org.apache.spark.sql.DataFrame
+
+/** Job budgets for the persisted-index verbs: on one fixed small
+  * fixture, each family's build, append, probe (with its result
+  * collected), delete and compact must not start more Spark jobs than
+  * its budget. At this size the scheduler floor — jobs × per-job
+  * latency — is most of a verb's cost, so a plan change that adds a
+  * schema-inference, sort or stage job fails here instead of waiting for
+  * a benchmark. Budgets are the counts measured on the fixture, asserted
+  * as ≤ so a plan improvement never fails the suite. */
+class JobBudgetSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val verbs = Seq("build", "append", "probe", "delete", "compact")
+
+  // family → budget per verb, in `verbs` order. Probe: the bounded
+  // batch's scope runs the MinHash/SimHash probe as a count, the
+  // broadcast(s) of batch-sized sides and the checkpoint, plus the
+  // collect; an IVF probe is one quantizer collect, the top-k
+  // stage(s) and the collect. Delete: one write (keys, then the move).
+  private val budgets = Map(
+    "minhash" -> Seq(1, 1, 5, 2, 5),
+    "simhash" -> Seq(1, 1, 4, 2, 5),
+    "ivf" -> Seq(5, 3, 3, 2, 4),
+    "ivf_pq" -> Seq(6, 3, 5, 2, 4))
+
+  private def words(i: Int): String =
+    (0 until 30).map(j => s"w${(i * 7 + j * j) % 97}").mkString(" ")
+
+  private lazy val docs: DataFrame =
+    (0 until 120).map(i => (i.toLong, words(i))).toDF("id", "text")
+  private lazy val delta: DataFrame =
+    Seq(1000L -> words(3), 1001L -> words(50), 1002L -> "a fresh text")
+      .toDF("id", "text")
+
+  private def vec(i: Int): Seq[Float] = {
+    val r = new java.util.SplittableRandom(i.toLong)
+    Seq.fill(16)((i % 4 + r.nextGaussian() * 0.1).toFloat)
+  }
+  private lazy val vecs: DataFrame =
+    (0 until 120).map(i => (i.toLong, vec(i))).toDF("id", "v")
+  private lazy val queries: DataFrame =
+    (0 until 4).map(i => (i.toLong, vec(500 + i))).toDF("qid", "qv")
+  private lazy val retract: DataFrame = Seq(3L, 7L).toDF("id")
+
+  /** The verbs of one family, in lifecycle order, over index `dir`. */
+  private def lifecycle(family: String, dir: String): Seq[() => Unit] = {
+    val base = docs.filter($"id" < 100)
+    val added = docs.filter($"id" >= 100)
+    val baseV = vecs.filter($"id" < 100)
+    val addedV = vecs.filter($"id" >= 100)
+    family match {
+      case "minhash" => Seq(
+        () => Dedup.minhashIndexBuild(base, dir, "id", "text", 3, 8, 4),
+        () => Dedup.minhashIndexAppend(spark, dir, added, "id", "text"),
+        () => {
+          val p = Dedup.minhashIndexProbe(spark, dir, delta, docs, "id",
+            "text")
+          p.collect()
+          Clustering.releasePairs(p)
+        },
+        () => Dedup.minhashIndexDelete(spark, dir, retract),
+        () => Dedup.minhashIndexCompact(spark, dir))
+      case "simhash" => Seq(
+        () => Dedup.simhashIndexBuild(base, dir, "id", "text"),
+        () => Dedup.simhashIndexAppend(spark, dir, added, "id", "text"),
+        () => {
+          val p = Dedup.simhashIndexProbe(spark, dir, delta, "id", "text")
+          p.collect()
+          Clustering.releasePairs(p)
+        },
+        () => Dedup.simhashIndexDelete(spark, dir, retract),
+        () => Dedup.simhashIndexCompact(spark, dir))
+      case "ivf" => Seq(
+        () => Similarity.ivfBuild(baseV, dir, nList = 4),
+        () => Similarity.ivfAppend(spark, dir, addedV),
+        () => Similarity.ivfQuery(spark, dir, queries, 5, 2).collect(),
+        () => Similarity.ivfDelete(spark, dir, retract),
+        () => Similarity.ivfCompact(spark, dir))
+      case "ivf_pq" => Seq(
+        () => Similarity.ivfPqBuild(baseV, dir, nList = 4, m = 4,
+          nCodes = 8),
+        () => Similarity.ivfPqAppend(spark, dir, addedV),
+        () => Similarity.ivfPqQuery(spark, dir, queries, vecs, 5, 2, 20)
+          .collect(),
+        () => Similarity.ivfDelete(spark, dir, retract),
+        () => Similarity.ivfPqCompact(spark, dir))
+    }
+  }
+
+  budgets.toSeq.sortBy(_._1).foreach { case (family, budget) =>
+    test(s"$family build, append, probe, delete and compact stay within " +
+      "their job budgets") {
+      graft.util.TempDirs.using(s"jobs_$family") { case Seq(dir) =>
+        val counts = lifecycle(family, dir).map(v => JobCount(spark)(v())._2)
+        val report = verbs.zip(counts).zip(budget).map {
+          case ((v, n), b) => s"$v $n/$b" }.mkString(", ")
+        info(s"$family jobs: $report")
+        assert(counts.zip(budget).forall { case (n, b) => n <= b },
+          s"$family over its job budget: $report")
+      }
+    }
+  }
+}
