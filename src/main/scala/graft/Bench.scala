@@ -17,9 +17,8 @@ object Bench {
     // Job count is a plan-shape invariant: if it HOLDS across rounds
     // while wall time swings, the swing is scheduler/host noise, not a
     // plan regression; if it MOVES, the plan changed. Counted at job
-    // START on the listener bus — actions are synchronous, so by the
-    // time a query's action returns, its starts are long posted.
-    val jobCounter = new java.util.concurrent.atomic.AtomicLong(0L)
+    // START by graft.util.JobCount, which drains the listener bus before
+    // it reads the count — outside the timed span.
     def newSession(): SparkSession = {
       val s = graft.util.SessionTuning(SparkSession.builder())
         .master(s"local[$cpus]")
@@ -27,12 +26,6 @@ object Bench {
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       s.sparkContext.setLogLevel("WARN")
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobCounter.incrementAndGet()
-        })
       try SparkEntry.queries("q13_region_revenue")(s, sfDir)
         .queryExecution.toRdd.foreach(_ => ())
       catch { case _: Throwable => () }
@@ -177,9 +170,9 @@ object Bench {
         spark.stop()
         spark = newSession()
       }
-      val j0 = jobCounter.get()
-      t1map(name) = timeQuery(name, fn)
-      jobsMap(name) = jobCounter.get() - j0
+      val (t, jobs) = graft.util.JobCount(spark)(timeQuery(name, fn))
+      t1map(name) = t
+      jobsMap(name) = jobs
     }
     // PASS 2: re-time above-threshold queries in a DIFFERENT order and a
     // fresh session, report per-query min across passes. Back-to-back

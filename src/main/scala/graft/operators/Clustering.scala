@@ -290,7 +290,7 @@ object Clustering {
     * cosine only WITHIN a cluster — the clustering turns the O(n²)
     * all-pairs comparison into Σ cluster², with the cluster count
     * choosing the trade-off (the same role LSH bands play in
-    * [[Dedup.minhashPairs]], but data-adaptive). Emits
+    * [[Dedup.minhashLsh]], but data-adaptive). Emits
     * `(cluster, id_a, id_b, cosine)` for pairs with cosine ≥ `tau`;
     * downstream keeper selection is [[Dedup.resolveClusters]]'s job.
     *
@@ -587,7 +587,7 @@ object Clustering {
   }
 
   /** [[semDedupIncrementalPersisted]]'s LAZY core (the
-    * [[Dedup.minhashProbeLazy]] contract: lazy pair frame + persisted
+    * [[Dedup.probeLazy]] contract: lazy pair frame + persisted
     * handles to release after the plan is consumed). `preloaded`
     * supplies a [[semDedupProbeState]] resolved once for a read-only
     * scope (the streaming admission loop); None resolves fresh. */

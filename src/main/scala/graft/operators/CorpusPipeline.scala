@@ -133,8 +133,9 @@ object CorpusPipeline {
     val exactFlag = Dedup.exactIndexProbe(spark, exactDir, batch,
       idCol, textCol)
       .withColumnRenamed("is_dup", "is_dup_exact")
-    val (nearPairs, nearHandles) = Dedup.minhashProbeLazy(spark, mhDir,
-      batch, base, idCol, textCol, threshold, maxBucketSize = 10000)
+    val (nearPairs, nearHandles) = Dedup.probeLazy(
+      Dedup.banded(spark, mhDir, "minhash"), spark, mhDir, batch, Some(base),
+      idCol, textCol, threshold, maxBucketSize = 10000)
     val nearIds = nearPairs
       .select(col("delta_id").as(idCol)).distinct()
       .withColumn("_near", lit(true))
@@ -142,8 +143,9 @@ object CorpusPipeline {
       batch, idCol, textCol)
       .select(col(idCol), col("is_contaminated"))
     val simLazy = simhashDir.map { sh =>
-      val (pairs, handles) = Dedup.simhashProbeLazy(spark, sh, batch,
-        idCol, textCol, maxHamming, maxBucketSize = 10000)
+      val (pairs, handles) = Dedup.probeLazy(Dedup.banded(spark, sh,
+        "simhash"), spark, sh, batch, None, idCol, textCol, maxHamming,
+        maxBucketSize = 10000)
       (pairs.select(col("delta_id").as(idCol)).distinct()
         .withColumn("_sim", lit(true)), handles)
     }
@@ -312,10 +314,9 @@ object CorpusPipeline {
           case Some(batch) => family match {
             case "exact" => run(Dedup.exactIndexAppend(spark, dir,
               batch, idCol, textCol, batchId = Some(bid)))
-            case "minhash" => run(Dedup.minhashIndexAppend(spark, dir,
-              batch, idCol, textCol, batchId = Some(bid)))
-            case "simhash" => run(Dedup.simhashIndexAppend(spark, dir,
-              batch, idCol, textCol, batchId = Some(bid)))
+            case "minhash" | "simhash" => run(Dedup.append(
+              Dedup.banded(spark, dir, family), spark, dir, batch, idCol,
+              textCol, Some(bid)))
             case "ivf" => run(Similarity.ivfAppend(spark, dir,
               batch.select(col(idCol).as("id"), col(vecCol).as("v")),
               batchId = Some(bid)))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF, VectorOps => V}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -85,18 +85,21 @@ object Dedup {
     * count (the stored side is deduplicated before the join, so the
     * output is exactly one row per delta row however many times a hash
     * was re-appended — the contract [[CorpusPipeline.admitBatch]]'s
-    * funnel counts rely on). Returns every delta row with `is_dup`
-    * (its text already exists in the indexed corpus). */
-  def exactIndexProbe(spark: org.apache.spark.sql.SparkSession,
+    * funnel counts rely on). The stored hashes are first semi-joined
+    * to the batch's hashes (a map-side filter against the batch-sized
+    * set), so the distinct — and the probe's cost — is bounded by the
+    * batch, not the index. Returns every delta row with `is_dup` (its
+    * text already exists in the indexed corpus). */
+  def exactIndexProbe(spark: SparkSession,
                       dir: String, delta: DataFrame, idCol: String,
                       textCol: String): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
     val stored = Tombstones.live(spark, snap,
       Manifest.read(spark, snap.path("hashes")))
     val hashed = delta.select(col(idCol), md5(col(textCol)).as("h"))
-    hashed.join(
-        stored.select(col("h")).distinct().withColumn("_hit", lit(true)),
-        Seq("h"), "left")
+    val hits = stored.select(col("h"))
+      .join(hashed.select(col("h")), Seq("h"), "left_semi").distinct()
+    hashed.join(hits.withColumn("_hit", lit(true)), Seq("h"), "left")
       .select(col(idCol), coalesce(col("_hit"), lit(false)).as("is_dup"))
   }
 
@@ -143,6 +146,25 @@ object Dedup {
       count_distinct(col("h")).as("distinct_hashes")))
   }
 
+  // ---- the banded-bucket index: one body per step, two layouts -------
+  // MinHash-LSH and SimHash are the same index: every document yields
+  // (band, bucket) rows, a probe pairs the rows sharing a bucket (after
+  // the hot-bucket guard), deduplicates the candidate pairs and
+  // verifies each once. So every step — the in-memory self-join, build,
+  // append, delete, compaction, the lazy and eager probe, health,
+  // maintenance apply and ingest — is written ONCE below over a
+  // [[Banded]] layout value, and the public minhash*/simhash* verbs
+  // further down are one-expression forwards that pick the layout.
+  //
+  // The persisted tables close the loop [[incrementalMinhashLsh]]
+  // documents ("exactly what a production pipeline persists between
+  // batches"): the base corpus is signed and banded ONCE, every ingest
+  // batch probes the FILES, and accepted batches append their own rows
+  // so tomorrow's batch dedups against today's. Every writer runs under
+  // [[Manifest.withLock]] with the table resolved through the snapshot
+  // taken inside it, compaction flips a versioned manifest, and each
+  // index gives one health row for the fleet table.
+
   /** Hot-bucket guard for LSH bucket self-joins: drop buckets with more
     * than `cap` members before pair generation. One degenerate bucket
     * (empty / boilerplate docs all hashing together) otherwise goes
@@ -160,17 +182,18 @@ object Dedup {
       keys, "left_anti")
 
   /** The [[dropHotBuckets]] guard and the bucket equi-join of an
-    * incremental probe, over ONE pass of the index side: `index` and
-    * `delta` carry the `keys` plus their own columns, the output is
-    * every (delta row, index row) pair sharing a bucket that is within
-    * `cap` on both sides. Only buckets the delta touches can yield a
-    * pair, so the index is first semi-joined to the delta's bucket keys
-    * (a map-side filter against the batch-sized key set) and counted
-    * only there — a per-bucket window over the delta's bucket occupancy,
-    * never an aggregate over the whole index. The pairs are exactly
-    * those of guarding each side over its whole table: a bucket's index
-    * count is the same whether or not the other buckets are counted,
-    * and a bucket absent from the delta yields no pair either way. The
+    * incremental probe — of both layouts and of [[incrementalMinhashLsh]]
+    * — over ONE pass of the index side: `index` and `delta` carry the
+    * `keys` plus their own columns, the output is every (delta row,
+    * index row) pair sharing a bucket that is within `cap` on both
+    * sides. Only buckets the delta touches can yield a pair, so the
+    * index is first semi-joined to the delta's bucket keys (a map-side
+    * filter against the batch-sized key set) and counted only there — a
+    * per-bucket window over the delta's bucket occupancy, never an
+    * aggregate over the whole index. The pairs are exactly those of
+    * guarding each side over its whole table: a bucket's index count is
+    * the same whether or not the other buckets are counted, and a
+    * bucket absent from the delta yields no pair either way. The
     * pairing is a shuffled hash join on the windows' own partitioning:
     * both sides are bounded (by the batch, and by `cap` per bucket), so
     * it costs a stage, not the broadcast job a size estimate could pick
@@ -185,667 +208,568 @@ object Dedup {
       index.join(delta.select(keys.map(col): _*), keys, "left_semi")), keys)
   }
 
-  /** (id, band, bucket) rows of minhash signatures `sig` — the banding
-    * shared by every MinHash path. */
-  private def sigBands(sigs: DataFrame, sigK: Int, bands: Int): DataFrame = {
-    val bandSize = sigK / bands
-    sigs.select(col("id"), explode(array((0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        TF.lshBand(col("sig"), b * bandSize, bandSize).as("bucket"))
-    ): _*)).as("lb"))
-      .select(col("id"), col("lb.band"), col("lb.bucket"))
+  private val BucketKeys = Seq("band", "bucket")
+
+  /** The bucket layout: everything the MinHash and SimHash indexes
+    * differ in. The step bodies never ask which layout they serve.
+    * `table` is the stored table (`what` names it in errors); `metric`
+    * is the verified score over each document's `verifyCol`; `payload`
+    * the stored columns the candidate pairing carries to the verify;
+    * `bandsPerRow` the band rows per document (the derived probe scope's
+    * row count); `sortKeys` the compaction's range-clustering keys. */
+  private[operators] sealed abstract class Banded(
+      val op: String, val table: String, val what: String,
+      val metric: String, val verifyCol: String, val payload: Seq[String],
+      val bandsPerRow: Int, val sortKeys: Seq[String]) {
+    /** (id, text) → the per-document frame `id` + `verifyCol` (+ what
+      * [[stored]] reads) that a probe and the self-join persist once. */
+    def sign(docs: DataFrame, idCol: String, textCol: String): DataFrame
+    /** A [[sign]] frame → the rows written to disk. */
+    def stored(signed: DataFrame): DataFrame
+    /** Stored rows → (id, `payload`…, band, bucket). */
+    def band(stored: DataFrame): DataFrame = stored
+    /** Pin the parameters next to a fresh build. */
+    def pin(spark: SparkSession, dir: String): Unit = ()
+    def score(a: Column, b: Column): Column
+    def keep(metric: Column, bound: Double): Column
+    /** Candidate (delta_id, base_id, payload_d…, payload_b…) rows → with
+      * the `<verifyCol>_d` / `<verifyCol>_b` columns the verify scores.
+      * `signed` is the delta's [[sign]] frame, `base` the caller's text. */
+    def verifySides(cands: DataFrame, signed: DataFrame,
+                    base: Option[DataFrame], idCol: String,
+                    textCol: String): DataFrame = cands
+    /** The family's health columns over the raw stored rows, one row. */
+    def readings(stored: DataFrame, hotBucketCap: Int): DataFrame
+
+    def encode(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+      stored(sign(docs, idCol, textCol))
   }
 
-  /** MinHash-LSH near-dup candidate pairs: signature → bands → equi-join
-    * within band buckets → verify with true shingle Jaccard. Only pairs
-    * sharing ≥1 band are ever materialized.
-    *
-    * The band join carries BARE ids — candidate (id_a, id_b) pairs are
-    * deduplicated across bands BEFORE the shingle arrays are joined back
-    * for one verification, so a pair sharing all `bands` bands is
-    * verified once, not `bands` times, and the heavy arrays never ride
-    * the banded shuffle (the [[prefixFilterJaccard]] shape). */
-  def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
-                 shingleN: Int = 3, sigK: Int = 8, bands: Int = 4,
-                 threshold: Double = 0.5,
-                 maxBucketSize: Int = 10000): DataFrame = {
+  /** Bucket-count readings shared by both layouts' health rows, over
+    * per-bucket sizes `_n`. */
+  private def bucketSkew(hotBucketCap: Int): Seq[Column] =
+    Seq(count(lit(1)).as("n_buckets"), max(col("_n")).as("max_bucket"),
+      count(when(col("_n") > hotBucketCap, 1)).as("hot_buckets"))
+
+  /** MinHash-LSH: `bands(id, band, bucket)`, one row per band. The LSH
+    * parameters are pinned in `_minhash_meta`: a probe at different
+    * parameters would hash into disjoint buckets and silently report
+    * zero duplicates. Verification is the exact shingle Jaccard, so a
+    * probe fetches base TEXT for its candidate ids only — the
+    * candidates-then-fetch shape of IVF-PQ's refine. */
+  private final case class MinHash(shingleN: Int, sigK: Int, bands: Int)
+      extends Banded("minhash", "bands", "banded", "jaccard", "sh", Nil, bands,
+        BucketKeys) {
     require(bands >= 1 && sigK % bands == 0,
       s"sigK=$sigK must be a positive multiple of bands=$bands " +
         "(bands > sigK would make every band empty and silently " +
         "return no pairs)")
-    // shingles feed the two verify joins; signatures feed the band
-    // explode — persist once (LRU-evictable) instead of re-shingling
-    val withSig = docs.select(col(idCol).as("id"),
-      TF.distinctShingles(col(textCol), shingleN).as("sh"),
-      TF.minhashSignature(col(textCol), shingleN, sigK).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = dropHotBuckets(sigBands(withSig, sigK, bands),
-      Seq("band", "bucket"), maxBucketSize)
-    val cands = banded.select(col("band"), col("bucket"),
-        col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    cands
-      .join(withSig.select(col("id").as("id_a"), col("sh").as("sh_a")),
-        Seq("id_a"))
-      .join(withSig.select(col("id").as("id_b"), col("sh").as("sh_b")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        TF.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** Incremental MinHash-LSH: delta (ingest batch) docs probed against
-    * the BASE corpus's banded index — the daily-ingest near-dup path
-    * where [[minhashLsh]] is the full-corpus refresh. Output: one row
-    * per (delta_id, base_id) near-dup pair with its verified Jaccard.
-    *
-    * Scale shape: the base side's (band, bucket, id) index is exactly
-    * what a production pipeline persists between batches; the candidate
-    * join is delta-bands (batch-sized) against that index, so corpus-
-    * internal duplicates never re-pair. The hot-bucket guard and the
-    * pairing read the base bands once, restricted to the buckets the
-    * delta touches ([[probeBucketJoin]]), so the join and the guard's
-    * counts are bounded by the delta's bucket occupancy (one degenerate
-    * boilerplate bucket would otherwise go |delta-bucket|·|base-bucket|);
-    * the shingle-verify joins touch candidate ids only. Signing the base
-    * corpus is still a full pass — the persisted index
-    * ([[minhashIndexProbe]]) is what removes it. */
-  def incrementalMinhashLsh(delta: DataFrame, base: DataFrame,
-                            idCol: String, textCol: String,
-                            shingleN: Int = 3, sigK: Int = 4,
-                            bands: Int = 2, threshold: Double = 0.5,
-                            maxBucketSize: Int = 10000): DataFrame = {
-    require(bands >= 1 && sigK % bands == 0,
-      s"sigK=$sigK must be a positive multiple of bands=$bands")
-    def prep(docs: DataFrame): DataFrame = docs
-      .select(col(idCol).as("id"),
+    def sign(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+      docs.select(col(idCol).as("id"),
         TF.distinctShingles(col(textCol), shingleN).as("sh"),
         TF.minhashSignature(col(textCol), shingleN, sigK).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def banded(p: DataFrame, id: String): DataFrame =
-      sigBands(p, sigK, bands)
-        .select(col("band"), col("bucket"), col("id").as(id))
-    val dP = prep(delta)
-    val bP = prep(base)
-    val cands = probeBucketJoin(banded(bP, "base_id"),
-        banded(dP, "delta_id"), Seq("band", "bucket"), maxBucketSize)
-      .select("delta_id", "base_id")
-      .distinct()
-    cands
-      .join(dP.select(col("id").as("delta_id"), col("sh").as("sh_d")),
-        Seq("delta_id"))
-      .join(bP.select(col("id").as("base_id"), col("sh").as("sh_b")),
-        Seq("base_id"))
-      .select(col("delta_id"), col("base_id"),
-        TF.jaccard(col("sh_d"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    def stored(signed: DataFrame): DataFrame = {
+      val bandSize = sigK / bands
+      signed.select(col("id"), explode(array((0 until bands).map(b =>
+        struct(lit(b).as("band"),
+          TF.lshBand(col("sig"), b * bandSize, bandSize).as("bucket"))
+      ): _*)).as("lb"))
+        .select(col("id"), col("lb.band"), col("lb.bucket"))
+    }
+    override def pin(spark: SparkSession, dir: String): Unit =
+      Manifest.writeParams(spark, minhashMetaPath(dir),
+        Seq("shingleN" -> shingleN, "sigK" -> sigK, "bands" -> bands))
+    def score(a: Column, b: Column): Column = TF.jaccard(a, b)
+    def keep(metric: Column, bound: Double): Column = metric >= bound
+    // fetch-then-shingle ONLY candidate base rows (the whole point of
+    // the persisted index is never re-shingling the base corpus): the
+    // text table is filtered map-side against the broadcast candidate
+    // ids, then LEFT-joined under them, so a candidate id the text
+    // table cannot resolve raises (codegen'd `raise_error`, free on the
+    // no-miss path) instead of vanishing — the caller passed a table
+    // that does not cover every indexed batch. The joins among
+    // batch-sized sides are shuffled hash joins (stages, not broadcast
+    // jobs).
+    override def verifySides(cands: DataFrame, signed: DataFrame,
+                             base: Option[DataFrame], idCol: String,
+                             textCol: String): DataFrame = {
+      val candIds = cands.select(col("base_id")).distinct()
+      val fetched = base.get
+        .select(col(idCol).as("base_id"), col(textCol).as("_t"))
+        .join(broadcast(candIds), Seq("base_id"), "left_semi")
+      val candBase = candIds.join(fetched.hint("shuffle_hash"),
+          Seq("base_id"), "left")
+        .select(col("base_id"),
+          TF.distinctShingles(
+            when(col("_t").isNull, raise_error(concat(
+              lit("minhashIndexProbe: index candidate base_id "),
+              col("base_id").cast("string"),
+              lit(" has no row in the supplied base text table — pass " +
+                "a table covering every indexed batch")))).otherwise(
+              col("_t")), shingleN).as("sh_b"))
+      cands
+        .join(signed.select(col("id").as("delta_id"), col("sh").as("sh_d"))
+          .hint("shuffle_hash"), Seq("delta_id"))
+        .join(candBase.hint("shuffle_hash"), Seq("base_id"))
+    }
+    // _nd = distinct ids per bucket: a replayed ingest batch lands
+    // IDENTICAL (id, band, bucket) rows, so Σ _nd is the table's
+    // distinct-row count and the total_rows − distinct_rows gap is the
+    // replay-duplicate debt compaction will fold
+    def readings(stored: DataFrame, hotBucketCap: Int): DataFrame =
+      stored.groupBy(BucketKeys.map(col): _*)
+        .agg(count(lit(1)).as("_n"), count_distinct(col("id")).as("_nd"))
+        .agg(lit(shingleN).as("shingle_n"), Seq(lit(sigK).as("sig_k"),
+          lit(bands).as("n_bands"), sum(col("_n")).as("total_rows"),
+          sum(col("_nd")).as("distinct_rows")) ++ bucketSkew(hotBucketCap)
+          : _*)
   }
 
-  // ---- persisted near-dup (MinHash-LSH) index ------------------------
-  // [[incrementalMinhashLsh]] documents its base-side (band, bucket, id)
-  // table as "exactly what a production pipeline persists between
-  // batches" — these close that loop: the base corpus is signed and
-  // banded ONCE (the full-corpus scan), every ingest batch probes the
-  // FILES, and accepted batches append their own banded rows so
-  // tomorrow's batch dedups against today's. The LSH parameters
-  // (shingleN, sigK, bands) are pinned in index metadata: a probe at
-  // different parameters would hash into disjoint buckets and silently
-  // report zero duplicates. Verification needs base TEXT for the exact
-  // Jaccard — candidate base_ids (bounded by bucket occupancy) join
-  // back to the caller's corpus table, shingling only matched rows,
-  // the same candidates-then-fetch shape as IVF-PQ's refine.
+  /** SimHash: `sigs(id, sig)`, 16 bytes per document — the 4×16-bit
+    * pigeonhole buckets (docs within Hamming h ≤ 3 share ≥ 1 band) are
+    * a bit-slice of the signature, DERIVED on scan rather than stored.
+    * `simhash64` is parameter-free, so nothing is pinned, and the
+    * Hamming verify reads the signatures the candidate join carried: a
+    * probe needs NO base text table. Compaction clusters on `sig`, which
+    * sorts band 3 (the top 16 bits) into contiguous row groups — one of
+    * the four probe joins gets min/max pruning; the other three are
+    * bit-slices no single sort order can serve, and at 16 bytes a row
+    * defragmentation is the point, not pruning. */
+  private case object SimHash extends Banded("simhash", "sigs", "signature",
+      "hamming", "sig", Seq("sig"), 4, Seq("sig")) {
+    def sign(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+      docs.select(col(idCol).as("id"), TF.simhash64(col(textCol)).as("sig"))
+    def stored(signed: DataFrame): DataFrame =
+      signed.select(col("id"), col("sig"))
+    override def band(stored: DataFrame): DataFrame =
+      stored.select(col("id"), col("sig"),
+        explode(array((0 until 4).map(b => struct(lit(b).as("band"),
+          shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL))
+            .as("bucket"))): _*)).as("lb"))
+        .select(col("id"), col("sig"), col("lb.band"), col("lb.bucket"))
+    def score(a: Column, b: Column): Column = TF.hamming64(a, b)
+    def keep(metric: Column, bound: Double): Column = metric <= bound
+    // distinct (id, sig) vs total rows: the replay-duplicate debt a
+    // retried ingest micro-batch leaves behind
+    def readings(stored: DataFrame, hotBucketCap: Int): DataFrame =
+      band(stored).groupBy(BucketKeys.map(col): _*)
+        .agg(count(lit(1)).as("_n"))
+        .agg(sum(col("_n")).as("total_band_rows"),
+          bucketSkew(hotBucketCap): _*)
+        .crossJoin(stored.agg(count(lit(1)).as("total_rows"),
+          count_distinct(col("id"), col("sig")).as("distinct_rows")))
+        .select(Seq("total_band_rows", "total_rows", "distinct_rows",
+          "n_buckets", "max_bucket", "hot_buckets").map(col): _*)
+  }
 
   private def minhashMetaPath(dir: String) = s"$dir/_minhash_meta"
 
   /** (shingleN, sigK, bands) the index at `dir` was built with. */
-  def minhashIndexParams(spark: org.apache.spark.sql.SparkSession,
+  def minhashIndexParams(spark: SparkSession,
                          dir: String): (Int, Int, Int) = {
     val m = Manifest.readParams(spark, minhashMetaPath(dir))
       .map { case (k, v) => k -> v.trim.toInt }
     (m("shingleN"), m("sigK"), m("bands"))
   }
 
-  /** (id, band, bucket) banded-signature rows for `docs`. */
-  private def bandRows(docs: DataFrame, idCol: String, textCol: String,
-                       shingleN: Int, sigK: Int, bands: Int): DataFrame =
-    sigBands(docs.select(col(idCol).as("id"),
-      TF.minhashSignature(col(textCol), shingleN, sigK).as("sig")),
-      sigK, bands)
+  /** The MinHash layout pinned at `dir`. */
+  private def pinned(spark: SparkSession, dir: String): MinHash =
+    MinHash.tupled(minhashIndexParams(spark, dir))
 
-  /** Build the persisted index: the corpus's banded rows plus pinned
-    * parameters. The one full-corpus signature scan a daily pipeline
-    * should ever pay. In-place fresh build (reader-UNSAFE, like
-    * [[Similarity.ivfBuild]]): overwrites the default table and drops
-    * any stale manifest so an earlier compaction cannot shadow it. */
-  def minhashIndexBuild(docs: DataFrame, dir: String, idCol: String,
-                        textCol: String, shingleN: Int = 3,
-                        sigK: Int = 4, bands: Int = 2): Unit = {
-    require(bands >= 1 && sigK % bands == 0,
-      s"sigK=$sigK must be a positive multiple of bands=$bands")
+  /** The layout of a banded index for its sniffed family name
+    * (`minhash` or `simhash`) — the fleet verbs' dispatch. */
+  private[operators] def banded(spark: SparkSession, dir: String,
+                                family: String): Banded = family match {
+    case "minhash" => pinned(spark, dir)
+    case "simhash" => SimHash
+  }
+
+  /** Persist a frame that a plan reads more than once (LRU-evictable). */
+  private def cached(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Candidate (delta_id, base_id) pairs scored by the layout's metric
+    * over the `<verifyCol>_d` / `_b` columns and filtered by `bound`. */
+  private def verified(b: Banded, sides: DataFrame,
+                       bound: Double): DataFrame =
+    sides.select(col("delta_id"), col("base_id"),
+        b.score(col(s"${b.verifyCol}_d"), col(s"${b.verifyCol}_b"))
+          .as(b.metric))
+      .filter(b.keep(col(b.metric), bound))
+
+  /** Distinct candidate pairs of a delta ([[Banded.sign]] frame) against
+    * stored rows: (delta_id, base_id, payload_d…, payload_b…), each pair
+    * once however many bands it shares ([[probeBucketJoin]]). */
+  private def candidates(b: Banded, index: DataFrame, signed: DataFrame,
+                         cap: Int): DataFrame = {
+    def side(rows: DataFrame, id: String, sfx: String): DataFrame =
+      b.band(rows).select(col("band") +: col("bucket") +: col("id").as(id) +:
+        b.payload.map(p => col(p).as(p + sfx)): _*)
+    val payload = b.payload.map(_ + "_d") ++ b.payload.map(_ + "_b")
+    probeBucketJoin(side(index, "base_id", "_b"),
+        side(b.stored(signed), "delta_id", "_d"), BucketKeys, cap)
+      .select(("delta_id" +: "base_id" +: payload).map(col): _*)
+      .distinct()
+  }
+
+  /** The in-memory self-join: sign once (persisted — it feeds both the
+    * banding and the verify join-back), band, guard, equi-join within
+    * buckets. The band join carries BARE ids — candidate (id_a, id_b)
+    * pairs are deduplicated across bands BEFORE the verify columns are
+    * joined back, so a pair sharing every band is verified once, and the
+    * heavy columns never ride the banded shuffle (the
+    * [[prefixFilterJaccard]] shape). */
+  private def selfJoin(b: Banded, docs: DataFrame, idCol: String,
+                       textCol: String, bound: Double,
+                       maxBucketSize: Int): DataFrame = {
+    val signed = cached(b.sign(docs, idCol, textCol))
+    val banded = dropHotBuckets(b.band(b.stored(signed))
+      .select("id", "band", "bucket"), BucketKeys, maxBucketSize)
+    val cands = banded.select(col("band"), col("bucket"),
+        col("id").as("id_a"))
+      .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
+        BucketKeys)
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .distinct()
+    def side(id: String) =
+      signed.select(col("id").as(id), col(b.verifyCol).as(s"${id}_v"))
+    cands.join(side("id_a"), Seq("id_a")).join(side("id_b"), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        b.score(col("id_a_v"), col("id_b_v")).as(b.metric))
+      .filter(b.keep(col(b.metric), bound))
+  }
+
+  /** Build: the corpus's stored rows plus the pinned parameters — the
+    * one full-corpus signature scan a daily pipeline should ever pay.
+    * In-place fresh build (reader-UNSAFE, like [[Similarity.ivfBuild]]):
+    * overwrites the default table and drops any stale manifest so an
+    * earlier compaction cannot shadow it. */
+  private def build(b: Banded, docs: DataFrame, dir: String, idCol: String,
+                    textCol: String): Unit = {
     val spark = docs.sparkSession
-    bandRows(docs, idCol, textCol, shingleN, sigK, bands)
-      .write.mode("overwrite").parquet(s"$dir/bands.parquet")
-    Manifest.writeParams(spark, minhashMetaPath(dir),
-      Seq("shingleN" -> shingleN, "sigK" -> sigK, "bands" -> bands))
+    b.encode(docs, idCol, textCol)
+      .write.mode("overwrite").parquet(s"$dir/${b.table}.parquet")
+    b.pin(spark, dir)
     Manifest.reset(spark, dir)
   }
 
-  /** Append an accepted batch's banded rows (parameters from the index
-    * metadata) — one batch scan, no rebuild. [[Manifest.withLock]] is
-    * held for the WHOLE file drop and the live table is resolved
-    * through the snapshot INSIDE it, so an append can neither interleave
-    * with another writer nor land files in a directory a concurrent
-    * compaction is about to supersede (the single-writer contract every
-    * index writer in this package enforces). Each append adds one file
-    * fragment set; [[minhashIndexCompact]] folds them back. */
-  def minhashIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, batch: DataFrame, idCol: String,
-                         textCol: String,
-                         batchId: Option[String] = None): Unit = {
-    val (shingleN, sigK, bands) = minhashIndexParams(spark, dir)
+  /** Append an accepted batch's rows — one batch scan, no rebuild.
+    * [[Lifecycle.append]] holds the writer lock for the WHOLE file drop
+    * and resolves the live table through the snapshot INSIDE it, so an
+    * append can neither interleave with another writer nor land files in
+    * a directory a concurrent compaction is about to supersede. Each
+    * append adds one file fragment set; [[compact]] folds them back. */
+  private[operators] def append(b: Banded, spark: SparkSession, dir: String,
+                                batch: DataFrame, idCol: String,
+                                textCol: String,
+                                batchId: Option[String]): Unit =
     Lifecycle.append(spark, dir, batchId) { snap =>
-      bandRows(batch, idCol, textCol, shingleN, sigK, bands)
-        .write.mode("append").parquet(snap.path("bands"))
+      b.encode(batch, idCol, textCol)
+        .write.mode("append").parquet(snap.path(b.table))
       batch.select(col(idCol).as("id"))
     }
-  }
 
-  /** Retract documents from the persisted MinHash index
-    * ([[Tombstones]] — the erasure verb): the ids' banded rows stop
-    * matching probes immediately (stored-side anti-join) and are
-    * physically dropped by the next [[minhashIndexCompact]]. `ids`
-    * needs one column, cast here to the stored id type so the
-    * anti-join cannot silently type-mismatch. */
-  def minhashIndexDelete(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, ids: DataFrame,
-                         idCol: String = "id"): Unit =
-    Tombstones.retractIds(spark, Manifest.snapshot(spark, dir), "bands",
+  /** Retract documents ([[Tombstones]] — the erasure verb): the ids'
+    * rows stop matching probes immediately (stored-side anti-join) and
+    * are physically dropped by the next [[compact]]. `ids` needs one
+    * column, cast to the stored id type so the anti-join cannot
+    * silently type-mismatch. */
+  private[operators] def delete(b: Banded, spark: SparkSession, dir: String,
+                                ids: DataFrame, idCol: String): Unit =
+    Tombstones.retractIds(spark, Manifest.snapshot(spark, dir), b.table,
       ids, idCol)
 
-  /** Compact the banded table's accumulated append fragments into one
-    * coherent file set — [[Similarity.ivfCompact]] for the text-dedup
-    * index. Read once under the writer lock (held across the whole
-    * read→rewrite→flip span, so a racing append cannot land rows in
-    * the superseded directory), rewritten range-clustered on
-    * (band, bucket) — the probe's equi-join keys, so row-group min/max
-    * pruning works after the rewrite — and swapped in with ONE
-    * [[Manifest]] flip: a concurrent probe sees the old file set or
-    * the new one, never a torn mix. Pending [[Tombstones]] fold into
-    * the rewrite (retracted ids dropped, tombstone table emptied in
-    * the same flip). */
-  def minhashIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Unit =
-    // always distinct: the dedupe point for replayed-ingest rows — a
-    // foreachBatch micro-batch that committed its append and crashed
-    // before its checkpoint is replayed, landing identical
-    // (id, band, bucket) rows; probes survive that (candidate-pair
-    // dedup) but the duplicates inflate total_rows/max_bucket and
-    // scan cost forever unless compaction folds them (the
-    // exactIndexCompact contract, mirrored here)
-    Lifecycle.compactFlat(spark, dir, "bands", Seq("band", "bucket"),
+  /** Fold the table's append fragments into one coherent file set:
+    * read once under the writer lock (held across the read→rewrite→flip
+    * span), rewritten range-clustered on the layout's sort keys so
+    * row-group min/max pruning works after the rewrite, swapped in with
+    * ONE [[Manifest]] flip. Always distinct: the dedupe point for
+    * replayed-ingest rows (an at-least-once micro-batch retry lands
+    * identical rows — probes survive that through candidate-pair dedup,
+    * but the duplicates inflate `total_rows`/`max_bucket` and scan cost
+    * until a compaction folds them). Pending [[Tombstones]] fold into
+    * the rewrite. */
+  private def compact(b: Banded, spark: SparkSession, dir: String): Unit =
+    Lifecycle.compactFlat(spark, dir, b.table, b.sortKeys,
       Lifecycle.Dedupe.Always, Lifecycle.Parts.BySize)
 
-  /** Operational health report of a persisted [[minhashIndexBuild]]
-    * index — the q-220-shaped dashboard row for the text-dedup side:
-    * physical size plus BUCKET-SKEW readings, because a hot LSH bucket
-    * is this index's failure mode (pair generation goes |bucket|²;
-    * [[minhashIndexProbe]]'s guard silently drops over-cap buckets, so
-    * a growing `hot_buckets` count means near-dups are going
-    * unreported and an exact-dedup pre-pass is due). One row per
-    * index; rows from many indexes union into one fleet table. All
-    * aggregates are one bounded scan of the (band, bucket, id) table. */
-  def minhashIndexHealth(spark: org.apache.spark.sql.SparkSession,
-                         dir: String,
-                         hotBucketCap: Int = 10000): DataFrame = {
-    val (shingleN, sigK, bands) = minhashIndexParams(spark, dir)
+  /** Operational health row — physical size plus BUCKET-SKEW readings,
+    * because a hot bucket is this index's failure mode (the probe guard
+    * silently drops over-cap buckets, so a growing `hot_buckets` count
+    * means near-dups are going unreported and an exact-dedup pre-pass
+    * is due), and `n_fragments` (append fragmentation → compaction).
+    * One collected plan: the readings are one bounded scan of the
+    * stored table, pending/ingest fused into a single aggregate side
+    * ([[OpsStats.attach]]). */
+  private[operators] def health(b: Banded, spark: SparkSession, dir: String,
+                                hotBucketCap: Int): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    // _nd = distinct ids per bucket: a replayed ingest batch lands
-    // IDENTICAL (id, band, bucket) rows, so Σ _nd is the table's
-    // distinct-row count and the total_rows − distinct_rows gap is the
-    // replay-duplicate debt compaction will fold (the
-    // exactIndexHealth total-vs-distinct reading for this family)
-    val sizes = Manifest.read(spark, snap.path("bands"))
-      .groupBy("band", "bucket")
-      .agg(count(lit(1)).as("_n"), count_distinct(col("id")).as("_nd"))
-    // one collected plan, no per-reading driver jobs, pending/ingest
-    // fused into a single aggregate side (see exactIndexHealth);
-    // n_fragments past the planner's ceiling says [[minhashIndexCompact]]
-    // is due (the IVF family's max_files_per_list signal, flat layout)
-    OpsStats.attach(spark, snap)(Lifecycle.healthRow(spark, snap, "bands",
-      sizes)(
-      lit(shingleN).as("shingle_n"), lit(sigK).as("sig_k"),
-      lit(bands).as("n_bands"),
-      sum(col("_n")).as("total_rows"),
-      sum(col("_nd")).as("distinct_rows"),
-      count(lit(1)).as("n_buckets"),
-      max(col("_n")).as("max_bucket"),
-      count(when(col("_n") > hotBucketCap, 1)).as("hot_buckets")))
+    OpsStats.attach(spark, snap)(b.readings(
+      Manifest.read(spark, snap.path(b.table)), hotBucketCap)
+      .select(col("*") +: Lifecycle.healthTail(spark, snap, b.table): _*))
   }
 
-  /** Probe a delta batch against the persisted index:
-    * [[incrementalMinhashLsh]] with the base side read from files —
-    * the base corpus is never re-signed. `base` supplies the TEXT for
-    * the exact-Jaccard verification of candidate ids only; a candidate
-    * base_id with NO row in `base` fails the job loudly (codegen'd
-    * `raise_error`, free on the no-miss path) instead of silently
-    * under-reporting near-dups — the caller passed a text table that
-    * does not cover the index (e.g. appended batches missing from it).
-    * The result is eagerly materialized (localCheckpoint) so the
-    * per-probe signature cache can be released before returning —
-    * a long-lived daily-pipeline session never accumulates cached
-    * partitions across probes. Release the result's pinned blocks with
-    * [[Clustering.releasePairs]] when done with it. Cost: one pass of
-    * the bands table, filtered map-side to the delta's buckets, and one
-    * of `base`, filtered map-side to the candidate ids; a batch small
-    * against the session's shuffle width runs as a handful of jobs
-    * ([[checkpointProbe]]). */
-  def minhashIndexProbe(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, delta: DataFrame, base: DataFrame,
-                        idCol: String, textCol: String,
-                        threshold: Double = 0.5,
-                        maxBucketSize: Int = 10000): DataFrame = {
-    val bands = minhashIndexParams(spark, dir)._3
-    val (pairs, handles) = minhashProbeLazy(spark, dir, delta, base,
-      idCol, textCol, threshold, maxBucketSize)
-    checkpointProbe(spark, pairs, handles, bands)
+  /** The probe's LAZY core: the verified-pair frame (delta_id, base_id,
+    * metric) WITHOUT a final checkpoint, plus the persisted handles its
+    * plan still reads (unpersist them only AFTER the plan has been
+    * consumed — the delta's signature cache is multi-consumer inside the
+    * plan). For compositions that fold the pairs into exactly one
+    * downstream action (the admission kernel's verdict write), a
+    * checkpoint buys nothing: skipping it lets the whole verdict batch
+    * execute as ONE job. The guard and the candidate join read the live
+    * index once, restricted to the delta's buckets ([[probeBucketJoin]]),
+    * so the cost is bounded by the delta's bucket occupancy, not the
+    * index size. */
+  private[operators] def probeLazy(b: Banded, spark: SparkSession,
+                                   dir: String, delta: DataFrame,
+                                   base: Option[DataFrame], idCol: String,
+                                   textCol: String, bound: Double,
+                                   maxBucketSize: Int)
+    : (DataFrame, Seq[DataFrame]) = {
+    val snap = Manifest.snapshot(spark, dir)
+    val index = Tombstones.live(spark, snap,
+      Manifest.read(spark, snap.path(b.table)))
+    val signed = cached(b.sign(delta, idCol, textCol))
+    (verified(b, b.verifySides(candidates(b, index, signed, maxBucketSize),
+      signed, base, idCol, textCol), bound), Seq(signed))
   }
 
-  /** The eager end of [[minhashIndexProbe]] and [[simhashIndexProbe]]:
-    * count the persisted delta (`handles.head`, whose cache the plan
-    * reads anyway), checkpoint the pairs inside the derived-shuffle
-    * scope keyed on the delta's band rows
-    * ([[graft.util.ExecProfile.withDerivedShuffle]] — a no-op once the
-    * batch fills the session's shuffle width), then release the
-    * handles. */
-  private def checkpointProbe(spark: org.apache.spark.sql.SparkSession,
-                              pairs: DataFrame, handles: Seq[DataFrame],
-                              bandsPerRow: Int): DataFrame = {
-    val rows = handles.head.queryExecution.toRdd.count() * bandsPerRow
+  /** The eager probe: [[probeLazy]], then count the persisted delta
+    * (`handles.head`, whose cache the plan reads anyway), checkpoint the
+    * pairs inside the derived-shuffle scope keyed on the delta's band
+    * rows ([[graft.util.ExecProfile.withDerivedShuffle]] — a no-op once
+    * the batch fills the session's shuffle width), then release the
+    * handles, so a long-lived daily-pipeline session never accumulates
+    * cached partitions across probes. Release the result's pinned
+    * blocks with [[Clustering.releasePairs]] when done with it. */
+  private def probe(b: Banded, spark: SparkSession, dir: String,
+                    delta: DataFrame, base: Option[DataFrame], idCol: String,
+                    textCol: String, bound: Double,
+                    maxBucketSize: Int): DataFrame = {
+    val (pairs, handles) = probeLazy(b, spark, dir, delta, base, idCol,
+      textCol, bound, maxBucketSize)
+    val rows = handles.head.queryExecution.toRdd.count() * b.bandsPerRow
     val out = graft.util.ExecProfile.withDerivedShuffle(spark, rows)(
       pairs.localCheckpoint(true))
     handles.foreach(_.unpersist(false))
     out
   }
 
-  /** [[minhashIndexProbe]]'s LAZY core: the verified-pair frame
-    * WITHOUT the final eager checkpoint, plus the persisted handles
-    * its plan still reads (unpersist them only AFTER the plan has been
-    * consumed — the signature cache is multi-consumer inside the
-    * plan). For compositions that fold the pairs into exactly one
-    * downstream action (the admission kernel's verdict write), the
-    * checkpoint bought nothing: skipping it lets the whole verdict
-    * batch execute as ONE job instead of one eager job per probe
-    * family per micro-batch. The guard and the candidate join read the
-    * index once, restricted to the delta's buckets
-    * ([[probeBucketJoin]]), so the probe's cost is bounded by the
-    * delta's bucket occupancy, not the index size. */
-  private[operators] def minhashProbeLazy(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, delta: DataFrame, base: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      maxBucketSize: Int): (DataFrame, Seq[DataFrame]) = {
-    val (shingleN, sigK, bands) = minhashIndexParams(spark, dir)
-    val snap = Manifest.snapshot(spark, dir)
-    val idx = Tombstones.live(spark, snap,
-      Manifest.read(spark, snap.path("bands")))
-    val dP = delta.select(col(idCol).as("id"),
-      TF.distinctShingles(col(textCol), shingleN).as("sh"),
-      TF.minhashSignature(col(textCol), shingleN, sigK).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = probeBucketJoin(
-        idx.select(col("band"), col("bucket"), col("id").as("base_id")),
-        sigBands(dP, sigK, bands).select(col("band"), col("bucket"),
-          col("id").as("delta_id")),
-        Seq("band", "bucket"), maxBucketSize)
-      .select("delta_id", "base_id")
-      .distinct()
-    // fetch-then-shingle ONLY candidate base rows (join before the
-    // shingle projection — the whole point of the persisted index is
-    // never re-shingling the base corpus): the text table is filtered
-    // map-side against the broadcast candidate ids, then LEFT-joined
-    // under them, so a candidate id the text table cannot resolve
-    // raises instead of vanishing. The joins among batch-sized sides
-    // are shuffled hash joins (stages, not broadcast jobs).
-    val candIds = cands.select(col("base_id")).distinct()
-    val fetched = base.select(col(idCol).as("base_id"), col(textCol).as("_t"))
-      .join(broadcast(candIds), Seq("base_id"), "left_semi")
-    val candBase = candIds.join(fetched.hint("shuffle_hash"), Seq("base_id"),
-      "left")
-      .select(col("base_id"),
-        TF.distinctShingles(
-          when(col("_t").isNull, raise_error(concat(
-            lit("minhashIndexProbe: index candidate base_id "),
-            col("base_id").cast("string"),
-            lit(" has no row in the supplied base text table — pass " +
-              "a table covering every indexed batch")))).otherwise(
-            col("_t")), shingleN).as("sh_b"))
-    val out = cands
-      .join(dP.select(col("id").as("delta_id"), col("sh").as("sh_d"))
-        .hint("shuffle_hash"), Seq("delta_id"))
-      .join(candBase.hint("shuffle_hash"), Seq("base_id"))
-      .select(col("delta_id"), col("base_id"),
-        TF.jaccard(col("sh_d"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    (out, Seq(dP))
-  }
-
-  /** Execute an [[Similarity.indexMaintenancePlan]] action on a
-    * persisted MinHash index — [[Similarity.indexMaintenanceApply]]'s
-    * text-family counterpart, closing the health → plan → apply loop
-    * for this index: `compact` folds append fragments
-    * ([[minhashIndexCompact]]); `dedup_prepass` answers a hot
-    * `hot_buckets` reading — the bucket's members are near-identical
-    * boilerplate by construction, so the fix is collapsing them, not
-    * rewriting files: the corpus is exact-deduped to its min-id
-    * representatives and the index is REBUILT from the survivors (same
-    * pinned LSH params) through the build path into a sibling temp
-    * index, swapped in with one manifest flip under the full-span
-    * writer lock. A post-action probe reports the pairs the hot-bucket
-    * guard was silently dropping, now against each boilerplate class's
-    * keeper. `dedup_prepass` REQUIRES the corpus text table (the banded
-    * table cannot reconstruct text — the [[Similarity.ivfPqRebuild]]
-    * situation) and throws without it. */
-  def minhashMaintenanceApply(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, action: String,
-                              corpus: Option[DataFrame] = None,
-                              idCol: String = "id",
-                              textCol: String = "text"): Unit =
+  /** Execute an [[Similarity.indexMaintenancePlan]] action — the apply
+    * half of the health → plan → apply loop: `compact` folds append
+    * fragments; `dedup_prepass` answers a hot `hot_buckets` reading. A
+    * hot bucket's members are near-identical boilerplate by
+    * construction, so the fix is collapsing them, not rewriting files:
+    * the corpus is exact-deduped to its min-id keepers and the table is
+    * REBUILT from them (same pinned parameters) behind one manifest flip
+    * under the full-span writer lock. A post-action probe reports the
+    * pairs the guard was silently dropping, now against each
+    * boilerplate class's keeper. Pending tombstones are NOT folded: the
+    * caller's corpus may still carry retracted ids, so they stay pending
+    * and keep hiding them until a compaction. `dedup_prepass` REQUIRES
+    * the corpus text table (stored rows cannot reconstruct text) and
+    * throws without it. */
+  private[operators] def maintenanceApply(b: Banded, spark: SparkSession,
+                                          dir: String, action: String,
+                                          corpus: Option[DataFrame],
+                                          idCol: String = "id",
+                                          textCol: String = "text"): Unit =
     action match {
       case "none" => ()
-      case "compact" => minhashIndexCompact(spark, dir)
+      case "compact" => compact(b, spark, dir)
       case "dedup_prepass" =>
-        val (shingleN, sigK, bands) = minhashIndexParams(spark, dir)
-        prepassRebuild(spark, dir, "minhashMaintenanceApply", "banded",
-          "bands", corpus, idCol, textCol)(
-          bandRows(_, idCol, textCol, shingleN, sigK, bands))
+        val c = corpus.getOrElse(throw new IllegalArgumentException(
+          s"${b.op}MaintenanceApply: a dedup_prepass rebuild needs the " +
+            s"corpus text table — the ${b.what} index cannot reconstruct " +
+            "text"))
+        Lifecycle.rewrite(spark, dir, fold = false) { _ =>
+          val keepers = c.join(
+            exact(c, idCol, textCol).select(col("keeper_id").as(idCol)),
+            Seq(idCol), "left_semi")
+          val tmp = s"$dir/_rebuild.tmp.${b.table}"
+          b.encode(keepers, idCol, textCol)
+            .write.mode("overwrite").parquet(tmp)
+          Seq(b.table -> tmp)
+        }
       case other => throw new IllegalArgumentException(
-        s"minhashMaintenanceApply: unknown action '$other'")
+        s"${b.op}MaintenanceApply: unknown action '$other'")
     }
 
-  /** The `dedup_prepass` answer to a hot-bucket reading, shared by the
-    * MinHash and SimHash families: exact-dedup the corpus text to its
-    * min-id keepers and rebuild `table` from them (`rows` — the
-    * family's encoder) behind one manifest flip under the full-span
-    * writer lock. Pending tombstones are NOT folded: the caller's
-    * corpus may still carry retracted ids, so they stay pending and
-    * keep hiding them until a compaction. `what` names the index in
-    * the no-corpus error. */
-  private def prepassRebuild(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, op: String, what: String,
-                             table: String, corpus: Option[DataFrame],
-                             idCol: String, textCol: String)
-                            (rows: DataFrame => DataFrame): Unit = {
-    val c = corpus.getOrElse(throw new IllegalArgumentException(
-      s"$op: a dedup_prepass rebuild needs the corpus text table — the " +
-        s"$what index cannot reconstruct text"))
-    Lifecycle.rewrite(spark, dir, fold = false) { _ =>
-      val keepers = c.join(
-        exact(c, idCol, textCol).select(col("keeper_id").as(idCol)),
-        Seq(idCol), "left_semi")
-      val tmp = s"$dir/_rebuild.tmp.$table"
-      rows(keepers).write.mode("overwrite").parquet(tmp)
-      Seq(table -> tmp)
-    }
-  }
-
-  /** SimHash near-dup pairs: 64-bit signature, bucket by 16-bit prefix
-    * bands (docs within `maxHamming` share ≥1 of 4 bands by pigeonhole),
-    * verify with full Hamming distance. */
-  def simhash(docs: DataFrame, idCol: String, textCol: String,
-              maxHamming: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
-    // signatures feed the band explode AND the verify join-back — persist
-    // once (LRU-evictable) instead of re-hashing the corpus twice
-    val sig = docs.select(col(idCol).as("id"),
-      TF.simhash64(col(textCol)).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded0 = sig.select(col("id"),
-      explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-        shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL))
-          .as("bucket"))): _*)).as("lb"))
-      .select(col("id"), col("lb.band"), col("lb.bucket"))
-    val banded = dropHotBuckets(banded0, Seq("band", "bucket"), maxBucketSize)
-    // bare-id candidates, deduped across bands BEFORE the signatures are
-    // joined back (the minhashLsh shape): a pair sharing all 4 bands is
-    // verified once, not 4×, and only 8-byte ids ride the banded shuffle
-    val cands = banded.select(col("band"), col("bucket"),
-        col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    cands
-      .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")),
-        Seq("id_a"))
-      .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        TF.hamming64(col("sig_a"), col("sig_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  // ---- persisted SimHash index ------------------------------------
-  //
-  // The third persisted text-dedup family (after the MinHash banded
-  // index and the decontamination shingle index), for the boilerplate/
-  // template near-dup regime MinHash's set-Jaccard misses: Hamming
-  // distance over 64-bit [[graft.functions.TextFunctions.simhash64]]
-  // signatures. What lands on disk is ONLY (id, sig) — 16 bytes per
-  // document, the cheapest persisted dedup state of the three — because
-  // SimHash banding is a bit-slice of the signature itself: the 4×16-bit
-  // pigeonhole buckets are DERIVED on scan (two codegen'd bit ops), not
-  // stored 4× like MinHash's band rows, and verification is Hamming
-  // distance on the very signatures the candidate join already carried —
-  // unlike [[minhashIndexProbe]], a probe needs NO base text table at
-  // all. Same operational contract as every other persisted family:
-  // every writer under [[Manifest.withLock]], compaction behind a
-  // versioned-manifest flip, one health row per index for the fleet
-  // table, hot-bucket guards on both probe sides.
-
-  /** Build the persisted SimHash index: one signature scan of the
-    * corpus, (id, sig) on disk. `simhash64` is parameter-free over the
-    * fixed tokenization, so unlike the MinHash index there are no LSH
-    * parameters to pin — any probe is comparable with any build.
-    * In-place fresh build (reader-UNSAFE, like [[minhashIndexBuild]]):
-    * overwrites the default table and drops any stale manifest. */
-  def simhashIndexBuild(docs: DataFrame, dir: String, idCol: String,
-                        textCol: String): Unit = {
-    docs.select(col(idCol).as("id"), TF.simhash64(col(textCol)).as("sig"))
-      .write.mode("overwrite").parquet(s"$dir/sigs.parquet")
-    Manifest.reset(docs.sparkSession, dir)
-  }
-
-  /** Append an accepted batch's signatures — one batch scan, no
-    * rebuild. Lock held for the whole file drop, live table resolved
-    * through the snapshot INSIDE it (the single-writer contract every
-    * index writer in this package enforces). Each append adds one file
-    * fragment set; [[simhashIndexCompact]] folds them back. */
-  def simhashIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, batch: DataFrame, idCol: String,
-                         textCol: String,
-                         batchId: Option[String] = None): Unit =
-    Lifecycle.append(spark, dir, batchId) { snap =>
-      batch.select(col(idCol).as("id"),
-        TF.simhash64(col(textCol)).as("sig"))
-        .write.mode("append").parquet(snap.path("sigs"))
-      batch.select(col(idCol).as("id"))
-    }
-
-  /** Retract documents from the persisted SimHash index
-    * ([[Tombstones]]): the ids' signatures stop matching probes
-    * immediately and are physically dropped by the next
-    * [[simhashIndexCompact]]. */
-  def simhashIndexDelete(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, ids: DataFrame,
-                         idCol: String = "id"): Unit =
-    Tombstones.retractIds(spark, Manifest.snapshot(spark, dir), "sigs",
-      ids, idCol)
-
-  /** Fold the signature table's append fragments into one coherent
-    * file set behind a [[Manifest]] flip. The rewrite range-clusters on
-    * `sig`, which sorts band 3 (the top 16 bits) into contiguous row
-    * groups — one of the four probe joins gets min/max pruning; the
-    * other three are bit-slices no single sort order can serve, and at
-    * 16 bytes/row the table is small enough that defragmentation is the
-    * point, not pruning. Pending [[Tombstones]] fold into the rewrite
-    * (retracted ids dropped, tombstone table emptied in the flip). */
-  def simhashIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Unit =
-    // always distinct: folds replayed-ingest duplicates (identical
-    // (id, sig) rows from an at-least-once micro-batch retry) — see
-    // minhashIndexCompact
-    Lifecycle.compactFlat(spark, dir, "sigs", Seq("sig"),
-      Lifecycle.Dedupe.Always, Lifecycle.Parts.BySize)
-
-  /** (id, band, bucket, sig) rows for a signature table — the banding
-    * used by probe and health. The signature rides along (8 bytes) so
-    * the candidate join needs no join-back for the Hamming verify. */
-  private def simhashBandRows(sigs: DataFrame): DataFrame =
-    sigs.select(col("id"), col("sig"),
-      explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-        shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL))
-          .as("bucket"))): _*)).as("lb"))
-      .select(col("id"), col("sig"), col("lb.band"), col("lb.bucket"))
-
-  /** Operational health report of a persisted [[simhashIndexBuild]]
-    * index — one row per index for the fleet table, same failure
-    * signals as [[minhashIndexHealth]]: `hot_buckets`/`max_bucket`
-    * (the probe guard silently drops over-cap buckets — template
-    * boilerplate funnels thousands of docs into one 16-bit bucket, so a
-    * hot bucket means near-dups are going unreported and an exact-dedup
-    * pre-pass is due) and `n_fragments` (append fragmentation →
-    * [[simhashIndexCompact]]). Bucket stats are computed by banding the
-    * stored signatures on scan — one bounded aggregate. */
-  def simhashIndexHealth(spark: org.apache.spark.sql.SparkSession,
-                         dir: String,
-                         hotBucketCap: Int = 10000): DataFrame = {
-    val snap = Manifest.snapshot(spark, dir)
-    val sigs = Manifest.read(spark, snap.path("sigs"))
-    // distinct (id, sig) vs total rows: the replay-duplicate debt a
-    // retried ingest micro-batch leaves behind (see
-    // minhashIndexHealth) — one extra bounded aggregate over the
-    // 16-byte/row table
-    val rowStats = sigs.agg(count(lit(1)).as("total_rows"),
-      count_distinct(col("id"), col("sig")).as("distinct_rows"))
-    val sizes = simhashBandRows(sigs)
-      .groupBy("band", "bucket").agg(count(lit(1)).as("_n"))
-    // one collected plan, no per-reading driver jobs, pending/ingest
-    // fused into a single aggregate side (see exactIndexHealth)
-    OpsStats.attach(spark, snap)(sizes.agg(
-      sum(col("_n")).as("total_band_rows"),
-      count(lit(1)).as("n_buckets"),
-      max(col("_n")).as("max_bucket"),
-      count(when(col("_n") > hotBucketCap, 1)).as("hot_buckets"))
-      .crossJoin(rowStats)
-      .select(Seq("total_band_rows", "total_rows", "distinct_rows",
-        "n_buckets", "max_bucket", "hot_buckets").map(col) ++
-        Lifecycle.healthTail(spark, snap, "sigs"): _*))
-  }
-
-  /** Probe a delta batch against the persisted index: [[simhash]] with
-    * the base side read from files — the base corpus is never re-hashed,
-    * and because verification is Hamming distance on the STORED
-    * signatures, the probe needs no base text table at all (the
-    * candidates-then-fetch step [[minhashIndexProbe]] pays simply does
-    * not exist for this family). Both sides pass the hot-bucket guard;
-    * candidate (delta_id, base_id) pairs are deduplicated across bands
-    * with their signatures riding along, so each pair is verified once.
-    * The result is eagerly materialized so the per-probe delta cache is
-    * released before returning (no cached-partition accumulation across
-    * a daily pipeline's probes); release the result's pinned blocks with
-    * [[Clustering.releasePairs]] when done. */
-  def simhashIndexProbe(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, delta: DataFrame, idCol: String,
-                        textCol: String, maxHamming: Int = 3,
-                        maxBucketSize: Int = 10000): DataFrame = {
-    val (pairs, handles) = simhashProbeLazy(spark, dir, delta, idCol,
-      textCol, maxHamming, maxBucketSize)
-    checkpointProbe(spark, pairs, handles, 4)
-  }
-
-  /** [[simhashIndexProbe]]'s LAZY core — the [[minhashProbeLazy]]
-    * contract: (lazy pair frame, persisted handles to release after
-    * the plan is consumed), one pass of the signature table restricted
-    * to the delta's buckets ([[probeBucketJoin]]). */
-  private[operators] def simhashProbeLazy(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, delta: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, maxBucketSize: Int): (DataFrame, Seq[DataFrame]) = {
-    val snap = Manifest.snapshot(spark, dir)
-    val baseBands = simhashBandRows(Tombstones.live(spark, snap,
-      Manifest.read(spark, snap.path("sigs"))))
-    val dSigs = delta.select(col(idCol).as("id"),
-      TF.simhash64(col(textCol)).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = probeBucketJoin(
-        baseBands.select(col("band"), col("bucket"),
-          col("id").as("base_id"), col("sig").as("sig_b")),
-        simhashBandRows(dSigs).select(col("band"), col("bucket"),
-          col("id").as("delta_id"), col("sig").as("sig_d")),
-        Seq("band", "bucket"), maxBucketSize)
-      .select("delta_id", "base_id", "sig_d", "sig_b")
-      .distinct()
-      .select(col("delta_id"), col("base_id"),
-        TF.hamming64(col("sig_d"), col("sig_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    (out, Seq(dSigs))
-  }
-
-  /** [[minhashMaintenanceApply]] for the SimHash family — the apply
-    * half of its health → plan → apply loop: `compact` folds signature
-    * fragments ([[simhashIndexCompact]]); `dedup_prepass` answers a hot
-    * `hot_buckets` reading by exact-deduping the corpus and REBUILDING
-    * the signature table from the min-id keepers (same fix as MinHash:
-    * a hot 16-bit band bucket is template boilerplate by construction —
-    * collapse it, don't rewrite files), swapped in with one manifest
-    * flip under the full-span writer lock. `dedup_prepass` REQUIRES the
-    * corpus text table (signatures cannot reconstruct text). */
-  def simhashMaintenanceApply(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, action: String,
-                              corpus: Option[DataFrame] = None,
-                              idCol: String = "id",
-                              textCol: String = "text"): Unit =
-    action match {
-      case "none" => ()
-      case "compact" => simhashIndexCompact(spark, dir)
-      case "dedup_prepass" =>
-        prepassRebuild(spark, dir, "simhashMaintenanceApply", "signature",
-          "sigs", corpus, idCol, textCol)(
-          _.select(col(idCol).as("id"), TF.simhash64(col(textCol)).as("sig")))
-      case other => throw new IllegalArgumentException(
-        s"simhashMaintenanceApply: unknown action '$other'")
-    }
-
-  /** Streaming micro-batch ingest into a persisted [[minhashIndexBuild]]
-    * index — [[Similarity.ivfIngest]] for the text-dedup side: each
-    * micro-batch of accepted documents appends its banded rows via
-    * [[minhashIndexAppend]] (LSH parameters pinned by the index
-    * metadata). At-least-once like every foreachBatch sink — a retried
-    * batch lands its band rows twice, which inflates candidate
-    * multiplicity but never pair VALUES (the probe deduplicates
-    * candidate pairs before verifying); exact-once pipelines dedupe by
-    * id at the next [[minhashIndexCompact]]. Single-writer: a batch
+  /** Streaming micro-batch ingest: each non-empty micro-batch of
+    * accepted documents is an [[append]] under the layout `at` resolves
+    * for that batch (MinHash re-reads its pinned parameters).
+    * At-least-once like every foreachBatch sink — a retried batch lands
+    * its rows twice, which inflates candidate multiplicity but never
+    * pair VALUES (the probe deduplicates candidate pairs before
+    * verifying); compaction is the dedupe point. Single-writer: a batch
     * colliding with a concurrent compaction fails loudly and the
     * restarted query replays it from the checkpoint. */
+  private def ingest(at: SparkSession => Banded, stream: DataFrame,
+                     dir: String, checkpoint: String, idCol: String,
+                     textCol: String)
+    : org.apache.spark.sql.streaming.StreamingQuery =
+    Lifecycle.ingest(stream, checkpoint)(batch =>
+      append(at(batch.sparkSession), batch.sparkSession, dir, batch, idCol,
+        textCol, None))
+
+  // ---- MinHash-LSH verbs ---------------------------------------------
+
+  /** MinHash-LSH near-dup candidate pairs: signature → bands → equi-join
+    * within band buckets → verify with true shingle Jaccard. Only pairs
+    * sharing ≥1 band are ever materialized; output (id_a, id_b,
+    * jaccard). */
+  def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
+                 shingleN: Int = 3, sigK: Int = 8, bands: Int = 4,
+                 threshold: Double = 0.5,
+                 maxBucketSize: Int = 10000): DataFrame =
+    selfJoin(MinHash(shingleN, sigK, bands), docs, idCol, textCol,
+      threshold, maxBucketSize)
+
+  /** Incremental MinHash-LSH: delta (ingest batch) docs probed against
+    * the BASE corpus's bands — the daily-ingest near-dup path where
+    * [[minhashLsh]] is the full-corpus refresh. Output: one row per
+    * (delta_id, base_id) near-dup pair with its verified Jaccard. The
+    * candidate join is delta bands (batch-sized) against the base's
+    * (band, bucket, id) rows, restricted to the buckets the delta
+    * touches ([[probeBucketJoin]]), so corpus-internal duplicates never
+    * re-pair; the shingle-verify joins touch candidate ids only. Signing
+    * the base corpus is still a full pass — the persisted index
+    * ([[minhashIndexProbe]]) is what removes it. */
+  def incrementalMinhashLsh(delta: DataFrame, base: DataFrame,
+                            idCol: String, textCol: String,
+                            shingleN: Int = 3, sigK: Int = 4,
+                            bands: Int = 2, threshold: Double = 0.5,
+                            maxBucketSize: Int = 10000): DataFrame = {
+    val m = MinHash(shingleN, sigK, bands)
+    val dP = cached(m.sign(delta, idCol, textCol))
+    val bP = cached(m.sign(base, idCol, textCol))
+    verified(m, candidates(m, m.stored(bP), dP, maxBucketSize)
+      .join(dP.select(col("id").as("delta_id"), col("sh").as("sh_d")),
+        Seq("delta_id"))
+      .join(bP.select(col("id").as("base_id"), col("sh").as("sh_b")),
+        Seq("base_id")), threshold)
+  }
+
+  /** Build the persisted MinHash index ([[build]]): (id, band, bucket)
+    * rows plus `_minhash_meta`. */
+  def minhashIndexBuild(docs: DataFrame, dir: String, idCol: String,
+                        textCol: String, shingleN: Int = 3,
+                        sigK: Int = 4, bands: Int = 2): Unit =
+    build(MinHash(shingleN, sigK, bands), docs, dir, idCol, textCol)
+
+  /** [[append]] a batch's band rows under the pinned parameters. */
+  def minhashIndexAppend(spark: SparkSession, dir: String, batch: DataFrame,
+                         idCol: String, textCol: String,
+                         batchId: Option[String] = None): Unit =
+    append(pinned(spark, dir), spark, dir, batch, idCol, textCol, batchId)
+
+  /** [[delete]] documents from the persisted MinHash index. */
+  def minhashIndexDelete(spark: SparkSession, dir: String, ids: DataFrame,
+                         idCol: String = "id"): Unit =
+    delete(pinned(spark, dir), spark, dir, ids, idCol)
+
+  /** [[compact]] the bands table, clustered on (band, bucket) — the
+    * probe's equi-join keys. */
+  def minhashIndexCompact(spark: SparkSession, dir: String): Unit =
+    compact(pinned(spark, dir), spark, dir)
+
+  /** [[health]] of a persisted MinHash index: `shingle_n`, `sig_k`,
+    * `n_bands`, `total_rows`, `distinct_rows`, `n_buckets`,
+    * `max_bucket`, `hot_buckets`, `dir`, `version`, `n_fragments`,
+    * `deleted_pending`, `ingest_batches`. */
+  def minhashIndexHealth(spark: SparkSession, dir: String,
+                         hotBucketCap: Int = 10000): DataFrame =
+    health(pinned(spark, dir), spark, dir, hotBucketCap)
+
+  /** Probe a delta batch against the persisted index ([[probe]]):
+    * [[incrementalMinhashLsh]] with the base side read from files — the
+    * base corpus is never re-signed. `base` supplies the TEXT for the
+    * verification of candidate ids only; a candidate base_id with NO row
+    * in `base` fails the job loudly. Cost: one pass of the bands table,
+    * filtered map-side to the delta's buckets, and one of `base`,
+    * filtered map-side to the candidate ids. */
+  def minhashIndexProbe(spark: SparkSession, dir: String, delta: DataFrame,
+                        base: DataFrame, idCol: String, textCol: String,
+                        threshold: Double = 0.5,
+                        maxBucketSize: Int = 10000): DataFrame =
+    probe(pinned(spark, dir), spark, dir, delta, Some(base), idCol, textCol,
+      threshold, maxBucketSize)
+
+  /** [[maintenanceApply]] on a persisted MinHash index. */
+  def minhashMaintenanceApply(spark: SparkSession, dir: String,
+                              action: String,
+                              corpus: Option[DataFrame] = None,
+                              idCol: String = "id",
+                              textCol: String = "text"): Unit =
+    maintenanceApply(pinned(spark, dir), spark, dir, action, corpus, idCol,
+      textCol)
+
+  /** [[ingest]] into a persisted MinHash index. */
   def minhashIngest(stream: DataFrame, dir: String, checkpoint: String,
                     idCol: String = "id", textCol: String = "text")
     : org.apache.spark.sql.streaming.StreamingQuery =
-    Lifecycle.ingest(stream, checkpoint)(b =>
-      minhashIndexAppend(b.sparkSession, dir, b, idCol, textCol))
+    ingest(pinned(_, dir), stream, dir, checkpoint, idCol, textCol)
 
-  /** [[minhashIngest]] for the SimHash family: each micro-batch appends
-    * its 16-byte signatures via [[simhashIndexAppend]]. A retried batch
-    * writes duplicate (id, sig) rows — candidate dedup keeps probe
-    * values unaffected; compaction is the dedupe point. */
+  // ---- SimHash verbs -------------------------------------------------
+
+  /** SimHash near-dup pairs: 64-bit signature, bucket by 16-bit bands
+    * (docs within `maxHamming` ≤ 3 share ≥1 of 4 bands by pigeonhole),
+    * verify with full Hamming distance; output (id_a, id_b, hamming). */
+  def simhash(docs: DataFrame, idCol: String, textCol: String,
+              maxHamming: Int = 3, maxBucketSize: Int = 10000): DataFrame =
+    selfJoin(SimHash, docs, idCol, textCol, maxHamming, maxBucketSize)
+
+  /** Build the persisted SimHash index ([[build]]): (id, sig) rows. */
+  def simhashIndexBuild(docs: DataFrame, dir: String, idCol: String,
+                        textCol: String): Unit =
+    build(SimHash, docs, dir, idCol, textCol)
+
+  /** [[append]] a batch's signatures. */
+  def simhashIndexAppend(spark: SparkSession, dir: String, batch: DataFrame,
+                         idCol: String, textCol: String,
+                         batchId: Option[String] = None): Unit =
+    append(SimHash, spark, dir, batch, idCol, textCol, batchId)
+
+  /** [[delete]] documents from the persisted SimHash index. */
+  def simhashIndexDelete(spark: SparkSession, dir: String, ids: DataFrame,
+                         idCol: String = "id"): Unit =
+    delete(SimHash, spark, dir, ids, idCol)
+
+  /** [[compact]] the signature table, clustered on `sig`. */
+  def simhashIndexCompact(spark: SparkSession, dir: String): Unit =
+    compact(SimHash, spark, dir)
+
+  /** [[health]] of a persisted SimHash index: `total_band_rows`,
+    * `total_rows`, `distinct_rows`, `n_buckets`, `max_bucket`,
+    * `hot_buckets`, `dir`, `version`, `n_fragments`, `deleted_pending`,
+    * `ingest_batches`. */
+  def simhashIndexHealth(spark: SparkSession, dir: String,
+                         hotBucketCap: Int = 10000): DataFrame =
+    health(SimHash, spark, dir, hotBucketCap)
+
+  /** Probe a delta batch against the persisted index ([[probe]]):
+    * [[simhash]] with the base side read from files; the verify is
+    * Hamming distance on the STORED signatures, so no base text table. */
+  def simhashIndexProbe(spark: SparkSession, dir: String, delta: DataFrame,
+                        idCol: String, textCol: String, maxHamming: Int = 3,
+                        maxBucketSize: Int = 10000): DataFrame =
+    probe(SimHash, spark, dir, delta, None, idCol, textCol, maxHamming,
+      maxBucketSize)
+
+  /** [[maintenanceApply]] on a persisted SimHash index. */
+  def simhashMaintenanceApply(spark: SparkSession, dir: String,
+                              action: String,
+                              corpus: Option[DataFrame] = None,
+                              idCol: String = "id",
+                              textCol: String = "text"): Unit =
+    maintenanceApply(SimHash, spark, dir, action, corpus, idCol, textCol)
+
+  /** [[ingest]] into a persisted SimHash index. */
   def simhashIngest(stream: DataFrame, dir: String, checkpoint: String,
                     idCol: String = "id", textCol: String = "text")
     : org.apache.spark.sql.streaming.StreamingQuery =
-    Lifecycle.ingest(stream, checkpoint)(b =>
-      simhashIndexAppend(b.sparkSession, dir, b, idCol, textCol))
+    ingest(_ => SimHash, stream, dir, checkpoint, idCol, textCol)
 
   /** n-gram Jaccard near-dup pairs within an explicit blocking key (e.g.
     * source), computed by prefix-filtered set-similarity join — never the

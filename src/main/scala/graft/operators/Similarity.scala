@@ -1653,10 +1653,9 @@ object Similarity {
           ivfPqIndexHealth(spark, dir, sampledQueries(dir).get,
             probeCorpus(dir).get, probeK, probeNProbe, probeRefineK)
         case "ivf" | "ivf_pq" => ivfIndexHealthLight(spark, dir)
-        case "minhash" => Dedup.minhashIndexHealth(spark, dir,
-          hotBucketCap)
-        case "simhash" => Dedup.simhashIndexHealth(spark, dir,
-          hotBucketCap)
+        case "minhash" | "simhash" =>
+          Dedup.health(Dedup.banded(spark, dir, family), spark, dir,
+            hotBucketCap)
         case "semdedup" => Clustering.semDedupStateHealth(spark, dir,
           hotClusterCap)
         case "decontam" => Decontamination.decontamIndexHealth(spark,
@@ -1863,18 +1862,13 @@ object Similarity {
             ("skipped", "PQ rebuild needs the embedding store in " +
               "corpora or the runbook")
           else attempt(indexMaintenanceApply(spark, dir, a, corpus))
-        case ("minhash", a) =>
+        case ("minhash" | "simhash", a) =>
           val corpus = sideInput(dir, "id", "text")
           if (a == "dedup_prepass" && corpus.isEmpty)
             ("skipped", "dedup_prepass needs the corpus text in " +
               "corpora or the runbook")
-          else attempt(Dedup.minhashMaintenanceApply(spark, dir, a, corpus))
-        case ("simhash", a) =>
-          val corpus = sideInput(dir, "id", "text")
-          if (a == "dedup_prepass" && corpus.isEmpty)
-            ("skipped", "dedup_prepass needs the corpus text in " +
-              "corpora or the runbook")
-          else attempt(Dedup.simhashMaintenanceApply(spark, dir, a, corpus))
+          else attempt(Dedup.maintenanceApply(
+            Dedup.banded(spark, dir, family), spark, dir, a, corpus))
         case ("semdedup", "compact") =>
           attempt(Clustering.semDedupStateCompact(spark, dir))
         case ("exact", "compact") =>
@@ -1979,12 +1973,9 @@ object Similarity {
       val (status, detail) = family match {
         case "ivf" | "ivf_pq" =>
           attempt(ivfDelete(spark, dir, docs.select(col(idCol)), idCol))
-        case "minhash" =>
-          attempt(Dedup.minhashIndexDelete(spark, dir,
-            docs.select(col(idCol)), idCol))
-        case "simhash" =>
-          attempt(Dedup.simhashIndexDelete(spark, dir,
-            docs.select(col(idCol)), idCol))
+        case "minhash" | "simhash" =>
+          attempt(Dedup.delete(Dedup.banded(spark, dir, family), spark,
+            dir, docs.select(col(idCol)), idCol))
         case "semdedup" =>
           attempt(Clustering.semDedupStateDelete(spark, dir,
             docs.select(col(idCol)), idCol))

@@ -21,8 +21,12 @@ class JobBudgetSpec extends SparkSpec {
   // batch's scope runs the MinHash/SimHash probe as a count, the
   // broadcast(s) of batch-sized sides and the checkpoint, plus the
   // collect; an IVF probe is one quantizer collect, the top-k
-  // stage(s) and the collect. Delete: one write (keys, then the move).
+  // stage(s) and the collect; the exact probe is the batch-hash
+  // broadcast, the semi-joined distinct's stage, the broadcast of its
+  // hits and the collect. Delete: one write (keys, then the move); the
+  // exact family's keys are the hashes of a join.
   private val budgets = Map(
+    "exact" -> Seq(2, 2, 4, 3, 5),
     "minhash" -> Seq(1, 1, 5, 2, 5),
     "simhash" -> Seq(1, 1, 4, 2, 5),
     "ivf" -> Seq(5, 3, 3, 2, 4),
@@ -54,6 +58,14 @@ class JobBudgetSpec extends SparkSpec {
     val baseV = vecs.filter($"id" < 100)
     val addedV = vecs.filter($"id" >= 100)
     family match {
+      case "exact" => Seq(
+        () => Dedup.exactIndexBuild(base, dir, "id", "text"),
+        () => Dedup.exactIndexAppend(spark, dir, added, "id", "text"),
+        () => Dedup.exactIndexProbe(spark, dir, delta, "id", "text")
+          .collect(),
+        () => Dedup.exactIndexDelete(spark, dir,
+          docs.join(retract, "id"), "id", "text"),
+        () => Dedup.exactIndexCompact(spark, dir))
       case "minhash" => Seq(
         () => Dedup.minhashIndexBuild(base, dir, "id", "text", 3, 8, 4),
         () => Dedup.minhashIndexAppend(spark, dir, added, "id", "text"),
