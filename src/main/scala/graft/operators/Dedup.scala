@@ -80,16 +80,19 @@ object Dedup {
     }
 
   /** Probe a delta batch against the persisted hash set: one content
-    * hash per delta row, one membership join against the files —
-    * duplicate stored hashes cannot change the verdict OR the row
-    * count (the stored side is deduplicated before the join, so the
-    * output is exactly one row per delta row however many times a hash
-    * was re-appended — the contract [[CorpusPipeline.admitBatch]]'s
-    * funnel counts rely on). The stored hashes are first semi-joined
-    * to the batch's hashes (a map-side filter against the batch-sized
-    * set), so the distinct — and the probe's cost — is bounded by the
-    * batch, not the index. Returns every delta row with `is_dup` (its
-    * text already exists in the indexed corpus). */
+    * hash per delta row. The stored hashes are semi-joined to the
+    * batch's (a map-side filter against the broadcast batch-sized set),
+    * and the surviving stored rows ride with the delta rows through ONE
+    * window keyed on the hash, which flags each delta row whose hash
+    * has a stored row — so the shuffle, and the probe's cost, is
+    * bounded by the batch, not the index (a whole-table distinct of the
+    * stored hashes would shuffle every distinct hash per probe).
+    * Duplicate stored hashes cannot change the verdict OR the row
+    * count: only the delta rows leave the window, so the output is
+    * exactly one row per delta row however many times a hash was
+    * re-appended — the contract [[CorpusPipeline.admitBatch]]'s funnel
+    * counts rely on. Returns every delta row with `is_dup` (its text
+    * already exists in the indexed corpus). */
   def exactIndexProbe(spark: SparkSession,
                       dir: String, delta: DataFrame, idCol: String,
                       textCol: String): DataFrame = {
@@ -98,9 +101,14 @@ object Dedup {
       Manifest.read(spark, snap.path("hashes")))
     val hashed = delta.select(col(idCol), md5(col(textCol)).as("h"))
     val hits = stored.select(col("h"))
-      .join(hashed.select(col("h")), Seq("h"), "left_semi").distinct()
-    hashed.join(hits.withColumn("_hit", lit(true)), Seq("h"), "left")
-      .select(col(idCol), coalesce(col("_hit"), lit(false)).as("is_dup"))
+      .join(hashed.select(col("h")), Seq("h"), "left_semi")
+    hashed.withColumn("_hit", lit(false))
+      .unionByName(hits.withColumn("_hit", lit(true)),
+        allowMissingColumns = true)
+      .withColumn("is_dup", coalesce(
+        max(col("_hit")).over(Window.partitionBy(col("h"))), lit(false)))
+      .where(!col("_hit"))
+      .select(col(idCol), col("is_dup"))
   }
 
   /** Retract content from the persisted hash set ([[Tombstones]] — the
@@ -294,7 +302,9 @@ object Dedup {
                              base: Option[DataFrame], idCol: String,
                              textCol: String): DataFrame = {
       val candIds = cands.select(col("base_id")).distinct()
-      val fetched = base.get
+      val fetched = base.getOrElse(throw new IllegalArgumentException(
+          "minhash probe: verifying candidates needs the base text table " +
+            "— the bands index stores no text"))
         .select(col(idCol).as("base_id"), col(textCol).as("_t"))
         .join(broadcast(candIds), Seq("base_id"), "left_semi")
       val candBase = candIds.join(fetched.hint("shuffle_hash"),

@@ -22,11 +22,11 @@ class JobBudgetSpec extends SparkSpec {
   // broadcast(s) of batch-sized sides and the checkpoint, plus the
   // collect; an IVF probe is one quantizer collect, the top-k
   // stage(s) and the collect; the exact probe is the batch-hash
-  // broadcast, the semi-joined distinct's stage, the broadcast of its
-  // hits and the collect. Delete: one write (keys, then the move); the
-  // exact family's keys are the hashes of a join.
+  // broadcast, the stage of its one hash-keyed window and the collect.
+  // Delete: one write (keys, then the move); the exact family's keys
+  // are the hashes of a join.
   private val budgets = Map(
-    "exact" -> Seq(2, 2, 4, 3, 5),
+    "exact" -> Seq(2, 2, 3, 3, 5),
     "minhash" -> Seq(1, 1, 5, 2, 5),
     "simhash" -> Seq(1, 1, 4, 2, 5),
     "ivf" -> Seq(5, 3, 3, 2, 4),

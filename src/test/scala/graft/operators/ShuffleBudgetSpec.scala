@@ -9,7 +9,8 @@ import graft.sources.Bucketing.countShuffles
   * shuffling or an aggregate grew an extra stage — the kind of plan
   * drift per-value correctness gates can't see. Budgets are equalities
   * in spirit but asserted as ≤ so an AQE improvement (e.g. a join
-  * flipping to broadcast) never fails the suite.
+  * flipping to broadcast) never fails the suite. The persisted exact
+  * probe is pinned by the rows it shuffles: a batch's, not an index's.
   */
 class ShuffleBudgetSpec extends SparkSpec {
 
@@ -103,6 +104,41 @@ class ShuffleBudgetSpec extends SparkSpec {
       }
       assert(n <= budget,
         s"$name shuffles $n times, budget $budget — plan drifted")
+    }
+  }
+
+  test("exactIndexProbe shuffles the batch's rows and their stored " +
+    "matches, not the index") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import spark.implicits._
+    graft.util.TempDirs.using("shuffle_exact") { case Seq(dir) =>
+      val text = (id: org.apache.spark.sql.Column) =>
+        concat(lit("document number "), id)
+      Dedup.exactIndexBuild(spark.range(20000)
+        .select(col("id"), text(col("id")).as("text")), dir, "id", "text")
+      // 16 rows: 8 texts in the index, 8 new
+      val batch = (0 until 16).map(i => (100000L + i,
+        if (i % 2 == 0) s"document number ${i * 1000}" else s"new $i"))
+        .toDF("id", "text")
+      val sc = spark.sparkContext
+      val records = new java.util.concurrent.atomic.AtomicLong()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null)
+            records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      }
+      org.apache.spark.GraftBus.drain(sc)
+      sc.addSparkListener(listener)
+      val dups = try {
+        val out = Dedup.exactIndexProbe(spark, dir, batch, "id", "text")
+          .as[(Long, Boolean)].collect()
+        org.apache.spark.GraftBus.drain(sc)
+        out.count(_._2)
+      } finally sc.removeSparkListener(listener)
+      assert(dups == 8)
+      assert(records.get <= 16 + 8,
+        s"the probe shuffled ${records.get} rows for a 16-row batch")
     }
   }
 }

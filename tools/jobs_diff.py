@@ -34,7 +34,10 @@ import json
 import sys
 
 # Queries whose job count is not a stable fingerprint on unchanged code
-# (streaming micro-batch timing and `inParallel` scheduling).
+# (streaming micro-batch timing and `inParallel` scheduling). q251 read
+# 110, 111 or 119 at sf0.01, run alone or after the other index
+# queries, with the bus drained around each query and no streaming query
+# active when it began.
 NOISY = ("q92", "q251", "q252", "q257")
 
 
