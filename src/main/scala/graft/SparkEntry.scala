@@ -1,5 +1,8 @@
 package graft
 
+import graft.Fleet.inParallel
+import graft.FleetFamily._
+import graft.{FleetFixture => FX}
 import graft.functions.{TextFunctions => TF, VectorOps => V}
 import graft.operators._
 import graft.util.Exact._
@@ -30,22 +33,6 @@ object SparkEntry {
   /** lineitem revenue term, decimal-exact: price * (1 - discount). */
   private def revenueDec: Column =
     dec(col("l_extendedprice"), 12, 4) * dec(lit(1) - col("l_discount"), 12, 4)
-
-  /** Run independent per-index actions of a lifecycle gate
-    * CONCURRENTLY (one thread per action, bounded by the caller's
-    * list): each action drives its own index dir under its own writer
-    * lock, so builds/deletes/compacts across families are exactly the
-    * fleet-parallel operations a production maintenance loop runs —
-    * and at fixture scale each action is scheduler-latency-bound, so
-    * overlapping them collapses the gate's wall time without changing
-    * any result. Rethrows the first failure. */
-  private def inParallel(fs: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(fs.map(f => Future(f()))), 10.minutes): Unit
-  }
 
   /** Session confs of a FIXTURE-SCALE lifecycle gate: AQE off and a
     * narrow shuffle width. These gates measure persisted-index state
@@ -98,6 +85,63 @@ object SparkEntry {
       .select(col("vec_id").as("qid"), col("embedding").as("qv")),
      emb.filter(col("vec_id") >= 5)
       .select(col("vec_id").as("id"), col("embedding").as("v")))
+
+  /** The q116 base corpus: sources src0–src4. */
+  private val BaseSrc = Seq("src0", "src1", "src2", "src3", "src4")
+
+  /** Index the q116 base corpus into `dir` in two installments: built on
+    * src0–src2, then src3–src4 appended (the lock/fragment install
+    * path). Returns (the documents table, the base corpus). */
+  private def baseIndex(s: SparkSession, d: String, f: FleetFamily,
+                        dir: String): (DataFrame, DataFrame) = {
+    val docs = T.documents(s, d)
+    val base = docs.filter(col("source").isInCollection(BaseSrc))
+    f.build(s, base.filter(col("source").isInCollection(Seq("src0", "src1",
+      "src2"))), dir)
+    f.append(s, dir,
+      base.filter(col("source").isInCollection(Seq("src3", "src4"))))
+    (docs, base)
+  }
+
+  /** Index the src0 benchmark suite's shingles into `dir` in two
+    * installments: built on its even doc ids, then the odd ones
+    * appended (the anti-join suite-update path). Returns the documents
+    * table. */
+  private def benchIndex(s: SparkSession, d: String, dir: String): DataFrame = {
+    val docs = T.documents(s, d)
+    val bench = docs.filter(col("source") === "src0")
+    Decontam().build(s, bench.filter(pmod(col("doc_id"), lit(2L)) === 0), dir)
+    Decontam().append(s, dir, bench.filter(pmod(col("doc_id"), lit(2L)) =!= 0))
+    docs
+  }
+
+  /** The daily-ingest split of the documents table: (benchmark suite
+    * src0, base corpus src1–src4, the day's batch src5+). */
+  private def ingestSplit(s: SparkSession, d: String)
+    : (DataFrame, DataFrame, DataFrame) = {
+    val docs = T.documents(s, d)
+    (docs.filter(col("source") === "src0"),
+     docs.filter(col("source").isInCollection(BaseSrc.tail)),
+     docs.filter(!col("source").isInCollection(BaseSrc)))
+  }
+
+  /** The admission kernel's three indexes, built concurrently with
+    * `more`: exact-hash and MinHash over `base`, decontam over
+    * `bench`. */
+  private def admissionIndexes(s: SparkSession, idCol: String,
+                               base: DataFrame, bench: DataFrame,
+                               exDir: String, mhDir: String, dcDir: String,
+                               more: (() => Unit)*): Unit =
+    Fleet.build(s, Seq((Exact(idCol), base, exDir),
+      (MinHash(idCol), base, mhDir), (Decontam(), bench, dcDir)), more: _*)
+
+  /** The SemDeDup state of the embeddings table (q237's clustering). */
+  private val EmbSem = SemDeDup(k = 16, idCol = "vec_id",
+    vecCol = "embedding")
+
+  /** A SemDeDup state frozen at k=1 over [[FleetFixture.groups3]]: one
+    * hot cluster by construction. */
+  private val GroupSem = SemDeDup(k = 1, idCol = "vid", vecCol = "embedding")
 
   // ------------------------------------------------------- relational (§2.3/2.4)
 
@@ -410,9 +454,8 @@ object SparkEntry {
     * base, first of their hash within the delta)? */
   def q81_incremental_dedup(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
-    val baseSrc = Seq("src0", "src1", "src2", "src3", "src4")
-    val base = docs.filter(col("source").isInCollection(baseSrc))
-    val delta = docs.filter(!col("source").isInCollection(baseSrc))
+    val base = docs.filter(col("source").isInCollection(BaseSrc))
+    val delta = docs.filter(!col("source").isInCollection(BaseSrc))
     Dedup.incrementalExact(delta, base, "doc_id", "text")
   }
 
@@ -790,10 +833,9 @@ object SparkEntry {
     * sibling of q81's exact path. */
   def q116_incremental_minhash(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
-    val baseSrc = Seq("src0", "src1", "src2", "src3", "src4")
     Dedup.incrementalMinhashLsh(
-      docs.filter(!col("source").isInCollection(baseSrc)),
-      docs.filter(col("source").isInCollection(baseSrc)),
+      docs.filter(!col("source").isInCollection(BaseSrc)),
+      docs.filter(col("source").isInCollection(BaseSrc)),
       "doc_id", "text")
   }
 
@@ -1617,11 +1659,7 @@ object SparkEntry {
     val base = emb.filter(col("vec_id") % 10 < 8)
     val batch = emb.filter(col("vec_id") % 10 >= 8)
     TempDirs.using("q237_sem_") { case Seq(root) =>
-      val (labels, centroids) = operators.Clustering.kmeansWithCentroids(
-        base, "vec_id", "embedding", k = 16, iterations = 2)
-      operators.Clustering.semDedupStateSave(s, root, labels, "vec_id",
-        centroids)
-      operators.Clustering.releasePairs(labels)
+      EmbSem.build(s, base, root)
       operators.Clustering.semDedupIncrementalPersisted(s, root, base,
         batch, "vec_id", "embedding", tau = 0.3)
         .localCheckpoint()
@@ -2959,54 +2997,28 @@ object SparkEntry {
     val (queries, corpus) = knnSplit(T.embeddings(s, d))
     val mid = corpus.agg(
       percentile_approx(col("id"), lit(0.5), lit(10000))).head().getLong(0)
-    // the decayed fixture: cluster directions u_c = e_c + 0.2·e_{c+1},
-    // members u_c and u_c + 0.05·e_{c+2} — all query-member cosines
-    // distinct (no rank-3 ties), 3rd-nearest of query e_c is cluster
-    // (c−1)'s first member via its 0.2·e_c component
-    import s.implicits._
-    def member(c: Int, eps: Double): Array[Float] = {
-      val a = new Array[Float](4)
-      a(c) = 1.0f; a((c + 1) % 4) = 0.2f
-      a((c + 2) % 4) = eps.toFloat
-      a
-    }
-    val decCorpus = (0 until 4).flatMap(c => Seq(
-      (c * 2L, member(c, 0.0)), (c * 2L + 1, member(c, 0.05))))
-      .toDF("id", "v")
-    val decQueries = (0 until 4).map { c =>
-      val a = new Array[Float](4); a(c) = 1.0f; (c.toLong, a)
-    }.toDF("qid", "qv")
+    val (decCorpus, decQueries) = FX.decayed(s)
+    val ivf = Ivf(nList = 8, kmeansMaxIter = 2)
     TempDirs.using("q234_ok_", "q234_frag_", "q234_dec_") {
       case Seq(okDir, fragDir, decDir) =>
       // three independent indexes: build them (and below, run their
       // eager recall probes) concurrently — the fleet-parallel shape,
-      // identical results (q254's inParallel rationale)
+      // identical results
       inParallel(
-        () => Similarity.ivfBuild(corpus, okDir, nList = 8,
-          kmeansMaxIter = 2),
+        () => ivf.build(s, corpus, okDir),
         () => {
-          Similarity.ivfBuild(corpus.filter(col("id") <= mid), fragDir,
-            nList = 8, kmeansMaxIter = 2)
-          Similarity.ivfAppend(s, fragDir,
-            corpus.filter(col("id") > mid))
+          ivf.build(s, corpus.filter(col("id") <= mid), fragDir)
+          ivf.append(s, fragDir, corpus.filter(col("id") > mid))
         },
-        () => Similarity.ivfBuild(decCorpus, decDir, nList = 4,
-          kmeansMaxIter = 10))
-      val healths = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.sequence(Seq(
-          Future(Similarity.ivfIndexHealth(s, okDir, queries, k = 3,
-            nProbe = 8).withColumn("idx", lit(1))),
-          Future(Similarity.ivfIndexHealth(s, fragDir, queries, k = 3,
-            nProbe = 8).withColumn("idx", lit(2))),
-          Future(Similarity.ivfIndexHealth(s, decDir, decQueries,
-            k = 3, nProbe = 1).withColumn("idx", lit(3))))),
-          10.minutes)
-      }
-      val fleet = healths.reduce(_ unionByName _)
-      val plan = Similarity.indexMaintenancePlan(fleet,
+        () => Ivf(nList = 4, kmeansMaxIter = 10).build(s, decCorpus, decDir))
+      val healths = inParallel(
+        () => Similarity.ivfIndexHealth(s, okDir, queries, k = 3, nProbe = 8),
+        () => Similarity.ivfIndexHealth(s, fragDir, queries, k = 3,
+          nProbe = 8),
+        () => Similarity.ivfIndexHealth(s, decDir, decQueries, k = 3,
+          nProbe = 1))
+      val plan = Similarity.indexMaintenancePlan(
+        Fleet.healthUnion("idx", (1 to 3).zip(healths)),
         recallFloor = 0.9, maxFilesPerListCeiling = 1)
         .select(col("idx"), col("action"))
       plan.localCheckpoint()
@@ -3024,14 +3036,8 @@ object SparkEntry {
     * direct two-sided report exactly, so the oracle is q58's SQL
     * verbatim. */
   def q235_decontam_index(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val bench = docs.filter(col("source") === "src0")
     TempDirs.using("q235_decontam_") { case Seq(root) =>
-      Decontamination.decontamIndexBuild(
-        bench.filter(pmod(col("doc_id"), lit(2L)) === 0), root,
-        "text", n = 3)
-      Decontamination.decontamIndexAppend(s, root,
-        bench.filter(pmod(col("doc_id"), lit(2L)) =!= 0), "text")
+      val docs = benchIndex(s, d, root)
       Decontamination.decontamIndexReport(s, root,
         docs.filter(col("source") =!= "src0"), "doc_id", "text")
         .localCheckpoint()
@@ -3049,21 +3055,13 @@ object SparkEntry {
     * Must equal q116's two-sided incremental run exactly, so the
     * oracle is q116's SQL verbatim. */
   def q236_minhash_index(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val baseSrc = Seq("src0", "src1", "src2", "src3", "src4")
-    val base = docs.filter(col("source").isInCollection(baseSrc))
     TempDirs.using("q236_minhash_") { case Seq(root) =>
-      Dedup.minhashIndexBuild(
-        base.filter(col("source").isInCollection(Seq("src0", "src1",
-          "src2"))), root, "doc_id", "text")
-      Dedup.minhashIndexAppend(s, root,
-        base.filter(col("source").isInCollection(Seq("src3", "src4"))),
-        "doc_id", "text")
+      val (docs, base) = baseIndex(s, d, MinHash(idCol = "doc_id"), root)
       // the probe eagerly materializes its own result (it releases the
       // per-probe signature cache before returning) — no extra
       // checkpoint needed before the staging dir is deleted
       Dedup.minhashIndexProbe(s, root,
-        docs.filter(!col("source").isInCollection(baseSrc)), base,
+        docs.filter(!col("source").isInCollection(BaseSrc)), base,
         "doc_id", "text")
     }
   }
@@ -3081,21 +3079,14 @@ object SparkEntry {
     * hot-path semantics are spec-pinned by dropHotBuckets's own
     * tests). */
   def q238_minhash_health(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val base = docs.filter(col("source").isInCollection(
-      Seq("src0", "src1", "src2", "src3", "src4")))
     TempDirs.using("q238_mhhealth_") { case Seq(root) =>
-      Dedup.minhashIndexBuild(
-        base.filter(col("source").isInCollection(Seq("src0", "src1",
-          "src2"))), root, "doc_id", "text")
-      Dedup.minhashIndexAppend(s, root,
-        base.filter(col("source").isInCollection(Seq("src3", "src4"))),
-        "doc_id", "text")
+      val mh = MinHash(idCol = "doc_id", hotBucketCap = 25)
+      baseIndex(s, d, mh, root)
       // dir/version/n_fragments are real but path- and write-layout-
       // dependent (a temp dir; file counts vary with parallelism), so
       // the gate pins the data-derived stats; the fragment/plan loop is
       // value-gated by q239's controlled fixture instead
-      Dedup.minhashIndexHealth(s, root, hotBucketCap = 25)
+      mh.health(s, root)
         .select("shingle_n", "sig_k", "n_bands", "total_rows",
           "n_buckets", "max_bucket", "hot_buckets")
         .localCheckpoint()
@@ -3122,50 +3113,23 @@ object SparkEntry {
     import s.implicits._
     // healthy IVF fixture: 8 distinct axis-ish vectors, queried by
     // themselves at probe-all — recall exactly 1.0
-    def v(c: Int, eps: Double): Array[Float] = {
-      val a = new Array[Float](4)
-      a(c % 4) = 1.0f; a((c + 1) % 4) = 0.2f
-      a((c + 2) % 4) = eps.toFloat
-      a
-    }
-    val okCorpus = (0 until 4).flatMap(c => Seq(
-      (c * 2L, v(c, 0.0)), (c * 2L + 1, v(c, 0.05)))).toDF("id", "v")
-    val okQueries = (0 until 4).map { c =>
-      val a = new Array[Float](4); a(c) = 1.0f; (c.toLong, a)
-    }.toDF("qid", "qv")
+    val (okCorpus, okQueries) = FX.decayed(s)
     // hot minhash fixture: 8 copies of one boilerplate line — every
     // band funnels them into ONE bucket of 8, over the cap of 5
-    val hotDocs = (0L until 8L)
-      .map(i => (i, "all work and no play makes jack a dull boy"))
+    val hotDocs = (0L until 8L).map(i => (i, FX.boiler))
       .toDF("id", "text").repartition(1)
-    // fragmented minhash fixture: distinct texts, built once then
-    // appended three times (each a 1-file drop) — 4 fragments > 2
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow",
-      4L -> "the five boxing wizards jump quickly",
-      5L -> "jackdaws love my big sphinx of quartz")
-    val fragDocs = texts.toDF("id", "text").repartition(1)
+    val mh = MinHash(hotBucketCap = 5)
     TempDirs.using("q239_ivf_", "q239_hot_", "q239_frag_") {
       case Seq(ivfDir, hotDir, fragDir) =>
-      Similarity.ivfBuild(okCorpus, ivfDir, nList = 4, kmeansMaxIter = 10)
-      Dedup.minhashIndexBuild(hotDocs, hotDir, "id", "text")
-      Dedup.minhashIndexBuild(fragDocs.filter(col("id") < 3), fragDir,
-        "id", "text")
-      (3L until 6L).foreach(i =>
-        Dedup.minhashIndexAppend(s, fragDir,
-          fragDocs.filter(col("id") === i), "id", "text"))
-      val fleet = Similarity
-        .ivfIndexHealth(s, ivfDir, okQueries, k = 3, nProbe = 4)
-        .withColumn("idx", lit(1))
-        .unionByName(Dedup.minhashIndexHealth(s, hotDir,
-          hotBucketCap = 5).withColumn("idx", lit(2)),
-          allowMissingColumns = true)
-        .unionByName(Dedup.minhashIndexHealth(s, fragDir,
-          hotBucketCap = 5).withColumn("idx", lit(3)),
-          allowMissingColumns = true)
+      Ivf(nList = 4, kmeansMaxIter = 10).build(s, okCorpus, ivfDir)
+      mh.build(s, hotDocs, hotDir)
+      // fragmented minhash fixture: distinct texts, built once then
+      // appended three times (each a 1-file drop) — 4 fragments > 2
+      mh.buildFragmented(s, FX.docs(s, FX.pangrams), fragDir, 3L, 6L)
+      val fleet = Fleet.healthUnion("idx", Seq(
+        1 -> Similarity.ivfIndexHealth(s, ivfDir, okQueries, k = 3,
+          nProbe = 4),
+        2 -> mh.health(s, hotDir), 3 -> mh.health(s, fragDir)))
       val plan = Similarity.indexMaintenancePlan(fleet,
         recallFloor = 0.9, maxFilesPerListCeiling = 10,
         maxFragmentsCeiling = 2)
@@ -3199,13 +3163,8 @@ object SparkEntry {
       .select(col("vec_id"), col("embedding"))
       .unionByName(planted)
     TempDirs.using("q240_semapp_") { case Seq(root) =>
-      val (labels, centroids) = operators.Clustering.kmeansWithCentroids(
-        base, "vec_id", "embedding", k = 16, iterations = 2)
-      operators.Clustering.semDedupStateSave(s, root, labels, "vec_id",
-        centroids)
-      operators.Clustering.releasePairs(labels)
-      operators.Clustering.semDedupStateAppend(s, root, day1, "vec_id",
-        "embedding")
+      EmbSem.build(s, base, root)
+      EmbSem.append(s, root, day1)
       // the vector table must cover every indexed id: base ∪ day-1
       val vecTable = base.select(col("vec_id"), col("embedding"))
         .unionByName(day1)
@@ -3273,18 +3232,10 @@ object SparkEntry {
     * maxHamming=16. The DuckDB oracle is q40's nibble-exact signature
     * mirror restricted to the delta×base side. */
   def q242_simhash_index(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val baseSrc = Seq("src0", "src1", "src2", "src3", "src4")
-    val base = docs.filter(col("source").isInCollection(baseSrc))
     TempDirs.using("q242_simhash_") { case Seq(root) =>
-      Dedup.simhashIndexBuild(
-        base.filter(col("source").isInCollection(Seq("src0", "src1",
-          "src2"))), root, "doc_id", "text")
-      Dedup.simhashIndexAppend(s, root,
-        base.filter(col("source").isInCollection(Seq("src3", "src4"))),
-        "doc_id", "text")
+      val (docs, _) = baseIndex(s, d, SimHash(idCol = "doc_id"), root)
       Dedup.simhashIndexProbe(s, root,
-        docs.filter(!col("source").isInCollection(baseSrc)),
+        docs.filter(!col("source").isInCollection(BaseSrc)),
         "doc_id", "text", maxHamming = 16)
         .withColumn("hamming", col("hamming").cast("long"))
     }
@@ -3299,17 +3250,10 @@ object SparkEntry {
     * n_fragments are path- and layout-dependent and are gated by the
     * controlled fixtures (q239 pattern) instead. */
   def q243_simhash_health(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val base = docs.filter(col("source").isInCollection(
-      Seq("src0", "src1", "src2", "src3", "src4")))
     TempDirs.using("q243_shhealth_") { case Seq(root) =>
-      Dedup.simhashIndexBuild(
-        base.filter(col("source").isInCollection(Seq("src0", "src1",
-          "src2"))), root, "doc_id", "text")
-      Dedup.simhashIndexAppend(s, root,
-        base.filter(col("source").isInCollection(Seq("src3", "src4"))),
-        "doc_id", "text")
-      Dedup.simhashIndexHealth(s, root, hotBucketCap = 25)
+      val sh = SimHash(idCol = "doc_id", hotBucketCap = 25)
+      baseIndex(s, d, sh, root)
+      sh.health(s, root)
         .select("total_rows", "n_buckets", "max_bucket", "hot_buckets")
         .localCheckpoint()
     }
@@ -3329,31 +3273,25 @@ object SparkEntry {
     * All values exact constants, pinned by the oracle with the
     * planner's verdicts. */
   def q244_ivf_drift(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val corpus = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
-    val healthy = corpus
-    val drifted = (0 until 4).map(c => (100L + c, pt(4 + c)))
-      .toDF("id", "v")
+    val corpus = FX.axes(s, 4)
     TempDirs.using("q244_drift_") { case Seq(root) =>
-      Similarity.ivfBuild(corpus, root, nList = 4, kmeansMaxIter = 10)
-      val fleet = Similarity.ivfDriftProbe(s, root, healthy)
-        .withColumn("which", lit("healthy"))
-        .unionByName(Similarity.ivfDriftProbe(s, root, drifted)
-          .withColumn("which", lit("drifted")))
-      Similarity.indexMaintenancePlan(fleet, recallFloor = 0.0,
-        maxFilesPerListCeiling = Long.MaxValue,
-        driftRatioFloor = 0.5)
-        .select(col("which"),
-          round(col("base_mean_sim"), 6).as("base_mean_sim"),
-          round(col("batch_mean_sim"), 6).as("batch_mean_sim"),
-          round(col("drift_ratio"), 6).as("drift_ratio"),
-          col("action"))
-        .localCheckpoint()
+      Ivf(nList = 4, kmeansMaxIter = 10).build(s, corpus, root)
+      driftPlan(Similarity.ivfDriftProbe(s, root, corpus),
+        Similarity.ivfDriftProbe(s, root, FX.axes(s, 4, 100L, 4)))
     }
   }
+
+  /** The drift gates' plan over a healthy and a drifted probe row. */
+  private def driftPlan(healthy: DataFrame, drifted: DataFrame): DataFrame =
+    Similarity.indexMaintenancePlan(Fleet.healthUnion("which",
+      Seq("healthy" -> healthy, "drifted" -> drifted)), recallFloor = 0.0,
+      maxFilesPerListCeiling = Long.MaxValue, driftRatioFloor = 0.5)
+      .select(col("which"),
+        round(col("base_mean_sim"), 6).as("base_mean_sim"),
+        round(col("batch_mean_sim"), 6).as("batch_mean_sim"),
+        round(col("drift_ratio"), 6).as("drift_ratio"),
+        col("action"))
+      .localCheckpoint()
 
   /** Centroid+codebook DRIFT probe of a persisted IVF-PQ index
     * ([[operators.Similarity.ivfPqDriftProbe]] — q244's compressed
@@ -3366,29 +3304,12 @@ object SparkEntry {
     * exactly 1.0, and the drifted batch (dims 4–7, orthogonal to every
     * centroid) pins ratio 0.0 → `rebuild`. */
   def q248_ivfpq_drift(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val corpus = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
-    val drifted = (0 until 4).map(c => (100L + c, pt(4 + c)))
-      .toDF("id", "v")
+    val corpus = FX.axes(s, 4)
     TempDirs.using("q248_pqdrift_") { case Seq(root) =>
-      Similarity.ivfPqBuild(corpus, root, nList = 4, m = 4, nCodes = 4,
-        kmeansMaxIter = 10)
-      val fleet = Similarity.ivfPqDriftProbe(s, root, corpus)
-        .withColumn("which", lit("healthy"))
-        .unionByName(Similarity.ivfPqDriftProbe(s, root, drifted)
-          .withColumn("which", lit("drifted")))
-      Similarity.indexMaintenancePlan(fleet, recallFloor = 0.0,
-        maxFilesPerListCeiling = Long.MaxValue,
-        driftRatioFloor = 0.5)
-        .select(col("which"),
-          round(col("base_mean_sim"), 6).as("base_mean_sim"),
-          round(col("batch_mean_sim"), 6).as("batch_mean_sim"),
-          round(col("drift_ratio"), 6).as("drift_ratio"),
-          col("action"))
-        .localCheckpoint()
+      IvfPq(nList = 4, m = 4, nCodes = 4, kmeansMaxIter = 10)
+        .build(s, corpus, root)
+      driftPlan(Similarity.ivfPqDriftProbe(s, root, corpus),
+        Similarity.ivfPqDriftProbe(s, root, FX.axes(s, 4, 100L, 4)))
     }
   }
 
@@ -3412,19 +3333,10 @@ object SparkEntry {
     * conjunction — the DuckDB mirror replays all four stages from the
     * shared shingle/token CTEs. */
   def q249_daily_ingest(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val bench = docs.filter(col("source") === "src0")
-    val baseSrc = Seq("src1", "src2", "src3", "src4")
-    val base = docs.filter(col("source").isInCollection(baseSrc))
-    val batch = docs.filter(
-      !col("source").isInCollection("src0" +: baseSrc))
+    val (bench, base, batch) = ingestSplit(s, d)
     TempDirs.using("q249_mh_", "q249_dc_") { case Seq(mhDir, dcDir) =>
-      // two independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text"),
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+      Fleet.build(s, Seq((MinHash("doc_id"), base, mhDir),
+        (Decontam(), bench, dcDir)))
       val exactFlag = Dedup.incrementalExact(batch, base, "doc_id",
         "text")
       val nearIds = Dedup.minhashIndexProbe(s, mhDir, batch, base,
@@ -3461,17 +3373,14 @@ object SparkEntry {
     * src1–2, appended src3–4, probed by src5+. */
   def q250_exact_index(s: SparkSession, d: String): DataFrame = {
     val docs = T.documents(s, d)
-    val baseSrc = Seq("src1", "src2", "src3", "src4")
+    val ex = Exact("doc_id")
     TempDirs.using("q250_exact_") { case Seq(root) =>
-      Dedup.exactIndexBuild(
-        docs.filter(col("source").isInCollection(Seq("src1", "src2"))),
-        root, "doc_id", "text")
-      Dedup.exactIndexAppend(s, root,
-        docs.filter(col("source").isInCollection(Seq("src3", "src4"))),
-        "doc_id", "text")
+      ex.build(s,
+        docs.filter(col("source").isInCollection(Seq("src1", "src2"))), root)
+      ex.append(s, root,
+        docs.filter(col("source").isInCollection(Seq("src3", "src4"))))
       Dedup.exactIndexProbe(s, root,
-        docs.filter(!col("source").isInCollection("src0" +: baseSrc)),
-        "doc_id", "text")
+        docs.filter(!col("source").isInCollection(BaseSrc)), "doc_id", "text")
         .localCheckpoint()
     }
   }
@@ -3489,22 +3398,12 @@ object SparkEntry {
     * sink CONVERGES to the one-shot batch result whatever the trigger
     * cadence — the DuckDB mirror is that batch result's SQL. */
   def q251_streaming_admission(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val bench = docs.filter(col("source") === "src0")
-    val baseSrc = Seq("src1", "src2", "src3", "src4")
-    val base = docs.filter(col("source").isInCollection(baseSrc))
-    val batch = docs.filter(
-      !col("source").isInCollection("src0" +: baseSrc))
+    val (bench, base, batch) = ingestSplit(s, d)
     TempDirs.using("q251_ex_", "q251_mh_", "q251_dc_", "q251_stage_",
         "q251_out_", "q251_ckpt_") {
       case Seq(exDir, mhDir, dcDir, stageDir, outDir, ckptDir) =>
-      // four independent destinations — build concurrently (q254's
-      // inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "doc_id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text"),
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3),
+      // four independent destinations — build concurrently
+      admissionIndexes(s, "doc_id", base, bench, exDir, mhDir, dcDir,
         () => batch.select(col("doc_id"), col("text")).repartition(6)
           .write.parquet(stageDir))
       val stream = s.readStream
@@ -3531,21 +3430,10 @@ object SparkEntry {
     * independent flags (a doc can fail several stages), `n_accepted`
     * is the conjunction. */
   def q252_admission_funnel(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val bench = docs.filter(col("source") === "src0")
-    val baseSrc = Seq("src1", "src2", "src3", "src4")
-    val base = docs.filter(col("source").isInCollection(baseSrc))
-    val batch = docs.filter(
-      !col("source").isInCollection("src0" +: baseSrc))
+    val (bench, base, batch) = ingestSplit(s, d)
     TempDirs.using("q252_ex_", "q252_mh_", "q252_dc_") {
       case Seq(exDir, mhDir, dcDir) =>
-      // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "doc_id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text"),
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+      admissionIndexes(s, "doc_id", base, bench, exDir, mhDir, dcDir)
       val verdicts = operators.CorpusPipeline.admitBatch(s, batch,
         exDir, mhDir, dcDir, base, "doc_id", "text")
       batch.select(col("doc_id"), col("source"))
@@ -3575,52 +3463,27 @@ object SparkEntry {
     * states. */
   def q253_fleet_apply(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
     import s.implicits._
-    val boiler = "all work and no play makes jack a dull boy"
-    val hotDocs = (0L until 8L).map(i => (i, boiler)).toDF("id", "text")
+    val hotDocs = (0L until 8L).map(i => (i, FX.boiler)).toDF("id", "text")
       .repartition(1)
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow")
-    val fragDocs = texts.toDF("id", "text").repartition(1)
+    val fragDocs = FX.docs(s, FX.pangrams.take(4))
     def vv(c: Double) = Seq(c, c + 0.001)
     val semVecs = Seq((0L, vv(1.0)), (1L, vv(1.0)), (2L, vv(1.0)),
       (3L, vv(-5.0))).toDF("id", "vec")
+    val (mh, sh, sem, ex) = (MinHash(hotBucketCap = 5), SimHash(),
+      SemDeDup(k = 2, hotClusterCap = 2), Exact())
     TempDirs.using("q253_mh_", "q253_sh_", "q253_sem_", "q253_ex_") {
       case Seq(mhDir, shDir, semDir, exDir) =>
       // four independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale; intra-family append order kept)
+      // (intra-family append order kept)
       inParallel(
-        () => Dedup.minhashIndexBuild(hotDocs, mhDir, "id", "text"),
-        () => {
-          Dedup.simhashIndexBuild(fragDocs.filter(col("id") < 2), shDir,
-            "id", "text")
-          (2L until 4L).foreach(i => Dedup.simhashIndexAppend(s, shDir,
-            fragDocs.filter(col("id") === i), "id", "text"))
-        },
-        () => {
-          val (labels, centroids) = operators.Clustering
-            .kmeansWithCentroids(semVecs, "id", "vec", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "id", centroids)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => {
-          Dedup.exactIndexBuild(fragDocs.filter(col("id") === 0L),
-            exDir, "id", "text")
-          (1L until 4L).foreach(i => Dedup.exactIndexAppend(s, exDir,
-            fragDocs.filter(col("id") === i), "id", "text"))
-        })
+        () => mh.build(s, hotDocs, mhDir),
+        () => sh.buildFragmented(s, fragDocs, shDir, 2L, 4L),
+        () => sem.build(s, semVecs, semDir),
+        () => ex.buildFragmented(s, fragDocs, exDir, 1L, 4L))
       def plan() = Similarity.indexMaintenancePlan(
-        Dedup.minhashIndexHealth(s, mhDir, hotBucketCap = 5)
-          .unionByName(Dedup.simhashIndexHealth(s, shDir),
-            allowMissingColumns = true)
-          .unionByName(operators.Clustering.semDedupStateHealth(s,
-            semDir, hotClusterCap = 2), allowMissingColumns = true)
-          .unionByName(Dedup.exactIndexHealth(s, exDir),
-            allowMissingColumns = true),
+        Fleet.healthUnion("family", Seq(mh -> mhDir, sh -> shDir,
+          sem -> semDir, ex -> exDir).map { case (f, dir) =>
+            f.name -> f.health(s, dir) }),
         recallFloor = 0.9, maxFilesPerListCeiling = 10,
         maxFragmentsCeiling = 2, hotClustersCeiling = 0L)
       val report = Similarity.fleetMaintenanceApply(s, plan(),
@@ -3650,119 +3513,64 @@ object SparkEntry {
   def q254_index_delete(s: SparkSession, d: String): DataFrame =
     fixtureTuned(s) {
     import s.implicits._
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow")
-    val docs = texts.toDF("id", "text").repartition(1)
-    val doomed = docs.filter(col("id") === 1L)
+    val docs = FX.docs(s, FX.pangrams.take(4))
     // probe batch: fresh ids carrying the EXACT text of docs 0 and 1 —
     // both families must report them as duplicates until 1 is erased
-    val probeDocs = Seq(100L -> texts(0)._2, 101L -> texts(1)._2)
+    val probeDocs = Seq(100L -> FX.pangrams(0), 101L -> FX.pangrams(1))
       .toDF("id", "text").repartition(1)
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val corpus = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
+    val corpus = FX.axes(s, 4)
     // query sits between axis points 1 and 2: nearest is 2 (cos .8);
     // after deleting 2 the nearest LIVE point is 1 (cos .6)
     val qv = { val a = new Array[Float](8); a(1) = 0.6f; a(2) = 0.8f; a }
-    val queries = Seq((0L, qv)).toDF("qid", "qv")
-    TempDirs.using("q254_ex_", "q254_mh_", "q254_sh_", "q254_ivf_") {
-      case Seq(exDir, mhDir, shDir, ivfDir) =>
+    val planted = Map[Kind, Planted](
+      Texts -> Planted(probeDocs, 1L, docs),
+      Vectors -> Planted(Seq((0L, qv)).toDF("qid", "qv"), 2L, corpus))
+    val fams = Seq(Exact(), MinHash(), SimHash(),
+      Ivf(nList = 4, kmeansMaxIter = 2, nProbe = 4))
+    TempDirs.using("q254_ex_", "q254_mh_", "q254_sh_", "q254_ivf_") { dirs =>
+      val fleet = fams.zip(dirs)
       // the four families are independent writer-lock domains — their
-      // builds (and below, deletes/compactions) run CONCURRENTLY, the
-      // shape a fleet maintenance loop actually has; at fixture scale
-      // each is scheduler-latency-bound so the overlap is ~4x
-      inParallel(
-        () => Dedup.exactIndexBuild(docs, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(docs, mhDir, "id", "text"),
-        () => Dedup.simhashIndexBuild(docs, shDir, "id", "text"),
-        () => Similarity.ivfBuild(corpus, ivfDir, nList = 4,
-          kmeansMaxIter = 2))
-      // the four probe hit-counts collapse into ONE collect (tagged
-      // one-row aggregates unioned) and the four health rows into ONE
-      // plan collect — this gate runs 3 phases × 4 families, and at
-      // fixture scale the cost is Spark ACTION count, not data. The
-      // two eagerly-materializing probes (minhash/simhash checkpoint
-      // internally) are constructed concurrently for the same reason.
-      def hits(): Map[String, Long] = {
-        def tag(name: String, df: org.apache.spark.sql.DataFrame) =
-          df.agg(count(lit(1)).as("n"))
-            .select(lit(name).as("family"), col("n"))
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val mhF = Future(Dedup.minhashIndexProbe(s, mhDir, probeDocs,
-          docs, "id", "text", threshold = 0.5))
-        val shF = Future(Dedup.simhashIndexProbe(s, shDir, probeDocs,
-          "id", "text", maxHamming = 0))
-        val ivfF = Future(Similarity.ivfQuery(s, ivfDir, queries,
-          k = 1, nProbe = 4))
-        Seq(
-          tag("exact", Dedup.exactIndexProbe(s, exDir, probeDocs, "id",
-            "text").filter(col("is_dup"))),
-          tag("minhash", Await.result(mhF, 10.minutes)
-            .filter(col("base_id") === 1L)),
-          tag("simhash", Await.result(shF, 10.minutes)
-            .filter(col("base_id") === 1L)),
-          tag("ivf", Await.result(ivfF, 10.minutes)
-            .filter(col("id") === 2L)))
-          .reduce(_ unionByName _)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-      def state(): Map[String, (Long, String)] = {
-        val health = Dedup.exactIndexHealth(s, exDir)
-          .withColumn("family", lit("exact"))
-          .unionByName(Dedup.minhashIndexHealth(s, mhDir)
-            .withColumn("family", lit("minhash")),
-            allowMissingColumns = true)
-          .unionByName(Dedup.simhashIndexHealth(s, shDir)
-            .withColumn("family", lit("simhash")),
-            allowMissingColumns = true)
-          // light health (no recall probe): this gate verdicts on
-          // tombstone debt alone, and its action column only consults
-          // deleted_pending under tombstoneDebtCeiling=0 — paying a
-          // brute-force recall pass 3× per run bought nothing (the
-          // r14 judge's q254-cost finding)
-          .unionByName(Similarity.ivfIndexHealthLight(s, ivfDir)
-            .withColumn("family", lit("ivf")),
-            allowMissingColumns = true)
-        Similarity.indexMaintenancePlan(health, recallFloor = 0.0,
-          maxFilesPerListCeiling = Long.MaxValue,
+      // builds (and below, probes/deletes/compactions) run
+      // CONCURRENTLY, the shape a fleet maintenance loop actually has;
+      // at fixture scale each is scheduler-latency-bound so the overlap
+      // is ~4x
+      Fleet.build(s, fleet.map { case (f, dir) =>
+        (f, if (f.kind == Vectors) corpus else docs, dir) })
+      // the four probe hit-counts collapse into ONE collect and the
+      // four health rows into ONE plan collect — this gate runs 3
+      // phases × 4 families, and at fixture scale the cost is Spark
+      // ACTION count, not data
+      def hits(): Map[String, Long] = Fleet.hitCounts(inParallel(
+        fleet.map { case (f, dir) =>
+          () => f.name -> f.hits(s, dir, planted(f.kind)) }: _*))
+      // light health for IVF (no recall probe): this gate verdicts on
+      // tombstone debt alone, and its action column only consults
+      // deleted_pending under tombstoneDebtCeiling=0
+      def state(): Map[String, (Long, String)] =
+        Similarity.indexMaintenancePlan(Fleet.healthUnion("family",
+          fleet.map { case (f, dir) => f.name -> f.health(s, dir) }),
+          recallFloor = 0.0, maxFilesPerListCeiling = Long.MaxValue,
           tombstoneDebtCeiling = 0L)
           .select("family", "deleted_pending", "action")
           .collect()
           .map(r => r.getString(0) -> ((r.getLong(1), r.getString(2))))
           .toMap
-      }
       def phaseRows(phase: String): Seq[(String, String, Long, Long,
         String)] = {
         // hits and state are both read-only over the same immutable
         // manifest snapshots — overlap their collects too
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration._
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val hhF = Future(hits()); val stF = Future(state())
-        val hh = Await.result(hhF, 10.minutes)
-        val st = Await.result(stF, 10.minutes)
+        val (hh, st) = Fleet.both(hits(), state())
         hh.keys.toSeq.sorted.map(f =>
           (f, phase, hh(f), st(f)._1, st(f)._2))
       }
       val before = phaseRows("1_before")
-      inParallel(
-        () => Dedup.exactIndexDelete(s, exDir, doomed, "id", "text"),
-        () => Dedup.minhashIndexDelete(s, mhDir, doomed.select("id")),
-        () => Dedup.simhashIndexDelete(s, shDir, doomed.select("id")),
-        () => Similarity.ivfDelete(s, ivfDir,
-          corpus.filter(col("id") === 2L).select("id")))
+      val doomed = Map[Kind, DataFrame](
+        Texts -> docs.filter(col("id") === 1L),
+        Vectors -> corpus.filter(col("id") === 2L))
+      inParallel(fleet.map { case (f, dir) =>
+        () => f.delete(s, dir, doomed(f.kind)) }: _*)
       val deleted = phaseRows("2_deleted")
-      inParallel(
-        () => Dedup.exactIndexCompact(s, exDir),
-        () => Dedup.minhashIndexCompact(s, mhDir),
-        () => Dedup.simhashIndexCompact(s, shDir),
-        () => Similarity.ivfCompact(s, ivfDir))
+      inParallel(fleet.map { case (f, dir) => () => f.compact(s, dir) }: _*)
       val compacted = phaseRows("3_compacted")
       (before ++ deleted ++ compacted)
         .toDF("family", "phase", "n_hits", "deleted_pending", "action")
@@ -3785,20 +3593,17 @@ object SparkEntry {
     * gap count, the gap itself, and the post-repair probe hit. */
   def q255_ingest_reconcile(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
     import s.implicits._
-    val base = Seq(0L -> "the quick brown fox jumps over the lazy dog")
-      .toDF("id", "text").repartition(1)
-    val b1 = Seq(10L -> "pack my box with five dozen liquor jugs")
-      .toDF("id", "text").repartition(1)
-    val b2 = Seq(20L -> "how vexingly quick daft zebras jump")
-      .toDF("id", "text").repartition(1)
+    def one(id: Long, text: String) =
+      Seq(id -> text).toDF("id", "text").repartition(1)
+    val base = one(0L, FX.pangrams(0))
+    val b1 = one(10L, FX.pangrams(1))
+    val b2 = one(20L, FX.pangrams(2))
+    val (ex, mh, sh) = (Exact(), MinHash(), SimHash())
     TempDirs.using("q255_ex_", "q255_mh_", "q255_sh_") {
       case Seq(exDir, mhDir, shDir) =>
       // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "id", "text"),
-        () => Dedup.simhashIndexBuild(base, shDir, "id", "text"))
+      Fleet.build(s, Seq((ex, base, exDir), (mh, base, mhDir),
+        (sh, base, shDir)))
       val fams = Map("exact" -> exDir, "minhash" -> mhDir,
         "simhash" -> shDir)
       def gapState(): (Long, String) = {
@@ -3808,20 +3613,15 @@ object SparkEntry {
           .map(r => s"${r.getString(0)}:${r.getString(1)}").sorted
         (rows.length.toLong, rows.mkString(","))
       }
-      def shProbeHits(): Long =
-        Dedup.simhashIndexProbe(s, shDir,
-          Seq(30L -> "how vexingly quick daft zebras jump")
-            .toDF("id", "text"), "id", "text", maxHamming = 0)
-          .filter(col("base_id") === 20L).count()
+      def shProbeHits(): Long = sh.hits(s, shDir,
+        Planted(Seq(30L -> FX.pangrams(2)).toDF("id", "text"), 20L, b2))
+        .count()
       // b1 admits everywhere; b2's admission crashes before SimHash
       Seq(("b1", b1, true), ("b2", b2, false)).foreach {
         case (bid, batch, full) =>
-          Dedup.exactIndexAppend(s, exDir, batch, "id", "text",
-            batchId = Some(bid))
-          Dedup.minhashIndexAppend(s, mhDir, batch, "id", "text",
-            batchId = Some(bid))
-          if (full) Dedup.simhashIndexAppend(s, shDir, batch, "id",
-            "text", batchId = Some(bid))
+          ex.append(s, exDir, batch, Some(bid))
+          mh.append(s, mhDir, batch, Some(bid))
+          if (full) sh.append(s, shDir, batch, Some(bid))
       }
       val (nGap1, gap1) = gapState()
       val hits1 = shProbeHits()
@@ -3881,13 +3681,7 @@ object SparkEntry {
         (26L, "s2", nd("iota"))))
     TempDirs.using("q256_ex_", "q256_mh_", "q256_dc_", "q256_hist_") {
       case Seq(exDir, mhDir, dcDir, histDir) =>
-      // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "id", "text"),
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+      admissionIndexes(s, "id", base, bench, exDir, mhDir, dcDir)
       days.foreach { case (day, rows) =>
         val batch = rows.toDF("id", "source", "text")
         val verdicts = operators.CorpusPipeline.admitBatch(s, batch,
@@ -3920,23 +3714,12 @@ object SparkEntry {
     * re-runs day-2 against the extended state — every day-2 verdict
     * row is hash-gated. */
   def q257_ingest_append_loop(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val bench = docs.filter(col("source") === "src0")
-    val baseSrc = Seq("src1", "src2", "src3", "src4")
-    val base = docs.filter(col("source").isInCollection(baseSrc))
-    val batchAll = docs.filter(
-      !col("source").isInCollection("src0" +: baseSrc))
+    val (bench, base, batchAll) = ingestSplit(s, d)
     val day1 = batchAll.filter(col("doc_id") % 2 === 0)
     val day2 = batchAll.filter(col("doc_id") % 2 === 1)
     TempDirs.using("q257_ex_", "q257_mh_", "q257_dc_") {
       case Seq(exDir, mhDir, dcDir) =>
-      // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "doc_id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "doc_id", "text"),
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+      admissionIndexes(s, "doc_id", base, bench, exDir, mhDir, dcDir)
       val v1 = operators.CorpusPipeline.admitBatch(s, day1, exDir,
         mhDir, dcDir, base, "doc_id", "text")
       // MATERIALIZE the accepted set before mutating the indexes it
@@ -3947,10 +3730,8 @@ object SparkEntry {
           Seq("doc_id"), "left_semi")
         .localCheckpoint(true)
       inParallel(
-        () => Dedup.exactIndexAppend(s, exDir, acc1, "doc_id", "text",
-          batchId = Some("day1")),
-        () => Dedup.minhashIndexAppend(s, mhDir, acc1, "doc_id", "text",
-          batchId = Some("day1")))
+        () => Exact("doc_id").append(s, exDir, acc1, Some("day1")),
+        () => MinHash("doc_id").append(s, mhDir, acc1, Some("day1")))
       operators.CorpusPipeline.admitBatch(s, day2, exDir, mhDir, dcDir,
         base.select(col("doc_id"), col("text")).unionByName(acc1),
         "doc_id", "text")
@@ -3973,59 +3754,31 @@ object SparkEntry {
     * n_removed, hits_before, hits_after), all structural facts. */
   def q258_fleet_delete(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
     import s.implicits._
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow")
-    val v1 = texts.toDF("id", "text").repartition(1)
+    val v1 = FX.docs(s, FX.pangrams.take(4))
     // the refresh drops doc 1 (the takedown) and keeps the rest
     val v2 = v1.filter(col("id") =!= 1L)
-    val probeDocs = Seq(101L -> texts(1)._2).toDF("id", "text")
+    val probeDocs = Seq(101L -> FX.pangrams(1)).toDF("id", "text")
       .repartition(1)
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val vecs = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
+    val vecs = FX.axes(s, 4)
     // query nearest doc 1's vector; after the erasure the best LIVE
     // neighbor is doc 2's
     val qv = { val a = new Array[Float](8); a(1) = 0.8f; a(2) = 0.6f; a }
-    val queries = Seq((0L, qv)).toDF("qid", "qv")
+    val planted = Map[Kind, Planted](
+      Texts -> Planted(probeDocs, 1L, v1),
+      Vectors -> Planted(Seq((0L, qv)).toDF("qid", "qv"), 1L, vecs))
+    val fams = Seq(Exact(), MinHash(), SimHash(),
+      Ivf(nList = 4, kmeansMaxIter = 2, nProbe = 4), Decontam())
     TempDirs.using("q258_ex_", "q258_mh_", "q258_sh_", "q258_ivf_",
-        "q258_dc_") {
-      case Seq(exDir, mhDir, shDir, ivfDir, dcDir) =>
-      // five independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale; the decontam index holds doc 1's
-      // shingles too: the family the fleet delete must SKIP
-      // (shingle-keyed))
-      inParallel(
-        () => Dedup.exactIndexBuild(v1, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(v1, mhDir, "id", "text"),
-        () => Dedup.simhashIndexBuild(v1, shDir, "id", "text"),
-        () => Similarity.ivfBuild(vecs, ivfDir, nList = 4,
-          kmeansMaxIter = 2),
-        () => Decontamination.decontamIndexBuild(
-          v1.filter(col("id") === 1L), dcDir, "text", n = 3))
-      def hits(): Map[String, Long] = {
-        def tag(name: String, df: org.apache.spark.sql.DataFrame) =
-          df.agg(count(lit(1)).as("n"))
-            .select(lit(name).as("family"), col("n"))
-        Seq(
-          tag("exact", Dedup.exactIndexProbe(s, exDir, probeDocs, "id",
-            "text").filter(col("is_dup"))),
-          tag("minhash", Dedup.minhashIndexProbe(s, mhDir, probeDocs,
-            v1, "id", "text", threshold = 0.5)
-            .filter(col("base_id") === 1L)),
-          tag("simhash", Dedup.simhashIndexProbe(s, shDir, probeDocs,
-            "id", "text", maxHamming = 0)
-            .filter(col("base_id") === 1L)),
-          tag("ivf", Similarity.ivfQuery(s, ivfDir, queries, k = 1,
-            nProbe = 4).filter(col("id") === 1L)),
-          tag("decontam", Decontamination.decontamIndexReport(s, dcDir,
-            probeDocs, "id", "text").filter(col("is_contaminated"))))
-          .reduce(_ unionByName _)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
+        "q258_dc_") { dirs =>
+      val fleet = fams.zip(dirs)
+      // five independent writer-lock domains — build concurrently; the
+      // decontam index holds doc 1's shingles too: the family the fleet
+      // delete must SKIP (shingle-keyed)
+      Fleet.build(s, fleet.map { case (f, dir) => (f,
+        if (f.kind == Vectors) vecs
+        else if (f.docKeyed) v1 else v1.filter(col("id") === 1L), dir) })
+      def hits(): Map[String, Long] = Fleet.hitCounts(fleet.map {
+        case (f, dir) => f.name -> f.hits(s, dir, planted(f.kind)) })
       val before = hits()
       // detection: the refresh diff — its `removed` rows ARE the
       // fleet delete's input
@@ -4035,17 +3788,13 @@ object SparkEntry {
         .select(col("id"), col("text")).localCheckpoint(true)
       val nRemoved = removed.count()
       // application: one call erases the doc across the whole fleet
-      val report = Similarity.fleetDelete(s,
-        Seq(exDir, mhDir, shDir, ivfDir, dcDir), removed, "id",
+      val report = Similarity.fleetDelete(s, dirs, removed, "id",
         textCol = Some("text"), parallelism = 5)
-        .select("dir", "family", "status").collect()
-        .map(r => r.getString(0) -> ((r.getString(1), r.getString(2))))
-        .toMap
+        .select("dir", "status").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
       val after = hits()
-      val fams = Seq(exDir -> "exact", mhDir -> "minhash",
-        shDir -> "simhash", ivfDir -> "ivf", dcDir -> "decontam")
-      fams.map { case (dir, fam) =>
-        (fam, report(dir)._2, nRemoved, before(fam), after(fam))
+      fleet.map { case (f, dir) =>
+        (f.name, report(dir), nRemoved, before(f.name), after(f.name))
       }.sortBy(_._1)
         .toDF("family", "status", "n_removed", "hits_before",
           "hits_after")
@@ -4084,44 +3833,21 @@ object SparkEntry {
     // input the rebuild took — COMPUTES that expected residue and
     // reports complete=true with the residue explained, instead of
     // punting the judgment to the caller (the r15 undecidability gap)
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz with five dozen arrows")
-    val docs = texts.toDF("id", "text").repartition(1)
+    val docs = FX.docs(s, FX.pangrams.take(3) :+
+      "sphinx of black quartz with five dozen arrows")
     val doomed = docs.filter(col("id") === 1L).localCheckpoint(true)
     val remaining = docs.filter(col("id") =!= 1L)
-    def pt(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val vecs = (0 until 4).map(c => (c.toLong, pt(c))).toDF("id", "v")
-    val dvecs = (0 until 4).map(c =>
-      (c.toLong, pt(c).map(_.toDouble).toSeq)).toDF("id", "vec")
+    val rows = Map[Kind, DataFrame](Texts -> docs, Vectors -> FX.axes(s, 4),
+      Embeddings -> (0 until 4).map(c => (c.toLong, FX.axisD(c)))
+        .toDF("id", "vec"))
+    val fams = Seq(Exact(), MinHash(), SimHash(),
+      Ivf(nList = 2, kmeansMaxIter = 2),
+      IvfPq(nList = 2, m = 2, nCodes = 2), SemDeDup(k = 2), Decontam())
     TempDirs.using("q259_ex_", "q259_mh_", "q259_sh_", "q259_ivf_", "q259_pq_",
-        "q259_sem_", "q259_dc_") {
-      case Seq(exDir, mhDir, shDir, ivfDir, pqDir, semDir, dcDir) =>
-      // seven independent writer-lock domains build concurrently (the
-      // fleet-parallel shape; see q254)
-      inParallel(
-        () => Dedup.exactIndexBuild(docs, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(docs, mhDir, "id", "text"),
-        () => Dedup.simhashIndexBuild(docs, shDir, "id", "text"),
-        () => Similarity.ivfBuild(vecs, ivfDir, nList = 2,
-          kmeansMaxIter = 2),
-        () => Similarity.ivfPqBuild(vecs, pqDir, nList = 2, m = 2,
-          nCodes = 2),
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(dvecs, "id", "vec", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "id", cents)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => Decontamination.decontamIndexBuild(docs, dcDir, "text",
-          n = 3))
-      val fleet = Seq(exDir, mhDir, shDir, ivfDir, pqDir, semDir, dcDir)
+        "q259_sem_", "q259_dc_") { fleet =>
+      // seven independent writer-lock domains build concurrently
+      Fleet.build(s, fams.zip(fleet).map { case (f, dir) =>
+        (f, rows(f.kind), dir) })
       def audit(phase: String, status: Map[String, String])
         : Seq[(String, String, String, Long, Long, Long, Boolean)] =
         Similarity.fleetEraseAudit(s, fleet, doomed, "id",
@@ -4139,13 +3865,9 @@ object SparkEntry {
         .select("family", "status").collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
       val deleted = audit("2_deleted", statuses)
-      inParallel(
-        () => Dedup.exactIndexCompact(s, exDir),
-        () => Dedup.minhashIndexCompact(s, mhDir),
-        () => Dedup.simhashIndexCompact(s, shDir),
-        () => Similarity.ivfCompact(s, ivfDir),
-        () => Similarity.ivfPqCompact(s, pqDir),
-        () => operators.Clustering.semDedupStateCompact(s, semDir))
+      // each doc-keyed family folds its tombstones
+      inParallel(fams.zip(fleet).filter(_._1.docKeyed).map {
+        case (f, dir) => () => f.compact(s, dir) }: _*)
       val folded = audit("3_folded", statuses)
       (before ++ deleted ++ folded)
         .toDF("family", "phase", "delete_status", "keys_live",
@@ -4171,53 +3893,13 @@ object SparkEntry {
     * are excluded by construction). */
   def q260_fleet_admission(s: SparkSession, d: String): DataFrame =
     fixtureTuned(s) {
-    import s.implicits._
-    val b1 = "alpha beta gamma delta epsilon zeta eta theta"
-    val base = Seq(
-      1L -> b1,
-      2L -> "one red two green three blue four yellow",
-      3L -> "north wind and bright sun argued loudly today",
-      4L -> "copper iron silver gold tin lead zinc nickel")
-      .toDF("id", "text").repartition(1)
-    val bench = Seq(100L ->
-      "secret evaluation question regarding ancient sphinxes forever")
-      .toDF("id", "text").repartition(1)
-    def axis(dim: Int): Seq[Double] = {
-      val a = new Array[Double](8); a(dim) = 1.0; a.toSeq
-    }
-    val baseVecs = (1 to 4).map(i => (i.toLong, axis(i - 1)))
-      .toDF("id", "vec")
-    val nearVec = { // 0.994 cosine against base id 2's axis-1 vector
-      val a = new Array[Double](8); a(0) = 0.1; a(1) = 0.9; a.toSeq
-    }
-    val batch = Seq(
-      (11L, "my own five clean unique words here", axis(4)),
-      (12L, "theta eta zeta epsilon delta gamma beta alpha", axis(5)),
-      (13L, "completely novel sentence about nothing shared anywhere",
-        nearVec),
-      (14L, b1, axis(6)),
-      (15L, "please answer this secret evaluation question regarding " +
-        "ancient sphinxes", axis(7)))
-      .toDF("id", "text", "vec").repartition(1)
+    val (base, bench, baseVecs, batch) = FX.admission(s)
     TempDirs.using("q260_ex_", "q260_mh_", "q260_sh_", "q260_sem_",
         "q260_dc_") {
       case Seq(exDir, mhDir, shDir, semDir, dcDir) =>
       // five independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "id", "text"),
-        () => Dedup.simhashIndexBuild(base, shDir, "id", "text"),
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(baseVecs, "id", "vec", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "id", cents)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3))
+      admissionFleet(s, base, bench, baseVecs, exDir, mhDir, shDir, semDir,
+        dcDir)
       operators.CorpusPipeline.admitBatch(s, batch, exDir, mhDir,
         dcDir, base, "id", "text", minTokens = 5, threshold = 0.5,
         simhashDir = Some(shDir), maxHamming = 0,
@@ -4226,6 +3908,17 @@ object SparkEntry {
         .localCheckpoint()
     }
     }
+
+  /** The five indexes of the seven-family admission fixture
+    * ([[FleetFixture.admission]]), built concurrently with `more`. */
+  private def admissionFleet(s: SparkSession, base: DataFrame,
+                             bench: DataFrame, baseVecs: DataFrame,
+                             exDir: String, mhDir: String, shDir: String,
+                             semDir: String, dcDir: String,
+                             more: (() => Unit)*): Unit =
+    Fleet.build(s, Seq((Exact(), base, exDir), (MinHash(), base, mhDir),
+      (SimHash(), base, shDir), (SemDeDup(k = 2), baseVecs, semDir),
+      (Decontam(), bench, dcDir)), more: _*)
 
   /** The ONE-CALL fleet maintenance loop
     * ([[operators.Similarity.fleetHealth]] →
@@ -4246,66 +3939,33 @@ object SparkEntry {
   def q261_fleet_loop(s: SparkSession, d: String): DataFrame =
     fixtureTuned(s) {
     import s.implicits._
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump")
-    val docs = texts.toDF("id", "text").repartition(1)
+    val docs = FX.docs(s, FX.pangrams.take(3))
     val bench = Seq(100L ->
       "secret evaluation question regarding ancient sphinxes")
       .toDF("id", "text").repartition(1)
-    def pt(dim: Int): Seq[Double] = {
-      val a = new Array[Double](4); a(dim) = 1.0; a.toSeq
-    }
-    val vecs = (0 until 4).map(c => (c.toLong, pt(c % 2)))
+    val vecs = (0 until 4).map(c => (c.toLong, FX.axisD(c % 2, 4)))
       .toDF("id", "vec")
     TempDirs.using("q261_ex_", "q261_sh_", "q261_sem_", "q261_dc_",
         "q261_fn_") {
       case Seq(exDir, shDir, semDir, dcDir, fnDir) =>
       inParallel(
-        () => Dedup.exactIndexBuild(docs, exDir, "id", "text"),
-        () => {
-          Dedup.simhashIndexBuild(docs.filter(col("id") === 0L),
-            shDir, "id", "text")
-          (1L to 2L).foreach(i => Dedup.simhashIndexAppend(s, shDir,
-            docs.filter(col("id") === i), "id", "text"))
-        },
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(vecs, "id", "vec", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir,
-            labels.coalesce(1), "id", cents)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3),
+        () => Exact().build(s, docs, exDir),
+        () => SimHash().buildFragmented(s, docs, shDir, 1L, 3L),
+        () => SemDeDup(k = 2, coalesceLabels = true).build(s, vecs, semDir),
+        () => Decontam().build(s, bench, dcDir),
         () => Seq("2024-01-01", "2024-01-02", "2024-01-03")
           .foreach(day => operators.CorpusPipeline
             .admissionFunnelAppend(s, fnDir, day,
               Seq(("s1", 4L, 0L)).toDF("source", "n_docs",
                 "n_neardup"))))
-      Dedup.exactIndexDelete(s, exDir,
-        docs.filter(col("id") === 1L), "id", "text")
+      Exact().delete(s, exDir, docs.filter(col("id") === 1L))
       val fleet = Seq(exDir, shDir, semDir, dcDir, fnDir)
       def plan() = Similarity.indexMaintenancePlan(
         Similarity.fleetHealth(s, fleet), recallFloor = 0.0,
         maxFilesPerListCeiling = Long.MaxValue,
         maxFragmentsCeiling = 2, tombstoneDebtCeiling = 0L)
-      val p1 = plan().select(col("dir"), col("family"),
-        col("action")).localCheckpoint(true)
-      val report = Similarity.fleetMaintenanceApply(s, p1)
-        .select(col("dir"), col("status")).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      val after = plan().select(col("dir"),
-        col("action").as("action_after"))
-      p1.join(after, Seq("dir"))
-        .select(col("family"), col("action"), col("dir"),
-          col("action_after"))
-        .collect().map(r => (r.getString(0), r.getString(1),
-          report(r.getString(2)), r.getString(3))).toSeq.sortBy(_._1)
-        .toDF("family", "action", "status", "action_after")
-        .localCheckpoint()
+      Fleet.applyAndReplan(s, plan().select(col("dir"), col("family"),
+        col("action")), plan())(Similarity.fleetMaintenanceApply(s, _))
     }
     }
 
@@ -4327,57 +3987,17 @@ object SparkEntry {
     * cadences. */
   def q262_streaming_unified_admission(s: SparkSession, d: String)
     : DataFrame = fixtureTuned(s) {
-    import s.implicits._
-    val b1 = "alpha beta gamma delta epsilon zeta eta theta"
-    val base = Seq(
-      1L -> b1,
-      2L -> "one red two green three blue four yellow",
-      3L -> "north wind and bright sun argued loudly today",
-      4L -> "copper iron silver gold tin lead zinc nickel")
-      .toDF("id", "text").repartition(1)
-    val bench = Seq(100L ->
-      "secret evaluation question regarding ancient sphinxes forever")
-      .toDF("id", "text").repartition(1)
-    def axis(dim: Int): Seq[Double] = {
-      val a = new Array[Double](8); a(dim) = 1.0; a.toSeq
-    }
-    val baseVecs = (1 to 4).map(i => (i.toLong, axis(i - 1)))
-      .toDF("id", "vec")
-    val nearVec = {
-      val a = new Array[Double](8); a(0) = 0.1; a(1) = 0.9; a.toSeq
-    }
-    val batch = Seq(
-      (11L, "my own five clean unique words here", axis(4)),
-      (12L, "theta eta zeta epsilon delta gamma beta alpha", axis(5)),
-      (13L, "completely novel sentence about nothing shared anywhere",
-        nearVec),
-      (14L, b1, axis(6)),
-      (15L, "please answer this secret evaluation question regarding " +
-        "ancient sphinxes", axis(7)))
-      .toDF("id", "text", "vec").repartition(1)
+    val (base, bench, baseVecs, batch) = FX.admission(s)
     TempDirs.using("q262_ex_", "q262_mh_", "q262_sh_", "q262_sem_", "q262_dc_",
         "q262_stage_", "q262_out1_", "q262_ck1_", "q262_out2_", "q262_ck2_") {
       case Seq(exDir, mhDir, shDir, semDir, dcDir, stageDir, out1, ck1, out2,
           ck2) =>
       // six independent destinations (five writer-lock domains + the
-      // staging dir) — build concurrently (q254's inParallel rationale;
-      // q209/q251's file-source convention for the staged batch: a
-      // distributed multi-file parquet write, never the driver)
-      inParallel(
-        () => Dedup.exactIndexBuild(base, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(base, mhDir, "id", "text"),
-        () => Dedup.simhashIndexBuild(base, shDir, "id", "text"),
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(baseVecs, "id", "vec", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "id", cents)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => Decontamination.decontamIndexBuild(bench, dcDir, "text",
-          n = 3),
-        () => batch.repartition(3).write.parquet(stageDir))
+      // staging dir) — build concurrently (q209/q251's file-source
+      // convention for the staged batch: a distributed multi-file
+      // parquet write, never the driver)
+      admissionFleet(s, base, bench, baseVecs, exDir, mhDir, shDir, semDir,
+        dcDir, () => batch.repartition(3).write.parquet(stageDir))
       def start(filesPerTrigger: Int, outDir: String, ckptDir: String)
         : org.apache.spark.sql.streaming.StreamingQuery = {
         val stream = s.readStream
@@ -4430,37 +4050,22 @@ object SparkEntry {
   def q263_fleet_runbook(s: SparkSession, d: String): DataFrame =
     fixtureTuned(s) {
     import s.implicits._
-    val pts: Seq[Seq[Double]] = Seq(
-      Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0),
-      Seq(0.0, 0.0, 1.0, 0.0), Seq(0.9, 0.1, 0.0, 0.0),
-      Seq(0.1, 0.9, 0.0, 0.0), Seq(0.0, 0.1, 0.9, 0.0))
-    val dvecs = pts.zipWithIndex.map { case (p, i) => (i.toLong, p) }
+    val dvecs = FX.groups3.zipWithIndex.map { case (p, i) => (i.toLong, p) }
       .toDF("vid", "embedding")
-    val fvecs = pts.zipWithIndex.map { case (p, i) =>
+    val fvecs = FX.groups3.zipWithIndex.map { case (p, i) =>
       (i.toLong, p.map(_.toFloat).toArray) }.toDF("id", "v")
     TempDirs.using("q263_sem_", "q263_pq_", "q263_store_", "q263_rb_") {
       case Seq(semDir, pqDir, storeDir, rbDir) =>
-      // four independent destinations — build concurrently (q254's
-      // inParallel rationale). SemDeDup state frozen at k=1: every
-      // vector in one cluster — the quantizer has "fallen behind" by
-      // construction; the IVF-PQ gets two append fragments on top of
-      // the fresh build; ONE persisted embedding store serves both
-      // runbook rows (foreign column names exercise the rename path)
+      // four independent destinations — build concurrently. SemDeDup
+      // state frozen at k=1: every vector in one cluster — the
+      // quantizer has "fallen behind" by construction; the IVF-PQ gets
+      // two append fragments on top of the fresh build; ONE persisted
+      // embedding store serves both runbook rows (foreign column names
+      // exercise the rename path)
       inParallel(
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(dvecs, "vid", "embedding", k = 1,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "vid", cents)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => {
-          Similarity.ivfPqBuild(fvecs.filter(col("id") < 4), pqDir,
-            nList = 2, m = 2, nCodes = 2)
-          (4L to 5L).foreach(i => Similarity.ivfPqAppend(s, pqDir,
-            fvecs.filter(col("id") === i)))
-        },
+        () => GroupSem.build(s, dvecs, semDir),
+        () => IvfPq(nList = 2, m = 2, nCodes = 2)
+          .buildFragmented(s, fvecs, pqDir, 4L, 6L),
         () => dvecs.repartition(1).write.parquet(storeDir),
         () => operators.FleetRunbook.save(s, rbDir, Seq(
           (semDir, storeDir, "vid", "embedding", Some(2L)),
@@ -4468,31 +4073,18 @@ object SparkEntry {
             Option.empty[Long]))
           .toDF("dir", "side_input_path", "id_col", "payload_col",
             "target_cluster_size")))
-      val fleet = Seq(semDir, pqDir)
       def plan() = Similarity.indexMaintenancePlan(
-        Similarity.fleetHealth(s, fleet, hotClusterCap = 2),
+        Similarity.fleetHealth(s, Seq(semDir, pqDir), hotClusterCap = 2),
         recallFloor = 0.0, maxFilesPerListCeiling = 1,
         hotClustersCeiling = 0)
       // the operator escalates the fragment-debt compact to the refit
       // the decayed codebooks actually need (q264 automates this call
       // through the deep recall probe)
-      val p1 = plan().select(col("dir"), col("family"),
+      Fleet.applyAndReplan(s, plan().select(col("dir"), col("family"),
         when(col("family") === "ivf_pq" && col("action") === "compact",
-          lit("rebuild")).otherwise(col("action")).as("action"))
-        .localCheckpoint(true)
-      val report = Similarity.fleetMaintenanceApply(s, p1,
-        runbookDir = Some(rbDir), parallelism = 2)
-        .select(col("dir"), col("status")).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      val after = plan().select(col("dir"),
-        col("action").as("action_after"))
-      p1.join(after, Seq("dir"))
-        .select(col("family"), col("action"), col("dir"),
-          col("action_after"))
-        .collect().map(r => (r.getString(0), r.getString(1),
-          report(r.getString(2)), r.getString(3))).toSeq.sortBy(_._1)
-        .toDF("family", "action", "status", "action_after")
-        .localCheckpoint()
+          lit("rebuild")).otherwise(col("action")).as("action")), plan())(
+        Similarity.fleetMaintenanceApply(s, _, runbookDir = Some(rbDir),
+          parallelism = 2))
     }
     }
 
@@ -4519,64 +4111,64 @@ object SparkEntry {
   def q264_fleet_deep_probe(s: SparkSession, d: String): DataFrame =
     fixtureTuned(s) {
     import s.implicits._
-    def ang(deg: Double): Array[Float] = Array(
-      math.cos(math.toRadians(deg)).toFloat,
-      math.sin(math.toRadians(deg)).toFloat)
-    val bases = Seq((0L, ang(0.0)), (1L, ang(90.0))).toDF("id", "v")
-    val straddlers = ((0 until 8).map(i =>
-      (10L + i, ang(44.1 + 0.1 * i))) ++
-      (0 until 4).map(i => (20L + i, ang(45.2 + 0.1 * i))))
-      .toDF("id", "v")
     // healthy by construction at the SHARED probe budget (k=12,
     // nProbe=1): its true top-12 is the one tight 12-point cluster,
     // which one probed list fully contains
     val healthy = ((0 until 12).map(i =>
-      (i.toLong, ang(10.0 + 0.2 * i))) ++
-      Seq((20L, ang(80.0)), (21L, ang(81.0))))
+      (i.toLong, FX.ang(10.0 + 0.2 * i))) ++
+      Seq((20L, FX.ang(80.0)), (21L, FX.ang(81.0))))
       .toDF("id", "v")
-    val queries = Seq((0L, ang(44.9))).toDF("qid", "qv")
-    val hQueries = Seq((0L, ang(11.0))).toDF("qid", "qv")
+    val queries = Seq((0L, FX.ang(44.9))).toDF("qid", "qv")
+    val hQueries = Seq((0L, FX.ang(11.0))).toDF("qid", "qv")
     TempDirs.using("q264_a_", "q264_b_", "q264_log_") {
       case Seq(aDir, bDir, logDir) =>
-      // two independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale; A's append stays ordered after
-      // its build inside the closure)
-      inParallel(
-        () => {
-          Similarity.ivfBuild(bases, aDir, nList = 2, kmeansMaxIter = 2)
-          Similarity.ivfAppend(s, aDir, straddlers)
-        },
-        () => Similarity.ivfBuild(healthy, bDir, nList = 2,
-          kmeansMaxIter = 2))
+      // two independent writer-lock domains — build concurrently (A's
+      // append stays ordered after its build inside the closure)
+      inParallel(() => decayedIvf(s, aDir),
+        () => Ivf(nList = 2, kmeansMaxIter = 2).build(s, healthy, bDir))
       val fleet = Seq(aDir, bDir)
       val tag = Map(aDir -> "A", bDir -> "B")
-      def sweep(): Seq[(String, String, Boolean, String)] = {
+      def sweep(step: String): Seq[(String, String, Boolean, String)] = {
         val h = Similarity.fleetHealth(s, fleet, deepProbes = 1,
           probeQueries = Map(aDir -> queries, bDir -> hQueries),
           probeK = 12, probeNProbe = 1, probeLogDir = Some(logDir))
         Similarity.indexMaintenancePlan(h, recallFloor = 0.8,
           maxFilesPerListCeiling = Long.MaxValue)
           .select(col("dir"), col("recall_at_k"), col("action"))
-          .collect().map(r => (tag(r.getString(0)),
-            !r.isNullAt(1), r.getString(2))).toSeq
-          .sortBy(_._1).map { case (t, deep, act) => ("", t, deep, act) }
+          .collect().map(r => (step, tag(r.getString(0)),
+            !r.isNullAt(1), r.getString(2))).toSeq.sortBy(_._2)
       }
-      val s1 = sweep().map { case (_, t, dp, a) => ("1_sweep", t, dp, a) }
+      val s1 = sweep("1_sweep")
       val rep = Similarity.fleetMaintenanceApply(s,
         Seq((aDir, s1.find(_._2 == "A").get._4)).toDF("dir", "action"))
         .select("status").head().getString(0)
       val applyRow = Seq(("2_apply", "A", false, rep))
-      val s2 = sweep().map { case (_, t, dp, a) => ("3_sweep", t, dp, a) }
-      val s3 = sweep().map { case (_, t, dp, a) => ("4_sweep", t, dp, a) }
-      val probeCounts = Similarity.probeLogHistory(s, logDir)
-        .groupBy("dir").count().collect()
-        .map(r => (tag(r.getString(0)), r.getLong(1))).toSeq.sortBy(_._1)
-        .map { case (t, n) => ("5_probelog", t, false, n.toString) }
-      (s1 ++ applyRow ++ s2 ++ s3 ++ probeCounts)
+      val s2 = sweep("3_sweep")
+      val s3 = sweep("4_sweep")
+      (s1 ++ applyRow ++ s2 ++ s3 ++ probeCounts(s, logDir, tag, "5_probelog"))
         .toDF("step", "tag", "deep_probed", "outcome")
         .localCheckpoint()
     }
     }
+
+  /** q264/q265's decayed IVF index: two single-point base lists, then
+    * the twelve boundary straddlers appended across the frozen
+    * centroids. */
+  private def decayedIvf(s: SparkSession, dir: String): Unit = {
+    import s.implicits._
+    val ivf = Ivf(nList = 2, kmeansMaxIter = 2)
+    ivf.build(s, FX.angBases.toDF("id", "v"), dir)
+    ivf.append(s, dir, FX.straddlers.toDF("id", "v"))
+  }
+
+  /** The probe log's deep-probe count per tagged dir, as step rows. */
+  private def probeCounts(s: SparkSession, logDir: String,
+                          tag: Map[String, String], step: String)
+    : Seq[(String, String, Boolean, String)] =
+    Similarity.probeLogHistory(s, logDir)
+      .groupBy("dir").count().collect()
+      .map(r => (step, tag(r.getString(0)), false, r.getLong(1).toString))
+      .toSeq.sortBy(_._2)
 
   /** The fully UNATTENDED fleet ops loop — the round's capstone
     * composition: `fleetHealth(runbookDir, probeLogDir, deepProbes)` →
@@ -4608,17 +4200,6 @@ object SparkEntry {
   def q265_fleet_ops_loop(s: SparkSession, d: String): DataFrame =
     fixtureTuned(s) {
     import s.implicits._
-    def ang(deg: Double): Array[Float] = Array(
-      math.cos(math.toRadians(deg)).toFloat,
-      math.sin(math.toRadians(deg)).toFloat)
-    val bases = Seq((0L, ang(0.0)), (1L, ang(90.0)))
-    val straddlers = (0 until 8).map(i =>
-      (10L + i, ang(44.1 + 0.1 * i))) ++
-      (0 until 4).map(i => (20L + i, ang(45.2 + 0.1 * i)))
-    val semPts: Seq[Seq[Double]] = Seq(
-      Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0),
-      Seq(0.0, 0.0, 1.0, 0.0), Seq(0.9, 0.1, 0.0, 0.0),
-      Seq(0.1, 0.9, 0.0, 0.0), Seq(0.0, 0.1, 0.9, 0.0))
     // six single-doc drops → six hash fragments: over the fleet's
     // ceiling of four, which a SemDeDup rebuild's range-partitioned
     // label write (≤ 4 files at the fixture's partitioning) stays under
@@ -4628,33 +4209,21 @@ object SparkEntry {
     TempDirs.using("q265_ivf_", "q265_sem_", "q265_ex_", "q265_sa_", "q265_sb_",
         "q265_rb_", "q265_log_") {
       case Seq(ivfDir, semDir, exDir, storeA, storeB, rbDir, logDir) =>
-      val dvecs = semPts.zipWithIndex.map { case (p, i) =>
+      val dvecs = FX.groups3.zipWithIndex.map { case (p, i) =>
         (i.toLong, p) }.toDF("vid", "embedding")
-      // six independent destinations — build concurrently (q254's
-      // inParallel rationale; the runbook holds BOTH stores under
-      // foreign column names: the loop's only configuration, written
-      // once)
+      // six independent destinations — build concurrently (the runbook
+      // holds BOTH stores under foreign column names: the loop's only
+      // configuration, written once)
       inParallel(
+        () => decayedIvf(s, ivfDir),
+        () => GroupSem.build(s, dvecs, semDir),
         () => {
-          Similarity.ivfBuild(bases.toDF("id", "v"), ivfDir, nList = 2,
-            kmeansMaxIter = 2)
-          Similarity.ivfAppend(s, ivfDir, straddlers.toDF("id", "v"))
+          Exact().build(s, texts.take(1).toDF("id", "text"), exDir)
+          texts.drop(1).foreach(t =>
+            Exact().append(s, exDir, Seq(t).toDF("id", "text")))
         },
-        () => {
-          val (labels, cents) = operators.Clustering
-            .kmeansWithCentroids(dvecs, "vid", "embedding", k = 1,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "vid", cents)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => {
-          Dedup.exactIndexBuild(texts.take(1).toDF("id", "text"), exDir,
-            "id", "text")
-          texts.drop(1).foreach(t => Dedup.exactIndexAppend(s, exDir,
-            Seq(t).toDF("id", "text"), "id", "text"))
-        },
-        () => (bases ++ straddlers).map { case (i, v) => (i, v.toSeq) }
+        () => (FX.angBases ++ FX.straddlers)
+          .map { case (i, v) => (i, v.toSeq) }
           .toDF("vid", "emb").repartition(1).write.parquet(storeA),
         () => dvecs.repartition(1).write.parquet(storeB),
         () => operators.FleetRunbook.save(s, rbDir, Seq(
@@ -4686,11 +4255,7 @@ object SparkEntry {
         .map(r => ("2_apply", tag(r.getString(0)), false,
           r.getString(1))).toSeq.sortBy(_._2)
       val (_, s2) = sweep("3_plan")
-      val probeCounts = Similarity.probeLogHistory(s, logDir)
-        .groupBy("dir").count().collect()
-        .map(r => ("4_probelog", tag(r.getString(0)), false,
-          r.getLong(1).toString)).toSeq.sortBy(_._2)
-      (s1 ++ applied ++ s2 ++ probeCounts)
+      (s1 ++ applied ++ s2 ++ probeCounts(s, logDir, tag, "4_probelog"))
         .toDF("step", "tag", "deep_probed", "outcome")
         .localCheckpoint()
     }
@@ -4712,34 +4277,26 @@ object SparkEntry {
   def q266_fleet_backup_restore(s: SparkSession, d: String): DataFrame =
     fixtureTuned(s) {
     import s.implicits._
-    def ang(deg: Double): Array[Float] = Array(
-      math.cos(math.toRadians(deg)).toFloat,
-      math.sin(math.toRadians(deg)).toFloat)
-    val texts = Seq(0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs")
-      .toDF("id", "text").repartition(1)
-    val vecs = ((0 until 6).map(i => (i.toLong, ang(10.0 + i))) ++
-      (0 until 6).map(i => (10L + i, ang(80.0 + i)))).toDF("id", "v")
+    val texts = FX.docs(s, FX.pangrams.take(2))
+    val vecs = ((0 until 6).map(i => (i.toLong, FX.ang(10.0 + i))) ++
+      (0 until 6).map(i => (10L + i, FX.ang(80.0 + i)))).toDF("id", "v")
     TempDirs.using("q266_src_", "q266_bak_", "q266_res_") {
       case Seq(srcRoot, bakRoot, resRoot) =>
       val exDir = s"$srcRoot/ex"; val mhDir = s"$srcRoot/mh"
       val ivfDir = s"$srcRoot/ivf"
       // three independent writer-lock domains — build concurrently
-      // (q254's inParallel rationale)
-      inParallel(
-        () => Dedup.exactIndexBuild(texts, exDir, "id", "text"),
-        () => Dedup.minhashIndexBuild(texts, mhDir, "id", "text"),
-        () => Similarity.ivfBuild(vecs, ivfDir, nList = 2,
-          kmeansMaxIter = 2))
+      Fleet.build(s, Seq((Exact(), texts, exDir), (MinHash(), texts, mhDir),
+        (Ivf(nList = 2, kmeansMaxIter = 2), vecs, ivfDir)))
       val backup = Similarity.fleetClone(s, Seq(exDir, mhDir, ivfDir),
         bakRoot, parallelism = 3)
         .select("family", "status").collect()
         .map(r => ("1_backup", r.getString(0), r.getString(1)))
         .toSeq.sortBy(_._2)
-      val probeText = Seq(9L ->
-        "the quick brown fox jumps over the lazy dog").toDF("id", "text")
-      def exDup(dir: String): Boolean = exDup2(s, dir, probeText)
-      val q = Seq((0L, ang(11.0))).toDF("qid", "qv")
+      val probeText = Seq(9L -> FX.pangrams(0)).toDF("id", "text")
+      def exDup(dir: String, probe: DataFrame = probeText): String =
+        Dedup.exactIndexProbe(s, dir, probe, "id", "text")
+          .select("is_dup").head().getBoolean(0).toString
+      val q = Seq((0L, FX.ang(11.0))).toDF("qid", "qv")
       def top(dir: String): Set[Long] =
         Similarity.ivfQuery(s, dir, q, k = 6, nProbe = 1)
           .select("id").as[Long].collect().toSet
@@ -4750,31 +4307,20 @@ object SparkEntry {
           (top(s"$bakRoot/ivf") == top(ivfDir)).toString))
       // the backup is a SNAPSHOT: a post-backup source append never
       // reaches it
-      val newDoc = Seq(7L -> "sphinx of black quartz judge my vow")
-        .toDF("id", "text")
-      Dedup.exactIndexAppend(s, exDir, newDoc, "id", "text")
+      val newDoc = Seq(7L -> FX.pangrams(3)).toDF("id", "text")
+      Exact().append(s, exDir, newDoc)
       val probeNew = newDoc.select(col("id") + 100, col("text"))
         .toDF("id", "text")
-      val drift = Seq(
-        ("3_drift", "src", exDup2(s, exDir, probeNew).toString),
-        ("3_drift", "backup",
-          exDup2(s, s"$bakRoot/ex", probeNew).toString))
+      val drift = Seq(("3_drift", "src", exDup(exDir, probeNew)),
+        ("3_drift", "backup", exDup(s"$bakRoot/ex", probeNew)))
       // restore = clone the backup; it answers like the original
       operators.IndexClone.cloneIndex(s, s"$bakRoot/ex", s"$resRoot/ex")
-      val restore = Seq(
-        ("4_restore", "exact", exDup2(s, s"$resRoot/ex", probeText)
-          .toString))
+      val restore = Seq(("4_restore", "exact", exDup(s"$resRoot/ex")))
       (backup ++ verify ++ drift ++ restore)
         .toDF("step", "family", "outcome")
         .localCheckpoint()
     }
     }
-
-  private def exDup2(s: SparkSession,
-                     dir: String,
-                     probe: DataFrame): Boolean =
-    Dedup.exactIndexProbe(s, dir, probe, "id", "text")
-      .select("is_dup").head().getBoolean(0)
 
   /** Health report of a persisted SemDeDup state
     * ([[operators.Clustering.semDedupStateHealth]] — the fleet row for
@@ -4790,15 +4336,10 @@ object SparkEntry {
     val base = emb.filter(col("vec_id") % 10 < 8)
     val day1 = emb.filter(col("vec_id") % 10 === 8)
     TempDirs.using("q245_semhealth_") { case Seq(root) =>
-      val (labels, centroids) = operators.Clustering.kmeansWithCentroids(
-        base, "vec_id", "embedding", k = 16, iterations = 2)
-      operators.Clustering.semDedupStateSave(s, root, labels, "vec_id",
-        centroids)
-      operators.Clustering.releasePairs(labels)
-      operators.Clustering.semDedupStateAppend(s, root, day1, "vec_id",
-        "embedding")
-      operators.Clustering.semDedupStateHealth(s, root,
-        hotClusterCap = 50)
+      val sem = EmbSem.copy(hotClusterCap = 50)
+      sem.build(s, base, root)
+      sem.append(s, root, day1)
+      sem.health(s, root)
         .select("n_clusters", "total_rows", "occupied_clusters",
           "max_cluster", "hot_clusters")
         .localCheckpoint()
@@ -4815,14 +4356,8 @@ object SparkEntry {
     * appended the odd ones — the assembled set must equal one distinct
     * pass over all of src0. */
   def q246_decontam_health(s: SparkSession, d: String): DataFrame = {
-    val docs = T.documents(s, d)
-    val bench = docs.filter(col("source") === "src0")
     TempDirs.using("q246_dchealth_") { case Seq(root) =>
-      Decontamination.decontamIndexBuild(
-        bench.filter(pmod(col("doc_id"), lit(2L)) === 0), root,
-        "text", n = 3)
-      Decontamination.decontamIndexAppend(s, root,
-        bench.filter(pmod(col("doc_id"), lit(2L)) =!= 0), "text")
+      benchIndex(s, d, root)
       Decontamination.decontamIndexHealth(s, root)
         .select("shingle_n", "total_rows", "distinct_shingles")
         .localCheckpoint()
@@ -4845,78 +4380,41 @@ object SparkEntry {
     * constructed states. */
   def q247_fleet_all_families(s: SparkSession, d: String): DataFrame = fixtureTuned(s) {
     import s.implicits._
-    def v8(dim: Int): Array[Float] = {
-      val a = new Array[Float](8); a(dim) = 1.0f; a
-    }
-    val ivfCorpus = (0 until 4).map(c => (c.toLong, v8(c)))
-      .toDF("id", "v")
-    val drifted = (0 until 4).map(c => (100L + c, v8(4 + c)))
-      .toDF("id", "v")
-    val boiler = "all work and no play makes jack a dull boy"
-    val hotDocs = (0L until 8L).map(i => (i, boiler))
+    val ivfCorpus = FX.axes(s, 4)
+    val hotDocs = (0L until 8L).map(i => (i, FX.boiler))
       .toDF("id", "text").repartition(1)
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "pack my box with five dozen liquor jugs",
-      2L -> "how vexingly quick daft zebras jump",
-      3L -> "sphinx of black quartz judge my vow")
-    val fragDocs = texts.toDF("id", "text").repartition(1)
+    val fragDocs = FX.docs(s, FX.pangrams.take(4))
     // one 3-member embedding cluster over a cap of 2 -> hot_clusters=1
     val semVecs = Seq(
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.99f, 0.01f)),
       (2L, Array(0.98f, 0.02f)), (3L, Array(0.0f, 1.0f)))
       .toDF("vec_id", "embedding")
+    val (mh, sh, ex) = (MinHash(hotBucketCap = 5), SimHash(), Exact())
+    val sem = SemDeDup(k = 2, idCol = "vec_id", vecCol = "embedding",
+      hotClusterCap = 2)
+    val dc = Decontam()
     TempDirs.using("q247_ivf_", "q247_mh_", "q247_sh_", "q247_sem_", "q247_dc_",
         "q247_ex_") {
       case Seq(ivfDir, mhDir, shDir, semDir, dcDir, exDir) =>
-      // seven independent writer-lock domains: build each family's
-      // planted state concurrently (intra-family append order kept
-      // inside its closure) — q254's inParallel rationale
+      // independent writer-lock domains: build each family's planted
+      // state concurrently (intra-family append order kept inside its
+      // closure)
       inParallel(
-        () => Similarity.ivfBuild(ivfCorpus, ivfDir, nList = 4,
-          kmeansMaxIter = 10),
-        () => Dedup.minhashIndexBuild(hotDocs, mhDir, "id", "text"),
-        () => {
-          Dedup.simhashIndexBuild(fragDocs.filter(col("id") < 2), shDir,
-            "id", "text")
-          (2L until 4L).foreach(i => Dedup.simhashIndexAppend(s, shDir,
-            fragDocs.filter(col("id") === i), "id", "text"))
-        },
-        () => {
-          val (labels, centroids) = operators.Clustering
-            .kmeansWithCentroids(semVecs, "vec_id", "embedding", k = 2,
-              iterations = 2)
-          operators.Clustering.semDedupStateSave(s, semDir, labels,
-            "vec_id", centroids)
-          operators.Clustering.releasePairs(labels)
-        },
-        () => Decontamination.decontamIndexBuild(
-          fragDocs.select(col("id").as("doc_id"), col("text")), dcDir,
-          "text", n = 3),
-        () => {
-          Dedup.exactIndexBuild(fragDocs.filter(col("id") === 0L), exDir,
-            "id", "text")
-          (1L until 4L).foreach(i => Dedup.exactIndexAppend(s, exDir,
-            fragDocs.filter(col("id") === i), "id", "text"))
-        })
-      val fleet = Similarity
-        .ivfIndexHealth(s, ivfDir,
+        () => Ivf(nList = 4, kmeansMaxIter = 10).build(s, ivfCorpus, ivfDir),
+        () => mh.build(s, hotDocs, mhDir),
+        () => sh.buildFragmented(s, fragDocs, shDir, 2L, 4L),
+        () => sem.build(s, semVecs, semDir),
+        () => dc.build(s,
+          fragDocs.select(col("id").as("doc_id"), col("text")), dcDir),
+        () => ex.buildFragmented(s, fragDocs, exDir, 1L, 4L))
+      val fleet = Fleet.healthUnion("idx", Seq(
+        1 -> Similarity.ivfIndexHealth(s, ivfDir,
           ivfCorpus.select(col("id").as("qid"), col("v").as("qv")),
-          k = 1, nProbe = 4).withColumn("idx", lit(1))
-        .unionByName(Similarity.ivfDriftProbe(s, ivfDir, drifted)
-          .withColumn("idx", lit(2)), allowMissingColumns = true)
-        .unionByName(Dedup.minhashIndexHealth(s, mhDir,
-          hotBucketCap = 5).withColumn("idx", lit(3)),
-          allowMissingColumns = true)
-        .unionByName(Dedup.simhashIndexHealth(s, shDir)
-          .withColumn("idx", lit(4)), allowMissingColumns = true)
-        .unionByName(operators.Clustering.semDedupStateHealth(s, semDir,
-          hotClusterCap = 2).withColumn("idx", lit(5)),
-          allowMissingColumns = true)
-        .unionByName(Decontamination.decontamIndexHealth(s, dcDir)
-          .withColumn("idx", lit(6)), allowMissingColumns = true)
-        .unionByName(Dedup.exactIndexHealth(s, exDir)
-          .withColumn("idx", lit(7)), allowMissingColumns = true)
+          k = 1, nProbe = 4),
+        2 -> Similarity.ivfDriftProbe(s, ivfDir, FX.axes(s, 4, 100L, 4)),
+        3 -> mh.health(s, mhDir), 4 -> sh.health(s, shDir),
+        5 -> sem.health(s, semDir), 6 -> dc.health(s, dcDir),
+        7 -> ex.health(s, exDir)))
       Similarity.indexMaintenancePlan(fleet, recallFloor = 0.9,
         maxFilesPerListCeiling = 10, maxFragmentsCeiling = 2,
         driftRatioFloor = 0.5, hotClustersCeiling = 0L)

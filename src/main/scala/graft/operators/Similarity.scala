@@ -1623,14 +1623,16 @@ object Similarity {
       probeCorpora.get(dir).orElse(runbook.get(dir).map(e =>
         FleetRunbook.loadSideInput(spark, e, "id", "v")
           .withColumn("v", col("v").cast("array<float>"))))
-    val candidates = dirs.filter { dir =>
-      val (family, _) = sniffFamily(spark, Manifest.snapshot(spark, dir))
-      family match {
-        case "ivf" => sampledQueries(dir).isDefined
-        case "ivf_pq" =>
-          sampledQueries(dir).isDefined && probeCorpus(dir).isDefined
-        case _ => false
-      }
+    // ONE snapshot and family sniff per dir, read by both the
+    // deep-probe candidate choice and the health row
+    val sniffed = dirs.map { dir =>
+      val snap = Manifest.snapshot(spark, dir)
+      (dir, snap, sniffFamily(spark, snap)._1)
+    }
+    val candidates = sniffed.collect {
+      case (dir, _, "ivf") if sampledQueries(dir).isDefined => dir
+      case (dir, _, "ivf_pq")
+        if sampledQueries(dir).isDefined && probeCorpus(dir).isDefined => dir
     }
     val lastProbed: Map[String, Long] = probeLogDir match {
       case Some(ld) => ProbeLog.lastSweep(spark, ld)
@@ -1642,9 +1644,7 @@ object Similarity {
       else candidates
         .sortBy(d => (lastProbed.getOrElse(d, -1L), pos(d)))
         .take(deepProbes).toSet
-    val frames = dirs.map { dir =>
-      val snap = Manifest.snapshot(spark, dir)
-      val (family, _) = sniffFamily(spark, snap)
+    val frames = sniffed.map { case (dir, snap, family) =>
       val h = family match {
         case "ivf" if chosen(dir) =>
           ivfIndexHealth(spark, dir, sampledQueries(dir).get, probeK,

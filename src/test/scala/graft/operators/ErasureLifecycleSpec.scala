@@ -1,6 +1,8 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Planted, SparkSpec}
+import graft.FleetFamily._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The round-15 erasure/retraction contracts: append-supersedes-delete
@@ -582,108 +584,64 @@ class ErasureLifecycleSpec extends SparkSpec {
       0L -> "the quick brown fox jumps over the lazy dog",
       1L -> "pack my box with five dozen liquor jugs",
       2L -> "how vexingly quick daft zebras jump").toDF("id", "text")
-    val base = docs.filter(col("id") < 2L)
-    val batch = docs.filter(col("id") === 2L)
-    val doomed = docs.filter(col("id") === 1L)
-    val probe = doomed.select((col("id") + 90L).as("id"), col("text"))
-    def pairsWith1(p: org.apache.spark.sql.DataFrame): Long = {
-      val n = p.filter(col("base_id") === 1L).count()
-      Clustering.releasePairs(p)
-      n
-    }
     // the vector families index one vector per doc
     val vecs = Seq(
       0L -> Seq(1.0, 0.0, 0.0, 0.5),
       1L -> Seq(0.0, 1.0, 0.5, 0.0),
       2L -> Seq(0.5, 0.0, 1.0, 0.0)).toDF("id", "v")
-    val baseV = vecs.filter(col("id") < 2L)
-    val batchV = vecs.filter(col("id") === 2L)
+    val rows = Map[Kind, DataFrame](Texts -> docs, Vectors -> vecs,
+      Embeddings -> vecs)
+    // each probe re-sends the doomed doc 1 under a fresh id
     val doomedV = vecs.filter(col("id") === 1L)
-    val probeV = doomedV.select((col("id") + 90L).as("qid"),
-      col("v").as("qv"))
-    def hitsOf1(p: org.apache.spark.sql.DataFrame): Long =
-      p.filter(col("id") === 1L).count()
-    // SemDeDup is not a row here: ErasureLifecycleSpec "repair
-    // re-append is idempotent" pins its replay fold and SamplingSpec
-    // "semDedupStateDelete" its delete → compact fold
+    val planted = Map[Kind, Planted](
+      Texts -> Planted(docs.filter(col("id") === 1L)
+        .select((col("id") + 90L).as("id"), col("text")), 1L, docs),
+      Vectors -> Planted(doomedV.select((col("id") + 90L).as("qid"),
+        col("v").as("qv")), 1L, vecs),
+      Embeddings -> Planted(doomedV.select((col("id") + 90L).as("id"),
+        col("v")), 1L, vecs))
+    // Each row: the family, the health column its `total_rows` must
+    // equal once compacted (None where the health row has no distinct
+    // count) and the live row count left after the fold.
     val families = Seq(
-      LifecycleCase("exact", Some("distinct_hashes"), 2L,
-        Dedup.exactIndexBuild(base, _, "id", "text"),
-        Dedup.exactIndexAppend(spark, _, batch, "id", "text", Some("b1")),
-        Dedup.exactIndexDelete(spark, _, doomed, "id", "text"),
-        Dedup.exactIndexCompact(spark, _),
-        Dedup.exactIndexHealth(spark, _),
-        d => Dedup.exactIndexProbe(spark, d, probe, "id", "text")
-          .filter(col("is_dup")).count()),
-      LifecycleCase("minhash", Some("distinct_rows"), 4L,
-        Dedup.minhashIndexBuild(base, _, "id", "text"),
-        Dedup.minhashIndexAppend(spark, _, batch, "id", "text",
-          Some("b1")),
-        Dedup.minhashIndexDelete(spark, _, doomed),
-        Dedup.minhashIndexCompact(spark, _),
-        Dedup.minhashIndexHealth(spark, _),
-        d => pairsWith1(
-          Dedup.minhashIndexProbe(spark, d, probe, docs, "id", "text"))),
-      LifecycleCase("simhash", Some("distinct_rows"), 2L,
-        Dedup.simhashIndexBuild(base, _, "id", "text"),
-        Dedup.simhashIndexAppend(spark, _, batch, "id", "text",
-          Some("b1")),
-        Dedup.simhashIndexDelete(spark, _, doomed),
-        Dedup.simhashIndexCompact(spark, _),
-        Dedup.simhashIndexHealth(spark, _),
-        d => pairsWith1(Dedup.simhashIndexProbe(spark, d, probe, "id",
-          "text", maxHamming = 0))),
+      (Exact(), Some("distinct_hashes"), 2L),
+      (MinHash(), Some("distinct_rows"), 4L),
+      (SimHash(), Some("distinct_rows"), 2L),
       // the list health row counts rows, not distinct ones
-      LifecycleCase("ivf", None, 2L,
-        Similarity.ivfBuild(baseV, _, nList = 2, kmeansMaxIter = 2),
-        Similarity.ivfAppend(spark, _, batchV, Some("b1")),
-        Similarity.ivfDelete(spark, _, doomedV),
-        Similarity.ivfCompact(spark, _),
-        Similarity.ivfIndexHealthLight(spark, _),
-        d => hitsOf1(Similarity.ivfQuery(spark, d, probeV, k = 3,
-          nProbe = 2))),
-      LifecycleCase("ivf_pq", None, 2L,
-        Similarity.ivfPqBuild(baseV, _, nList = 2, m = 2, nCodes = 2,
-          kmeansMaxIter = 2),
-        Similarity.ivfPqAppend(spark, _, batchV, Some("b1")),
-        Similarity.ivfDelete(spark, _, doomedV),
-        Similarity.ivfPqCompact(spark, _),
-        Similarity.ivfIndexHealthLight(spark, _),
-        d => hitsOf1(Similarity.ivfPqQuery(spark, d, probeV, vecs, k = 3,
-          nProbe = 2, refineK = 10))))
-    families.foreach { f =>
+      (Ivf(nList = 2, kmeansMaxIter = 2, probeK = 3), None, 2L),
+      (IvfPq(nList = 2, m = 2, nCodes = 2, kmeansMaxIter = 2), None, 2L),
+      (SemDeDup(k = 2, vecCol = "v"), None, 2L))
+    families.foreach { case (f, distinctCol, liveRows) =>
+      val all = rows(f.kind)
+      def hits(dir: String): Long = {
+        val p = f.hits(spark, dir, planted(f.kind))
+        val n = p.count()
+        Clustering.releasePairs(p)
+        n
+      }
       graft.util.TempDirs.using(s"lifecycle_${f.name}_") { case Seq(dir) =>
-        f.build(dir)
-        f.append(dir); f.append(dir)
-        assert(f.hits(dir) == 1L, s"${f.name}: the indexed doc must probe")
-        f.distinctCol.foreach { c =>
-          val replayed = f.health(dir).head()
+        f.build(spark, all.filter(col("id") < 2L), dir)
+        val batch = all.filter(col("id") === 2L)
+        f.append(spark, dir, batch, Some("b1"))
+        f.append(spark, dir, batch, Some("b1"))
+        assert(hits(dir) == 1L, s"${f.name}: the indexed doc must probe")
+        distinctCol.foreach { c =>
+          val replayed = f.health(spark, dir).head()
           assert(replayed.getAs[Long]("total_rows") >
             replayed.getAs[Long](c),
             s"${f.name}: the replayed append must leave duplicate rows")
         }
-        f.delete(dir)
-        assert(f.hits(dir) == 0L, s"${f.name}: delete silences the probe")
-        f.compact(dir)
-        val h = f.health(dir).head()
-        f.distinctCol.foreach(c => assert(
+        f.delete(spark, dir, all.filter(col("id") === 1L))
+        assert(hits(dir) == 0L, s"${f.name}: delete silences the probe")
+        f.compact(spark, dir)
+        val h = f.health(spark, dir).head()
+        distinctCol.foreach(c => assert(
           h.getAs[Long]("total_rows") == h.getAs[Long](c), s"${f.name}: $h"))
-        assert(h.getAs[Long]("total_rows") == f.liveRows, s"${f.name}: $h")
+        assert(h.getAs[Long]("total_rows") == liveRows, s"${f.name}: $h")
         assert(h.getAs[Long]("deleted_pending") == 0L, s"${f.name}: $h")
         assert(h.getAs[Long]("ingest_batches") == 1L, s"${f.name}: $h")
-        assert(f.hits(dir) == 0L, s"${f.name}: the fold keeps it silent")
+        assert(hits(dir) == 0L, s"${f.name}: the fold keeps it silent")
       }
     }
   }
 }
-
-/** One family row of the lifecycle-contract spec: its verbs over an
-  * index dir, the health column its `total_rows` must equal once
-  * compacted (None where the health row has no distinct count), and
-  * the live row count left after the fold. */
-private case class LifecycleCase(
-    name: String, distinctCol: Option[String], liveRows: Long,
-    build: String => Unit, append: String => Unit,
-    delete: String => Unit, compact: String => Unit,
-    health: String => org.apache.spark.sql.DataFrame,
-    hits: String => Long)

@@ -20,7 +20,11 @@ Subset-run recipe (one run per side, each from its own checkout):
     sbt "runMain graft.Bench"
 
 - `SPARK_GRAFT_ONLY` is the comma-separated list of full query names to
-  run.
+  run. `tools/queries_using.py IDENT...` prints the list of queries
+  whose code reaches the given identifiers (the verbs a change
+  touches), e.g.
+
+      SPARK_GRAFT_ONLY=$(python3 tools/queries_using.py ivfBuild ivfAppend)
 - `SPARK_GRAFT_BENCH_OUT` must point outside the checkout: by default the
   summary is written to `BENCH_SUMMARY.json` in the working directory,
   which overwrites the tracked file.
