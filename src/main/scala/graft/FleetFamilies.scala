@@ -1,29 +1,41 @@
 package graft
 
-import graft.operators.{Clustering, Decontamination, Dedup, Similarity}
+import graft.operators.{Clustering, Decontamination, Dedup, IndexFamily,
+  Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One persisted index family as the fleet queries drive it: the build
-  * over a planted frame, append, delete, compact, health row and the
-  * probe rows that report a planted doc, with the family's parameters
-  * as fields. `kind` names the frame the family indexes. */
-private[graft] sealed trait FleetFamily {
+/** One persisted index family as the fleet queries drive it: the
+  * library's on-disk family ([[IndexFamily]], which owns append,
+  * delete, compact and health) plus what the fixtures add — the
+  * family's build parameters as fields, the build over a planted frame
+  * and the probe rows that report a planted doc. `kind` names the
+  * frame the family indexes. */
+private[graft] sealed abstract class FleetFamily(val index: IndexFamily,
+                                                 val kind: FleetFamily.Kind) {
   /** The tag the fleet verbs report for this family. */
-  def name: String
-  def kind: FleetFamily.Kind
+  final def name: String = index.name
   /** Retraction by document id; the decontam index is keyed by shingle
     * content, so a fleet delete skips or rebuilds it. */
-  def docKeyed: Boolean = true
+  final def docKeyed: Boolean = index.docKeyed
   def idCol: String = "id"
+  def vecCol: String = "v"
+  def hotBucketCap: Int = 10000
+  def hotClusterCap: Long = 100000L
   def build(s: SparkSession, rows: DataFrame, dir: String): Unit
-  def append(s: SparkSession, dir: String, rows: DataFrame,
-             batchId: Option[String] = None): Unit
-  def delete(s: SparkSession, dir: String, doomed: DataFrame): Unit
-  def compact(s: SparkSession, dir: String): Unit
-  def health(s: SparkSession, dir: String): DataFrame
   /** The rows of a probe with `p.probe` that report the planted doc. */
   def hits(s: SparkSession, dir: String, p: Planted): DataFrame
+
+  final def append(s: SparkSession, dir: String, rows: DataFrame,
+                   batchId: Option[String] = None): Unit =
+    index.append(s, dir, IndexFamily.Batch(rows, idCol, "text", vecCol,
+      batchId))
+  final def delete(s: SparkSession, dir: String, doomed: DataFrame): Unit =
+    index.delete(s, dir, doomed, idCol, "text")
+  final def compact(s: SparkSession, dir: String): Unit =
+    index.compact(s, dir)
+  final def health(s: SparkSession, dir: String): DataFrame =
+    index.health(s, dir, IndexFamily.Caps(hotBucketCap, hotClusterCap))
 
   /** The fragmented build: the rows with id below `head` in one build,
     * then each id in [head, end) appended on its own, one fragment
@@ -52,57 +64,29 @@ private[graft] object FleetFamily {
   case object Embeddings extends Kind
 
   final case class Exact(override val idCol: String = "id")
-      extends FleetFamily {
-    val name = "exact"; val kind = Texts
+      extends FleetFamily(IndexFamily.Exact, Texts) {
     def build(s: SparkSession, rows: DataFrame, dir: String): Unit =
       Dedup.exactIndexBuild(rows, dir, idCol, "text")
-    def append(s: SparkSession, dir: String, rows: DataFrame,
-               batchId: Option[String]): Unit =
-      Dedup.exactIndexAppend(s, dir, rows, idCol, "text", batchId)
-    def delete(s: SparkSession, dir: String, doomed: DataFrame): Unit =
-      Dedup.exactIndexDelete(s, dir, doomed, idCol, "text")
-    def compact(s: SparkSession, dir: String): Unit =
-      Dedup.exactIndexCompact(s, dir)
-    def health(s: SparkSession, dir: String): DataFrame =
-      Dedup.exactIndexHealth(s, dir)
     def hits(s: SparkSession, dir: String, p: Planted): DataFrame =
       Dedup.exactIndexProbe(s, dir, p.probe, idCol, "text")
         .filter(col("is_dup"))
   }
 
   final case class MinHash(override val idCol: String = "id",
-                           hotBucketCap: Int = 10000) extends FleetFamily {
-    val name = "minhash"; val kind = Texts
+                           override val hotBucketCap: Int = 10000)
+      extends FleetFamily(IndexFamily.MinHash, Texts) {
     def build(s: SparkSession, rows: DataFrame, dir: String): Unit =
       Dedup.minhashIndexBuild(rows, dir, idCol, "text")
-    def append(s: SparkSession, dir: String, rows: DataFrame,
-               batchId: Option[String]): Unit =
-      Dedup.minhashIndexAppend(s, dir, rows, idCol, "text", batchId)
-    def delete(s: SparkSession, dir: String, doomed: DataFrame): Unit =
-      Dedup.minhashIndexDelete(s, dir, doomed.select(idCol), idCol)
-    def compact(s: SparkSession, dir: String): Unit =
-      Dedup.minhashIndexCompact(s, dir)
-    def health(s: SparkSession, dir: String): DataFrame =
-      Dedup.minhashIndexHealth(s, dir, hotBucketCap)
     def hits(s: SparkSession, dir: String, p: Planted): DataFrame =
       Dedup.minhashIndexProbe(s, dir, p.probe, p.indexed, idCol, "text")
         .filter(col("base_id") === p.id)
   }
 
   final case class SimHash(override val idCol: String = "id",
-                           hotBucketCap: Int = 10000) extends FleetFamily {
-    val name = "simhash"; val kind = Texts
+                           override val hotBucketCap: Int = 10000)
+      extends FleetFamily(IndexFamily.SimHash, Texts) {
     def build(s: SparkSession, rows: DataFrame, dir: String): Unit =
       Dedup.simhashIndexBuild(rows, dir, idCol, "text")
-    def append(s: SparkSession, dir: String, rows: DataFrame,
-               batchId: Option[String]): Unit =
-      Dedup.simhashIndexAppend(s, dir, rows, idCol, "text", batchId)
-    def delete(s: SparkSession, dir: String, doomed: DataFrame): Unit =
-      Dedup.simhashIndexDelete(s, dir, doomed.select(idCol), idCol)
-    def compact(s: SparkSession, dir: String): Unit =
-      Dedup.simhashIndexCompact(s, dir)
-    def health(s: SparkSession, dir: String): DataFrame =
-      Dedup.simhashIndexHealth(s, dir, hotBucketCap)
     /** `maxHamming` 0: a planted probe is an exact copy. */
     def hits(s: SparkSession, dir: String, p: Planted): DataFrame =
       Dedup.simhashIndexProbe(s, dir, p.probe, idCol, "text", maxHamming = 0)
@@ -113,40 +97,21 @@ private[graft] object FleetFamily {
     * hit probe. */
   final case class Ivf(nList: Int = 16, kmeansMaxIter: Int = 20,
                        probeK: Int = 1, nProbe: Int = 2)
-      extends FleetFamily {
-    val name = "ivf"; val kind = Vectors
+      extends FleetFamily(IndexFamily.Ivf, Vectors) {
     def build(s: SparkSession, rows: DataFrame, dir: String): Unit =
       Similarity.ivfBuild(rows, dir, nList = nList,
         kmeansMaxIter = kmeansMaxIter)
-    def append(s: SparkSession, dir: String, rows: DataFrame,
-               batchId: Option[String]): Unit =
-      Similarity.ivfAppend(s, dir, rows, batchId)
-    def delete(s: SparkSession, dir: String, doomed: DataFrame): Unit =
-      Similarity.ivfDelete(s, dir, doomed.select("id"))
-    def compact(s: SparkSession, dir: String): Unit =
-      Similarity.ivfCompact(s, dir)
-    def health(s: SparkSession, dir: String): DataFrame =
-      Similarity.ivfIndexHealthLight(s, dir)
     def hits(s: SparkSession, dir: String, p: Planted): DataFrame =
       Similarity.ivfQuery(s, dir, p.probe, probeK, nProbe)
         .filter(col("id") === p.id)
   }
 
   final case class IvfPq(nList: Int = 16, m: Int = 4, nCodes: Int = 16,
-                         kmeansMaxIter: Int = 20) extends FleetFamily {
-    val name = "ivf_pq"; val kind = Vectors
+                         kmeansMaxIter: Int = 20)
+      extends FleetFamily(IndexFamily.IvfPq, Vectors) {
     def build(s: SparkSession, rows: DataFrame, dir: String): Unit =
       Similarity.ivfPqBuild(rows, dir, nList = nList, m = m,
         nCodes = nCodes, kmeansMaxIter = kmeansMaxIter)
-    def append(s: SparkSession, dir: String, rows: DataFrame,
-               batchId: Option[String]): Unit =
-      Similarity.ivfPqAppend(s, dir, rows, batchId)
-    def delete(s: SparkSession, dir: String, doomed: DataFrame): Unit =
-      Similarity.ivfDelete(s, dir, doomed.select("id"))
-    def compact(s: SparkSession, dir: String): Unit =
-      Similarity.ivfPqCompact(s, dir)
-    def health(s: SparkSession, dir: String): DataFrame =
-      Similarity.ivfIndexHealthLight(s, dir)
     def hits(s: SparkSession, dir: String, p: Planted): DataFrame =
       Similarity.ivfPqQuery(s, dir, p.probe, p.indexed, k = 3, nProbe = 2,
         refineK = 10).filter(col("id") === p.id)
@@ -155,11 +120,11 @@ private[graft] object FleetFamily {
   /** The build is k-means → state save → release of the labels'
     * checkpoint; `coalesceLabels` saves the labels as one file. */
   final case class SemDeDup(k: Int, override val idCol: String = "id",
-                            vecCol: String = "vec", iterations: Int = 2,
-                            hotClusterCap: Long = 100000L,
+                            override val vecCol: String = "vec",
+                            iterations: Int = 2,
+                            override val hotClusterCap: Long = 100000L,
                             coalesceLabels: Boolean = false)
-      extends FleetFamily {
-    val name = "semdedup"; val kind = Embeddings
+      extends FleetFamily(IndexFamily.SemDeDup, Embeddings) {
     def build(s: SparkSession, rows: DataFrame, dir: String): Unit = {
       val (labels, centroids) = Clustering.kmeansWithCentroids(rows, idCol,
         vecCol, k, iterations)
@@ -168,15 +133,6 @@ private[graft] object FleetFamily {
         centroids)
       Clustering.releasePairs(labels)
     }
-    def append(s: SparkSession, dir: String, rows: DataFrame,
-               batchId: Option[String]): Unit =
-      Clustering.semDedupStateAppend(s, dir, rows, idCol, vecCol, batchId)
-    def delete(s: SparkSession, dir: String, doomed: DataFrame): Unit =
-      Clustering.semDedupStateDelete(s, dir, doomed.select(idCol), idCol)
-    def compact(s: SparkSession, dir: String): Unit =
-      Clustering.semDedupStateCompact(s, dir)
-    def health(s: SparkSession, dir: String): DataFrame =
-      Clustering.semDedupStateHealth(s, dir, hotClusterCap)
     def hits(s: SparkSession, dir: String, p: Planted): DataFrame =
       Clustering.semDedupIncrementalPersisted(s, dir, p.indexed, p.probe,
         idCol, vecCol, tau = 0.95)
@@ -186,23 +142,10 @@ private[graft] object FleetFamily {
   /** The shingle set rewrites itself on every append, so there are no
     * fragments to compact, and a retraction is a rebuild from the
     * remaining suites (`Decontamination.decontamIndexRebuild`). */
-  final case class Decontam(n: Int = 3) extends FleetFamily {
-    val name = "decontam"; val kind = Texts
-    override def docKeyed: Boolean = false
+  final case class Decontam(n: Int = 3)
+      extends FleetFamily(IndexFamily.Decontam, Texts) {
     def build(s: SparkSession, rows: DataFrame, dir: String): Unit =
       Decontamination.decontamIndexBuild(rows, dir, "text", n)
-    def append(s: SparkSession, dir: String, rows: DataFrame,
-               batchId: Option[String]): Unit = {
-      require(batchId.isEmpty, "the decontam index logs no batch ids")
-      Decontamination.decontamIndexAppend(s, dir, rows, "text")
-    }
-    def delete(s: SparkSession, dir: String, doomed: DataFrame): Unit =
-      throw new UnsupportedOperationException(
-        "the decontam index is shingle-keyed: rebuild it from the " +
-          "remaining suites")
-    def compact(s: SparkSession, dir: String): Unit = ()
-    def health(s: SparkSession, dir: String): DataFrame =
-      Decontamination.decontamIndexHealth(s, dir)
     def hits(s: SparkSession, dir: String, p: Planted): DataFrame =
       Decontamination.decontamIndexReport(s, dir, p.probe, idCol, "text")
         .filter(col("is_contaminated"))

@@ -134,8 +134,8 @@ object CorpusPipeline {
       idCol, textCol)
       .withColumnRenamed("is_dup", "is_dup_exact")
     val (nearPairs, nearHandles) = Dedup.probeLazy(
-      Dedup.banded(spark, mhDir, "minhash"), spark, mhDir, batch, Some(base),
-      idCol, textCol, threshold, maxBucketSize = 10000)
+      IndexFamily.MinHash.layout(spark, mhDir), spark, mhDir, batch,
+      Some(base), idCol, textCol, threshold, maxBucketSize = 10000)
     val nearIds = nearPairs
       .select(col("delta_id").as(idCol)).distinct()
       .withColumn("_near", lit(true))
@@ -143,9 +143,9 @@ object CorpusPipeline {
       batch, idCol, textCol)
       .select(col(idCol), col("is_contaminated"))
     val simLazy = simhashDir.map { sh =>
-      val (pairs, handles) = Dedup.probeLazy(Dedup.banded(spark, sh,
-        "simhash"), spark, sh, batch, None, idCol, textCol, maxHamming,
-        maxBucketSize = 10000)
+      val (pairs, handles) = Dedup.probeLazy(
+        IndexFamily.SimHash.layout(spark, sh), spark, sh, batch, None, idCol,
+        textCol, maxHamming, maxBucketSize = 10000)
       (pairs.select(col("delta_id").as(idCol)).distinct()
         .withColumn("_sim", lit(true)), handles)
     }
@@ -311,22 +311,13 @@ object CorpusPipeline {
           case None =>
             ("skipped", s"batch '$bid' not supplied — fetch it from " +
               "the verdict sink and re-run")
-          case Some(batch) => family match {
-            case "exact" => run(Dedup.exactIndexAppend(spark, dir,
-              batch, idCol, textCol, batchId = Some(bid)))
-            case "minhash" | "simhash" => run(Dedup.append(
-              Dedup.banded(spark, dir, family), spark, dir, batch, idCol,
-              textCol, Some(bid)))
-            case "ivf" => run(Similarity.ivfAppend(spark, dir,
-              batch.select(col(idCol).as("id"), col(vecCol).as("v")),
-              batchId = Some(bid)))
-            case "ivf_pq" => run(Similarity.ivfPqAppend(spark, dir,
-              batch.select(col(idCol).as("id"), col(vecCol).as("v")),
-              batchId = Some(bid)))
-            case "semdedup" => run(Clustering.semDedupStateAppend(
-              spark, dir, batch, idCol, vecCol, batchId = Some(bid)))
-            case f => ("skipped", s"no re_append operator for '$f'")
-          }
+          case Some(batch) =>
+            IndexFamily.named(family).filter(_.docKeyed) match {
+              case Some(f) => run(f.append(spark, dir, IndexFamily.Batch(
+                batch, idCol, textCol, vecCol, Some(bid))))
+              case None =>
+                ("skipped", s"no re_append operator for '$family'")
+            }
         }
       (bid, family, dir, status, detail)
     }

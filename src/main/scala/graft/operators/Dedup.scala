@@ -265,7 +265,8 @@ object Dedup {
     * zero duplicates. Verification is the exact shingle Jaccard, so a
     * probe fetches base TEXT for its candidate ids only — the
     * candidates-then-fetch shape of IVF-PQ's refine. */
-  private final case class MinHash(shingleN: Int, sigK: Int, bands: Int)
+  private[operators] final case class MinHash(shingleN: Int, sigK: Int,
+                                              bands: Int)
       extends Banded("minhash", "bands", "banded", "jaccard", "sh", Nil, bands,
         BucketKeys) {
     require(bands >= 1 && sigK % bands == 0,
@@ -345,8 +346,8 @@ object Dedup {
     * the four probe joins gets min/max pruning; the other three are
     * bit-slices no single sort order can serve, and at 16 bytes a row
     * defragmentation is the point, not pruning. */
-  private case object SimHash extends Banded("simhash", "sigs", "signature",
-      "hamming", "sig", Seq("sig"), 4, Seq("sig")) {
+  private[operators] case object SimHash extends Banded("simhash", "sigs",
+      "signature", "hamming", "sig", Seq("sig"), 4, Seq("sig")) {
     def sign(docs: DataFrame, idCol: String, textCol: String): DataFrame =
       docs.select(col(idCol).as("id"), TF.simhash64(col(textCol)).as("sig"))
     def stored(signed: DataFrame): DataFrame =
@@ -383,16 +384,8 @@ object Dedup {
   }
 
   /** The MinHash layout pinned at `dir`. */
-  private def pinned(spark: SparkSession, dir: String): MinHash =
+  private[operators] def pinned(spark: SparkSession, dir: String): MinHash =
     MinHash.tupled(minhashIndexParams(spark, dir))
-
-  /** The layout of a banded index for its sniffed family name
-    * (`minhash` or `simhash`) — the fleet verbs' dispatch. */
-  private[operators] def banded(spark: SparkSession, dir: String,
-                                family: String): Banded = family match {
-    case "minhash" => pinned(spark, dir)
-    case "simhash" => SimHash
-  }
 
   /** Persist a frame that a plan reads more than once (LRU-evictable). */
   private def cached(df: DataFrame): DataFrame =
@@ -500,7 +493,8 @@ object Dedup {
     * but the duplicates inflate `total_rows`/`max_bucket` and scan cost
     * until a compaction folds them). Pending [[Tombstones]] fold into
     * the rewrite. */
-  private def compact(b: Banded, spark: SparkSession, dir: String): Unit =
+  private[operators] def compact(b: Banded, spark: SparkSession,
+                                 dir: String): Unit =
     Lifecycle.compactFlat(spark, dir, b.table, b.sortKeys,
       Lifecycle.Dedupe.Always, Lifecycle.Parts.BySize)
 

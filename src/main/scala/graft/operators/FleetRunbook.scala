@@ -82,6 +82,27 @@ object FleetRunbook {
         r.getString(3), if (r.isNullAt(4)) None else Some(r.getLong(4))))
       .toMap
 
+  /** A fleet verb's side inputs: the caller's frames (`given`, by index
+    * dir) win, and the runbook rows answer for every dir they omit. */
+  private[graft] final case class SideInputs(
+      spark: org.apache.spark.sql.SparkSession,
+      given: String => Option[DataFrame], runbook: Map[String, Entry]) {
+    /** The dir's side input with (idName, payloadName) columns; `shape`
+      * applies to a frame the runbook supplies. */
+    def get(dir: String, idName: String, payloadName: String,
+            shape: DataFrame => DataFrame = identity): Option[DataFrame] =
+      given(dir).orElse(runbook.get(dir).map(e =>
+        shape(loadSideInput(spark, e, idName, payloadName))))
+  }
+
+  /** The side inputs of one fleet verb call: the runbook at `runbookDir`
+    * is ONE bounded collect. */
+  private[operators] def sides(spark: org.apache.spark.sql.SparkSession,
+                               given: String => Option[DataFrame],
+                               runbookDir: Option[String]): SideInputs =
+    SideInputs(spark, given,
+      runbookDir.map(entries(spark, _)).getOrElse(Map.empty))
+
   /** Load an entry's side input with canonical column names — the
     * shape the family's operator expects (`id`/`v` for vector
     * families, `id`/`text` for text families). */

@@ -687,11 +687,22 @@ object Similarity {
     def probeAllLimit = Some("refineK" -> refineK)
   }
 
-  /** The list layout of the index at `snap` ([[sniffFamily]]'s answer);
-    * `store` is the PQ embedding store, when the caller has one. */
-  private def listsAt(spark: SparkSession, snap: Manifest.Snapshot,
-                      store: Option[DataFrame]): Lists =
-    if (sniffFamily(spark, snap)._1 == "ivf_pq") Pq(store) else Flat
+  /** The list layout of an IVF family; `store` and `refineK` are the PQ
+    * embedding store and refine width, when the caller has them. */
+  private def listsOf(f: IndexFamily.Inverted, store: Option[DataFrame],
+                      refineK: Int = 0): Lists =
+    if (f.needsStore) Pq(store, refineK) else Flat
+
+  /** The IVF family at `snap`. An IVF-only verb on any other dir fails
+    * fast, naming the dir and the family it holds. */
+  private def inverted(spark: SparkSession, snap: Manifest.Snapshot,
+                       verb: String): IndexFamily.Inverted =
+    IndexFamily.at(spark, snap) match {
+      case Some(f: IndexFamily.Inverted) => f
+      case other => throw new IllegalArgumentException(
+        s"$verb: ${snap.dir} holds no IVF index (family found: " +
+          s"${IndexFamily.tag(other)})")
+    }
 
   /** The live rows of an index table: pending tombstones anti-joined
     * out. */
@@ -1158,12 +1169,13 @@ object Similarity {
     * (stored-side anti-join, applied after the partition prune) and
     * their postings/codes rows are physically dropped by the next
     * [[ivfCompact]]/[[ivfPqCompact]]/rebuild. Works for both layouts —
-    * the tombstone table is keyed by id alone. */
+    * the tombstone table is keyed by id alone; any other dir fails
+    * fast. */
   def ivfDelete(spark: SparkSession, dir: String,
                 ids: DataFrame, idCol: String = "id"): Unit = {
     val snap = Manifest.snapshot(spark, dir)
-    Tombstones.retractIds(spark, snap, sniffFamily(spark, snap)._2, ids,
-      idCol)
+    Tombstones.retractIds(spark, snap,
+      inverted(spark, snap, "ivfDelete").keyTable, ids, idCol)
   }
 
   // ---- persisted-index lifecycle: compaction + recall monitoring ------
@@ -1385,11 +1397,12 @@ object Similarity {
     * queries; a schedule that gates on retraction debt or fragment
     * count alone (the q254-class tombstone lifecycle, a
     * compact-or-not cron) should not pay it on every reading. Works
-    * for both layouts. */
+    * for both layouts; any other dir fails fast. */
   def ivfIndexHealthLight(spark: SparkSession, dir: String): DataFrame = {
     val snap = Manifest.snapshot(spark, dir)
-    indexHealth(spark, dir, sniffFamily(spark, snap)._2, snap, None, None,
-      None, None)
+    indexHealth(spark, dir,
+      inverted(spark, snap, "ivfIndexHealthLight").keyTable, snap, None,
+      None, None, None)
   }
 
   /** Semantic DECONTAMINATION against an evaluation benchmark: annotate
@@ -1510,7 +1523,8 @@ object Similarity {
 
   /** Execute an [[indexMaintenancePlan]] action on a persisted index —
     * the apply half of the health → plan → apply loop. The layout is
-    * sniffed from the manifest snapshot (a codes table means IVF-PQ):
+    * sniffed from the manifest snapshot (a codes table means IVF-PQ;
+    * a dir holding any other family fails fast):
     * `compact` defragments ([[ivfCompact]] / [[ivfPqCompact]]),
     * `rebuild` refits ([[ivfCompact]]`(rebuild = true)` /
     * [[ivfPqRebuild]] — a PQ refit REQUIRES the embedding store
@@ -1523,7 +1537,8 @@ object Similarity {
                             corpus: Option[DataFrame] = None,
                             maxRecordsPerFile: Long = 0L, seed: Long = 7L,
                             kmeansMaxIter: Int = 20): Unit = {
-    val lists = listsAt(spark, Manifest.snapshot(spark, dir), corpus)
+    val lists = listsOf(inverted(spark, Manifest.snapshot(spark, dir),
+      "indexMaintenanceApply"), corpus)
     action match {
       case "none" => ()
       case "compact" => compact(lists, spark, dir, maxRecordsPerFile)
@@ -1531,26 +1546,6 @@ object Similarity {
       case other => throw new IllegalArgumentException(
         s"indexMaintenanceApply: unknown action '$other'")
     }
-  }
-
-  /** Sniff which index family lives at a manifest snapshot from its
-    * on-disk tables — the shared dispatch key of every fleet verb
-    * ([[fleetHealth]], [[fleetMaintenanceApply]], [[fleetDelete]],
-    * [[fleetEraseAudit]]) and the one codes-vs-postings layout sniff
-    * ([[ivfDelete]], [[indexMaintenanceApply]],
-    * [[ivfIndexHealthLight]]). Returns (family, key table). */
-  private def sniffFamily(spark: SparkSession,
-                          snap: Manifest.Snapshot): (String, String) = {
-    def has(table: String): Boolean = Manifest.exists(spark, snap.path(table))
-    if (has("codes")) ("ivf_pq", "codes")
-    else if (has("postings")) ("ivf", "postings")
-    else if (has("bands")) ("minhash", "bands")
-    else if (has("sigs")) ("simhash", "sigs")
-    else if (has("labels")) ("semdedup", "labels")
-    else if (has("shingles")) ("decontam", "shingles")
-    else if (has("hashes")) ("exact", "hashes")
-    else if (has("funnel")) ("funnel", "funnel")
-    else ("unknown", "")
   }
 
   /** The FLEET-WIDE health sweep — the missing first step of the
@@ -1610,29 +1605,28 @@ object Similarity {
     // corpus vectors is exactly what a recall reading wants), the PQ
     // exact side is the store itself. With both the runbook and the
     // probe log supplied, the scheduled sweep needs ZERO per-dir maps.
-    val runbook: Map[String, FleetRunbook.Entry] =
-      runbookDir.map(FleetRunbook.entries(spark, _)).getOrElse(Map.empty)
-    def sampledQueries(dir: String): Option[DataFrame] =
-      probeQueries.get(dir).orElse(runbook.get(dir).map { e =>
-        spark.read.parquet(e.path).orderBy(col(e.idCol))
-          .limit(probeSampleN)
-          .select(col(e.idCol).as("qid"),
-            col(e.payloadCol).cast("array<float>").as("qv"))
-      })
-    def probeCorpus(dir: String): Option[DataFrame] =
-      probeCorpora.get(dir).orElse(runbook.get(dir).map(e =>
-        FleetRunbook.loadSideInput(spark, e, "id", "v")
-          .withColumn("v", col("v").cast("array<float>"))))
+    val queries = FleetRunbook.sides(spark, probeQueries.get, runbookDir)
+    val stores = queries.copy(given = probeCorpora.get)
+    // the deep probe's inputs, when the dir has them: the query sample,
+    // plus the embedding store where codes cannot reconstruct vectors
+    def deepInputs(f: Option[IndexFamily])(dir: String)
+      : Option[(IndexFamily.Inverted, DataFrame, Option[DataFrame])] =
+      f.collect { case v: IndexFamily.Inverted => v }.flatMap { v =>
+        queries.get(dir, "qid", "qv", _.orderBy("qid").limit(probeSampleN)
+          .withColumn("qv", col("qv").cast("array<float>"))).flatMap(q =>
+          if (!v.needsStore) Some((v, q, None))
+          else stores.get(dir, "id", "v",
+            _.withColumn("v", col("v").cast("array<float>")))
+            .map(c => (v, q, Some(c))))
+      }
     // ONE snapshot and family sniff per dir, read by both the
     // deep-probe candidate choice and the health row
     val sniffed = dirs.map { dir =>
       val snap = Manifest.snapshot(spark, dir)
-      (dir, snap, sniffFamily(spark, snap)._1)
+      (dir, snap, IndexFamily.at(spark, snap))
     }
     val candidates = sniffed.collect {
-      case (dir, _, "ivf") if sampledQueries(dir).isDefined => dir
-      case (dir, _, "ivf_pq")
-        if sampledQueries(dir).isDefined && probeCorpus(dir).isDefined => dir
+      case (dir, _, f) if deepInputs(f)(dir).isDefined => dir
     }
     val lastProbed: Map[String, Long] = probeLogDir match {
       case Some(ld) => ProbeLog.lastSweep(spark, ld)
@@ -1646,27 +1640,16 @@ object Similarity {
         .take(deepProbes).toSet
     val frames = sniffed.map { case (dir, snap, family) =>
       val h = family match {
-        case "ivf" if chosen(dir) =>
-          ivfIndexHealth(spark, dir, sampledQueries(dir).get, probeK,
-            probeNProbe)
-        case "ivf_pq" if chosen(dir) =>
-          ivfPqIndexHealth(spark, dir, sampledQueries(dir).get,
-            probeCorpus(dir).get, probeK, probeNProbe, probeRefineK)
-        case "ivf" | "ivf_pq" => ivfIndexHealthLight(spark, dir)
-        case "minhash" | "simhash" =>
-          Dedup.health(Dedup.banded(spark, dir, family), spark, dir,
-            hotBucketCap)
-        case "semdedup" => Clustering.semDedupStateHealth(spark, dir,
-          hotClusterCap)
-        case "decontam" => Decontamination.decontamIndexHealth(spark,
-          dir)
-        case "exact" => Dedup.exactIndexHealth(spark, dir)
-        case "funnel" => CorpusPipeline.admissionFunnelHealth(spark,
-          dir)
-        case _ => spark.range(1).select(lit(dir).as("dir"),
+        case Some(_) if chosen(dir) =>
+          val (v, q, store) = deepInputs(family)(dir).get
+          health(listsOf(v, store, probeRefineK), spark, dir, q, probeK,
+            probeNProbe, None)
+        case Some(f) => f.health(spark, dir,
+          IndexFamily.Caps(hotBucketCap, hotClusterCap))
+        case None => spark.range(1).select(lit(dir).as("dir"),
           lit(snap.version).as("version"))
       }
-      h.withColumn("family", lit(family))
+      h.withColumn("family", lit(IndexFamily.tag(family)))
     }
     if (chosen.nonEmpty) probeLogDir.foreach(ld =>
       ProbeLog.record(spark, ld, chosen.toSeq.sorted,
@@ -1754,6 +1737,9 @@ object Similarity {
       } finally pool.shutdown()
     }
 
+  /** The (status, detail) of a fleet row whose dir holds no family. */
+  private val unrecognized = ("skipped", "no recognizable index tables at dir")
+
   /** A fleet row's action as (status, detail): `executed`, or `failed`
     * with the error's message — one row's failure never aborts the
     * fleet. */
@@ -1765,24 +1751,28 @@ object Similarity {
     }
 
   /** The per-dir fleet runner behind [[fleetMaintenanceApply]] and
-    * [[fleetDelete]]: `one(dir, a)` answers (family, status, detail)
-    * for each row. Rows naming the SAME dir run sequentially inside one
-    * [[fleetMap]] unit — two actions for one index must never race its
+    * [[fleetDelete]]: each row's family is sniffed from its dir's
+    * snapshot and `one(family, dir, a)` answers (status, detail). Rows
+    * naming the SAME dir run sequentially inside one [[fleetMap]]
+    * unit — two actions for one index must never race its
     * exclusive writer lock across threads (the loser would report a
     * spurious `failed` where sequential execution succeeds) — so units
     * stay disjoint lock domains. A unit still running at `timeout`
     * reports `failed` rows. Rows come back in input order as
     * (dir, a, family, status, detail). */
-  private def fleetRun[A](rows: Seq[(String, A)], parallelism: Int,
+  private def fleetRun[A](spark: SparkSession, rows: Seq[(String, A)],
+                          parallelism: Int,
                           timeout: scala.concurrent.duration.Duration)
-                         (one: (String, A) => (String, String, String))
+                         (one: (Option[IndexFamily], String, A) =>
+                           (String, String))
     : Seq[(String, A, String, String, String)] = {
     val byDir = rows.zipWithIndex.groupBy(_._1._1)
     val units = rows.map(_._1).distinct.map(byDir)
     fleetMap(units, parallelism, timeout) { unit =>
       unit.map { case ((dir, a), i) =>
-        val (family, status, detail) = one(dir, a)
-        (i, (dir, a, family, status, detail))
+        val family = IndexFamily.at(spark, Manifest.snapshot(spark, dir))
+        val (status, detail) = one(family, dir, a)
+        (i, (dir, a, IndexFamily.tag(family), status, detail))
       }
     } { unit =>
       unit.map { case ((dir, a), i) =>
@@ -1797,10 +1787,11 @@ object Similarity {
   /** Execute EVERY action of a fleet plan ([[indexMaintenancePlan]]'s
     * output over any mix of families) in one call — the last step of
     * the fleet loop: health union → plan → THIS. Each row's family is
-    * sniffed from its manifest snapshot's on-disk tables (postings →
-    * IVF, codes → IVF-PQ, bands → MinHash, sigs → SimHash, labels →
-    * SemDeDup state, shingles → decontam) and the action dispatches to
-    * that family's apply operator. Actions that need an input only the
+    * sniffed from its manifest snapshot's key table ([[IndexFamily.at]]:
+    * codes → IVF-PQ, postings → IVF, bands → MinHash, sigs → SimHash,
+    * labels → SemDeDup state, shingles → decontam, hashes → exact,
+    * funnel → funnel history) and the action dispatches to that
+    * family's [[IndexFamily.maintain]]. Actions that need an input only the
     * operator can supply take it from `corpora` keyed by index dir —
     * text tables (canonical `id`/`text` columns) for the text-family
     * `dedup_prepass`, the embedding store (`id`/`v`) for a PQ rebuild.
@@ -1843,78 +1834,14 @@ object Similarity {
     // persisted runbook answers for every dir it omits — ONE bounded
     // collect for the whole fleet, so the unattended loop needs no
     // hand-held inputs at all
-    val runbook: Map[String, FleetRunbook.Entry] =
-      runbookDir.map(FleetRunbook.entries(spark, _)).getOrElse(Map.empty)
-    def sideInput(dir: String, idName: String,
-                  payloadName: String): Option[DataFrame] =
-      corpora.get(dir).orElse(runbook.get(dir).map(e =>
-        FleetRunbook.loadSideInput(spark, e, idName, payloadName)))
-    def applyOne(dir: String, action: String)
-      : (String, String, String) = {
-      val (family, _) = sniffFamily(spark, Manifest.snapshot(spark, dir))
-      val (status, detail) = (family, action) match {
-        case (_, "none") => ("skipped", "no action planned")
-        case ("unknown", _) =>
-          ("skipped", "no recognizable index tables at dir")
-        case ("ivf" | "ivf_pq", a) =>
-          val corpus = sideInput(dir, "id", "v")
-          if (family == "ivf_pq" && a == "rebuild" && corpus.isEmpty)
-            ("skipped", "PQ rebuild needs the embedding store in " +
-              "corpora or the runbook")
-          else attempt(indexMaintenanceApply(spark, dir, a, corpus))
-        case ("minhash" | "simhash", a) =>
-          val corpus = sideInput(dir, "id", "text")
-          if (a == "dedup_prepass" && corpus.isEmpty)
-            ("skipped", "dedup_prepass needs the corpus text in " +
-              "corpora or the runbook")
-          else attempt(Dedup.maintenanceApply(
-            Dedup.banded(spark, dir, family), spark, dir, a, corpus))
-        case ("semdedup", "compact") =>
-          attempt(Clustering.semDedupStateCompact(spark, dir))
-        case ("exact", "compact") =>
-          attempt(Dedup.exactIndexCompact(spark, dir))
-        case ("semdedup", "rebuild") =>
-          // a re-cluster needs vectors AND a k — the runbook supplies
-          // both (side input + target_cluster_size → k = ⌈n/target⌉);
-          // without a runbook row the modeling decision stays with the
-          // operator, exactly as before
-          runbook.get(dir).flatMap(e =>
-            e.targetClusterSize.map(t => (e, t))) match {
-            case Some((e, target)) => attempt {
-              val vecs = FleetRunbook.loadSideInput(spark, e, "id", "vec")
-              val n = vecs.count()
-              val k = math.max(1L, (n + target - 1) / target).toInt
-              Clustering.semDedupStateRebuild(spark, dir, vecs,
-                "id", "vec", k)
-            }
-            case None =>
-              ("skipped", "SemDeDup rebuild is a re-cluster with a " +
-                "chosen k — run semDedupStateSave, or give the runbook " +
-                "a side input + target_cluster_size")
-          }
-        case ("decontam", "rebuild") =>
-          // the retraction repair [[fleetDelete]] documents: the side
-          // input supplies the REMAINING benchmark suites (text column
-          // convention: "text"), the pinned shingle width comes from
-          // the index metadata
-          sideInput(dir, "id", "text") match {
-            case Some(remaining) =>
-              attempt(Decontamination.decontamIndexRebuild(spark, dir,
-                remaining, "text"))
-            case None =>
-              ("skipped", "decontam rebuild needs the remaining " +
-                "benchmark suites in corpora or the runbook")
-          }
-        case ("funnel", "compact") =>
-          attempt(CorpusPipeline.admissionFunnelCompact(spark, dir))
-        case (f, a) => ("skipped", s"no $a operator for family $f")
-      }
-      (family, status, detail)
-    }
-    fleetRun(rows, parallelism, timeout)(applyOne)
-      .map { case (dir, action, family, status, detail) =>
-        (dir, family, action, status, detail)
-      }.toDF("dir", "family", "action", "status", "detail")
+    val side = FleetRunbook.sides(spark, corpora.get, runbookDir)
+    fleetRun(spark, rows, parallelism, timeout) {
+      case (_, _, "none") => ("skipped", "no action planned")
+      case (None, _, _) => unrecognized
+      case (Some(f), dir, action) => f.maintain(spark, dir, action, side)
+    }.map { case (dir, action, family, status, detail) =>
+      (dir, family, action, status, detail)
+    }.toDF("dir", "family", "action", "status", "detail")
   }
 
   /** Erase documents across the WHOLE persisted-index fleet in one
@@ -1922,8 +1849,8 @@ object Similarity {
     * ([[ivfDelete]], [[Dedup.exactIndexDelete]] and siblings): given
     * the retracted docs (ids; text too if an exact-hash index is in
     * the fleet — that family is content-keyed), each index dir's
-    * family is sniffed from its manifest tables and the matching
-    * delete dispatches, with [[fleetMaintenanceApply]]'s per-row
+    * family is sniffed from its manifest tables and its
+    * [[IndexFamily.erase]] dispatches, with [[fleetMaintenanceApply]]'s per-row
     * failure isolation (a family missing its required side input
     * reports `skipped`, never aborts the fleet). Pairs with
     * [[SnapshotDiff.diff]]: a corpus refresh's `removed` rows ARE
@@ -1966,72 +1893,14 @@ object Similarity {
     // the runbook answers for the decontam family's remaining-suites
     // side input when the caller omits `decontamRemaining` — the same
     // resolution order as [[fleetMaintenanceApply]]
-    val runbook: Map[String, FleetRunbook.Entry] =
-      runbookDir.map(FleetRunbook.entries(spark, _)).getOrElse(Map.empty)
-    def deleteOne(dir: String): (String, String, String) = {
-      val (family, _) = sniffFamily(spark, Manifest.snapshot(spark, dir))
-      val (status, detail) = family match {
-        case "ivf" | "ivf_pq" =>
-          attempt(ivfDelete(spark, dir, docs.select(col(idCol)), idCol))
-        case "minhash" | "simhash" =>
-          attempt(Dedup.delete(Dedup.banded(spark, dir, family), spark,
-            dir, docs.select(col(idCol)), idCol))
-        case "semdedup" =>
-          attempt(Clustering.semDedupStateDelete(spark, dir,
-            docs.select(col(idCol)), idCol))
-        case "exact" => textCol match {
-          case Some(t) =>
-            survivors match {
-              case Some(surv) =>
-                // sharer-safe: only retract docs whose exact text NO
-                // live doc still carries — one broadcast-class
-                // anti-join on the content hash (the doomed side is
-                // the retraction batch, tiny by definition). A doomed
-                // doc sharing its text with a survivor is NOT
-                // tombstoned: the hash must keep flagging duplicates
-                // of the still-live copy.
-                attempt {
-                  val h = org.apache.spark.sql.functions.md5(col(t))
-                  val unshared = docs.withColumn("_h", h)
-                    .join(surv.select(h.as("_h")).distinct(),
-                      Seq("_h"), "left_anti")
-                    .drop("_h")
-                  // an all-shared batch tombstones nothing (the empty
-                  // retraction writes no table — Tombstones.append)
-                  Dedup.exactIndexDelete(spark, dir, unshared, idCol, t)
-                }
-              case None =>
-                attempt(Dedup.exactIndexDelete(spark, dir, docs, idCol, t))
-            }
-          case None =>
-            ("skipped", "exact-hash index is content-keyed — supply " +
-              "textCol so the retracted hashes can be computed")
-        }
-        case "decontam" => decontamRemaining.orElse(
-          runbook.get(dir).map(e =>
-            FleetRunbook.loadSideInput(spark, e, "id", "text"))) match {
-          case Some(remaining) =>
-            attempt(Decontamination.decontamIndexRebuild(spark, dir,
-              remaining, if (decontamRemaining.isDefined)
-                textCol.getOrElse("text") else "text"))
-          case None =>
-            ("skipped", "decontam index is shingle-keyed — supply " +
-              "decontamRemaining (the suites minus the retirees) or a " +
-              "runbook row so the rebuild retraction can run")
-        }
-        case "funnel" =>
-          ("skipped", "funnel history is per-(day, source) ops " +
-            "metadata, not doc-keyed — nothing to retract")
-        case _ =>
-          ("skipped", "no recognizable index tables at dir")
-      }
-      (family, status, detail)
-    }
-    fleetRun(dirs.map(_ -> (())), parallelism, timeout)((d, _) =>
-      deleteOne(d))
-      .map { case (dir, _, family, status, detail) =>
-        (dir, family, status, detail)
-      }.toDF("dir", "family", "status", "detail")
+    val erase = IndexFamily.Erase(docs, idCol, textCol, survivors,
+      FleetRunbook.sides(spark, _ => decontamRemaining, runbookDir))
+    fleetRun(spark, dirs.map(_ -> (())), parallelism, timeout) {
+      (family, dir, _) =>
+        family.fold(unrecognized)(_.erase(spark, dir, erase))
+    }.map { case (dir, _, family, status, detail) =>
+      (dir, family, status, detail)
+    }.toDF("dir", "family", "status", "detail")
   }
 
   /** Fleet-wide point-in-time CLONE — [[IndexClone.cloneIndex]] over a
@@ -2063,19 +1932,18 @@ object Similarity {
     def cloneOne(dir: String)
       : (String, String, String, String, String, Long, Long, Long, Long) = {
       val dst = s"$dstRoot/${base(dir)}"
-      val (family, _) = sniffFamily(spark, Manifest.snapshot(spark, dir))
-      try {
-        val rows = IndexClone.cloneIndex(spark, dir, dst,
+      val family = IndexFamily.tag(
+        IndexFamily.at(spark, Manifest.snapshot(spark, dir)))
+      // one row per cloned table; none when the copy failed
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val (status, detail) = attempt {
+        rows = IndexClone.cloneIndex(spark, dir, dst,
           parallelism = copyParallelism)
           .select("files", "bytes", "src_version").collect()
-        (dir, dst, family, "executed", "", rows.length.toLong,
-          rows.map(_.getLong(0)).sum, rows.map(_.getLong(1)).sum,
-          rows.headOption.map(_.getLong(2)).getOrElse(-1L))
-      } catch { case e: Exception =>
-        (dir, dst, family, "failed",
-          Option(e.getMessage).getOrElse(e.getClass.getName).take(200),
-          0L, 0L, 0L, -1L)
       }
+      (dir, dst, family, status, detail, rows.length.toLong,
+        rows.map(_.getLong(0)).sum, rows.map(_.getLong(1)).sum,
+        rows.headOption.map(_.getLong(2)).getOrElse(-1L))
     }
     fleetMap(dirs.distinct, parallelism, timeout)(cloneOne) { dir =>
       (dir, s"$dstRoot/${base(dir)}", "unknown", "failed",
@@ -2128,9 +1996,12 @@ object Similarity {
     require(dirs.nonEmpty,
       "fleetEraseAudit: dirs is empty — an erasure audit needs at " +
         "least one index dir")
+    val erase = IndexFamily.Erase(docs, idCol, textCol, None,
+      FleetRunbook.sides(spark, _ => decontamRemaining, None))
     val frames = dirs.map { dir =>
       val snap = Manifest.snapshot(spark, dir)
-      val (family, table) = sniffFamily(spark, snap)
+      val family = IndexFamily.at(spark, snap)
+      val table = family.fold("")(_.keyTable)
       // every per-index reading rides ONE aggregate over a tagged
       // union of its (up to three) source tables; the whole fleet
       // report unions into ONE collected action — auditing a thousand
@@ -2144,57 +2015,23 @@ object Similarity {
       // to_json serialization).
       def tag(df: DataFrame, t: Int): DataFrame =
         df.select(lit(t).as("_t"), lit(null).cast("string").as("_v"))
-      def semiRows(keys: DataFrame, on: String): DataFrame =
-        tag(Manifest.read(spark, snap.path(table))
-          .join(keys, Seq(on), "left_semi"), 1)
       // Left(literal) or Right(tagged rows to count)
-      val keysLive: Either[Long, DataFrame] = family match {
-        case "unknown" | "funnel" => Left(-1L)
-        case "exact" => textCol match {
-          case Some(t) =>
-            Right(semiRows(docs.select(md5(col(t)).as("h")).distinct(),
-              "h"))
-          case None => Left(-1L)
-        }
-        case "decontam" => textCol match {
-          case Some(t) =>
-            val n = Decontamination.decontamIndexN(spark, dir)
-            Right(semiRows(docs.select(
-              explode(graft.functions.TextFunctions
-                .distinctShingles(col(t), n)).as("g")).distinct(), "g"))
-          case None => Left(-1L)
-        }
-        case _ =>
-          val idType = Manifest.read(spark, snap.path(table))
-            .schema("id").dataType
-          Right(semiRows(docs.select(col(idCol).cast(idType).as("id"))
-            .distinct(), "id"))
+      type Reading = Either[Long, DataFrame]
+      val unauditable: Reading = Left(-1L)
+      val (keysLive, expected, pending) = family.filter(_.audited) match {
+        case None => (unauditable, unauditable, unauditable)
+        case Some(f) => (
+          f.eraseKeys(spark, snap, erase).fold(unauditable) {
+            case (keys, on) => Right(tag(Manifest.read(spark,
+              snap.path(table)).join(keys, Seq(on), "left_semi"), 1))
+          },
+          f.residue(spark, dir, erase).map(tag(_, 2)),
+          Tombstones.readIfAny(spark, snap) match {
+            case Some(tdf) => Right(tdf.select(lit(3).as("_t"),
+              to_json(struct(tdf.columns.map(col): _*)).as("_v")))
+            case None => Left(0L)
+          })
       }
-      val expected: Either[Long, DataFrame] = family match {
-        case "unknown" | "funnel" => Left(-1L)
-        case "decontam" => (textCol, decontamRemaining) match {
-          case (Some(t), Some(remaining)) =>
-            // the legitimate residue: doomed shingles a REMAINING
-            // suite also carries survive the rebuild BY DESIGN —
-            // a lazy intersection count of two tiny shingle sets
-            val n = Decontamination.decontamIndexN(spark, dir)
-            def shingles(df: DataFrame): DataFrame = df.select(
-              explode(graft.functions.TextFunctions
-                .distinctShingles(col(t), n)).as("g")).distinct()
-            Right(tag(shingles(docs)
-              .join(shingles(remaining), Seq("g"), "left_semi"), 2))
-          case (None, _) => Left(-1L)
-          case _ => Left(0L)
-        }
-        case _ => Left(0L)
-      }
-      val pending: Either[Long, DataFrame] =
-        if (family == "unknown" || family == "funnel") Left(-1L)
-        else Tombstones.readIfAny(spark, snap) match {
-          case Some(tdf) => Right(tdf.select(lit(3).as("_t"),
-            to_json(struct(tdf.columns.map(col): _*)).as("_v")))
-          case None => Left(0L)
-        }
       val parts = Seq(keysLive, expected, pending)
         .collect { case Right(df) => df }
       val agged: DataFrame =
@@ -2203,13 +2040,13 @@ object Similarity {
           count(when(col("_t") === 1, 1)).as("_c1"),
           count(when(col("_t") === 2, 1)).as("_c2"),
           count_distinct(when(col("_t") === 3, col("_v"))).as("_c3"))
-      def reading(e: Either[Long, DataFrame],
-                  c: String): org.apache.spark.sql.Column =
+      def reading(e: Reading, c: String): org.apache.spark.sql.Column =
         e.fold(lit(_), _ => col(c))
       val keysCol = reading(keysLive, "_c1")
       val expCol = reading(expected, "_c2")
       val pendCol = reading(pending, "_c3")
-      agged.select(lit(dir).as("dir"), lit(family).as("family"),
+      agged.select(lit(dir).as("dir"),
+        lit(IndexFamily.tag(family)).as("family"),
         lit(table).as("table"), keysCol.as("keys_live"),
         expCol.as("expected_residue"), pendCol.as("deleted_pending"),
         lit(snap.version).as("version"),

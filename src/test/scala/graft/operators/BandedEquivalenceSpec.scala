@@ -196,8 +196,8 @@ class BandedEquivalenceSpec extends SparkSpec {
           .isEmpty)
         // the MinHash verify reads base text: without it, a named error
         val e = intercept[IllegalArgumentException](Dedup.probeLazy(
-          Dedup.banded(spark, mh, "minhash"), spark, mh, delta, None, "id",
-          "text", 0.5, 3))
+          IndexFamily.MinHash.layout(spark, mh), spark, mh, delta, None,
+          "id", "text", 0.5, 3))
         assert(e.getMessage.contains("base text table"))
         Dedup.simhashIndexBuild(base, sh, "id", "text")
         val ps = Dedup.simhashIndexProbe(spark, sh, delta, "id", "text",

@@ -621,6 +621,12 @@ class ErasureLifecycleSpec extends SparkSpec {
       }
       graft.util.TempDirs.using(s"lifecycle_${f.name}_") { case Seq(dir) =>
         f.build(spark, all.filter(col("id") < 2L), dir)
+        // the built dir sniffs back to the family's on-disk value, whose
+        // name is the tag the fleet reports carry
+        assert(IndexFamily.at(spark, Manifest.snapshot(spark, dir)) ==
+          Some(f.index), s"${f.name}: sniffed")
+        assert(Similarity.fleetHealth(spark, Seq(dir)).select("family")
+          .head().getString(0) == f.index.name, s"${f.name}: fleet tag")
         val batch = all.filter(col("id") === 2L)
         f.append(spark, dir, batch, Some("b1"))
         f.append(spark, dir, batch, Some("b1"))

@@ -17,6 +17,43 @@ class FleetOpsSpec extends SparkSpec {
     Seq(0.0, 0.0, 1.0, 0.0), Seq(0.9, 0.1, 0.0, 0.0),
     Seq(0.1, 0.9, 0.0, 0.0), Seq(0.0, 0.1, 0.9, 0.0))
 
+  /** `call(dir)` of an IVF-only verb on a MinHash dir and on an empty
+    * dir: a named error naming the verb, the dir and the family found,
+    * before anything is written. */
+  private def failsFastOffIvf(verb: String)(call: String => Unit): Unit = {
+    val mh = fresh(); val empty = fresh()
+    empty.mkdirs()
+    try {
+      val mhDir = mh.getAbsolutePath
+      Dedup.minhashIndexBuild(Seq(0L -> "the quick brown fox jumps over")
+        .toDF("id", "text"), mhDir, "id", "text")
+      val before = mh.list().toSet
+      Seq(mhDir -> "minhash", empty.getAbsolutePath -> "unknown").foreach {
+        case (dir, found) =>
+          val e = intercept[IllegalArgumentException](call(dir))
+          assert(Seq(verb, dir, s"family found: $found")
+            .forall(e.getMessage.contains), e.getMessage)
+      }
+      assert(mh.list().toSet == before && empty.list().isEmpty)
+    } finally Seq(mh, empty).foreach(graft.util.TempDirs.deleteRecursively)
+  }
+
+  test("ivfDelete fails fast on a dir that holds no IVF index") {
+    failsFastOffIvf("ivfDelete")(d =>
+      Similarity.ivfDelete(spark, d, Seq(0L).toDF("id")))
+  }
+
+  test("ivfIndexHealthLight fails fast on a dir that holds no IVF index") {
+    failsFastOffIvf("ivfIndexHealthLight")(d =>
+      Similarity.ivfIndexHealthLight(spark, d))
+  }
+
+  test("indexMaintenanceApply fails fast on a dir that holds no IVF " +
+    "index") {
+    failsFastOffIvf("indexMaintenanceApply")(d =>
+      Similarity.indexMaintenanceApply(spark, d, "compact"))
+  }
+
   test("runbook: save/read/entries roundtrip; apply resolves a " +
     "SemDeDup rebuild's vectors AND k policy from it; an explicit " +
     "corpora entry still wins") {

@@ -6,8 +6,12 @@
 Prints one comma-separated list of full query names (the `queries` map
 order), ready for `SPARK_GRAFT_ONLY`. A query is listed when its body
 names any IDENT as a whole word, directly or through a helper: a
-private definition in `SparkEntry.scala`, or any definition in
-`FleetFamilies.scala` (the fleet-family table the index queries call).
+private definition in `SparkEntry.scala`, any definition in
+`FleetFamilies.scala` (the fleet-family table the index queries call),
+or a member of the library's on-disk family table in
+`operators/IndexFamily.scala` (through which the fleet families append,
+delete, compact and read health; a value there merges with the fleet
+family of the same name).
 Helpers are followed transitively; comments and string literals are
 not read. The scan is textual, so the list may be a superset (a helper
 named like an unrelated call counts: `graft.util.Exact` reads as the
@@ -26,6 +30,7 @@ ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
                     "src", "main", "scala", "graft")
 ENTRY = os.path.join(ROOT, "SparkEntry.scala")
 FAMILIES = os.path.join(ROOT, "FleetFamilies.scala")
+INDEX_FAMILIES = os.path.join(ROOT, "operators", "IndexFamily.scala")
 
 DEF = re.compile(r"^(\s*)(?:(?:private(?:\[\w+\])?|final|sealed|case|"
                  r"abstract|override|lazy|implicit)\s+)*"
@@ -45,11 +50,11 @@ def strip_non_code(text):
     return NON_CODE.sub(lambda m: "\n" * m.group(0).count("\n"), text)
 
 
-def definitions(path, private_only, max_indent):
-    """{name: body text} for each definition in `path` indented at most
-    `max_indent`. A body runs from its definition line to the next
-    definition at the same or a lower indentation; comments and
-    string literals are dropped."""
+def definitions(path, private_only, max_indent, min_indent=0):
+    """{name: body text} for each definition in `path` indented from
+    `min_indent` to `max_indent`. A body runs from its definition line
+    to the next definition at the same or a lower indentation; comments
+    and string literals are dropped."""
     with open(path) as f:
         lines = strip_non_code(f.read()).split("\n")
     starts = []
@@ -65,7 +70,8 @@ def definitions(path, private_only, max_indent):
             if ind <= indent:
                 end = j
                 break
-        if indent > max_indent or name in ("queries", "oracleSql"):
+        if (not min_indent <= indent <= max_indent or
+                name in ("queries", "oracleSql")):
             continue
         if private or not private_only or re.match(r"q\d", name):
             out[name] = out.get(name, "") + "\n".join(lines[i:end])
@@ -82,9 +88,15 @@ def main(argv):
         print(__doc__, file=sys.stderr)
         return 2
     defs = definitions(ENTRY, private_only=True, max_indent=2)
-    if os.path.exists(FAMILIES):
-        for name, body in definitions(FAMILIES, private_only=False,
-                                      max_indent=2).items():
+    # the on-disk table's members only: its enclosing object would
+    # otherwise read as one definition naming every family's verbs
+    tables = [(FAMILIES, 0), (INDEX_FAMILIES, 2)]
+    for path, min_indent in tables:
+        if not os.path.exists(path):
+            continue
+        for name, body in definitions(path, private_only=False,
+                                      max_indent=2,
+                                      min_indent=min_indent).items():
             defs[name] = defs.get(name, "") + body
     with open(ENTRY) as f:
         entry = f.read()
